@@ -51,11 +51,6 @@ _AGENCIES = ["Portland Parks", "Metro", "THPRD", "Unknown", None]
 _X0, _Y0 = 7_600_000.0, 650_000.0
 
 
-def _pick(rng: np.random.RandomState, options, n):
-    idx = rng.randint(0, len(options), size=n)
-    return [options[i] for i in idx]
-
-
 def gen_streets(n: int, seed: int = 42) -> pd.DataFrame:
     """Street segments in chains of 1-6 with shared endpoints and mostly
     chain-constant attributes (so dissolve groups are non-trivial)."""

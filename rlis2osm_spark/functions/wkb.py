@@ -98,10 +98,6 @@ def decode_lines(wkb: bytes) -> list[np.ndarray]:
     raise ValueError(f"unsupported geometry type {gtype}")
 
 
-def is_multi(wkb: bytes) -> bool:
-    return geom_type(wkb) == WKB_MULTILINESTRING
-
-
 def explode_parts(wkb: bytes) -> list[bytes]:
     """E1: MultiLineString -> single-part WKBs; single part passes through
     (semantics of main.py:131-138)."""

@@ -82,14 +82,6 @@ def _group_key(cols: list[str]) -> F.Column:
     return F.xxhash64(F.concat_ws("\x01", *parts))
 
 
-_CC_SCHEMA = StructType(
-    [
-        StructField("way_id", LongType(), False),
-        StructField("component_id", LongType(), False),
-    ]
-)
-
-
 def _cc_labels(u: np.ndarray, v: np.ndarray, m: int) -> np.ndarray:
     """Vectorized connected components over edges ``(u, v)`` on ``m``
     vertices (r6): iterated min-hooking + full pointer jumping
@@ -128,48 +120,6 @@ def _group_node_ids(gk: np.ndarray, node_bits: np.ndarray,
     return inverse, len(uniq)
 
 
-def _union_find_components(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Connected components over (group_key, node, way_id) edge rows: ways
-    sharing an endpoint *within the same tag-group* are connected. Node
-    keys are namespaced by group_key, so one call can process many groups —
-    the caller hash-partitions whole groups to workers and runs one pass
-    per partition.
-
-    Deterministic: component_id = min way_id of the component, independent
-    of partitioning/arrival order. r6: fully vectorized — ways and nodes
-    become dense indices, CC runs over the bipartite way-node graph in
-    numpy (no per-edge Python dict walk).
-    """
-    if not len(pdf):
-        return pd.DataFrame({
-            "way_id": np.empty(0, np.int64),
-            "component_id": np.empty(0, np.int64)})
-    way_codes, way_uniques = pd.factorize(pdf["way_id"])  # first-occurrence
-    way_uniques = np.asarray(way_uniques, np.int64)
-    node_bits = np.frombuffer(
-        b"".join(pdf["node"]), np.uint8).reshape(-1, 16).view("<i8")
-    node_idx, m = _group_node_ids(
-        pdf["group_key"].to_numpy(np.int64), node_bits)
-    # bipartite graph: vertex = node (0..m-1) or way (m..m+n_ways-1)
-    labels = _cc_labels(node_idx, m + way_codes.astype(np.int64),
-                        m + len(way_uniques))
-    comp_way = labels[m + np.arange(len(way_uniques))]
-    min_way = np.full(m + len(way_uniques), np.iinfo(np.int64).max,
-                      np.int64)
-    np.minimum.at(min_way, comp_way, way_uniques)
-    return pd.DataFrame(
-        {"way_id": way_uniques, "component_id": min_way[comp_way]}
-    )
-
-
-def _cc_map_partitions(frames) -> "pd.DataFrame":
-    """mapInPandas driver: a partition's Arrow batches may split a group, so
-    concatenate before the union-find."""
-    pdfs = [pdf for pdf in frames]
-    if pdfs:
-        yield _union_find_components(pd.concat(pdfs, ignore_index=True))
-
-
 def _fused_dissolve_partitions(dissolve_fields: list[str], geom_col: str,
                                field_kinds: dict[str, str]):
     """mapInPandas driver for the fused union-find + merge path (r5): a
@@ -177,11 +127,11 @@ def _fused_dissolve_partitions(dissolve_fields: list[str], geom_col: str,
     endpoint nodes straight from the WKB bytes (same 16-byte ranges the
     native substring path uses), unions same-node ways per group, then
     linemerges each component's way_id-ordered members and emits the
-    merged row with the first member's tags — identical output to
-    ``_comps_unionfind`` + ``_merge_components``, but the payload crosses
-    the wire ONCE (the group_key repartition) instead of three times
-    (node self-join exchange + merge-join exchange + component groupBy
-    exchange)."""
+    merged row with the first member's tags — identical output to a
+    separate components pass + ``_merge_components``, but the payload
+    crosses the wire ONCE (the group_key repartition) instead of three
+    times (node self-join exchange + merge-join exchange + component
+    groupBy exchange)."""
 
     def run(frames):
         pdfs = [p for p in frames]
@@ -369,17 +319,6 @@ def endpoint_nodes(df: DataFrame, geom_col: str = "geometry",
     return df.select(
         "way_id", *carry,
         F.explode(F.array(f_node, t_node)).alias("node"),
-    )
-
-
-def _comps_unionfind(nodes: DataFrame, n_parts: int) -> DataFrame:
-    """Hash-partition whole tag-groups to workers, one union-find per
-    partition (nodes namespaced by group_key). Cheapest path when groups are
-    numerous and city-sized."""
-    return (
-        nodes.select("group_key", "node", "way_id")
-        .repartition(n_parts, "group_key")
-        .mapInPandas(_cc_map_partitions, _CC_SCHEMA)
     )
 
 

@@ -25,7 +25,6 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator
 from hashlib import blake2b
-from struct import pack
 
 from xml.sax.saxutils import quoteattr
 
@@ -51,11 +50,6 @@ def _node_id_from_key(key: bytes) -> int:
     """Deterministic negative node id from the exact 16 coordinate bytes."""
     h = int.from_bytes(blake2b(key, digest_size=8).digest(), "little")
     return -(h % (1 << 62)) - 1
-
-
-def _node_id(x: float, y: float) -> int:
-    """Deterministic negative node id from the exact coordinate bytes."""
-    return _node_id_from_key(pack("<2d", x, y))
 
 
 def write_osm_xml(

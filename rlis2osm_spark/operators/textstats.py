@@ -49,15 +49,6 @@ def _lang_score_cols(text: Column) -> dict[str, Column]:
     }
 
 
-def lang_scores(text: Column) -> Column:
-    """map<lang, marker hits> over the marker lists."""
-    entries = [
-        F.struct(F.lit(lang).alias("key"), score.alias("value"))
-        for lang, score in _lang_score_cols(text).items()
-    ]
-    return F.map_from_entries(F.array(*entries))
-
-
 def lang_guess(text: Column) -> Column:
     """argmax language (deterministic tie-break by ascending language
     code) — a greatest + when-chain, not a per-row map sort (the array_sort

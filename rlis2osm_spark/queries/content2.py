@@ -346,9 +346,9 @@ def m1_media_features(spark, sf_dir):
 
 def media_feature_legs(spark, sf_dir) -> dict:
     """The per-codec decode legs of ``m1_media_features`` as separate
-    DataFrames (same payload stage, same projections) so bench.py can time
-    each codec independently (``media_legs``, VERDICT r4 #3) — a decode
-    regression then names the codec, not the whole query."""
+    DataFrames (same payload stage, same projections) so the benchmark's
+    traced run can time each codec independently (VERDICT r4 #3) — a
+    decode regression then names the codec, not the whole query."""
     ensure_package_on_workers(spark)
     from rlis2osm_spark.operators.multimodal import (
         extract_audio_features, extract_image_features,

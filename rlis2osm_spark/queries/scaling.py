@@ -51,11 +51,9 @@ def expanded_points(spark, sf_dir: str, mult: int):
     )
 
 
-import os
-
 # res 5 -> ~180 candidates/probe: distance math dominates the fixed
 # per-doc shuffle, which is what makes the probe measure compute scaling
-SCALE_RES = int(os.environ.get("SPARK_GRAFT_SCALE_RES", "5"))
+SCALE_RES = 5
 
 
 def scaling_flagship(spark, sf_dir: str, mult: int = 64):
@@ -117,7 +115,7 @@ def expanded_documents(spark, data_dir: str, mult: int):
         F.concat_ws("#", "doc_id", "rep").alias("doc_id"), "spans")
 
 
-DOC_SAMPLE_MOD = int(os.environ.get("SPARK_GRAFT_DOC_SAMPLE_MOD", "16"))
+DOC_SAMPLE_MOD = 16
 
 
 def _span_contrib(kind, text, media_ref, offset, seed: int = 0):

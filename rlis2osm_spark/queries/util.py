@@ -70,14 +70,6 @@ def case_int_map(mapping: dict, col_sql: str, else_sql: str = "NULL") -> str:
     return f"CASE {whens} ELSE {else_sql} END"
 
 
-def spark_str_map(mapping: dict) -> Column:
-    pairs = []
-    for k, v in mapping.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.lit(v).cast("string"))
-    return F.create_map(*pairs)
-
-
 def spark_int_map(mapping: dict) -> Column:
     pairs = []
     for k, v in mapping.items():

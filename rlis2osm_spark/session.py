@@ -19,8 +19,7 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    master = master or f"local[{len(os.sched_getaffinity(0))}]"
     if shuffle_partitions is None:
         # local mode: match cores; on a real cluster this would be
         # 2-3x total executor cores (or left to AQE coalescing).
@@ -37,12 +36,10 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # 128m is right for TB-scale inputs; benches/tests over MB-sized
-        # files override via env so scans get the task count a real input
-        # would naturally have (single-file scans otherwise run 1 task)
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES",
-                               str(128 * 1024 * 1024)))
+        # 128m is right for TB-scale inputs; callers over MB-sized files
+        # pass a smaller value in ``extra_conf`` so scans get the task
+        # count a real input would naturally have
+        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

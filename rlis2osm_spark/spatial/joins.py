@@ -28,17 +28,8 @@ from rlis2osm_spark.spatial.tiles import (
 
 
 # ---------------------------------------------------------------------------
-# cell equi-join (tile join) + raster<->vector
+# raster<->vector (cell equi-join)
 # ---------------------------------------------------------------------------
-
-def tile_join(left: DataFrame, right: DataFrame, how: str = "inner",
-              broadcast_right: bool = False) -> DataFrame:
-    """Equi-join two tiled DataFrames on ``cell``. At scale both sides are
-    bucketed/partitioned by cell, making this a co-located shuffle-free join;
-    broadcast the right side when it's a dimension."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, "cell", how)
-
 
 def raster_vector_join(vector_df: DataFrame, raster_df: DataFrame,
                        how: str = "left") -> DataFrame:
@@ -195,8 +186,7 @@ def knn_join(
     of segment length); probe explodes its k_ring -> cell equi-join ->
     native exact distance -> per-probe window top-k.
     The window partitions by probe_id (uniform), so the skewed side is the
-    candidate join — AQE skew-split applies; for pathological hot cells,
-    pre-salt with ``salted_cell``.
+    candidate join — AQE skew-split applies.
     """
     based = _segment_cells(base, res, grid, prefix="")
 

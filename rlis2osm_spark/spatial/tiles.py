@@ -20,8 +20,8 @@ At 100 TB: ``cell`` is the partition/bucket column (Iceberg
 ``bucket(N, cell)`` or directory partitioning on a cell prefix), so spatial
 predicates become partition pruning, and cell-keyed joins co-locate without
 a second shuffle. Downtown-vs-rural skew is handled by salting the hot cells
-(``salted_cell``) — explicit, per the north rule, with AQE skew-join as the
-backstop.
+(``pipeline.tile_rollup_salted``) — explicit, per the north rule, with AQE
+skew-join as the backstop.
 """
 
 from __future__ import annotations
@@ -173,8 +173,3 @@ def explode_ring_coords(df: DataFrame, ix: Column, iy: Column) -> DataFrame:
     )
 
 
-def salted_cell(cell: Column, key: Column, n_salts: int = 8) -> Column:
-    """Explicit skew salt: spread one hot cell across ``n_salts`` shuffle
-    keys (pair with a two-phase aggregation)."""
-    return F.concat_ws(":", cell.cast("string"),
-                       F.pmod(F.xxhash64(key), F.lit(n_salts)).cast("string"))

@@ -1,17 +1,17 @@
-"""End-to-end determinism pin for the benchmarked pipeline-scale chain
-(VERDICT r4 #6): two full combine -> dissolve(ordered) -> OSM-sink runs at a
-small replication factor must produce byte-identical parquet AND .osm
-fragments.  Extends the per-operator two-run pin in tests/test_dissolve.py
-to the exact chain bench.py --pipeline-scale measures (same code path:
-bench.pipeline_scale_run)."""
+"""End-to-end determinism pin for the benchmarked conversion chain
+(VERDICT r4 #6): two full combine -> checkpoint -> dissolve(ordered) + tag
+repair -> checkpoint -> OSM-sink runs must produce byte-identical parquet
+AND .osm fragments. Extends the per-operator two-run pin in
+tests/test_dissolve.py to the chain perfbench's ``pipeline`` workload
+runs (``perfbench/workloads.py``, ``Pipeline.convert``)."""
 
 import hashlib
 import os
-import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-import bench  # noqa: E402
+from rlis2osm_spark.operators.combine import combine, repair_and_filter_tags
+from rlis2osm_spark.operators.dissolve import dissolve_ways
+from rlis2osm_spark.operators.osm_sink import write_osm_xml
+from rlis2osm_spark.plans.checkpoint import Checkpointer
 
 
 def _part_hashes(root: str, suffix: str) -> list:
@@ -30,21 +30,46 @@ def _part_hashes(root: str, suffix: str) -> list:
     return out
 
 
+def _convert(spark, data_dir: str, out_dir: str) -> dict:
+    inputs = [f"{data_dir}/{n}.parquet"
+              for n in ("streets", "trails", "bike_routes")]
+    streets, trails, bikes = (spark.read.parquet(p) for p in inputs)
+    ck = Checkpointer(spark, out_dir, run_id="ckpt")
+    combined = ck.stage("combined",
+                        lambda: combine(streets, trails, bikes),
+                        inputs=inputs)
+    dissolved = ck.stage(
+        "dissolved",
+        lambda: repair_and_filter_tags(dissolve_ways(combined, ordered=True)),
+        inputs=["combined"])
+    osm_dir = os.path.join(out_dir, "osm")
+    sink = write_osm_xml(dissolved, osm_dir).collect()
+    return {
+        "n_ways": sum(r.n_ways for r in sink),
+        "osm_bytes": sum(os.path.getsize(r.part_file) for r in sink),
+        "parquet": _part_hashes(os.path.join(out_dir, "ckpt", "dissolved"),
+                                ".parquet"),
+        "osm": _part_hashes(osm_dir, ".osm"),
+    }
+
+
 def test_pipeline_scale_two_runs_byte_identical(spark, synth_dir, tmp_path):
-    runs = []
-    for i in (0, 1):
-        out_dir = str(tmp_path / f"run{i}")
-        rep = bench.pipeline_scale_run(spark, synth_dir, out_dir, mult=4,
-                                       ordered=True)
-        runs.append({
-            "report": rep,
-            "parquet": _part_hashes(rep["dissolved_parquet"], ".parquet"),
-            "osm": _part_hashes(rep["osm_dir"], ".osm"),
-        })
-    a, b = runs
-    assert a["report"]["n_input_ways"] == b["report"]["n_input_ways"]
-    assert a["report"]["n_dissolved_ways"] == b["report"]["n_dissolved_ways"]
-    assert a["report"]["osm_bytes"] == b["report"]["osm_bytes"]
-    # byte-identical artifacts, file by file
+    # AQE would coalesce this KB-sized input into one partition; a KB
+    # floor keeps several, so the pin covers order across fragments
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, "4KB")
+    try:
+        a, b = (_convert(spark, synth_dir, str(tmp_path / f"run{i}"))
+                for i in (0, 1))
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+    assert a["n_ways"] == b["n_ways"]
+    assert a["osm_bytes"] == b["osm_bytes"]
+    # byte-identical artifacts, file by file, across more than one
+    # fragment so output order across partitions is pinned too
     assert a["parquet"] and a["parquet"] == b["parquet"]
-    assert a["osm"] and a["osm"] == b["osm"]
+    assert len(a["osm"]) > 1 and a["osm"] == b["osm"]
