@@ -18,3 +18,14 @@ file:line whose *semantics* it reproduces (see SURVEY.md §2).
 """
 
 __version__ = "0.1.0"
+
+import sys as _sys
+
+# Python workers import this package to unpickle its UDFs; there, and only
+# there, stop PySpark's per-task cache invalidation from re-reading every
+# zip on sys.path (see driver_support.install_worker_zip_stat_check).
+if "pyspark.core.files" in _sys.modules:
+    if _sys.modules["pyspark.core.files"].SparkFiles._is_running_on_worker:
+        from rlis2osm_spark.driver_support import install_worker_zip_stat_check
+
+        install_worker_zip_stat_check()

@@ -21,6 +21,7 @@ Python at the Spark layer.
 
 from __future__ import annotations
 
+import itertools
 import re
 
 SMALL_BASE = r"a|an|and|as|at|but|by|en|for|if|in|of|on|or|the|to|v\.?|via|vs\.?"
@@ -55,11 +56,12 @@ _DEFAULT_RX = _compile(SMALL_BASE)
 # names are all distinct, and each word's transformation is a pure function
 # of (word, all_caps, small_first_last) — every branch of the word loop
 # appends exactly one string. The module-level dict survives across tasks
-# in a reused Python worker; bounded so adversarial vocabularies cannot
-# grow it without limit. Only rlis_titlecase passes it (the memo key does
-# not encode callback/rx, which are fixed on that path).
+# in a reused Python worker, so it is capped: past _WORD_MEMO_CAP words the
+# oldest entries are evicted, never the whole memo. Only rlis_titlecase
+# passes it (the memo key does not encode callback/rx, which are fixed on
+# that path).
 _WORD_MEMO: dict = {}
-_WORD_MEMO_CAP = 1 << 20
+_WORD_MEMO_CAP = 1 << 16
 
 
 def titlecase(text: str, callback=None, small_first_last: bool = True,
@@ -133,10 +135,14 @@ def titlecase(text: str, callback=None, small_first_last: bool = True,
             # store BEFORE the small_first/last fixes below — those rewrite
             # tc_line[0]/[-1] per line position, which the key does not
             # (and must not) encode
-            if len(_memo) > _WORD_MEMO_CAP:
-                _memo.clear()
             for _k, _i in _pending:
                 _memo[_k] = tc_line[_i]
+            if len(_memo) > _WORD_MEMO_CAP:
+                # drop the oldest quarter (dict insertion order) in one
+                # batch; the rest of the vocabulary stays resident
+                _drop = len(_memo) - _WORD_MEMO_CAP + _WORD_MEMO_CAP // 4
+                for _k in list(itertools.islice(_memo, _drop)):
+                    del _memo[_k]
 
         if small_first_last and tc_line:
             tc_line[0] = rx["small_first"].sub(

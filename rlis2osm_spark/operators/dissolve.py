@@ -462,7 +462,10 @@ def dissolve_ways(
     produce byte-identical sink files for display/diff consumers — the
     reference's output is deterministic by construction
     (/root/reference/rlis2osm/main.py:76-138). Costs one extra range-sort
-    exchange; leave False for set-semantics pipelines.
+    exchange, and the range partitioner's sampling job re-executes the
+    stage that feeds it, so the fused ``mapInPandas`` dissolve stage runs
+    twice (once to sample, once to write the shuffle). Leave False for
+    set-semantics pipelines.
     """
     tag_fields = [c for c in COMBINED_FIELDS if c in combined.columns]
     dissolve_fields = _define_filter_fields(tag_fields, fields, exclude)

@@ -32,3 +32,22 @@ from rlis2osm_spark.functions.titlecase_port import rlis_titlecase
 def test_rlis_titlecase(raw, expected):
     # pipeline always lowercases before titlecase (main.py:90)
     assert rlis_titlecase(raw) == expected
+
+
+def test_word_memo_stays_under_cap_and_matches_unmemoized(monkeypatch):
+    from rlis2osm_spark.functions import titlecase_port as tp
+
+    cap = 64
+    monkeypatch.setattr(tp, "_WORD_MEMO_CAP", cap)
+    monkeypatch.setattr(tp, "_WORD_MEMO", {})
+    names = ["%s STREET %dTH NW" % ("AB" * (i % 7 + 1) + str(i), i)
+             for i in range(400)]
+    sizes = []
+    for name in names + names[::3]:
+        got = tp.rlis_titlecase(name)
+        assert got == tp.titlecase(name.lower(),
+                                   callback=tp.number_after_letter)
+        sizes.append(len(tp._WORD_MEMO))
+    assert max(sizes) <= cap
+    # evictions drop part of the memo, not all of it
+    assert min(sizes[len(sizes) // 2:]) >= cap * 3 // 4
