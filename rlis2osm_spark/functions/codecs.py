@@ -5,52 +5,36 @@
   scanline filters 0-4, sequential and Adam7; exact 16-bit via
   decode_png16); grayscale filters 0-2 on encode;
 - WAV: ``struct`` over the public RIFF/WAVE spec (integer PCM
-  8/16/24-bit, IEEE float32 and G.711 a-law/mu-law at 1-32 channels,
-  IMA/DVI + MS ADPCM mono/stereo — r6; GSM/MP3-in-WAV = seam);
+  8/16/24-bit and IEEE float32 at 1-32 channels);
 - GIF: pure-Python LZW over the public GIF87a/GIF89a spec (8-bit
   palettized, variable-width codes up to 12 bits, interlaced or not;
   animated compositing with transparency + disposal, r5);
-- JPEG (r4/r5/r6): the public ITU T.81 spec — baseline sequential,
-  progressive (SOF2 spectral selection + successive approximation,
-  EOBRUN, correction bits), lossless (SOF3 predictive, predictors 1-7,
-  point transform), sequential arithmetic (SOF9: Annex E QM-coder
-  probability state machine + Annex F DC/AC statistical models, DAC
-  conditioning, r6), progressive arithmetic (SOF10: Annex G scan
-  procedures over the QM coder, r6), lossless arithmetic (SOF11:
-  Annex H (Da,Db)-conditioned difference model, r6), extended
-  sequential (SOF1: 8/12-bit with extended-range DHT tables, r6) AND
-  hierarchical DHP pyramids with all six differential frame types
-  (SOF5/6/13/14 DCT + SOF7/15 lossless, r6), grayscale and interleaved
-  multi-component color with full-RGB output (nearest/bilinear chroma
-  upsampling), 4-component Adobe CMYK/YCCK, any sampling layout (luma
-  included), multi-scan non-interleaved streams, 16-bit DQT, restart
-  intervals, fill bytes, strict truncation detection;
+- JPEG (r4/r5): the public ITU T.81 spec at 8-bit precision — baseline
+  sequential (SOF0; SOF1 shares its scan loop) and progressive huffman
+  (SOF2 spectral selection + successive approximation, EOBRUN,
+  correction bits), grayscale and 2-3-component interleaved color with
+  full-RGB output (nearest chroma upsampling), any sampling layout
+  (luma included), multi-scan non-interleaved streams, 16-bit DQT,
+  restart intervals, fill bytes, strict truncation detection;
 - BMP (r5/r6): uncompressed 16/24/32-bit BGR(X) incl. BI_BITFIELDS
   masks, palettized 1/4/8-bit (MSB-first sub-byte packing),
   BI_RLE8/BI_RLE4 run-length decode (escapes, absolute mode, deltas)
   and BI_JPEG/BI_PNG embedded-stream handoff — r6;
-- AVI (r4/r6): RIFF-AVI container walk + idx1 index; MJPEG (per-frame
-  JPEG), uncompressed DIB, and MS-RLE with real inter-frame deltas
-  (skip escapes keep the previous frame).
+- AVI (r4): RIFF-AVI container walk + idx1 index; MJPEG (per-frame
+  JPEG) and uncompressed DIB streams.
 
 These convert the multimodal operators' ``decode_stub=False`` seam into
-working decoders for the formats the derived corpus emits. The remaining
-``NotImplementedError`` seams (see COVERAGE.md "Codec capability
-matrix"): for JPEG, parameter-space only — EVERY T.81 frame type
-decodes (r6): hierarchical pyramids take all six differential frame
-types (SOF5/6/13/14 DCT + SOF7/15 lossless), extended-sequential SOF1
-decodes at 8- and 12-bit, lossless-arithmetic spans precision 2-16;
-CMYK/YCCK decodes per the Adobe APP14 transform (stored inverted-ink
-convention; true ICC color management stays out of scope), 16-bit
-Pq=1 quant tables parse everywhere, ANY component may be subsampled —
-luma included — and non-interleaved multi-scan sequential decodes
-under both entropy coders (all r6). Beyond JPEG: modern compressed
-video codecs (MSVC/Cinepak/H.26x — MJPEG, DIB and MS-RLE decode
-natively), GSM WAV, >2-channel ADPCM.
+working decoders for the formats the derived corpus emits. Everything
+else raises ``NotImplementedError`` naming the library that plugs in
+there (see COVERAGE.md "Codec capability matrix"): JPEG lossless
+(SOF3), arithmetic (SOF9-11), differential/hierarchical (SOF5-7,
+SOF13-15, DHP), 12-bit and 4-component CMYK/YCCK streams; compressed
+WAV (G.711, ADPCM, GSM, MP3); AVI codecs other than MJPEG and DIB.
 """
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
 
@@ -696,11 +680,10 @@ def _decode_gif_impl(data: bytes) -> tuple[int, int, bytes]:
 
 # ---------------------------------------------------------------------------
 # JPEG: pure Python + numpy over the public spec (ITU T.81). Baseline
-# sequential (gray + interleaved color), progressive (SOF2) and lossless
-# (SOF3) huffman modes, 8-bit precision; DCT tables are the spec's Annex K
-# typical tables (progressive AC scans carry their own DHT for the EOBn
-# symbols). Arithmetic coding and hierarchical mode remain behind the
-# NotImplementedError seam.
+# sequential (gray + interleaved color) and progressive (SOF2) huffman
+# modes, 8-bit precision; DCT tables are the spec's Annex K typical tables
+# (progressive AC scans carry their own DHT for the EOBn symbols). Every
+# other frame type is behind the NotImplementedError seam.
 # ---------------------------------------------------------------------------
 
 _JPEG_ZIGZAG = [
@@ -746,25 +729,12 @@ _JPEG_AC_VALS = [
     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ]
 
-# Extended-sequential (SOF1) 12-bit tables: Annex K's typical tables
-# only reach DC category 11 / AC size 10, but 12-bit samples need DC
-# categories to 15 and AC sizes to 14 (T.81 F.1.2.1.1 extends SSSS at
-# 12-bit precision). T.81 ships no "typical" 12-bit tables, so these
-# are simple valid canonical codes with Kraft slack: all 16 DC symbols
-# at length 5 (16/32), all 226 AC symbols — EOB, ZRL, run 0-15 x size
-# 1-14 — at length 9 (226/512); neither code reaches all-ones.
-_JPEG_DC12_BITS = [0, 0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_JPEG_DC12_VALS = list(range(16))
-_JPEG_AC12_BITS = [0, 0, 0, 0, 0, 0, 0, 0, 226, 0, 0, 0, 0, 0, 0, 0]
-_JPEG_AC12_VALS = [0x00, 0xF0] + [
-    (run << 4) | size for run in range(16) for size in range(1, 15)]
-
 
 def _parse_dqt_body(body: bytes, out: dict) -> None:
     """Parse one DQT segment body into ``out`` (table id -> 64 zigzag
     values). Pq=0 -> 8-bit entries; Pq=1 (r6) -> 16-bit big-endian
-    entries, required whenever a quantizer exceeds 255 (12-bit
-    precision territory). Short bodies raise struct.error/ValueError —
+    entries (some encoders emit them for 8-bit streams too). Short
+    bodies raise struct.error/ValueError —
     wrapped to the malformed-input ValueError by the public decoders."""
     i = 0
     while i < len(body):
@@ -781,6 +751,19 @@ def _parse_dqt_body(body: bytes, out: dict) -> None:
             raise ValueError(f"invalid DQT precision Pq={pq}")
 
 
+def _parse_dht_body(body: bytes, out: dict) -> None:
+    """Parse one DHT segment body into ``out`` ((class, id) -> decode
+    table from :func:`_huff_decode_tree`)."""
+    i = 0
+    while i < len(body):
+        tc, th = body[i] >> 4, body[i] & 0x0F
+        bits = list(body[i + 1:i + 17])
+        n = sum(bits)
+        vals = list(body[i + 17:i + 17 + n])
+        out[(tc, th)] = _huff_decode_tree(bits, vals)
+        i += 17 + n
+
+
 def _huff_codes(bits, vals):
     """Canonical huffman: value -> (code, length)."""
     out = {}
@@ -795,7 +778,10 @@ def _huff_codes(bits, vals):
     return out
 
 
+@functools.lru_cache(maxsize=None)
 def _dct_matrix():
+    """The orthonormal 8-point DCT-II matrix, built once and shared
+    read-only by every encoder and decoder call."""
     import numpy as np
 
     n = 8
@@ -804,6 +790,7 @@ def _dct_matrix():
         for i in range(n):
             c[k, i] = ((1 / np.sqrt(n)) if k == 0 else np.sqrt(2 / n)
                        ) * np.cos((2 * i + 1) * k * np.pi / (2 * n))
+    c.flags.writeable = False
     return c
 
 
@@ -854,139 +841,43 @@ def encode_jpeg_gray(width: int, height: int, pixels: bytes,
     if len(pixels) != width * height:
         raise ValueError("pixels must be width*height bytes")
     img = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width)
-    return _encode_sequential_gray(img, 8, restart_every, 0xC0)
-
-
-def encode_jpeg_ext_gray(width: int, height: int, pixels: bytes,
-                         restart_every: int = 0,
-                         precision: int = 12,
-                         quant16: bool = False) -> bytes:
-    """EXTENDED sequential grayscale JPEG (SOF1 = 0xC1; huffman, r6).
-    Identical scan structure to baseline; at ``precision`` = 12 the
-    level shift is 2048 and the DHT segments carry the extended-range
-    tables (DC categories to 15, AC sizes to 14 — Annex K stops at
-    11/10). ``pixels`` is width*height bytes at precision 8 or
-    little-endian uint16 samples in 0..4095 at precision 12 (same
-    convention as :func:`encode_jpeg_arith_gray`); decode via
-    :func:`decode_jpeg_gray` / :func:`decode_jpeg_gray12`. Same
-    even-constant-block exactness contract as :func:`encode_jpeg_gray`
-    (q00=16 divides (v - 2^(P-1))*8 for even v at either precision).
-    ``quant16`` (r6) quantizes with 3x the Annex K table — values above
-    255, so the DQT is emitted at Pq=1 with 16-bit entries (the 12-bit
-    parameter-space the 8-bit DQT format cannot express)."""
-    import numpy as np
-
-    if precision not in (8, 12):
-        raise ValueError("precision must be 8 or 12")
-    if precision == 12:
-        if len(pixels) != width * height * 2:
-            raise ValueError(
-                "pixels must be width*height uint16-LE samples at 12-bit")
-        img = np.frombuffer(pixels, dtype="<u2").reshape(height, width)
-        if int(img.max(initial=0)) > 4095:
-            raise ValueError("12-bit samples must be in 0..4095")
-    else:
-        if len(pixels) != width * height:
-            raise ValueError("pixels must be width*height bytes")
-        img = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width)
-    if quant16:
-        return _encode_sequential_gray(
-            img, precision, restart_every, 0xC1,
-            qtable=[3 * v for v in _JPEG_QTABLE], pq=1)
-    return _encode_sequential_gray(img, precision, restart_every, 0xC1)
-
-
-def _encode_sequential_gray(img, prec: int, restart_every: int,
-                            sof_marker: int,
-                            qtable: list | None = None,
-                            pq: int = 0) -> bytes:
-    """Shared SOF0/SOF1 sequential grayscale emitter: level shift
-    2^(prec-1), Annex K quant (or ``qtable``, emitted at DQT precision
-    ``pq`` — 16-bit entries when pq=1), typical tables at 8-bit /
-    extended-range tables at 12-bit."""
-    import numpy as np
-
-    height, width = img.shape
     bh, bw = (height + 7) // 8, (width + 7) // 8
     padded = np.empty((bh * 8, bw * 8), dtype=np.float64)
     padded[:height, :width] = img
     padded[height:, :width] = img[-1:, :]  # edge-replicate pad
     padded[:, width:] = padded[:, width - 1:width]
 
-    C = _dct_matrix()
-    qvals = qtable if qtable is not None else _JPEG_QTABLE
-    q = np.array(qvals, dtype=np.float64).reshape(8, 8)
-    if prec == 8:
-        dc_bits, dc_vals = _JPEG_DC_BITS, _JPEG_DC_VALS
-        ac_bits, ac_vals = _JPEG_AC_BITS, _JPEG_AC_VALS
-    else:
-        dc_bits, dc_vals = _JPEG_DC12_BITS, _JPEG_DC12_VALS
-        ac_bits, ac_vals = _JPEG_AC12_BITS, _JPEG_AC12_VALS
-    dc_tab = _huff_codes(dc_bits, dc_vals)
-    ac_tab = _huff_codes(ac_bits, ac_vals)
+    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
+    dc_tab = _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+    ac_tab = _huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
     zz = _JPEG_ZIGZAG
-    shift = float(1 << (prec - 1))
 
     w = _BitWriter()
     prev_dc = 0
     mcu = 0
-    rst = 0
     for by in range(bh):
         for bx in range(bw):
             if restart_every and mcu and mcu % restart_every == 0:
                 w.flush()
-                w.out += bytes([0xFF, 0xD0 + (rst % 8)])
-                rst += 1
+                w.out += bytes([0xFF, 0xD0 + (mcu // restart_every - 1) % 8])
                 prev_dc = 0
             mcu += 1
-            block = padded[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] - shift
-            coef = C @ block @ C.T
-            quant = np.round(coef / q).astype(np.int64)
-            flat = quant.reshape(-1)
-            seq = [int(flat[zz[i]]) for i in range(64)]
-            diff = seq[0] - prev_dc
-            prev_dc = seq[0]
-            size, bits = _magnitude(diff)
-            code, length = dc_tab[size]
-            w.write(code, length)
-            if size:
-                w.write(bits, size)
-            run = 0
-            last_nz = 0
-            for i in range(1, 64):
-                if seq[i]:
-                    last_nz = i
-            for i in range(1, last_nz + 1):
-                if seq[i] == 0:
-                    run += 1
-                    if run == 16:
-                        code, length = ac_tab[0xF0]  # ZRL
-                        w.write(code, length)
-                        run = 0
-                    continue
-                size, bits = _magnitude(seq[i])
-                code, length = ac_tab[(run << 4) | size]
-                w.write(code, length)
-                w.write(bits, size)
-                run = 0
-            if last_nz != 63:
-                code, length = ac_tab[0x00]  # EOB
-                w.write(code, length)
+            prev_dc = _encode_block(
+                w, padded[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] - 128.0,
+                q, dc_tab, ac_tab, prev_dc)
     w.flush()
 
     def seg(marker, body):
         return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
 
-    if pq:
-        dqt = seg(0xDB, bytes([0x10]) + b"".join(
-            struct.pack(">H", qvals[zz[i]]) for i in range(64)))
-    else:
-        dqt = seg(0xDB, bytes([0x00]) + bytes(
-            qvals[zz[i]] for i in range(64)))
-    sof = seg(sof_marker, struct.pack(">BHHB", prec, height, width, 1)
+    dqt = seg(0xDB, bytes([0x00]) + bytes(
+        _JPEG_QTABLE[zz[i]] for i in range(64)))
+    sof = seg(0xC0, struct.pack(">BHHB", 8, height, width, 1)
               + bytes([1, 0x11, 0]))
-    dht = (seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-           + seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals)))
+    dht = (seg(0xC4, bytes([0x00]) + bytes(_JPEG_DC_BITS)
+               + bytes(_JPEG_DC_VALS))
+           + seg(0xC4, bytes([0x10]) + bytes(_JPEG_AC_BITS)
+                 + bytes(_JPEG_AC_VALS)))
     sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
     dri = (seg(0xDD, struct.pack(">H", restart_every))
            if restart_every else b"")
@@ -1302,175 +1193,6 @@ def encode_jpeg_progressive(width: int, height: int, pixels: bytes,
     return bytes(out)
 
 
-def encode_jpeg_lossless(width: int, height: int, pixels: bytes,
-                         predictor: int = 4,
-                         point_transform: int = 0) -> bytes:
-    """LOSSLESS JPEG (SOF3, T.81 Annex H) — grayscale, 8-bit precision.
-
-    Huffman-codes prediction differences (predictor 1-7, selected by the
-    scan header's Ss field) modulo 2^16; the first sample predicts from
-    2^(P-1-Pt), the rest of the first line from `a`, each line start from
-    `b`.  ``point_transform`` (Al) drops low bits before prediction —
-    decode then left-shifts them back in (near-lossless mode); 0 is fully
-    lossless.  The DHT is a custom flat 5-bit table because the Annex-K
-    DC table stops at SSSS=11 and lossless differences need SSSS 0-16."""
-    import numpy as np
-
-    if len(pixels) != width * height:
-        raise ValueError("pixels must be width*height bytes")
-    if not 1 <= predictor <= 7:
-        raise ValueError("predictor must be 1..7")
-    if not 0 <= point_transform <= 7:
-        raise ValueError("point_transform must be 0..7")
-    img = (np.frombuffer(pixels, dtype=np.uint8)
-           .reshape(height, width).astype(np.int64) >> point_transform)
-
-    ll_vals = list(range(17))  # SSSS 0..16
-    ll_bits = [0] * 16
-    ll_bits[4] = 17  # all codes 5 bits (17 <= 32, prefix-free)
-    tab = _huff_codes(ll_bits, ll_vals)
-    default = 1 << (8 - 1 - point_transform)
-
-    w = _BitWriter()
-    for y in range(height):
-        for x in range(width):
-            if y == 0 and x == 0:
-                pred = default
-            elif y == 0:
-                pred = int(img[0, x - 1])             # first line: a
-            elif x == 0:
-                pred = int(img[y - 1, 0])             # line start: b
-            else:
-                a = int(img[y, x - 1])
-                b = int(img[y - 1, x])
-                c = int(img[y - 1, x - 1])
-                pred = {1: a, 2: b, 3: c,
-                        4: a + b - c,
-                        5: a + ((b - c) >> 1),
-                        6: b + ((a - c) >> 1),
-                        7: (a + b) >> 1}[predictor]
-            d = (int(img[y, x]) - pred + 32768) % 65536 - 32768
-            if d == -32768:
-                code, length = tab[16]  # SSSS=16: diff 32768, no extra bits
-                w.write(code, length)
-                continue
-            size, bits = _magnitude(d)
-            code, length = tab[size]
-            w.write(code, length)
-            if size:
-                w.write(bits, size)
-    w.flush()
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    sof = seg(0xC3, struct.pack(">BHHB", 8, height, width, 1)
-              + bytes([1, 0x11, 0]))
-    dht = seg(0xC4, bytes([0x00]) + bytes(ll_bits) + bytes(ll_vals))
-    sos = seg(0xDA, bytes([1, 1, 0x00, predictor, 0, point_transform]))
-    return (b"\xff\xd8" + sof + dht + sos + bytes(w.out) + b"\xff\xd9")
-
-
-def _decode_lossless(data: bytes, render_all: bool):
-    """SOF3 lossless decode (single-component, 8-bit) -> the
-    ``_decode_jpeg_planes`` tuple. Restart intervals raise
-    NotImplementedError (prediction-reset semantics untested without a
-    second implementation to differ against)."""
-    import numpy as np
-
-    huff: dict[tuple[int, int], dict] = {}
-    width = height = None
-    comps: list[dict] = []
-    scan = None
-    restart_interval = 0
-    pos = 2
-    while pos + 1 < len(data):
-        if data[pos] != 0xFF:
-            pos += 1
-            continue
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack(">H", data[pos:pos + 2])
-        body = data[pos + 2:pos + seglen]
-        pos += seglen
-        if marker == 0xC3:
-            prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp != 1:
-                raise NotImplementedError(
-                    "lossless JPEG decode supports 8-bit single-component "
-                    "streams (the PIL/DNG seam for the rest)")
-            cid, hv, tq = body[6:9]
-            comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F,
-                          "tq": tq})
-        elif marker == 0xC4:
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 0x0F
-                bits = list(body[i + 1:i + 17])
-                n = sum(bits)
-                vals = list(body[i + 17:i + 17 + n])
-                huff[(tc, th)] = _huff_decode_tree(bits, vals)
-                i += 17 + n
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:
-            ns = body[0]
-            tt = body[2]
-            predictor = body[1 + 2 * ns]
-            al = body[3 + 2 * ns] & 0x0F
-            if ns != 1:
-                raise NotImplementedError("interleaved lossless scan")
-            scan_tab = huff[(0, tt >> 4)]
-            end = _scan_entropy_end(data, pos)
-            scan = (predictor, al, scan_tab, data[pos:end])
-            pos = end
-    if width is None or scan is None:
-        raise ValueError("truncated JPEG (no SOF/SOS)")
-    if restart_interval:
-        raise NotImplementedError(
-            "restart intervals in lossless JPEG are not supported")
-    predictor, al, tab, ecs = scan
-    if not 1 <= predictor <= 7:
-        raise ValueError(f"invalid lossless predictor {predictor}")
-    reader = _BitReader(ecs)
-    out = np.empty((height, width), dtype=np.int64)
-    default = 1 << (8 - 1 - al)
-    for y in range(height):
-        for x in range(width):
-            size = _read_huff(reader, tab)
-            if size == 16:
-                d = 32768
-            else:
-                d = _extend(reader.read_bits(size), size)
-            if y == 0 and x == 0:
-                pred = default
-            elif y == 0:
-                pred = int(out[0, x - 1])
-            elif x == 0:
-                pred = int(out[y - 1, 0])
-            else:
-                a = int(out[y, x - 1])
-                b = int(out[y - 1, x])
-                c = int(out[y - 1, x - 1])
-                pred = {1: a, 2: b, 3: c,
-                        4: a + b - c,
-                        5: a + ((b - c) >> 1),
-                        6: b + ((a - c) >> 1),
-                        7: (a + b) >> 1}[predictor]
-            out[y, x] = (pred + d) % 65536
-            if reader.consumed_synthetic():
-                raise ValueError(
-                    "JPEG entropy data truncated (lossless scan)")
-    plane = ((out & 0xFFFF) << al).astype(np.float64)
-    return width, height, comps, {comps[0]["id"]: plane}, 1, 1
-
-
 # Annex-K-style chroma quantization table (row-major). Huffman tables for
 # the chroma ids simply REUSE the luma tables (stored under table id 1 in
 # the DHT segments — spec-legal and self-consistent; decoders read the
@@ -1663,678 +1385,6 @@ def encode_jpeg_color(width: int, height: int, y_pixels: bytes,
     return b"\xff\xd8" + dqt + sof + dht + scans_out + b"\xff\xd9"
 
 
-# ---------------------------------------------------------------------------
-# Arithmetic-coded JPEG (SOF9) — ITU T.81 Annex E QM-coder + the Annex F
-# DC/AC statistical models (r6; retires the biggest named codec seam).
-# Clean-room from the public spec: probability state machine = Table E.1,
-# encoder/decoder = Figures E.5-E.25 (LPS-at-bottom convention, conditional
-# MPS/LPS exchange, carry absorbed by bit stuffing), bin layout = Tables
-# F.4/F.5 (DC: 5 conditioning categories x {S0,SS,SP,SN}, X at 20, M at
-# X+14; AC: {SE,S0,X1} per k, shared high-magnitude bins at 189/217, sign
-# in the non-adaptive 0.5-probability bin). DAC (0xCC) conditioning bounds
-# honored; defaults L=0, U=1, Kx=5 per §F.1.4.4.1.2/F.1.4.4.2.
-# ---------------------------------------------------------------------------
-
-# Table E.1: (Qe, NMPS, NLPS, SWITCH); index 113 is the fixed
-# non-adapting equiprobable state used for AC sign decisions
-_ARITH_QE = [
-    (0x5A1D, 1, 1, 1), (0x2586, 2, 14, 0), (0x1114, 3, 16, 0),
-    (0x080B, 4, 18, 0), (0x03D8, 5, 20, 0), (0x01DA, 6, 23, 0),
-    (0x00E5, 7, 25, 0), (0x006F, 8, 28, 0), (0x0036, 9, 30, 0),
-    (0x001A, 10, 33, 0), (0x000D, 11, 35, 0), (0x0006, 12, 9, 0),
-    (0x0003, 13, 10, 0), (0x0001, 13, 12, 0), (0x5A7F, 15, 15, 1),
-    (0x3F25, 16, 36, 0), (0x2CF2, 17, 38, 0), (0x207C, 18, 39, 0),
-    (0x17B9, 19, 40, 0), (0x1182, 20, 42, 0), (0x0CEF, 21, 43, 0),
-    (0x09A1, 22, 45, 0), (0x072F, 23, 46, 0), (0x055C, 24, 48, 0),
-    (0x0406, 25, 49, 0), (0x0303, 26, 51, 0), (0x0240, 27, 52, 0),
-    (0x01B1, 28, 54, 0), (0x0144, 29, 56, 0), (0x00F5, 30, 57, 0),
-    (0x00B7, 31, 59, 0), (0x008A, 32, 60, 0), (0x0068, 33, 62, 0),
-    (0x004E, 34, 63, 0), (0x003B, 35, 32, 0), (0x002C, 9, 33, 0),
-    (0x5AE1, 37, 37, 1), (0x484C, 38, 64, 0), (0x3A0D, 39, 65, 0),
-    (0x2EF1, 40, 67, 0), (0x261F, 41, 68, 0), (0x1F33, 42, 69, 0),
-    (0x19A8, 43, 70, 0), (0x1518, 44, 72, 0), (0x1177, 45, 73, 0),
-    (0x0E74, 46, 74, 0), (0x0BFB, 47, 75, 0), (0x09F8, 48, 77, 0),
-    (0x0861, 49, 78, 0), (0x0706, 50, 79, 0), (0x05CD, 51, 48, 0),
-    (0x04DE, 52, 50, 0), (0x040F, 53, 50, 0), (0x0363, 54, 51, 0),
-    (0x02D4, 55, 52, 0), (0x025C, 56, 53, 0), (0x01F8, 57, 54, 0),
-    (0x01A4, 58, 55, 0), (0x0160, 59, 56, 0), (0x0125, 60, 57, 0),
-    (0x00F6, 61, 58, 0), (0x00CB, 62, 59, 0), (0x00AB, 63, 61, 0),
-    (0x008F, 32, 61, 0), (0x5B12, 65, 65, 1), (0x4D04, 66, 80, 0),
-    (0x412C, 67, 81, 0), (0x37D8, 68, 82, 0), (0x2FE8, 69, 83, 0),
-    (0x293C, 70, 84, 0), (0x2379, 71, 86, 0), (0x1EDF, 72, 87, 0),
-    (0x1AA9, 73, 87, 0), (0x174E, 74, 72, 0), (0x1424, 75, 72, 0),
-    (0x119C, 76, 74, 0), (0x0F6B, 77, 74, 0), (0x0D51, 78, 75, 0),
-    (0x0BB6, 79, 77, 0), (0x0A40, 48, 77, 0), (0x5832, 81, 80, 1),
-    (0x4D1C, 82, 88, 0), (0x438E, 83, 89, 0), (0x3BDD, 84, 90, 0),
-    (0x34EE, 85, 91, 0), (0x2EAE, 86, 92, 0), (0x299A, 87, 93, 0),
-    (0x2516, 71, 86, 0), (0x5570, 89, 88, 1), (0x4CA9, 90, 95, 0),
-    (0x44D9, 91, 96, 0), (0x3E22, 92, 97, 0), (0x3824, 93, 99, 0),
-    (0x32B4, 94, 99, 0), (0x2E17, 86, 93, 0), (0x56A8, 96, 95, 1),
-    (0x4F46, 97, 101, 0), (0x47E5, 98, 102, 0), (0x41CF, 99, 103, 0),
-    (0x3C3D, 100, 104, 0), (0x375E, 93, 99, 0), (0x5231, 102, 105, 0),
-    (0x4C0F, 103, 106, 0), (0x4639, 104, 107, 0), (0x415E, 99, 103, 0),
-    (0x5627, 106, 105, 1), (0x50E7, 107, 108, 0), (0x4B85, 103, 109, 0),
-    (0x5597, 109, 110, 0), (0x504F, 107, 111, 0), (0x5A10, 111, 110, 1),
-    (0x5522, 109, 112, 0), (0x59EB, 111, 112, 1),
-    (0x5A1D, 113, 113, 0),  # fixed .5 bin (no adaptation)
-]
-
-_ARITH_FIXED = 113
-
-
-class _ArithEncoder:
-    """QM-coder encoder (T.81 Annex E). Context state lives in caller
-    bytearrays: one byte per bin, ``index | (mps << 7)``. The carry is
-    absorbed by bit stuffing (a 0xFF output byte leaves its successor's
-    MSB as the carry receptacle), so carry propagation backward through
-    the emitted bytes is always a single increment."""
-
-    def __init__(self):
-        self.a = 0x8000
-        self.c = 0
-        self.ct = 12
-        self.out = bytearray()
-
-    def encode(self, st: bytearray, i: int, bit: int) -> None:
-        sv = st[i]
-        qe, nmps, nlps, switch = _ARITH_QE[sv & 0x7F]
-        mps = sv >> 7
-        a = self.a - qe
-        if bit == mps:
-            if a & 0x8000:  # no renorm -> no state change (Qe estimation
-                self.a = a  # only updates on renormalization)
-                self.c += qe
-                return
-            if a < qe:      # conditional exchange: MPS takes the bottom
-                self.a = qe
-            else:
-                self.a = a
-                self.c += qe
-            st[i] = (mps << 7) | nmps
-        else:
-            if a < qe:      # conditional exchange: LPS takes the top
-                self.a = a
-                self.c += qe
-            else:
-                self.a = qe
-            if switch:
-                mps ^= 1
-            st[i] = (mps << 7) | nlps
-        self._renorm()
-
-    def encode_fixed(self, bit: int) -> None:
-        """AC sign bin: the fixed equiprobable state (index 113)."""
-        qe = 0x5A1D
-        a = self.a - qe
-        if bit == 0:
-            if a & 0x8000:
-                self.a = a
-                self.c += qe
-                return
-            if a < qe:
-                self.a = qe
-            else:
-                self.a = a
-                self.c += qe
-        else:
-            if a < qe:
-                self.a = a
-                self.c += qe
-            else:
-                self.a = qe
-        self._renorm()
-
-    def _byteout(self) -> None:
-        out = self.out
-        if out and out[-1] == 0xFF:
-            # the byte after 0xFF carries 7 fresh bits; its MSB is the
-            # carry receptacle (extracted one position higher)
-            out.append(self.c >> 20)
-            self.c &= 0xFFFFF
-            self.ct = 7
-        elif self.c < 0x8000000:
-            out.append(self.c >> 19)
-            self.c &= 0x7FFFF
-            self.ct = 8
-        else:  # carry into the previous byte
-            if not out:
-                raise RuntimeError("arith coder: carry before first byte")
-            out[-1] += 1
-            self.c &= 0x7FFFFFF  # the carry has been consumed
-            if out[-1] == 0xFF:
-                out.append(self.c >> 20)
-                self.c &= 0xFFFFF
-                self.ct = 7
-            else:
-                out.append(self.c >> 19)
-                self.c &= 0x7FFFF
-                self.ct = 8
-
-    def _renorm(self) -> None:
-        while self.a < 0x8000:
-            self.a <<= 1
-            self.c <<= 1
-            self.ct -= 1
-            if self.ct == 0:
-                self._byteout()
-
-    def flush(self) -> bytes:
-        # SETBITS: force trailing code bits to ONES within [C, C+A) —
-        # the decoder feeds 1-bits past the segment end (Figure E.21),
-        # so bits not pushed out by the two final byteouts must BE ones
-        # (the trailing-zeros CLEARBITS variant desyncs rare streams
-        # whose last decisions straddle the flush boundary)
-        t = self.c + self.a
-        self.c |= 0xFFFF
-        if self.c >= t:
-            self.c -= 0x8000
-        # FINALWRITES: push the remaining code bits through two byteouts
-        self.c <<= self.ct
-        self._byteout()
-        self.c <<= self.ct
-        self._byteout()
-        # A trailing 0xFF must be completed by a stuffed byte (B.1.1.5:
-        # every data 0xFF is followed by a byte <= 0x7F) — otherwise the
-        # following marker's 0xFF makes the dangling byte scan as a
-        # marker prefix and the segment loses its final code byte. The
-        # stuffed byte is 0x7F, not 0x00: under SETBITS all trailing
-        # code bits are ONES, and the decoder consumes the stuffed
-        # byte's 7 bits as code bits (then feeds 1-bits past the
-        # marker), so stuffing with ones reconstructs C exactly.
-        if self.out and self.out[-1] == 0xFF:
-            self.out.append(0x7F)
-        return bytes(self.out)
-
-
-class _ArithDecoder:
-    """QM-coder decoder (T.81 Annex E). Past the end of the entropy
-    segment (a marker, or end of data) BYTEIN feeds 1-bits, per Figure
-    E.21 — that is normal operation for the final MCUs, not an error."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.n = len(data)
-        self.bp = 0
-        self.synthetic = 0  # 1-bit feeds past the segment end (E.21)
-        self.c = (self.data[0] if self.n else 0xFF) << 16
-        self.ct = 0
-        self._bytein()
-        self.c <<= 7
-        self.ct -= 7
-        self.a = 0x8000
-
-    def _bytein(self) -> None:
-        b = self.data[self.bp] if self.bp < self.n else 0xFF
-        if b == 0xFF:
-            b1 = self.data[self.bp + 1] if self.bp + 1 < self.n else 0xD9
-            if b1 > 0x8F:  # marker / end of data: feed 1-bits
-                self.synthetic += 1
-                self.c += 0xFF00
-                self.ct = 8
-            else:          # stuffed: successor carries only 7 fresh bits
-                self.bp += 1
-                self.c += b1 << 9
-                self.ct = 7
-        else:
-            self.bp += 1
-            nb = self.data[self.bp] if self.bp < self.n else 0xFF
-            self.c += nb << 8
-            self.ct = 8
-
-    def _renorm(self) -> None:
-        while True:
-            if self.ct == 0:
-                self._bytein()
-            self.a <<= 1
-            self.c = (self.c << 1) & 0xFFFFFFFF
-            self.ct -= 1
-            if self.a & 0x8000:
-                return
-
-    def decode(self, st: bytearray, i: int) -> int:
-        sv = st[i]
-        qe, nmps, nlps, switch = _ARITH_QE[sv & 0x7F]
-        mps = sv >> 7
-        a = self.a - qe
-        if ((self.c >> 16) & 0xFFFF) < qe:
-            # bottom subinterval (size Qe)
-            if a < qe:  # exchanged: bottom is the MPS
-                d = mps
-                st[i] = (mps << 7) | nmps
-            else:
-                d = mps ^ 1
-                if switch:
-                    mps ^= 1
-                st[i] = (mps << 7) | nlps
-            self.a = qe
-            self._renorm()
-        else:
-            self.c -= qe << 16
-            if a & 0x8000:
-                self.a = a
-                return mps
-            if a < qe:  # exchanged: top is the LPS
-                d = mps ^ 1
-                if switch:
-                    mps ^= 1
-                st[i] = (mps << 7) | nlps
-            else:
-                d = mps
-                st[i] = (mps << 7) | nmps
-            self.a = a
-            self._renorm()
-        return d
-
-    def decode_fixed(self) -> int:
-        qe = 0x5A1D
-        a = self.a - qe
-        if ((self.c >> 16) & 0xFFFF) < qe:
-            d = 0 if a < qe else 1
-            self.a = qe
-            self._renorm()
-        else:
-            self.c -= qe << 16
-            if a & 0x8000:
-                self.a = a
-                return 0
-            d = 1 if a < qe else 0
-            self.a = a
-            self._renorm()
-        return d
-
-
-def _arith_encode_dc(enc, dc_stats, state, diff, lo, up):
-    """Encode one DC difference (T.81 F.1.4.4.1); updates ``state``
-    ([conditioning_ctx, last_dc]) for the component."""
-    base = state[0]
-    if diff == 0:
-        enc.encode(dc_stats, base, 0)
-        state[0] = 0
-        return
-    enc.encode(dc_stats, base, 1)
-    if diff > 0:
-        enc.encode(dc_stats, base + 1, 0)
-        st = base + 2
-        sign = 0
-        v = diff
-    else:
-        enc.encode(dc_stats, base + 1, 1)
-        st = base + 3
-        sign = 1
-        v = -diff
-    m = 0
-    v -= 1
-    if v:
-        enc.encode(dc_stats, st, 1)
-        m = 1
-        v2 = v
-        st = 20
-        while v2 >> 1:
-            v2 >>= 1
-            enc.encode(dc_stats, st, 1)
-            m <<= 1
-            st += 1
-    enc.encode(dc_stats, st, 0)
-    if m < (1 << lo) >> 1:
-        state[0] = 0
-    elif m > (1 << up) >> 1:
-        state[0] = 12 + sign * 4
-    else:
-        state[0] = 4 + sign * 4
-    st += 14
-    while m >> 1:
-        m >>= 1
-        enc.encode(dc_stats, st, 1 if m & v else 0)
-
-
-def _arith_encode_ac(enc, ac_stats, seq, kx):
-    """Encode one block's AC run (T.81 F.1.4.4.2), zigzag ``seq``."""
-    ke = 0
-    for i in range(63, 0, -1):
-        if seq[i]:
-            ke = i
-            break
-    k = 1
-    while k <= ke:
-        st = 3 * (k - 1)
-        enc.encode(ac_stats, st, 0)  # not EOB
-        while seq[k] == 0:
-            enc.encode(ac_stats, st + 1, 0)
-            st += 3
-            k += 1
-        enc.encode(ac_stats, st + 1, 1)
-        v = seq[k]
-        if v > 0:
-            enc.encode_fixed(0)
-        else:
-            enc.encode_fixed(1)
-            v = -v
-        st += 2
-        m = 0
-        v -= 1
-        if v:
-            enc.encode(ac_stats, st, 1)
-            m = 1
-            v2 = v
-            if v2 >> 1:
-                enc.encode(ac_stats, st, 1)  # X2 shares the X1 bin
-                m = 2
-                v2 >>= 1
-                st = 189 if k <= kx else 217
-                while v2 >> 1:
-                    v2 >>= 1
-                    enc.encode(ac_stats, st, 1)
-                    m <<= 1
-                    st += 1
-        enc.encode(ac_stats, st, 0)
-        st += 14
-        while m >> 1:
-            m >>= 1
-            enc.encode(ac_stats, st, 1 if m & v else 0)
-        k += 1
-    if ke < 63:
-        enc.encode(ac_stats, 3 * ke, 1)  # EOB
-
-
-def _arith_decode_dc(dec, dc_stats, state, lo, up) -> int:
-    """Decode one DC difference; mirrors :func:`_arith_encode_dc`."""
-    base = state[0]
-    if not dec.decode(dc_stats, base):
-        state[0] = 0
-        return 0
-    sign = dec.decode(dc_stats, base + 1)
-    st = base + 2 + sign
-    m = 0
-    if dec.decode(dc_stats, st):
-        st = 20
-        m = 1
-        while dec.decode(dc_stats, st):
-            m <<= 1
-            if m == 0x8000:
-                raise ValueError("arith JPEG: runaway DC magnitude")
-            st += 1
-    if m < (1 << lo) >> 1:
-        state[0] = 0
-    elif m > (1 << up) >> 1:
-        state[0] = 12 + sign * 4
-    else:
-        state[0] = 4 + sign * 4
-    v = m
-    st += 14
-    while m >> 1:
-        m >>= 1
-        if dec.decode(dc_stats, st):
-            v |= m
-    v += 1
-    return -v if sign else v
-
-
-def _arith_decode_block(dec, dc_stats, ac_stats, state, lo, up, kx,
-                        differential: bool = False):
-    """Decode one 8x8 block -> zigzag coefficient list (DC absolute).
-    ``differential`` (T.81 J.1.1.2): the DC prediction is zero, so the
-    decoded difference IS the coefficient (conditioning still follows
-    the previous difference via ``state[0]``)."""
-    seq = [0] * 64
-    d = _arith_decode_dc(dec, dc_stats, state, lo, up)
-    if differential:
-        seq[0] = d
-    else:
-        state[1] += d
-        seq[0] = state[1]
-    k = 1
-    while k <= 63:
-        st = 3 * (k - 1)
-        if dec.decode(ac_stats, st):
-            break  # EOB
-        while not dec.decode(ac_stats, st + 1):
-            st += 3
-            k += 1
-            if k > 63:
-                raise ValueError("arith JPEG: AC index overrun")
-        sign = dec.decode_fixed()
-        st += 2
-        m = 0
-        if dec.decode(ac_stats, st):
-            m = 1
-            if dec.decode(ac_stats, st):
-                m = 2
-                st = 189 if k <= kx else 217
-                while dec.decode(ac_stats, st):
-                    m <<= 1
-                    if m == 0x8000:
-                        raise ValueError(
-                            "arith JPEG: runaway AC magnitude")
-                    st += 1
-        v = m
-        st += 14
-        while m >> 1:
-            m >>= 1
-            if dec.decode(ac_stats, st):
-                v |= m
-        v += 1
-        seq[k] = -v if sign else v
-        k += 1
-    return seq
-
-
-def encode_jpeg_arith_gray(width: int, height: int, pixels: bytes,
-                           restart_every: int = 0,
-                           precision: int = 8) -> bytes:
-    """Sequential ARITHMETIC-coded grayscale JPEG (SOF9; T.81 Annex E QM
-    coder over the Annex F statistical models; Annex K quant table, same
-    lossy/exact contract as :func:`encode_jpeg_gray`). Default
-    conditioning (L=0, U=1, Kx=5) — no DAC segment needed, but one is
-    emitted anyway so the decoder's DAC path is exercised by every
-    stream. ``restart_every`` > 0 emits DRI + RSTn, resetting statistics,
-    DC conditioning contexts and the coder per interval.
-    ``precision`` = 8 (``pixels`` is width*height bytes) or 12 (r6:
-    ``pixels`` is width*height little-endian uint16 samples in 0..4095,
-    level shift 2048 — decode via :func:`decode_jpeg_gray12`; the QM
-    models need no table changes at 12-bit, unlike huffman)."""
-    import numpy as np
-
-    if precision not in (8, 12):
-        raise ValueError("precision must be 8 or 12")
-    if precision == 12:
-        if len(pixels) != width * height * 2:
-            raise ValueError(
-                "pixels must be width*height uint16-LE samples at 12-bit")
-        img = np.frombuffer(pixels, dtype="<u2").reshape(height, width)
-        if int(img.max(initial=0)) > 4095:
-            raise ValueError("12-bit samples must be in 0..4095")
-    elif len(pixels) != width * height:
-        raise ValueError("pixels must be width*height bytes")
-    else:
-        img = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width)
-    bh, bw = (height + 7) // 8, (width + 7) // 8
-    padded = np.empty((bh * 8, bw * 8), dtype=np.float64)
-    padded[:height, :width] = img
-    padded[height:, :width] = img[-1:, :]
-    padded[:, width:] = padded[:, width - 1:width]
-
-    C = _dct_matrix()
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    zz = _JPEG_ZIGZAG
-    lo, up, kx = 0, 1, 5
-
-    out = bytearray()
-    enc = _ArithEncoder()
-    dc_stats = bytearray(64)
-    ac_stats = bytearray(256)
-    state = [0, 0]  # [dc conditioning ctx, last dc]
-    mcu = 0
-    rst = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if restart_every and mcu and mcu % restart_every == 0:
-                out += enc.flush()
-                out += bytes([0xFF, 0xD0 + (rst % 8)])
-                rst += 1
-                enc = _ArithEncoder()
-                dc_stats = bytearray(64)
-                ac_stats = bytearray(256)
-                state = [0, 0]
-            mcu += 1
-            block = (padded[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8]
-                     - float(1 << (precision - 1)))
-            coef = C @ block @ C.T
-            quant = np.round(coef / q).astype(np.int64)
-            flat = quant.reshape(-1)
-            seq = [int(flat[zz[i]]) for i in range(64)]
-            _arith_encode_dc(enc, dc_stats, state, seq[0] - state[1], lo, up)
-            state[1] = seq[0]
-            _arith_encode_ac(enc, ac_stats, seq, kx)
-    out += enc.flush()
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes(
-        _JPEG_QTABLE[zz[i]] for i in range(64)))
-    sof = seg(0xC9, struct.pack(">BHHB", precision, height, width, 1)
-              + bytes([1, 0x11, 0]))
-    dac = seg(0xCC, bytes([0x00, (up << 4) | lo, 0x10, kx]))
-    sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    dri = (seg(0xDD, struct.pack(">H", restart_every))
-           if restart_every else b"")
-    return (b"\xff\xd8" + dqt + sof + dac + dri + sos + bytes(out)
-            + b"\xff\xd9")
-
-
-def encode_jpeg_arith_color(width: int, height: int, y_pixels: bytes,
-                            subsampling: str = "4:2:0",
-                            cb_pixels: bytes | None = None,
-                            cr_pixels: bytes | None = None,
-                            interleave: bool = True) -> bytes:
-    """Sequential ARITHMETIC-coded COLOR (YCbCr interleaved) JPEG (SOF9).
-
-    Same plane/subsampling contract as :func:`encode_jpeg_color`, but
-    entropy-coded with the T.81 Annex E QM coder: luma on conditioning
-    tables (DC 0, AC 0), both chroma components SHARING tables (DC 1,
-    AC 1) — i.e. one statistics area per table per §F.1.4.4, which the
-    decoder must mirror to stay in sync. Same lossy chain as the
-    huffman color encoder, so decodes must be pixel-identical.
-    ``interleave=False`` (r6) emits three single-component scans, each
-    with a fresh QM coder and statistics areas (T.81 resets both at
-    every scan) — and must decode identically."""
-    import numpy as np
-
-    if len(y_pixels) != width * height:
-        raise ValueError("y_pixels must be width*height bytes")
-    try:
-        hy, vy = {"4:4:4": (1, 1), "4:2:2": (2, 1),
-                  "4:2:0": (2, 2)}[subsampling]
-    except KeyError:
-        raise ValueError(
-            "subsampling must be '4:4:4', '4:2:2' or '4:2:0'") from None
-    img = np.frombuffer(y_pixels, dtype=np.uint8).reshape(height, width)
-    tile_w, tile_h = 8 * hy, 8 * vy
-    ph = (height + tile_h - 1) // tile_h * tile_h
-    pw = (width + tile_w - 1) // tile_w * tile_w
-    padded = np.empty((ph, pw), dtype=np.float64)
-    padded[:height, :width] = img
-    padded[height:, :width] = img[-1:, :]
-    padded[:, width:] = padded[:, width - 1:width]
-
-    cw, chh = -(-width // hy), -(-height // vy)
-    cpw, cph = pw // hy, ph // vy
-
-    def chroma_plane(pix: bytes | None, name: str):
-        if pix is None:
-            return np.full((cph, cpw), 128.0)
-        if len(pix) != cw * chh:
-            raise ValueError(
-                f"{name} must be ceil(width/{hy}) * ceil(height/{vy}) "
-                f"= {cw}*{chh} bytes at {subsampling}")
-        c = np.frombuffer(pix, dtype=np.uint8).reshape(chh, cw)
-        out = np.empty((cph, cpw), dtype=np.float64)
-        out[:chh, :cw] = c
-        out[chh:, :cw] = c[-1:, :]
-        out[:, cw:] = out[:, cw - 1:cw]
-        return out
-
-    cb_plane = chroma_plane(cb_pixels, "cb_pixels")
-    cr_plane = chroma_plane(cr_pixels, "cr_pixels")
-
-    C = _dct_matrix()
-    zz = _JPEG_ZIGZAG
-    qy = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    qc = np.array(_JPEG_QTABLE_CHROMA, dtype=np.float64).reshape(8, 8)
-    lo, up, kx = 0, 1, 5
-
-    enc = _ArithEncoder()
-    dc_stats = {0: bytearray(64), 1: bytearray(64)}
-    ac_stats = {0: bytearray(256), 1: bytearray(256)}
-    states = {"y": [0, 0], "cb": [0, 0], "cr": [0, 0]}
-
-    def put_block(block, qmat, tdc, tac, key):
-        coef = C @ block @ C.T
-        quant = np.round(coef / qmat).astype(np.int64)
-        flat = quant.reshape(-1)
-        seq = [int(flat[zz[i]]) for i in range(64)]
-        st = states[key]
-        _arith_encode_dc(enc, dc_stats[tdc], st, seq[0] - st[1], lo, up)
-        st[1] = seq[0]
-        _arith_encode_ac(enc, ac_stats[tac], seq, kx)
-
-    if interleave:
-        for my in range(ph // tile_h):
-            for mx in range(pw // tile_w):
-                for by in range(vy):
-                    for bx in range(hy):
-                        r0 = my * tile_h + by * 8
-                        c0 = mx * tile_w + bx * 8
-                        put_block(padded[r0:r0 + 8, c0:c0 + 8] - 128.0,
-                                  qy, 0, 0, "y")
-                cr0, cc0 = my * 8, mx * 8
-                put_block(cb_plane[cr0:cr0 + 8, cc0:cc0 + 8] - 128.0,
-                          qc, 1, 1, "cb")
-                put_block(cr_plane[cr0:cr0 + 8, cc0:cc0 + 8] - 128.0,
-                          qc, 1, 1, "cr")
-        ecs = enc.flush()
-    else:
-        scan_parts = []
-        grids = ((1, 0x00, padded, qy, 0, 0, "y",
-                  -(-width // 8), -(-height // 8)),
-                 (2, 0x11, cb_plane, qc, 1, 1, "cb",
-                  -(-cw // 8), -(-chh // 8)),
-                 (3, 0x11, cr_plane, qc, 1, 1, "cr",
-                  -(-cw // 8), -(-chh // 8)))
-        for cid, tt, plane, q, tdc, tac, key, nbx, nby in grids:
-            enc = _ArithEncoder()
-            dc_stats = {tdc: bytearray(64)}
-            ac_stats = {tac: bytearray(256)}
-            states = {key: [0, 0]}
-            for by in range(nby):
-                for bx in range(nbx):
-                    put_block(plane[by * 8:(by + 1) * 8,
-                                    bx * 8:(bx + 1) * 8] - 128.0,
-                              q, tdc, tac, key)
-            scan_parts.append((cid, tt, enc.flush()))
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    dqt = (seg(0xDB, bytes([0x00]) + bytes(_JPEG_QTABLE[zz[i]]
-                                           for i in range(64)))
-           + seg(0xDB, bytes([0x01]) + bytes(_JPEG_QTABLE_CHROMA[zz[i]]
-                                             for i in range(64))))
-    hv_y = (hy << 4) | vy
-    sof = seg(0xC9, struct.pack(">BHHB", 8, height, width, 3)
-              + bytes([1, hv_y, 0, 2, 0x11, 1, 3, 0x11, 1]))
-    dac = seg(0xCC, bytes([0x00, (up << 4) | lo, 0x01, (up << 4) | lo,
-                           0x10, kx, 0x11, kx]))
-    if interleave:
-        scans_out = (seg(0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11,
-                                      0, 63, 0])) + ecs)
-    else:
-        scans_out = b"".join(
-            seg(0xDA, bytes([1, cid, tt, 0, 63, 0])) + e
-            for cid, tt, e in scan_parts)
-    return b"\xff\xd8" + dqt + sof + dac + scans_out + b"\xff\xd9"
-
-
 class _BitReader:
     def __init__(self, data: bytes):
         self.data = data
@@ -2429,19 +1479,16 @@ def decode_jpeg_gray(data: bytes) -> tuple[int, int, bytes]:
     Parses DQT/SOF/DHT/SOS/DRI from the stream (any conformant file, not
     just our encoder's — 0xFF fill bytes per T.81 B.1.1.2 included),
     huffman-decodes, dequantizes, inverse-DCTs with numpy. Handles
-    baseline (SOF0), extended sequential (SOF1, r6), progressive (SOF2,
-    r5), lossless (SOF3, r5), the arithmetic modes SOF9/10/11 (r6) and
-    DHP hierarchical pyramids with every differential frame type (r6),
-    grayscale AND interleaved multi-component color (ANY
-    sampling-factor layout — 4:4:4, 4:2:0, 4:2:2, ..., including
-    subsampled-LUMA streams, whose reduced Y plane nearest-upsamples
-    like any other component, r6); the output is the LUMA plane (Y is
-    BT.601 luma directly — chroma components are decoded to keep the
-    stream in sync and discarded; non-interleaved multi-scan streams
-    decode under both entropy coders, and 4-component CMYK/YCCK via
-    :func:`decode_jpeg`, r6). 12-bit streams raise ValueError toward
-    :func:`decode_jpeg_gray12`. Malformed / truncated input raises
-    ValueError."""
+    baseline (SOF0), extended sequential (SOF1, r6) and progressive
+    (SOF2, r5) 8-bit streams, grayscale AND interleaved multi-component
+    color (ANY sampling-factor layout — 4:4:4, 4:2:0, 4:2:2, ...,
+    including subsampled-LUMA streams, whose reduced Y plane
+    nearest-upsamples like any other component, r6); the output is the
+    LUMA plane (Y is BT.601 luma directly — chroma components are
+    decoded to keep the stream in sync and discarded; non-interleaved
+    multi-scan streams decode too, r6). Other frame types, precisions
+    and >3-component frames raise NotImplementedError; malformed /
+    truncated input raises ValueError."""
     import numpy as np
 
     try:
@@ -2449,220 +1496,59 @@ def decode_jpeg_gray(data: bytes) -> tuple[int, int, bytes]:
             data, render_all=False)
     except (IndexError, KeyError, struct.error) as e:
         raise ValueError(f"malformed or truncated JPEG stream: {e}") from e
-    if comps[0].get("prec", 8) != 8:
-        raise ValueError(
-            "12-bit stream: use decode_jpeg_gray12 for full-range output")
     # nearest-upsample if the luma itself is subsampled (r6)
     y = _upsample_plane(planes[comps[0]["id"]], comps[0], hmax, vmax,
-                        width, height, "nearest")
+                        width, height)
     pix = np.clip(np.round(y), 0, 255).astype(np.uint8)
     return width, height, pix.tobytes()
 
 
-def decode_jpeg_gray12(data: bytes) -> tuple[int, int, bytes]:
-    """12-bit-precision JPEG (r6; sequential arithmetic SOF9 and
-    extended-sequential huffman SOF1) -> (width, height, little-endian
-    uint16 LUMA samples clamped to 0..4095). 8-bit streams decode too
-    (their samples simply stay within 0..255)."""
-    import numpy as np
-
-    try:
-        width, height, comps, planes, hmax, vmax = _decode_jpeg_planes(
-            data, render_all=False)
-    except (IndexError, KeyError, struct.error) as e:
-        raise ValueError(f"malformed or truncated JPEG stream: {e}") from e
-    prec = comps[0].get("prec", 8)
-    y = _upsample_plane(planes[comps[0]["id"]], comps[0], hmax, vmax,
-                        width, height, "nearest")
-    pix = np.clip(np.round(y), 0, (1 << prec) - 1).astype("<u2")
-    return width, height, pix.tobytes()
-
-
-def decode_jpeg(data: bytes, upsample: str = "nearest",
-                ) -> tuple[int, int, int, bytes]:
+def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     """Baseline sequential JPEG -> (width, height, n_channels, pixels).
 
     1-component streams return the gray plane (n_channels=1); 3-component
     YCbCr streams return interleaved RGB (n_channels=3): every component
     plane is dequantized/IDCT'd, subsampled planes — luma included, r6 —
-    are upsampled to full resolution (``upsample`` = ``"nearest"`` —
-    T.81 makes upsampling filter choice decoder-defined; nearest is the
-    analytically-predictable choice our oracles use — or ``"bilinear"``,
-    the centered-sample triangular filter), then converted per the JFIF
-    YCbCr<->RGB matrix with floor(x+0.5) rounding and [0,255] clamping.
-    4-component streams return CMYK/YCCK per the Adobe APP14 transform
-    (n_channels=4, stored inverted-ink convention). Every T.81 frame
-    type decodes, multi-scan non-interleaved streams too (r6);
-    ValueError on malformed input."""
+    are nearest-upsampled to full resolution (T.81 leaves the filter to
+    the decoder; nearest is the analytically-predictable choice the
+    oracles use), then converted per the JFIF YCbCr<->RGB matrix with
+    floor(x+0.5) rounding and [0,255] clamping. Same frame types as
+    :func:`decode_jpeg_gray`; 2-component streams raise
+    NotImplementedError, malformed input ValueError."""
     import numpy as np
 
-    if upsample not in ("nearest", "bilinear"):
-        raise ValueError("upsample must be 'nearest' or 'bilinear'")
     try:
         width, height, comps, planes, hmax, vmax = _decode_jpeg_planes(
             data, render_all=True)
     except (IndexError, KeyError, struct.error) as e:
         raise ValueError(f"malformed or truncated JPEG stream: {e}") from e
-    if comps[0].get("prec", 8) != 8:
-        raise ValueError(
-            "12-bit stream: use decode_jpeg_gray12 for full-range output")
     if len(comps) == 1:
         y = planes[comps[0]["id"]]
         pix = np.clip(np.round(y[:height, :width]), 0, 255).astype(np.uint8)
         return width, height, 1, pix.tobytes()
-    if len(comps) == 4:
-        # CMYK / YCCK (r6): the Adobe APP14 transform flag picks the
-        # interpretation (2 = YCCK, else CMYK; absent APP14 with four
-        # components means CMYK per Adobe TN 5116). Channels return in
-        # Adobe's STORED (inverted-ink) convention — ink = 255 - value
-        # — so transform 0 passes samples through and transform 2
-        # converts the YCC triplet with the same JFIF matrix as RGB,
-        # leaving K untouched. True ICC color management (what the CMYK
-        # values MEAN on paper) stays out of scope.
-        up4 = [_upsample_plane(planes[c["id"]], c, hmax, vmax,
-                               width, height, upsample) for c in comps]
-        if _adobe_transform(data) == 2:
-            first3 = _ycbcr_to_rgb(up4[0], up4[1], up4[2])
-        else:
-            first3 = np.stack(
-                [np.clip(np.floor(p + 0.5), 0, 255).astype(np.uint8)
-                 for p in up4[:3]], axis=-1)
-        k = np.clip(np.floor(up4[3] + 0.5), 0, 255).astype(np.uint8)
-        out = np.concatenate([first3, k[:, :, None]], axis=-1)
-        return width, height, 4, out.tobytes()
     if len(comps) != 3:
         raise NotImplementedError(
             f"{len(comps)}-component JPEG ({len(comps)}-channel layouts "
             "have no defined color interpretation — PIL's seam)")
-    y = _upsample_plane(planes[comps[0]["id"]], comps[0], hmax, vmax,
-                        width, height, upsample)
-    cb = _upsample_plane(planes[comps[1]["id"]], comps[1], hmax, vmax,
-                         width, height, upsample)
-    cr = _upsample_plane(planes[comps[2]["id"]], comps[2], hmax, vmax,
-                         width, height, upsample)
+    y, cb, cr = (_upsample_plane(planes[c["id"]], c, hmax, vmax,
+                                 width, height) for c in comps)
     rgb = _ycbcr_to_rgb(y, cb, cr)
     return width, height, 3, rgb.tobytes()
 
 
-def _adobe_transform(data: bytes) -> int:
-    """Scan for an Adobe APP14 segment and return its color-transform
-    byte (0 = CMYK/RGB as stored, 1 = YCbCr, 2 = YCCK); 0 when absent
-    (Adobe TN 5116's default for 4-component streams)."""
-    pos = 2
-    while pos + 3 < len(data):
-        if data[pos] != 0xFF:
-            pos += 1
-            continue
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker in (0xD9, 0xDA):
-            break  # tables-misc end at the first scan
-        (seglen,) = struct.unpack(">H", data[pos:pos + 2])
-        body = data[pos + 2:pos + seglen]
-        pos += seglen
-        if marker == 0xEE and body[:5] == b"Adobe" and len(body) >= 12:
-            return body[11]
-    return 0
-
-
-def encode_jpeg_cmyk(width: int, height: int, c_pixels: bytes,
-                     m_pixels: bytes, y_pixels: bytes, k_pixels: bytes,
-                     ycck: bool = False) -> bytes:
-    """Baseline 4-component CMYK JPEG (r6): four 1x1-sampled planes in
-    Adobe's stored (inverted-ink) convention, one interleaved scan,
-    quant table 0 + the typical huffman tables for every component, and
-    an Adobe APP14 segment carrying the transform byte (0 = CMYK,
-    2 = YCCK — the planes are emitted as given either way; a YCCK
-    caller passes the YCC-transformed triplet as c/m/y). Decode via
-    :func:`decode_jpeg` (n_channels=4). Even-constant blocks stay
-    exact, as everywhere in this module."""
-    import numpy as np
-
-    planes = []
-    for name, pix in (("c", c_pixels), ("m", m_pixels),
-                      ("y", y_pixels), ("k", k_pixels)):
-        if len(pix) != width * height:
-            raise ValueError(f"{name}_pixels must be width*height bytes")
-        planes.append(np.frombuffer(pix, dtype=np.uint8)
-                      .reshape(height, width))
-
-    bh, bw = (height + 7) // 8, (width + 7) // 8
-    padded = []
-    for p in planes:
-        pad = np.empty((bh * 8, bw * 8), dtype=np.float64)
-        pad[:height, :width] = p
-        pad[height:, :width] = p[-1:, :]
-        pad[:, width:] = pad[:, width - 1:width]
-        padded.append(pad)
-
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    dc_tab = _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_tab = _huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    zz = _JPEG_ZIGZAG
-
-    w = _BitWriter()
-    prev = [0, 0, 0, 0]
-    for by in range(bh):
-        for bx in range(bw):
-            for ci, pad in enumerate(padded):
-                prev[ci] = _encode_block(
-                    w, pad[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8]
-                    - 128.0, q, dc_tab, ac_tab, prev[ci])
-    w.flush()
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    app14 = seg(0xEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0,
-                                             2 if ycck else 0))
-    dqt = seg(0xDB, bytes([0x00]) + bytes(
-        _JPEG_QTABLE[zz[i]] for i in range(64)))
-    sof = seg(0xC0, struct.pack(">BHHB", 8, height, width, 4)
-              + bytes([1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0, 4, 0x11, 0]))
-    dht = (seg(0xC4, bytes([0x00]) + bytes(_JPEG_DC_BITS)
-               + bytes(_JPEG_DC_VALS))
-           + seg(0xC4, bytes([0x10]) + bytes(_JPEG_AC_BITS)
-                 + bytes(_JPEG_AC_VALS)))
-    sos = seg(0xDA, bytes([4, 1, 0x00, 2, 0x00, 3, 0x00, 4, 0x00,
-                           0, 63, 0]))
-    return (b"\xff\xd8" + app14 + dqt + sof + dht + sos + bytes(w.out)
-            + b"\xff\xd9")
-
-
 def _upsample_plane(plane, comp, hmax: int, vmax: int,
-                    width: int, height: int, mode: str):
-    """Chroma plane (subsampled by hmax/comp.h x vmax/comp.v) -> full
-    (height, width) float array. ``nearest`` replicates the covering
-    sample (output x maps to chroma x*h//hmax); ``bilinear`` interpolates
-    between sample CENTERS (output center (x+0.5) maps to chroma
-    coordinate (x+0.5)*h/hmax - 0.5, edge-clamped) — the classic
-    triangular reconstruction."""
+                    width: int, height: int):
+    """Component plane (subsampled by hmax/comp.h x vmax/comp.v) -> full
+    (height, width) float array by nearest neighbour: output x maps to
+    plane x*h//hmax."""
     import numpy as np
 
     h, v = comp["h"], comp["v"]
     if h == hmax and v == vmax:
         return plane[:height, :width]
-    if mode == "nearest":
-        xs = np.arange(width) * h // hmax
-        ys = np.arange(height) * v // vmax
-        return plane[np.ix_(ys, xs)]
-    cw = max(1, -(-width * h // hmax))   # ceil: valid chroma extent
-    ch = max(1, -(-height * v // vmax))
-    xs = np.clip((np.arange(width) + 0.5) * h / hmax - 0.5, 0, cw - 1)
-    ys = np.clip((np.arange(height) + 0.5) * v / vmax - 0.5, 0, ch - 1)
-    x0 = np.minimum(xs.astype(np.int64), cw - 1)
-    y0 = np.minimum(ys.astype(np.int64), ch - 1)
-    x1 = np.minimum(x0 + 1, cw - 1)
-    y1 = np.minimum(y0 + 1, ch - 1)
-    fx, fy = xs - x0, ys - y0
-    p = plane
-    top = p[np.ix_(y0, x0)] * (1 - fx) + p[np.ix_(y0, x1)] * fx
-    bot = p[np.ix_(y1, x0)] * (1 - fx) + p[np.ix_(y1, x1)] * fx
-    return top * (1 - fy)[:, None] + bot * fy[:, None]
+    xs = np.arange(width) * h // hmax
+    ys = np.arange(height) * v // vmax
+    return plane[np.ix_(ys, xs)]
 
 
 def _ycbcr_to_rgb(y, cb, cr):
@@ -2676,6 +1562,27 @@ def _ycbcr_to_rgb(y, cb, cr):
     b = y + 1.772 * (cb - 128.0)
     out = np.stack([r, g, b], axis=-1)
     return np.clip(np.floor(out + 0.5), 0, 255).astype(np.uint8)
+
+
+# SOF3/5-7/9-11/13-15 and DHP: lossless, differential, arithmetic and
+# hierarchical frames (0xC4 DHT, 0xC8 JPG and 0xCC DAC are not frames)
+_SEAM_FRAMES = frozenset(range(0xC3, 0xD0)) - {0xC4, 0xC8, 0xCC} | {0xDE}
+
+
+def _parse_sof(body: bytes) -> tuple[int, int, list[dict]]:
+    """SOF0/1/2 segment body -> (height, width, [{id, h, v, tq}]). Only
+    8-bit frames with 1-3 components decode; 12-bit and CMYK/YCCK
+    frames hit the NotImplementedError seam."""
+    prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
+    if prec != 8 or ncomp > 3:
+        raise NotImplementedError(
+            f"{prec}-bit {ncomp}-component JPEG: only 8-bit frames with "
+            "1-3 components decode natively — PIL plugs in here")
+    comps = []
+    for c in range(ncomp):
+        cid, hv, tq = body[6 + 3 * c:9 + 3 * c]
+        comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
+    return height, width, comps
 
 
 def _decode_jpeg_planes(data: bytes, render_all: bool):
@@ -2708,58 +1615,22 @@ def _decode_jpeg_planes(data: bytes, render_all: bool):
         pos += seglen
         if marker == 0xDB:
             _parse_dqt_body(body, qtables)
-        elif marker in (0xC0, 0xC1):
+        elif marker in (0xC0, 0xC1, 0xC2):
             # SOF0 baseline and SOF1 extended sequential share the scan
-            # structure; extended adds 12-bit precision (r6) and table
-            # ids 2-3 (the huff dict is id-agnostic already)
-            prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
-            if marker == 0xC0 and prec != 8:
-                raise ValueError("baseline (SOF0) precision must be 8")
-            if prec not in (8, 12):
-                raise ValueError(
-                    f"extended-sequential precision must be 8 or 12, "
-                    f"got {prec}")
-            for c in range(ncomp):
-                cid, hv, tq = body[6 + 3 * c:9 + 3 * c]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F,
-                              "tq": tq, "prec": prec})
-        elif marker == 0xC2:
-            # progressive DCT (SOF2): own scan loop — spectral selection
-            # + successive approximation (r5)
-            return _decode_progressive(data, render_all)
-        elif marker == 0xC3:
-            # lossless (SOF3): predictive huffman decode (r5)
-            return _decode_lossless(data, render_all)
-        elif marker == 0xC9:
-            # sequential arithmetic-coded (SOF9): QM-coder scan loop (r6)
-            return _decode_arith(data, render_all)
-        elif marker == 0xCA:
-            # progressive arithmetic-coded (SOF10): Annex G scans (r6)
-            return _decode_arith_progressive(data, render_all)
-        elif marker == 0xCB:
-            # lossless arithmetic-coded (SOF11): Annex H model (r6)
-            return _decode_arith_lossless(data, render_all)
-        elif marker == 0xDE:
-            # hierarchical pyramid (DHP, Annex J): frame walker (r6)
-            return _decode_hierarchical(data, render_all)
-        elif marker in (0xC5, 0xC6, 0xC7,
-                        0xCD, 0xCE, 0xCF):
+            # structure (SOF1 adds table ids 2-3; the huff dict is
+            # id-agnostic already); progressive SOF2 has its own scan
+            # loop — spectral selection + successive approximation (r5)
+            height, width, comps = _parse_sof(body)
+            if marker == 0xC2:
+                return _decode_progressive(data, render_all)
+        elif marker in _SEAM_FRAMES:
             raise NotImplementedError(
-                "only baseline sequential (SOF0), extended sequential "
-                "(SOF1), progressive (SOF2), lossless (SOF3), the "
-                "arithmetic modes SOF9/10/11 and DHP hierarchical "
-                "pyramids with SOF15 differentials are supported "
-                "(standalone huffman/DCT differential frames remain the "
-                "codec seam)")
+                f"JPEG frame type 0x{marker:02X} (lossless, arithmetic, "
+                "differential or hierarchical coding): only sequential "
+                "(SOF0/SOF1) and progressive huffman (SOF2) decode "
+                "natively — PIL plugs in here")
         elif marker == 0xC4:
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 0x0F
-                bits = list(body[i + 1:i + 17])
-                n = sum(bits)
-                vals = list(body[i + 17:i + 17 + n])
-                huff[(tc, th)] = _huff_decode_tree(bits, vals)
-                i += 17 + n
+            _parse_dht_body(body, huff)
         elif marker == 0xDD:
             (restart_interval,) = struct.unpack(">H", body[:2])
         elif marker == 0xDA:
@@ -2844,8 +1715,7 @@ def _decode_jpeg_planes(data: bytes, render_all: bool):
         for i2 in range(64):
             flat[zz[i2]] = seq[i2]
         coef = flat.reshape(8, 8) * qmats[comp["tq"]]
-        block = (C.T @ coef @ C
-                 + float(1 << (comp.get("prec", 8) - 1)))
+        block = C.T @ coef @ C + 128.0
         plane[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = block
 
     for scan in scans:
@@ -2938,1735 +1808,7 @@ def _split_restart_intervals(ecs: bytes) -> list[bytes]:
     return intervals
 
 
-def _split_arith_intervals(ecs: bytes) -> list[bytes]:
-    """Split an ARITHMETIC entropy segment on RSTn markers. Arithmetic
-    segments have no 0xFF00 byte stuffing — instead the encoder
-    bit-stuffs so the byte after any data 0xFF is <= 0x7F (T.81
-    B.1.1.5); a 0xFF followed by >= 0x90 is always a real marker."""
-    intervals, start, i = [], 0, 0
-    while i + 1 < len(ecs):
-        if ecs[i] == 0xFF and 0xD0 <= ecs[i + 1] <= 0xD7:
-            intervals.append(ecs[start:i])
-            i += 2
-            start = i
-        else:
-            i += 1
-    intervals.append(ecs[start:])
-    return intervals
-
-
-def _decode_arith(data: bytes, render_all: bool,
-                  differential: bool = False):
-    """Sequential arithmetic-coded (SOF9) JPEG decode — T.81 Annex E QM
-    coder over the Annex F DC/AC statistical models — returning the
-    ``_decode_jpeg_planes`` tuple (same dequant/IDCT as baseline).
-    Grayscale and interleaved multi-component streams; DAC conditioning
-    (L/U per DC table, Kx per AC table) with the §F.1.4.4.1.2 defaults;
-    restart intervals reset the coder, statistics areas and DC state.
-    ``differential`` (r6): accept an SOF13 frame instead — no level
-    shift, zero DC prediction (T.81 J.1.1.2); the hierarchical walker
-    accumulates the returned plane onto its reference. This retires the
-    former "arithmetic coding" codec seam (r6)."""
-    import numpy as np
-
-    qtables: dict[int, list[int]] = {}
-    width = height = None
-    comps: list[dict] = []
-    # DAC conditioning: DC tables -> (L, U), AC tables -> Kx (defaults
-    # per §F.1.4.4.1.2 / F.1.4.4.2)
-    dc_cond: dict[int, tuple[int, int]] = {}
-    ac_cond: dict[int, int] = {}
-    scans: list[dict] = []
-    restart_interval = 0
-    pos = 2
-    while pos + 1 < len(data):
-        if data[pos] != 0xFF:
-            pos += 1
-            continue
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack(">H", data[pos:pos + 2])
-        body = data[pos + 2:pos + seglen]
-        pos += seglen
-        if marker == 0xDB:
-            _parse_dqt_body(body, qtables)
-        elif marker == 0xC9 or (differential and marker == 0xCD):
-            prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec not in (8, 12):
-                raise NotImplementedError(
-                    f"{prec}-bit arithmetic JPEG (8/12-bit only)")
-            for c in range(ncomp):
-                cid, hv, tq = body[6 + 3 * c:9 + 3 * c]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F,
-                              "tq": tq, "prec": prec})
-        elif marker == 0xCC:  # DAC: (Tc<<4|Tb, Cs) pairs
-            i = 0
-            while i + 1 < len(body):
-                tc, tb = body[i] >> 4, body[i] & 0x0F
-                cs = body[i + 1]
-                if tc == 0:
-                    lo, up = cs & 0x0F, cs >> 4
-                    if not (0 <= lo <= up <= 15):
-                        raise ValueError(
-                            f"invalid DAC DC conditioning L={lo} U={up}")
-                    dc_cond[tb] = (lo, up)
-                else:
-                    if not 1 <= cs <= 63:
-                        raise ValueError(f"invalid DAC AC Kx={cs}")
-                    ac_cond[tb] = cs
-                i += 2
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:
-            # interleaved (ns > 1) or non-interleaved (ns == 1) scans;
-            # multi-scan streams walk on to the next SOS (r6)
-            ns = body[0]
-            by_id = {c["id"]: c for c in comps}
-            scomps = []
-            for c in range(ns):
-                cid = body[1 + 2 * c]
-                tt = body[2 + 2 * c]
-                scomps.append((by_id[cid], tt >> 4, tt & 0x0F))
-            # Truncation contract: unlike huffman scans, a QM entropy
-            # segment cut mid-stream keeps "decoding" from the
-            # spec-mandated 1-bit feed (Figure E.21) — decisions stay
-            # resolvable by construction, so there is no bit-level
-            # truncation signal. The sound check is container level:
-            # the segment must terminate at a real marker.
-            end = _scan_arith_entropy_end(data, pos)
-            if end >= len(data):
-                raise ValueError(
-                    "JPEG entropy data truncated (arithmetic segment "
-                    "has no terminating marker)")
-            scans.append({"comps": scomps, "ecs": data[pos:end],
-                          "dri": restart_interval})
-            pos = end
-    if width is None or not scans:
-        raise ValueError("truncated JPEG (no SOF/SOS)")
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    # any component may be subsampled, INCLUDING luma (r6): the public
-    # decode surface routes every plane through _upsample_plane
-
-    C = _dct_matrix()
-    zz = _JPEG_ZIGZAG
-    qmats: dict[int, "np.ndarray"] = {}
-    for tq, vals in qtables.items():
-        flatq = np.empty(64)
-        for i in range(64):
-            flatq[zz[i]] = vals[i]
-        qmats[tq] = flatq.reshape(8, 8)
-
-    mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-    n_mcus = mcus_x * mcus_y
-    for c in comps:
-        cw = -(-width * c["h"] // hmax)
-        ch = -(-height * c["v"] // vmax)
-        c["nbx"] = -(-cw // 8)
-        c["nby"] = -(-ch // 8)
-    render = comps if render_all else comps[:1]
-    planes = {
-        c["id"]: np.zeros((mcus_y * c["v"] * 8, mcus_x * c["h"] * 8),
-                          dtype=np.float64)
-        for c in render
-    }
-
-    def put_block(comp, seq, by, bx):
-        plane = planes.get(comp["id"])
-        if plane is None:
-            return  # sync-decoded, not rendered
-        flat = np.zeros(64)
-        for i2 in range(64):
-            flat[zz[i2]] = seq[i2]
-        coef = flat.reshape(8, 8) * qmats[comp["tq"]]
-        # level shift = 2^(P-1): 128 at 8-bit, 2048 at 12-bit
-        # precision; NONE in differential frames
-        block = (C.T @ coef @ C
-                 + (0.0 if differential else
-                    float(1 << (comp["prec"] - 1))))
-        plane[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = block
-
-    for scan in scans:
-        scomps = scan["comps"]
-        dri = scan["dri"]
-        intervals = _split_arith_intervals(scan["ecs"])
-        if len(intervals) > 1 and dri == 0:
-            raise ValueError("restart markers present but no DRI segment")
-        interleaved = len(scomps) > 1
-        if not interleaved and planes.get(scomps[0][0]["id"]) is None:
-            continue  # unrendered single-component scan (review r6)
-        units = (n_mcus if interleaved
-                 else scomps[0][0]["nbx"] * scomps[0][0]["nby"])
-        done = 0
-        for ci, chunk in enumerate(intervals):
-            dec = _ArithDecoder(chunk)
-            # statistics areas are per conditioning TABLE (shared across
-            # components bound to the same table — T.81 F.1.4.4); DC
-            # state ([ctx, prediction]) is per component; all reset per
-            # scan and per restart interval
-            dc_stats = {tb: bytearray(64) for _, tb, _ in scomps}
-            ac_stats = {tb: bytearray(256) for _, _, tb in scomps}
-            states = {c[0]["id"]: [0, 0] for c in scomps}
-            in_chunk = (dri if dri and ci < len(intervals) - 1
-                        else units - done)
-            for _ in range(in_chunk):
-                if done >= units:
-                    break
-                if interleaved:
-                    my, mx = divmod(done, mcus_x)
-                    for comp, tdc, tac in scomps:
-                        lo, up = dc_cond.get(tdc, (0, 1))
-                        kx = ac_cond.get(tac, 5)
-                        for by in range(comp["v"]):
-                            for bx in range(comp["h"]):
-                                seq = _arith_decode_block(
-                                    dec, dc_stats[tdc], ac_stats[tac],
-                                    states[comp["id"]], lo, up, kx,
-                                    differential=differential)
-                                put_block(comp, seq,
-                                          my * comp["v"] + by,
-                                          mx * comp["h"] + bx)
-                else:
-                    comp, tdc, tac = scomps[0]
-                    lo, up = dc_cond.get(tdc, (0, 1))
-                    kx = ac_cond.get(tac, 5)
-                    by, bx = divmod(done, comp["nbx"])
-                    seq = _arith_decode_block(
-                        dec, dc_stats[tdc], ac_stats[tac],
-                        states[comp["id"]], lo, up, kx,
-                        differential=differential)
-                    put_block(comp, seq, by, bx)
-                done += 1
-        if done < units:
-            raise ValueError("JPEG entropy data truncated")
-    return width, height, comps, planes, hmax, vmax
-
-
-def _arith_prog_ac_first(enc, ac_stats, seqs, ss, se, al, kx):
-    """Progressive-arithmetic AC first scan (Figure G.7): the sequential
-    AC model over the band's point-transformed magnitudes; the EOB
-    decision means end-of-band."""
-    for seq in seqs:
-        ke = ss - 1
-        for k in range(se, ss - 1, -1):
-            if abs(seq[k]) >> al:
-                ke = k
-                break
-        k = ss
-        while k <= ke:
-            st = 3 * (k - 1)
-            enc.encode(ac_stats, st, 0)  # not EOB
-            while True:
-                t = seq[k]
-                v = abs(t) >> al
-                if v:
-                    enc.encode(ac_stats, st + 1, 1)
-                    enc.encode_fixed(1 if t < 0 else 0)
-                    break
-                enc.encode(ac_stats, st + 1, 0)
-                st += 3
-                k += 1
-            st += 2
-            m = 0
-            v -= 1
-            if v:
-                enc.encode(ac_stats, st, 1)
-                m = 1
-                v2 = v
-                if v2 >> 1:
-                    enc.encode(ac_stats, st, 1)  # X2 shares the X1 bin
-                    m = 2
-                    v2 >>= 1
-                    st = 189 if k <= kx else 217
-                    while v2 >> 1:
-                        v2 >>= 1
-                        enc.encode(ac_stats, st, 1)
-                        m <<= 1
-                        st += 1
-            enc.encode(ac_stats, st, 0)
-            st += 14
-            while m >> 1:
-                m >>= 1
-                enc.encode(ac_stats, st, 1 if m & v else 0)
-            k += 1
-        if ke < se:
-            enc.encode(ac_stats, 3 * (k - 1), 1)  # end-of-band
-
-
-def _arith_prog_ac_refine(enc, ac_stats, seqs, ss, se, al):
-    """Progressive-arithmetic AC refinement scan (Figure G.10):
-    correction bits for previously-significant coefficients in the
-    st+2 bin, newly-significant arrivals through st+1 with a
-    fixed-probability sign; the EOB decision is only coded beyond the
-    previous scan's significance extent (kex)."""
-    for seq in seqs:
-        ke = ss - 1
-        for k in range(se, ss - 1, -1):
-            if abs(seq[k]) >> al:
-                ke = k
-                break
-        kex = ss - 1
-        for k in range(ke, ss - 1, -1):
-            if abs(seq[k]) >> (al + 1):
-                kex = k
-                break
-        k = ss
-        while k <= ke:
-            st = 3 * (k - 1)
-            if k > kex:
-                enc.encode(ac_stats, st, 0)  # EOB decision: not yet
-            while True:
-                t = seq[k]
-                v = abs(t) >> al
-                if v:
-                    if v >> 1:  # previously significant: correction bit
-                        enc.encode(ac_stats, st + 2, v & 1)
-                    else:       # newly significant
-                        enc.encode(ac_stats, st + 1, 1)
-                        enc.encode_fixed(1 if t < 0 else 0)
-                    break
-                enc.encode(ac_stats, st + 1, 0)
-                st += 3
-                k += 1
-            k += 1
-        if k <= se:
-            enc.encode(ac_stats, 3 * (k - 1), 1)  # end-of-block
-
-
-def encode_jpeg_arith_progressive(width: int, height: int, pixels: bytes,
-                                  subsampling: str | None = None,
-                                  cb_pixels: bytes | None = None,
-                                  cr_pixels: bytes | None = None) -> bytes:
-    """PROGRESSIVE ARITHMETIC-coded JPEG (SOF10 = 0xCA; T.81 Annex G
-    arithmetic procedures over the Annex E QM coder). Same scan script
-    as :func:`encode_jpeg_progressive` (DC first at Al=1 + DC refine;
-    per-component AC bands 1-5 / 6-63 at Al=2 with two refinement
-    passes), same quantized coefficients as the baseline encoders — so
-    decode must be pixel-identical to baseline decode. Statistics areas
-    reset at every scan per G.2; DC refinement bits and signs ride the
-    fixed equiprobable state."""
-    import numpy as np
-
-    if len(pixels) != width * height:
-        raise ValueError("pixels must be width*height bytes")
-    if subsampling not in (None, "4:4:4", "4:2:2", "4:2:0"):
-        raise ValueError(
-            "subsampling must be None, '4:4:4', '4:2:2' or '4:2:0'")
-    img = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width)
-    hy, vy = {None: (1, 1), "4:4:4": (1, 1), "4:2:2": (2, 1),
-              "4:2:0": (2, 2)}[subsampling]
-    tile_w, tile_h = 8 * hy, 8 * vy
-    ph = (height + tile_h - 1) // tile_h * tile_h
-    pw = (width + tile_w - 1) // tile_w * tile_w
-    padded = np.empty((ph, pw), dtype=np.float64)
-    padded[:height, :width] = img
-    padded[height:, :width] = img[-1:, :]
-    padded[:, width:] = padded[:, width - 1:width]
-
-    C = _dct_matrix()
-    zz = _JPEG_ZIGZAG
-    lo, up, kx = 0, 1, 5
-
-    def quantize_plane(plane, qmat):
-        out = {}
-        for by in range(plane.shape[0] // 8):
-            for bx in range(plane.shape[1] // 8):
-                block = plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] - 128.0
-                quant = np.round((C @ block @ C.T) / qmat).astype(np.int64)
-                flat = quant.reshape(-1)
-                out[(by, bx)] = [int(flat[zz[i]]) for i in range(64)]
-        return out
-
-    qy = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    if subsampling is None:
-        comps = [{"id": 1, "h": 1, "v": 1, "tq": 0,
-                  "blocks": quantize_plane(padded, qy),
-                  "nbx": (width + 7) // 8, "nby": (height + 7) // 8}]
-    else:
-        qc = np.array(_JPEG_QTABLE_CHROMA, dtype=np.float64).reshape(8, 8)
-        cw, chh = -(-width // hy), -(-height // vy)
-        cpw, cph = pw // hy, ph // vy
-
-        def chroma_plane(pix, name):
-            if pix is None:
-                return np.full((cph, cpw), 128.0)
-            if len(pix) != cw * chh:
-                raise ValueError(
-                    f"{name} must be {cw}*{chh} bytes at {subsampling}")
-            c = np.frombuffer(pix, dtype=np.uint8).reshape(chh, cw)
-            out = np.empty((cph, cpw), dtype=np.float64)
-            out[:chh, :cw] = c
-            out[chh:, :cw] = c[-1:, :]
-            out[:, cw:] = out[:, cw - 1:cw]
-            return out
-
-        comps = [
-            {"id": 1, "h": hy, "v": vy, "tq": 0,
-             "blocks": quantize_plane(padded, qy),
-             "nbx": (width + 7) // 8, "nby": (height + 7) // 8},
-            {"id": 2, "h": 1, "v": 1, "tq": 1,
-             "blocks": quantize_plane(chroma_plane(cb_pixels, "cb_pixels"),
-                                      qc),
-             "nbx": -(-cw // 8), "nby": -(-chh // 8)},
-            {"id": 3, "h": 1, "v": 1, "tq": 1,
-             "blocks": quantize_plane(chroma_plane(cr_pixels, "cr_pixels"),
-                                      qc),
-             "nbx": -(-cw // 8), "nby": -(-chh // 8)},
-        ]
-    mcus_x, mcus_y = pw // tile_w, ph // tile_h
-
-    def dc_units():
-        if len(comps) == 1:
-            c = comps[0]
-            for by in range(c["nby"]):
-                for bx in range(c["nbx"]):
-                    yield c["id"], c["blocks"][(by, bx)]
-            return
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for c in comps:
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            yield c["id"], c["blocks"][
-                                (my * c["v"] + by, mx * c["h"] + bx)]
-
-    def ac_units(comp):
-        for by in range(comp["nby"]):
-            for bx in range(comp["nbx"]):
-                yield comp["blocks"][(by, bx)]
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    def sos(scomps, ss, se, ah, al):
-        body = bytes([len(scomps)])
-        for cid in scomps:
-            # Td/Ta name conditioning tables: 0 for luma, 1 for chroma
-            tt = 0x00 if cid == 1 else 0x11
-            body += bytes([cid, tt])
-        return seg(0xDA, body + bytes([ss, se, (ah << 4) | al]))
-
-    out = bytearray()
-    # DC first scan, Al=1 (interleaved when ns > 1)
-    enc = _ArithEncoder()
-    dc_stats = {0: bytearray(64), 1: bytearray(64)}
-    states = {c["id"]: [0, 0] for c in comps}
-    for cid, seq in dc_units():
-        st = states[cid]
-        t = seq[0] >> 1
-        _arith_encode_dc(enc, dc_stats[0 if cid == 1 else 1],
-                         st, t - st[1], lo, up)
-        st[1] = t
-    out += sos([c["id"] for c in comps], 0, 0, 0, 1) + enc.flush()
-
-    # AC bands, first pass at Al=2 (per component)
-    for ss, se in ((1, 5), (6, 63)):
-        for c in comps:
-            enc = _ArithEncoder()
-            ac_stats = bytearray(256)
-            _arith_prog_ac_first(enc, ac_stats, ac_units(c), ss, se, 2, kx)
-            out += sos([c["id"]], ss, se, 0, 2) + enc.flush()
-
-    # DC refinement, 1 -> 0: one fixed-bin bit per block
-    enc = _ArithEncoder()
-    for _cid, seq in dc_units():
-        enc.encode_fixed(seq[0] & 1)
-    out += sos([c["id"] for c in comps], 0, 0, 1, 0) + enc.flush()
-
-    # AC refinement passes 2->1 and 1->0 (per band, per component)
-    for ah, al in ((2, 1), (1, 0)):
-        for ss, se in ((1, 5), (6, 63)):
-            for c in comps:
-                enc = _ArithEncoder()
-                ac_stats = bytearray(256)
-                _arith_prog_ac_refine(enc, ac_stats, ac_units(c),
-                                      ss, se, al)
-                out += sos([c["id"]], ss, se, ah, al) + enc.flush()
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes(_JPEG_QTABLE[zz[i]]
-                                          for i in range(64)))
-    if subsampling is not None:
-        dqt += seg(0xDB, bytes([0x01]) + bytes(_JPEG_QTABLE_CHROMA[zz[i]]
-                                               for i in range(64)))
-    ncomp = len(comps)
-    sof_body = struct.pack(">BHHB", 8, height, width, ncomp)
-    for c in comps:
-        sof_body += bytes([c["id"], (c["h"] << 4) | c["v"], c["tq"]])
-    sof = seg(0xCA, sof_body)
-    dac = seg(0xCC, bytes([0x00, (up << 4) | lo, 0x01, (up << 4) | lo,
-                           0x10, kx, 0x11, kx]))
-    return b"\xff\xd8" + dqt + sof + dac + bytes(out) + b"\xff\xd9"
-
-
-def _decode_arith_progressive(data: bytes, render_all: bool,
-                              differential: bool = False):
-    """Progressive arithmetic-coded (SOF10) JPEG decode — the T.81
-    Annex G arithmetic scan procedures (DC first/refine, AC band
-    first/refine with QM-coded EOB decisions) over the Annex E QM
-    decoder — returning the ``_decode_jpeg_planes`` tuple. Statistics
-    areas and DC conditioning state reset at each scan (and each
-    restart interval). DC refinement bits and AC signs use the fixed
-    equiprobable state. ``differential`` (r6): accept an SOF14 frame
-    instead — no level shift, zero DC prediction (T.81 J.1.1.2)."""
-    import numpy as np
-
-    qtables: dict[int, list[int]] = {}
-    width = height = None
-    comps: list[dict] = []
-    dc_cond: dict[int, tuple[int, int]] = {}
-    ac_cond: dict[int, int] = {}
-    restart_interval = 0
-    scans: list[dict] = []
-    pos = 2
-    while pos + 1 < len(data):
-        if data[pos] != 0xFF:
-            pos += 1
-            continue
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack(">H", data[pos:pos + 2])
-        body = data[pos + 2:pos + seglen]
-        pos += seglen
-        if marker == 0xDB:
-            _parse_dqt_body(body, qtables)
-        elif marker == 0xCA or (differential and marker == 0xCE):
-            prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8:
-                raise NotImplementedError("12-bit arithmetic JPEG")
-            for c in range(ncomp):
-                cid, hv, tq = body[6 + 3 * c:9 + 3 * c]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F,
-                              "tq": tq})
-        elif marker == 0xCC:
-            i = 0
-            while i + 1 < len(body):
-                tc, tb = body[i] >> 4, body[i] & 0x0F
-                cs = body[i + 1]
-                if tc == 0:
-                    lo_, up_ = cs & 0x0F, cs >> 4
-                    if not (0 <= lo_ <= up_ <= 15):
-                        raise ValueError(
-                            f"invalid DAC DC conditioning L={lo_} U={up_}")
-                    dc_cond[tb] = (lo_, up_)
-                else:
-                    if not 1 <= cs <= 63:
-                        raise ValueError(f"invalid DAC AC Kx={cs}")
-                    ac_cond[tb] = cs
-                i += 2
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:
-            ns = body[0]
-            by_id = {c["id"]: c for c in comps}
-            scomps = []
-            for c in range(ns):
-                cid = body[1 + 2 * c]
-                tt = body[2 + 2 * c]
-                scomps.append((by_id[cid], tt >> 4, tt & 0x0F))
-            ss, se, a = body[1 + 2 * ns:4 + 2 * ns]
-            end = _scan_arith_entropy_end(data, pos)
-            if end >= len(data):
-                raise ValueError(
-                    "JPEG entropy data truncated (arithmetic segment "
-                    "has no terminating marker)")
-            scans.append({"comps": scomps, "ss": ss, "se": se,
-                          "ah": a >> 4, "al": a & 0x0F,
-                          "ecs": data[pos:end],
-                          "dri": restart_interval})
-            pos = end
-    if width is None or not scans:
-        raise ValueError("truncated JPEG (no SOF/SOS)")
-
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    # any component may be subsampled, INCLUDING luma (r6): the public
-    # decode surface routes every plane through _upsample_plane
-    mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-    zz = _JPEG_ZIGZAG
-    for c in comps:
-        c["coef"] = np.zeros((mcus_y * c["v"], mcus_x * c["h"], 64),
-                             dtype=np.int32)
-        cw = -(-width * c["h"] // hmax)
-        ch = -(-height * c["v"] // vmax)
-        c["nbx"] = -(-cw // 8)
-        c["nby"] = -(-ch // 8)
-
-    for scan in scans:
-        scomps = scan["comps"]
-        ss, se, ah, al = scan["ss"], scan["se"], scan["ah"], scan["al"]
-        intervals = _split_arith_intervals(scan["ecs"])
-        dri = scan["dri"]
-        if len(intervals) > 1 and dri == 0:
-            raise ValueError("restart markers present but no DRI segment")
-        if ss == 0:
-            if se != 0:
-                raise ValueError("DC scan with Se != 0")
-            units = (mcus_x * mcus_y if len(scomps) > 1
-                     else scomps[0][0]["nbx"] * scomps[0][0]["nby"])
-        else:
-            if len(scomps) != 1:
-                raise ValueError("interleaved AC scan in progressive JPEG")
-            comp = scomps[0][0]
-            units = comp["nbx"] * comp["nby"]
-
-        done = 0
-        for ci, chunk in enumerate(intervals):
-            dec = _ArithDecoder(chunk)
-            dc_stats = {tb: bytearray(64) for _, tb, _ in scomps}
-            ac_stats = {tb: bytearray(256) for _, _, tb in scomps}
-            states = {c[0]["id"]: [0, 0] for c in scomps}
-            in_chunk = (dri if dri and ci < len(intervals) - 1
-                        else units - done)
-            for _ in range(in_chunk):
-                if done >= units:
-                    break
-                if ss == 0 and len(scomps) > 1:
-                    my, mx = divmod(done, mcus_x)
-                    for comp, tdc, _tac in scomps:
-                        lo, up = dc_cond.get(tdc, (0, 1))
-                        for by in range(comp["v"]):
-                            for bx in range(comp["h"]):
-                                blk = comp["coef"][my * comp["v"] + by,
-                                                   mx * comp["h"] + bx]
-                                _arith_dc_pass(
-                                    dec, dc_stats[tdc],
-                                    states[comp["id"]], blk, ah, al,
-                                    lo, up, differential=differential)
-                else:
-                    comp, tdc, tac = scomps[0]
-                    by, bx = divmod(done, comp["nbx"])
-                    blk = comp["coef"][by, bx]
-                    if ss == 0:
-                        lo, up = dc_cond.get(tdc, (0, 1))
-                        _arith_dc_pass(dec, dc_stats[tdc],
-                                       states[comp["id"]], blk, ah, al,
-                                       lo, up, differential=differential)
-                    elif ah == 0:
-                        _arith_ac_first_pass(
-                            dec, ac_stats[tac], blk, ss, se, al,
-                            ac_cond.get(tac, 5), zz)
-                    else:
-                        _arith_ac_refine_pass(
-                            dec, ac_stats[tac], blk, ss, se, al, zz)
-                done += 1
-        if done < units:
-            raise ValueError("JPEG entropy data truncated")
-
-    C = _dct_matrix()
-    qnat: dict[int, "np.ndarray"] = {}
-    for tq, vals in qtables.items():
-        flatq = np.empty(64)
-        for i in range(64):
-            flatq[zz[i]] = vals[i]
-        qnat[tq] = flatq
-    render = comps if render_all else comps[:1]
-    planes = {}
-    for c in render:
-        coefs = c["coef"].astype(np.float64) * qnat[c["tq"]]
-        nby, nbx = coefs.shape[0], coefs.shape[1]
-        blocks = coefs.reshape(nby, nbx, 8, 8)
-        px = (np.einsum("ji,yxjk,kl->yxil", C, blocks, C)
-              + (0.0 if differential else 128.0))
-        plane = px.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
-        planes[c["id"]] = plane
-    return width, height, comps, planes, hmax, vmax
-
-
-def _arith_dc_pass(dec, dc_stats, state, blk, ah, al, lo, up,
-                   differential: bool = False) -> None:
-    """One block's DC contribution: first pass decodes the diff at Al
-    precision through the DC model; refinement ORs in the fixed-bin
-    bit (Figure G.6). ``differential``: zero DC prediction (T.81
-    J.1.1.2) — the decoded difference IS the coefficient."""
-    if ah == 0:
-        d = _arith_decode_dc(dec, dc_stats, state, lo, up)
-        if differential:
-            blk[0] = d << al
-        else:
-            state[1] += d
-            blk[0] = state[1] << al
-    else:
-        if dec.decode_fixed():
-            blk[0] |= 1 << al
-
-
-def _arith_ac_first_pass(dec, ac_stats, blk, ss, se, al, kx, zz) -> None:
-    """Band first pass (Figure G.8): sequential AC model, EOB =
-    end-of-band, values arrive scaled by 1 << Al."""
-    k = ss
-    while k <= se:
-        st = 3 * (k - 1)
-        if dec.decode(ac_stats, st):
-            break  # end-of-band
-        while not dec.decode(ac_stats, st + 1):
-            st += 3
-            k += 1
-            if k > se:
-                raise ValueError("arith JPEG: AC index overrun")
-        sign = dec.decode_fixed()
-        st += 2
-        m = 0
-        if dec.decode(ac_stats, st):
-            m = 1
-            if dec.decode(ac_stats, st):
-                m = 2
-                st = 189 if k <= kx else 217
-                while dec.decode(ac_stats, st):
-                    m <<= 1
-                    if m == 0x8000:
-                        raise ValueError(
-                            "arith JPEG: runaway AC magnitude")
-                    st += 1
-        v = m
-        st += 14
-        while m >> 1:
-            m >>= 1
-            if dec.decode(ac_stats, st):
-                v |= m
-        v += 1
-        blk[zz[k]] = (-v << al) if sign else (v << al)
-        k += 1
-
-
-def _arith_ac_refine_pass(dec, ac_stats, blk, ss, se, al, zz) -> None:
-    """Band refinement pass (Figure G.10): correction bit in the st+2
-    bin for previously-significant coefficients, newly-significant
-    arrivals as +-1<<Al through st+1 with a fixed-bin sign; the EOB
-    decision is only coded past the previous scan's significance
-    extent."""
-    p1 = 1 << al
-    m1 = -1 << al
-    kex = ss - 1
-    for k in range(se, ss - 1, -1):
-        if blk[zz[k]]:
-            kex = k
-            break
-    k = ss
-    while k <= se:
-        st = 3 * (k - 1)
-        if k > kex and dec.decode(ac_stats, st):
-            break  # end-of-block
-        while True:
-            z = zz[k]
-            cur = int(blk[z])
-            if cur:
-                if dec.decode(ac_stats, st + 2):
-                    blk[z] = cur + (m1 if cur < 0 else p1)
-                break
-            if dec.decode(ac_stats, st + 1):
-                blk[z] = m1 if dec.decode_fixed() else p1
-                break
-            st += 3
-            k += 1
-            if k > se:
-                raise ValueError("arith JPEG: AC index overrun")
-        k += 1
-
-
-def _lossless_cls(v: int, lo: int, up: int) -> int:
-    """5-way conditioning classification of a neighbor difference for
-    the lossless arithmetic model (T.81 Annex H): 0 zero/below-L,
-    1/2 small +/-, 3/4 large +/- — same magnitude-category thresholds
-    as the DC conditioning state."""
-    if v == 0:
-        return 0
-    v2 = abs(v) - 1
-    m = 0
-    if v2:
-        m = 1
-        while v2 >> 1:
-            v2 >>= 1
-            m <<= 1
-    if m < (1 << lo) >> 1:
-        return 0
-    if m <= (1 << up) >> 1:
-        return 1 if v > 0 else 2
-    return 3 if v > 0 else 4
-
-
-def _arith_code_lossless(enc, stats, base, xbase, d) -> None:
-    """Code one prediction difference with the DC-style decision tree in
-    the (Da, Db) conditioning context: S0/SS/SP/SN at ``base``, the
-    magnitude-category and mantissa bins in the X/M set at ``xbase``
-    (selected by the Db classification)."""
-    if d == 0:
-        enc.encode(stats, base, 0)
-        return
-    enc.encode(stats, base, 1)
-    sign = 1 if d < 0 else 0
-    enc.encode(stats, base + 1, sign)
-    st = base + 2 + sign
-    v = abs(d) - 1
-    m = 0
-    if v:
-        enc.encode(stats, st, 1)
-        m = 1
-        v2 = v
-        st = xbase
-        while v2 >> 1:
-            v2 >>= 1
-            enc.encode(stats, st, 1)
-            m <<= 1
-            st += 1
-    enc.encode(stats, st, 0)
-    st += 16
-    while m >> 1:
-        m >>= 1
-        enc.encode(stats, st, 1 if m & v else 0)
-
-
-def _arith_decode_lossless_diff(dec, stats, base, xbase) -> int:
-    """Mirror of :func:`_arith_code_lossless`."""
-    if not dec.decode(stats, base):
-        return 0
-    sign = dec.decode(stats, base + 1)
-    st = base + 2 + sign
-    m = 0
-    if dec.decode(stats, st):
-        st = xbase
-        m = 1
-        while dec.decode(stats, st):
-            m <<= 1
-            if m > 0x8000:
-                raise ValueError("arith JPEG: runaway lossless magnitude")
-            st += 1
-    v = m
-    st += 16
-    while m >> 1:
-        m >>= 1
-        if dec.decode(stats, st):
-            v |= m
-    v += 1
-    return -v if sign else v
-
-
-def _lossless_pred(img, y: int, x: int, predictor: int,
-                   default: int) -> int:
-    """Shared lossless prediction rules (T.81 H.1.2.1): first sample
-    from the precision default, first line from `a`, line starts from
-    `b`, else the selected predictor 1-7."""
-    if y == 0 and x == 0:
-        return default
-    if y == 0:
-        return int(img[0, x - 1])
-    if x == 0:
-        return int(img[y - 1, 0])
-    a = int(img[y, x - 1])
-    b = int(img[y - 1, x])
-    c = int(img[y - 1, x - 1])
-    return {1: a, 2: b, 3: c,
-            4: a + b - c,
-            5: a + ((b - c) >> 1),
-            6: b + ((a - c) >> 1),
-            7: (a + b) >> 1}[predictor]
-
-
-def encode_jpeg_arith_lossless(width: int, height: int, pixels: bytes,
-                               predictor: int = 1,
-                               point_transform: int = 0,
-                               precision: int = 8) -> bytes:
-    """LOSSLESS ARITHMETIC-coded JPEG (SOF11 = 0xCB; T.81 Annex H
-    prediction + the Annex H arithmetic statistical model over the
-    Annex E QM coder). Grayscale; same prediction/Pt contract as
-    :func:`encode_jpeg_lossless`, so decode is exact by construction.
-    ``precision`` 2-16 (r6): at <= 8 ``pixels`` is bytes, above 8 it is
-    little-endian uint16 samples in 0..2^P-1 (the spec's full lossless
-    precision range — decode >8-bit output via
-    :func:`decode_jpeg_gray12`).
-    Each difference is coded in a conditioning context derived from the
-    5x5 classification of the left (Da) and above (Db) neighbor
-    differences — 25 contexts x 4 decision bins, plus two X/M
-    magnitude bin sets selected by the Db class (stats area layout
-    documented at :func:`_arith_code_lossless`)."""
-    import numpy as np
-
-    if not 2 <= precision <= 16:
-        raise ValueError("precision must be 2..16")
-    if not 1 <= predictor <= 7:
-        raise ValueError("predictor must be 1..7")
-    if not 0 <= point_transform <= 7:
-        raise ValueError("point_transform must be 0..7")
-    if precision <= 8:
-        if len(pixels) != width * height:
-            raise ValueError("pixels must be width*height bytes")
-        img = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width)
-    else:
-        if len(pixels) != width * height * 2:
-            raise ValueError(
-                "pixels must be width*height uint16-LE samples above "
-                "8-bit precision")
-        img = np.frombuffer(pixels, dtype="<u2").reshape(height, width)
-    if int(img.max(initial=0)) >= 1 << precision:
-        raise ValueError(f"samples exceed {precision}-bit range")
-    img = img.astype(np.int64) >> point_transform
-    lo, up = 0, 1
-    default = 1 << (precision - 1 - point_transform)
-
-    enc = _ArithEncoder()
-    stats = bytearray(164)  # 25*4 context bins + 2 * (16 X + 16 M)
-    diffs = np.zeros((height, width), dtype=np.int32)
-    for y in range(height):
-        for x in range(width):
-            pred = _lossless_pred(img, y, x, predictor, default)
-            d = (int(img[y, x]) - pred + 32768) % 65536 - 32768
-            diffs[y, x] = d
-            da = int(diffs[y, x - 1]) if x > 0 else 0
-            db = int(diffs[y - 1, x]) if y > 0 else 0
-            ca = _lossless_cls(da, lo, up)
-            cb = _lossless_cls(db, lo, up)
-            _arith_code_lossless(enc, stats, 4 * (ca * 5 + cb),
-                                 100 + 32 * (cb >= 3), d)
-    ecs = enc.flush()
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    sof = seg(0xCB, struct.pack(">BHHB", precision, height, width, 1)
-              + bytes([1, 0x11, 0]))
-    dac = seg(0xCC, bytes([0x00, (up << 4) | lo]))
-    sos = seg(0xDA, bytes([1, 1, 0x00, predictor, 0, point_transform]))
-    return b"\xff\xd8" + sof + dac + sos + ecs + b"\xff\xd9"
-
-
-def _decode_arith_lossless(data: bytes, render_all: bool):
-    """SOF11 lossless-arithmetic decode (single-component, precision
-    2-16) -> the ``_decode_jpeg_planes`` tuple; mirrors
-    :func:`encode_jpeg_arith_lossless`."""
-    import numpy as np
-
-    width = height = None
-    comps: list[dict] = []
-    dc_cond: dict[int, tuple[int, int]] = {}
-    scan = None
-    restart_interval = 0
-    pos = 2
-    while pos + 1 < len(data):
-        if data[pos] != 0xFF:
-            pos += 1
-            continue
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack(">H", data[pos:pos + 2])
-        body = data[pos + 2:pos + seglen]
-        pos += seglen
-        if marker == 0xCB:
-            prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
-            if not 2 <= prec <= 16 or ncomp != 1:
-                raise NotImplementedError(
-                    "lossless-arithmetic JPEG decode supports "
-                    "single-component streams at precision 2-16")
-            cid, hv, tq = body[6:9]
-            comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F,
-                          "tq": tq, "prec": prec})
-        elif marker == 0xCC:
-            i = 0
-            while i + 1 < len(body):
-                tc, tb = body[i] >> 4, body[i] & 0x0F
-                if tc == 0:
-                    cs = body[i + 1]
-                    lo_, up_ = cs & 0x0F, cs >> 4
-                    if not (0 <= lo_ <= up_ <= 15):
-                        raise ValueError(
-                            f"invalid DAC DC conditioning L={lo_} U={up_}")
-                    dc_cond[tb] = (lo_, up_)
-                i += 2
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:
-            ns = body[0]
-            tt = body[2]
-            predictor = body[1 + 2 * ns]
-            al = body[3 + 2 * ns] & 0x0F
-            if ns != 1:
-                raise NotImplementedError(
-                    "interleaved lossless-arithmetic scan")
-            end = _scan_arith_entropy_end(data, pos)
-            if end >= len(data):
-                raise ValueError(
-                    "JPEG entropy data truncated (arithmetic segment "
-                    "has no terminating marker)")
-            scan = (predictor, al, tt >> 4, data[pos:end])
-            pos = end
-    if width is None or scan is None:
-        raise ValueError("truncated JPEG (no SOF/SOS)")
-    if restart_interval:
-        raise NotImplementedError(
-            "restart intervals in lossless-arithmetic JPEG are not "
-            "supported")
-    predictor, al, tdc, ecs = scan
-    if not 1 <= predictor <= 7:
-        raise ValueError(f"invalid lossless predictor {predictor}")
-    lo, up = dc_cond.get(tdc, (0, 1))
-    default = 1 << (comps[0]["prec"] - 1 - al)
-
-    dec = _ArithDecoder(ecs)
-    stats = bytearray(164)
-    out = np.empty((height, width), dtype=np.int64)
-    diffs = np.zeros((height, width), dtype=np.int32)
-    for y in range(height):
-        for x in range(width):
-            pred = _lossless_pred(out, y, x, predictor, default)
-            da = int(diffs[y, x - 1]) if x > 0 else 0
-            db = int(diffs[y - 1, x]) if y > 0 else 0
-            ca = _lossless_cls(da, lo, up)
-            cb = _lossless_cls(db, lo, up)
-            d = _arith_decode_lossless_diff(
-                dec, stats, 4 * (ca * 5 + cb), 100 + 32 * (cb >= 3))
-            diffs[y, x] = d
-            out[y, x] = (pred + d) % 65536
-    plane = ((out & 0xFFFF) << al).astype(np.float64)
-    return width, height, comps, {comps[0]["id"]: plane}, 1, 1
-
-
-def _hier_upsample(ref, out_h: int, out_w: int, eh: int = 1,
-                   ev: int = 1):
-    """T.81 J.1.1.3 expansion filter, one 2x step PER SIGNALLED AXIS
-    (EXP's Eh/Ev flags — single-axis expansion is conformant and must
-    not touch the other axis): even output samples copy the input, odd
-    samples are the rounded mean of the two neighbors
-    ((a + b + 1) >> 1, edge replicated), then crop to the target frame
-    dimensions."""
-    import numpy as np
-
-    up = ref
-    if eh:
-        h, w = up.shape
-        upw = np.empty((h, 2 * w), dtype=np.int64)
-        upw[:, 0::2] = up
-        nxt = np.concatenate([up[:, 1:], up[:, -1:]], axis=1)
-        upw[:, 1::2] = (up + nxt + 1) >> 1
-        up = upw
-    if ev:
-        h, w = up.shape
-        upv = np.empty((2 * h, w), dtype=np.int64)
-        upv[0::2, :] = up
-        nxt = np.concatenate([up[1:, :], up[-1:, :]], axis=0)
-        upv[1::2, :] = (up + nxt + 1) >> 1
-        up = upv
-    return up[:out_h, :out_w]
-
-
-def encode_jpeg_hierarchical(width: int, height: int, pixels: bytes,
-                             entropy: str = "arith",
-                             restart_every: int = 0,
-                             differential: str = "lossless") -> bytes:
-    """HIERARCHICAL JPEG (T.81 Annex J), grayscale 8-bit, two-level
-    pyramid: a DHP segment declares the full-resolution frame, the
-    first (non-differential) frame is a half-resolution sequential
-    stream, an EXP segment signals 2x expansion in both axes (J.1.1.3
-    bilinear filter), and the final frame is DIFFERENTIAL LOSSLESS:
-    the mod-65536 difference between the source and the expanded
-    reference, coded sample-by-sample. ``entropy`` picks the stack:
-    ``"arith"`` = SOF9 base + SOF15 differential with the Annex H QM
-    conditioning model; ``"huffman"`` (r6) = SOF0 base + SOF7
-    differential with the flat SSSS 0-16 lossless table (prediction is
-    zero in differential frames either way). ``restart_every`` > 0
-    (huffman only) emits DRI + RSTn every that many samples in the
-    differential scan. ``differential`` = ``"lossless"`` (above) or
-    ``"dct"`` (r6): a differential sequential DCT frame — the DCT of
-    (input - reference) quantized with the Annex K table, no level
-    shift, no DC prediction (T.81 J.1.1.2) — as SOF5 under huffman or
-    SOF13 under the Annex F arithmetic models; lossy in general, exact
-    when the per-block differences are DCT-exact (even constant blocks
-    — the analytic-oracle path). With the lossless
-    differential, lossy base + lossless refinement means the overall
-    decode reproduces the input EXACTLY — the differential pin the
-    tests hold."""
-    import numpy as np
-
-    if entropy not in ("arith", "huffman"):
-        raise ValueError("entropy must be 'arith' or 'huffman'")
-    if differential not in ("lossless", "dct", "dct-progressive"):
-        raise ValueError(
-            "differential must be 'lossless', 'dct' or 'dct-progressive'")
-    if restart_every and (entropy != "huffman"
-                          or differential == "dct-progressive"):
-        raise ValueError(
-            "restart_every is only supported for non-progressive "
-            "huffman differentials")
-    if len(pixels) != width * height:
-        raise ValueError("pixels must be width*height bytes")
-    img = (np.frombuffer(pixels, dtype=np.uint8)
-           .reshape(height, width).astype(np.int64))
-    h2, w2 = (height + 1) // 2, (width + 1) // 2
-    # encoder's decimation choice (not normative): 2x2 mean over an
-    # edge-replicated canvas
-    pad = np.empty((h2 * 2, w2 * 2), dtype=np.int64)
-    pad[:height, :width] = img
-    pad[height:, :width] = img[-1:, :]
-    pad[:, width:] = pad[:, width - 1:width]
-    half = ((pad[0::2, 0::2] + pad[0::2, 1::2] + pad[1::2, 0::2]
-             + pad[1::2, 1::2] + 2) >> 2).astype(np.uint8)
-
-    # the base frame as a standalone sequential stream; reuse its
-    # segments (between SOI and EOI) verbatim and decode it locally to
-    # get the reference the decoder will reconstruct
-    if entropy == "arith":
-        base = encode_jpeg_arith_gray(w2, h2, half.tobytes())
-    else:
-        base = encode_jpeg_gray(w2, h2, half.tobytes())
-    _, _, base_px = decode_jpeg_gray(base)
-    ref = np.frombuffer(base_px, dtype=np.uint8).reshape(
-        h2, w2).astype(np.int64)
-    up = _hier_upsample(ref, height, width)
-    diff = (img - up) % 65536
-    sdiff = np.where(diff >= 32768, diff - 65536, diff)
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    dhp = seg(0xDE, struct.pack(">BHHB", 8, height, width, 1)
-              + bytes([1, 0x11, 0]))
-    exp = seg(0xDF, bytes([0x11]))  # expand 2x horizontally + vertically
-    frame_hdr = struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11,
-                                                                   0])
-    if differential == "dct-progressive":
-        # SOF6 (huffman) / SOF14 (arithmetic): the DCT differential
-        # chain split into a DC-first scan + one full-band AC-first
-        # scan (Ss=1..63, Ah=Al=0) — progressive scan structure over
-        # the same no-shift / zero-DC-prediction coefficients
-        bh2, bw2 = -(-height // 8), -(-width // 8)
-        dpad = np.zeros((bh2 * 8, bw2 * 8), dtype=np.float64)
-        dpad[:height, :width] = sdiff
-        dpad[height:, :width] = sdiff[-1:, :]
-        dpad[:, width:] = dpad[:, width - 1:width]
-        qmat = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-        Cm = _dct_matrix()
-        zz = _JPEG_ZIGZAG
-        seqs = []
-        for by in range(bh2):
-            for bx in range(bw2):
-                blk = dpad[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8]
-                quant = np.round((Cm @ blk @ Cm.T) / qmat).astype(np.int64)
-                flat = quant.reshape(-1)
-                seqs.append([int(flat[zz[i]]) for i in range(64)])
-        dri = b""
-        if entropy == "huffman":
-            # DC-first: per-block category coding, PRED=0; AC-first:
-            # baseline-style per-block coding (EOB == EOBRUN of one
-            # band — conformant G.1.2.2 coding with no EOBRUN joins)
-            dc_tab = _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-            ac_tab = _huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-            wdc = _BitWriter()
-            for seq in seqs:
-                size, bits = _magnitude(seq[0])
-                code, length = dc_tab[size]
-                wdc.write(code, length)
-                if size:
-                    wdc.write(bits, size)
-            wdc.flush()
-            wac = _BitWriter()
-            for seq in seqs:
-                last_nz = 0
-                for i in range(1, 64):
-                    if seq[i]:
-                        last_nz = i
-                run = 0
-                for i in range(1, last_nz + 1):
-                    if seq[i] == 0:
-                        run += 1
-                        if run == 16:
-                            code, length = ac_tab[0xF0]
-                            wac.write(code, length)
-                            run = 0
-                        continue
-                    size, bits = _magnitude(seq[i])
-                    code, length = ac_tab[(run << 4) | size]
-                    wac.write(code, length)
-                    wac.write(bits, size)
-                    run = 0
-                if last_nz != 63:
-                    code, length = ac_tab[0x00]  # EOB (EOBRUN = 1)
-                    wac.write(code, length)
-            wac.flush()
-            sof = seg(0xC6, frame_hdr)
-            tables = (seg(0xDB, bytes([0x00]) + bytes(
-                          _JPEG_QTABLE[zz[i]] for i in range(64)))
-                      + seg(0xC4, bytes([0x00]) + bytes(_JPEG_DC_BITS)
-                            + bytes(_JPEG_DC_VALS))
-                      + seg(0xC4, bytes([0x10]) + bytes(_JPEG_AC_BITS)
-                            + bytes(_JPEG_AC_VALS)))
-            scans = (seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0]))
-                     + bytes(wdc.out)
-                     + seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0]))
-                     + bytes(wac.out))
-        else:
-            lo, up_c, kx = 0, 1, 5
-            enc = _ArithEncoder()
-            dc_stats = bytearray(64)
-            state = [0, 0]
-            for seq in seqs:
-                _arith_encode_dc(enc, dc_stats, state, seq[0], lo, up_c)
-            ecs_dc = enc.flush()
-            enc = _ArithEncoder()
-            ac_stats = bytearray(256)
-            _arith_prog_ac_first(enc, ac_stats, seqs, 1, 63, 0, kx)
-            ecs_ac = enc.flush()
-            sof = seg(0xCE, frame_hdr)
-            tables = (seg(0xDB, bytes([0x00]) + bytes(
-                          _JPEG_QTABLE[zz[i]] for i in range(64)))
-                      + seg(0xCC, bytes([0x00, (up_c << 4) | lo,
-                                         0x10, kx])))
-            scans = (seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0])) + ecs_dc
-                     + seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0])) + ecs_ac)
-        return (b"\xff\xd8" + dhp + base[2:-2] + exp
-                + sof + tables + scans + b"\xff\xd9")
-    if entropy == "arith" and differential == "dct":
-        # SOF13: the SOF5 transform chain under the Annex F arithmetic
-        # models — no level shift, zero DC prediction (conditioning
-        # still follows the previous coded difference)
-        bh2, bw2 = -(-height // 8), -(-width // 8)
-        dpad = np.zeros((bh2 * 8, bw2 * 8), dtype=np.float64)
-        dpad[:height, :width] = sdiff
-        dpad[height:, :width] = sdiff[-1:, :]
-        dpad[:, width:] = dpad[:, width - 1:width]
-        qmat = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-        Cm = _dct_matrix()
-        zz = _JPEG_ZIGZAG
-        lo, up_c, kx = 0, 1, 5
-        enc = _ArithEncoder()
-        dc_stats = bytearray(64)
-        ac_stats = bytearray(256)
-        state = [0, 0]
-        for by in range(bh2):
-            for bx in range(bw2):
-                blk = dpad[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8]
-                quant = np.round((Cm @ blk @ Cm.T) / qmat).astype(np.int64)
-                flat = quant.reshape(-1)
-                seq = [int(flat[zz[i]]) for i in range(64)]
-                _arith_encode_dc(enc, dc_stats, state, seq[0], lo, up_c)
-                _arith_encode_ac(enc, ac_stats, seq, kx)
-        ecs = enc.flush()
-        sof = seg(0xCD, frame_hdr)
-        tables = (seg(0xDB, bytes([0x00]) + bytes(
-                      _JPEG_QTABLE[zz[i]] for i in range(64)))
-                  + seg(0xCC, bytes([0x00, (up_c << 4) | lo, 0x10, kx])))
-        dri = b""
-        sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    elif entropy == "arith":
-        lo, up_c = 0, 1
-        enc = _ArithEncoder()
-        stats = bytearray(164)
-        coded = np.zeros((height, width), dtype=np.int32)
-        for y in range(height):
-            for x in range(width):
-                d = int(sdiff[y, x])
-                coded[y, x] = d
-                da = int(coded[y, x - 1]) if x > 0 else 0
-                db = int(coded[y - 1, x]) if y > 0 else 0
-                ca = _lossless_cls(da, lo, up_c)
-                cb = _lossless_cls(db, lo, up_c)
-                _arith_code_lossless(enc, stats, 4 * (ca * 5 + cb),
-                                     100 + 32 * (cb >= 3), d)
-        ecs = enc.flush()
-        sof = seg(0xCF, frame_hdr)
-        tables = seg(0xCC, bytes([0x00, (up_c << 4) | lo]))
-        dri = b""
-        sos = seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0]))
-    elif differential == "dct":
-        # SOF5: DCT of the (already signed) spatial difference, no level
-        # shift, PRED=0 per block (T.81 J.1.1.2); Annex K quant + typical
-        # tables (differential coefficients stay inside their SSSS range:
-        # |diff| <= 255 -> |DCT| <= 2040 -> quantized sizes <= 8)
-        bh2, bw2 = -(-height // 8), -(-width // 8)
-        dpad = np.zeros((bh2 * 8, bw2 * 8), dtype=np.float64)
-        dpad[:height, :width] = sdiff
-        dpad[height:, :width] = sdiff[-1:, :]
-        dpad[:, width:] = dpad[:, width - 1:width]
-        qmat = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-        dc_tab = _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-        ac_tab = _huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-        w = _BitWriter()
-        rst = 0
-        nb = 0
-        for by in range(bh2):
-            for bx in range(bw2):
-                if restart_every and nb and nb % restart_every == 0:
-                    w.flush()
-                    w.out += bytes([0xFF, 0xD0 + (rst % 8)])
-                    rst += 1
-                nb += 1
-                _encode_block(
-                    w, dpad[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8],
-                    qmat, dc_tab, ac_tab, 0)
-        w.flush()
-        ecs = bytes(w.out)
-        zz = _JPEG_ZIGZAG
-        sof = seg(0xC5, frame_hdr)
-        tables = (seg(0xDB, bytes([0x00]) + bytes(
-                      _JPEG_QTABLE[zz[i]] for i in range(64)))
-                  + seg(0xC4, bytes([0x00]) + bytes(_JPEG_DC_BITS)
-                        + bytes(_JPEG_DC_VALS))
-                  + seg(0xC4, bytes([0x10]) + bytes(_JPEG_AC_BITS)
-                        + bytes(_JPEG_AC_VALS)))
-        dri = (seg(0xDD, struct.pack(">H", restart_every))
-               if restart_every else b"")
-        sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    else:
-        ll_vals = list(range(17))  # SSSS 0..16, flat 5-bit (17 <= 32)
-        ll_bits = [0] * 16
-        ll_bits[4] = 17
-        tab = _huff_codes(ll_bits, ll_vals)
-        w = _BitWriter()
-        rst = 0
-        flat = sdiff.reshape(-1)
-        for i, dv in enumerate(flat):
-            if restart_every and i and i % restart_every == 0:
-                w.flush()
-                w.out += bytes([0xFF, 0xD0 + (rst % 8)])
-                rst += 1
-            d = int(dv)
-            if d == -32768:
-                code, length = tab[16]  # diff 32768, no extra bits
-                w.write(code, length)
-                continue
-            size, bits = _magnitude(d)
-            code, length = tab[size]
-            w.write(code, length)
-            if size:
-                w.write(bits, size)
-        w.flush()
-        ecs = bytes(w.out)
-        sof = seg(0xC7, frame_hdr)
-        tables = seg(0xC4, bytes([0x00]) + bytes(ll_bits) + bytes(ll_vals))
-        dri = (seg(0xDD, struct.pack(">H", restart_every))
-               if restart_every else b"")
-        sos = seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0]))
-    return (b"\xff\xd8" + dhp + base[2:-2] + exp
-            + sof + tables + dri + sos + ecs + b"\xff\xd9")
-
-
-def _collect_hier_frame(data: bytes, pos: int, head: bytes,
-                        arith: bool) -> tuple[bytes, int]:
-    """Collect one (possibly multi-scan) frame's remaining segments +
-    entropy data starting at ``pos`` into a standalone stream: consume
-    tables/scans until the next frame-level marker (SOF*/DHP/EXP/EOI).
-    Returns (SOI + head + segments + EOI, new position)."""
-    frame = bytearray(b"\xff\xd8" + head)
-    n = len(data)
-    while pos + 1 < n:
-        if data[pos] != 0xFF:
-            pos += 1
-            continue
-        while pos + 1 < n and data[pos + 1] == 0xFF:
-            pos += 1
-        m2 = data[pos + 1]
-        if (m2 == 0xD9 or m2 in (0xDE, 0xDF)
-                or (0xC0 <= m2 <= 0xCF and m2 not in (0xC4, 0xCC))):
-            break  # next frame-level marker: stop (EOI stays unconsumed)
-        pos += 2
-        (l2,) = struct.unpack(">H", data[pos:pos + 2])
-        frame += data[pos - 2:pos + l2]
-        pos += l2
-        if m2 == 0xDA:
-            end = (_scan_arith_entropy_end(data, pos) if arith
-                   else _scan_entropy_end(data, pos))
-            if arith and end >= n:
-                raise ValueError(
-                    "JPEG entropy data truncated (arithmetic segment "
-                    "has no terminating marker)")
-            frame += data[pos:end]
-            pos = end
-    frame += b"\xff\xd9"
-    return bytes(frame), pos
-
-
-def _decode_hierarchical(data: bytes, render_all: bool):
-    """Hierarchical (DHP, T.81 Annex J) decode -> the
-    ``_decode_jpeg_planes`` tuple. Walks the frame sequence: the first
-    non-differential frame decodes through the normal SOF dispatch (its
-    segments are re-wrapped as a standalone stream), EXP expands the
-    reference per J.1.1.3, and differential lossless frames add
-    mod-65536 sample differences — QM-coded (SOF15) or huffman-coded
-    (SOF7, r6: lossless SSSS categories 0-16, no prediction, RSTn
-    splitting honored). Differential DCT frames (SOF5/6/13/14) raise
-    NotImplementedError."""
-    import numpy as np
-
-    # DHP header
-    pos = 2
-    full_h = full_w = None
-    comps: list[dict] = []
-    ref = None
-    pending: list[tuple[int, bytes]] = []  # segments of the base frame
-    exp_pending = None
-    dc_cond: dict[int, tuple[int, int]] = {}
-    hier_huff: dict[tuple[int, int], dict] = {}
-    hier_q: dict[int, list[int]] = {}
-
-    def _parse_dht(b2):
-        i = 0
-        while i < len(b2):
-            tc, th = b2[i] >> 4, b2[i] & 0x0F
-            bits = list(b2[i + 1:i + 17])
-            n = sum(bits)
-            vals = list(b2[i + 17:i + 17 + n])
-            hier_huff[(tc, th)] = _huff_decode_tree(bits, vals)
-            i += 17 + n
-
-    def _parse_dqt(b2):
-        _parse_dqt_body(b2, hier_q)
-    while pos + 1 < len(data):
-        if data[pos] != 0xFF:
-            pos += 1
-            continue
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack(">H", data[pos:pos + 2])
-        body = data[pos + 2:pos + seglen]
-        seg_bytes = data[pos - 2:pos + seglen]
-        pos += seglen
-        if marker == 0xDE:
-            prec, full_h, full_w, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp != 1:
-                raise NotImplementedError(
-                    "hierarchical decode supports 8-bit single-component "
-                    "pyramids")
-            cid, hv, tq = body[6:9]
-            comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F,
-                          "tq": tq})
-        elif marker == 0xDF:
-            if ref is None:
-                raise ValueError("EXP before any reference frame")
-            eh, ev = body[0] >> 4, body[0] & 0x0F
-            exp_pending = (eh, ev)
-        elif marker in (0xC6, 0xCE):
-            # differential PROGRESSIVE frames (SOF6 huffman / SOF14
-            # arithmetic, r6): rewrap the (multi-scan) frame and decode
-            # through the progressive decoders' differential model —
-            # no level shift, zero DC prediction
-            is_arith = marker == 0xCE
-            fprec, fh, fw, fncomp = struct.unpack(">BHHB", body[:6])
-            if fprec != 8 or fncomp != 1:
-                raise NotImplementedError(
-                    "differential frames must be 8-bit single-component")
-            if ref is None:
-                raise ValueError("differential frame without a reference")
-            if exp_pending:
-                eh, ev = exp_pending
-                ref = _hier_upsample(ref, fh, fw, eh, ev)
-                exp_pending = None
-            if ref.shape != (fh, fw):
-                raise ValueError(
-                    f"differential frame {fw}x{fh} does not match the "
-                    f"reference {ref.shape[1]}x{ref.shape[0]}")
-            head = b"".join(s for _, s in pending) + seg_bytes
-            frame, pos = _collect_hier_frame(data, pos, head, is_arith)
-            pending = []
-            decode = (_decode_arith_progressive if is_arith
-                      else _decode_progressive)
-            _, _, fcomps, fplanes, _, _ = decode(
-                frame, render_all=False, differential=True)
-            coded = np.round(
-                fplanes[fcomps[0]["id"]][:fh, :fw]).astype(np.int64)
-            ref = (ref + coded) % 65536
-        elif marker == 0xCD:
-            # differential sequential DCT, ARITHMETIC (SOF13, r6):
-            # rewrap as a standalone stream (tables collected in
-            # ``pending`` included) and decode through _decode_arith's
-            # differential model — no level shift, zero DC prediction
-            fprec, fh, fw, fncomp = struct.unpack(">BHHB", body[:6])
-            if fprec != 8 or fncomp != 1:
-                raise NotImplementedError(
-                    "differential frames must be 8-bit single-component")
-            if ref is None:
-                raise ValueError("differential frame without a reference")
-            if exp_pending:
-                eh, ev = exp_pending
-                ref = _hier_upsample(ref, fh, fw, eh, ev)
-                exp_pending = None
-            if ref.shape != (fh, fw):
-                raise ValueError(
-                    f"differential frame {fw}x{fh} does not match the "
-                    f"reference {ref.shape[1]}x{ref.shape[0]}")
-            head = b"".join(s for _, s in pending) + seg_bytes
-            frame, pos = _collect_hier_frame(data, pos, head, True)
-            pending = []
-            _, _, fcomps, fplanes, _, _ = _decode_arith(
-                frame, render_all=False, differential=True)
-            coded = np.round(
-                fplanes[fcomps[0]["id"]][:fh, :fw]).astype(np.int64)
-            ref = (ref + coded) % 65536
-        elif marker in (0xC5, 0xC7, 0xCF):
-            is_arith = marker == 0xCF
-            is_dct = marker == 0xC5
-            fprec, fh, fw, fncomp = struct.unpack(">BHHB", body[:6])
-            if fprec != 8 or fncomp != 1:
-                raise NotImplementedError(
-                    "differential frames must be 8-bit single-component")
-            ftq = body[8]
-            if ref is None:
-                raise ValueError("differential frame without a reference")
-            if exp_pending:
-                eh, ev = exp_pending
-                ref = _hier_upsample(ref, fh, fw, eh, ev)
-                exp_pending = None
-            if ref.shape != (fh, fw):
-                raise ValueError(
-                    f"differential frame {fw}x{fh} does not match the "
-                    f"reference {ref.shape[1]}x{ref.shape[0]}")
-            # tables-misc segments collected BEFORE this SOF (B.2
-            # placement: DAC/DRI may precede the frame header) apply to
-            # this frame too
-            dri = 0
-            for mk, sb in pending:
-                b2 = sb[4:]
-                if mk == 0xCC:
-                    i = 0
-                    while i + 1 < len(b2):
-                        tc, tb = b2[i] >> 4, b2[i] & 0x0F
-                        if tc == 0:
-                            cs = b2[i + 1]
-                            dc_cond[tb] = (cs & 0x0F, cs >> 4)
-                        i += 2
-                elif mk == 0xC4:
-                    _parse_dht(b2)
-                elif mk == 0xDB:
-                    _parse_dqt(b2)
-                elif mk == 0xDD:
-                    (dri,) = struct.unpack(">H", b2[:2])
-            pending = []
-            # scan header + ECS follow
-            sos_scan = None
-            while pos + 1 < len(data):
-                if data[pos] != 0xFF:
-                    pos += 1
-                    continue
-                m2 = data[pos + 1]
-                pos += 2
-                (l2,) = struct.unpack(">H", data[pos:pos + 2])
-                b2 = data[pos + 2:pos + l2]
-                pos += l2
-                if m2 == 0xCC:
-                    i = 0
-                    while i + 1 < len(b2):
-                        tc, tb = b2[i] >> 4, b2[i] & 0x0F
-                        if tc == 0:
-                            cs = b2[i + 1]
-                            dc_cond[tb] = (cs & 0x0F, cs >> 4)
-                        i += 2
-                elif m2 == 0xC4:
-                    _parse_dht(b2)
-                elif m2 == 0xDB:
-                    _parse_dqt(b2)
-                elif m2 == 0xDD:
-                    (dri,) = struct.unpack(">H", b2[:2])
-                elif m2 == 0xDA:
-                    end = (_scan_arith_entropy_end(data, pos) if is_arith
-                           else _scan_entropy_end(data, pos))
-                    if is_arith and end >= len(data):
-                        raise ValueError(
-                            "JPEG entropy data truncated (arithmetic "
-                            "segment has no terminating marker)")
-                    sos_scan = (b2[2], data[pos:end])
-                    pos = end
-                    break
-            if sos_scan is None:
-                raise ValueError("differential frame missing SOS")
-            tt_scan, ecs = sos_scan
-            tdc = tt_scan >> 4
-            if is_arith:
-                if dri:
-                    # restart-interval state-reset semantics in QM-coded
-                    # differential frames have no second implementation
-                    # to differ against here — refuse loudly rather than
-                    # feed RSTn bytes to the QM decoder as 1-bit markers
-                    raise NotImplementedError(
-                        "restart intervals in differential "
-                        "lossless-arithmetic frames are not supported")
-                lo, up_c = dc_cond.get(tdc, (0, 1))
-                dec = _ArithDecoder(ecs)
-                stats = bytearray(164)
-                coded = np.zeros((fh, fw), dtype=np.int32)
-                for y in range(fh):
-                    for x in range(fw):
-                        da = int(coded[y, x - 1]) if x > 0 else 0
-                        db = int(coded[y - 1, x]) if y > 0 else 0
-                        ca = _lossless_cls(da, lo, up_c)
-                        cb = _lossless_cls(db, lo, up_c)
-                        d = _arith_decode_lossless_diff(
-                            dec, stats, 4 * (ca * 5 + cb),
-                            100 + 32 * (cb >= 3))
-                        coded[y, x] = d
-            elif is_dct:
-                # SOF5 differential sequential DCT huffman (r6, T.81
-                # J.1.1.2): the DCT of (input - reference), coded like a
-                # baseline scan but with NO level shift and NO DC
-                # prediction (the reference frame is the prediction), so
-                # restarts are stateless byte realignments here too
-                dc_tab = hier_huff.get((0, tt_scan >> 4))
-                ac_tab = hier_huff.get((1, tt_scan & 0x0F))
-                if dc_tab is None or ac_tab is None:
-                    raise ValueError(
-                        "differential scan references an undefined "
-                        "huffman table (missing DHT)")
-                qvals = hier_q.get(ftq)
-                if qvals is None:
-                    raise ValueError(
-                        "differential DCT frame references an undefined "
-                        "quant table (missing DQT)")
-                zz = _JPEG_ZIGZAG
-                flatq = np.empty(64)
-                for i in range(64):
-                    flatq[zz[i]] = qvals[i]
-                qmat = flatq.reshape(8, 8)
-                Cm = _dct_matrix()
-                bxs, bys = -(-fw // 8), -(-fh // 8)
-                n_blocks = bxs * bys
-                dplane = np.zeros((bys * 8, bxs * 8), dtype=np.float64)
-                intervals = _split_restart_intervals(ecs)
-                if len(intervals) > 1 and not dri:
-                    raise ValueError(
-                        "restart markers present but no DRI segment")
-                done = 0
-                for ci, chunk in enumerate(intervals):
-                    reader = _BitReader(chunk)
-                    in_chunk = (dri if dri and ci < len(intervals) - 1
-                                else n_blocks - done)
-                    for _ in range(in_chunk):
-                        if done >= n_blocks:
-                            break
-                        size = _read_huff(reader, dc_tab)
-                        dc = _extend(reader.read_bits(size), size)
-                        seq = [0] * 64
-                        seq[0] = dc
-                        k = 1
-                        while k < 64:
-                            rs = _read_huff(reader, ac_tab)
-                            run, sz = rs >> 4, rs & 0x0F
-                            if rs == 0x00:  # EOB
-                                break
-                            if rs == 0xF0:  # ZRL
-                                k += 16
-                                continue
-                            k += run
-                            if k > 63:
-                                raise ValueError("AC index overrun")
-                            seq[k] = _extend(reader.read_bits(sz), sz)
-                            k += 1
-                        flat = np.zeros(64)
-                        for i2 in range(64):
-                            flat[zz[i2]] = seq[i2]
-                        coef = flat.reshape(8, 8) * qmat
-                        by, bx = divmod(done, bxs)
-                        dplane[by * 8:(by + 1) * 8,
-                               bx * 8:(bx + 1) * 8] = Cm.T @ coef @ Cm
-                        done += 1
-                        if reader.consumed_synthetic():
-                            raise ValueError(
-                                "JPEG entropy data truncated "
-                                "(differential DCT scan)")
-                if done < n_blocks:
-                    raise ValueError("JPEG entropy data truncated")
-                coded = np.round(dplane[:fh, :fw]).astype(np.int64)
-            else:
-                # SOF7 differential lossless huffman (r6): SSSS 0-16
-                # categories, NO prediction (the reference frame is the
-                # prediction); restarts are stateless byte realignments
-                # (nothing to reset — split and continue)
-                tab = hier_huff.get((0, tdc))
-                if tab is None:
-                    raise ValueError(
-                        "differential scan references an undefined "
-                        "huffman table (missing DHT)")
-                intervals = _split_restart_intervals(ecs)
-                if len(intervals) > 1 and not dri:
-                    raise ValueError(
-                        "restart markers present but no DRI segment")
-                coded = np.zeros((fh, fw), dtype=np.int64)
-                n_samp = fh * fw
-                done = 0
-                for ci, chunk in enumerate(intervals):
-                    reader = _BitReader(chunk)
-                    in_chunk = (dri if dri and ci < len(intervals) - 1
-                                else n_samp - done)
-                    for _ in range(in_chunk):
-                        if done >= n_samp:
-                            break
-                        size = _read_huff(reader, tab)
-                        d = (32768 if size == 16
-                             else _extend(reader.read_bits(size), size))
-                        yy, xx = divmod(done, fw)
-                        coded[yy, xx] = d
-                        done += 1
-                        if reader.consumed_synthetic():
-                            raise ValueError(
-                                "JPEG entropy data truncated "
-                                "(differential lossless scan)")
-                if done < n_samp:
-                    raise ValueError("JPEG entropy data truncated")
-            ref = (ref + coded) % 65536
-        elif marker in (0xC0, 0xC2, 0xC3, 0xC9, 0xCA, 0xCB, 0xC1):
-            # non-differential frame: collect its segments (DQT etc.
-            # already in ``pending``) and decode as a standalone stream.
-            # _collect_hier_frame gathers EVERY scan up to the next
-            # frame-level marker (review r6: the old first-SOS break
-            # truncated multi-scan bases — progressive frames are
-            # always multi-scan)
-            head = b"".join(s for _, s in pending) + seg_bytes
-            frame, pos = _collect_hier_frame(
-                data, pos, head, marker in (0xC9, 0xCA, 0xCB))
-            pending = []
-            fw_, fh_, px = decode_jpeg_gray(frame)
-            ref = np.frombuffer(px, dtype=np.uint8).reshape(
-                fh_, fw_).astype(np.int64)
-        else:
-            pending.append((marker, seg_bytes))
-    if full_w is None:
-        raise ValueError("hierarchical stream missing DHP")
-    if ref is None or ref.shape != (full_h, full_w):
-        raise ValueError("hierarchical stream incomplete (no frame at "
-                         "the DHP resolution)")
-    plane = (ref & 0xFFFF).astype(np.float64)
-    return full_w, full_h, comps, {comps[0]["id"]: plane}, 1, 1
-
-
-def _scan_arith_entropy_end(data: bytes, pos: int) -> int:
-    """End of an ARITHMETIC entropy segment: first 0xFF whose successor
-    is a non-RSTn marker (>= 0x90 and not 0xD0-0xD7). Bytes <= 0x8F
-    after 0xFF are bit-stuffed data, RSTn stays inside the segment."""
-    i = pos
-    n = len(data)
-    while i < n:
-        if data[i] != 0xFF:
-            i += 1
-            continue
-        nxt = data[i + 1] if i + 1 < n else 0xD9
-        if nxt <= 0x8F or 0xD0 <= nxt <= 0xD7:
-            i += 2
-            continue
-        break
-    return i
-
-
-def _decode_progressive(data: bytes, render_all: bool,
-                        differential: bool = False):
+def _decode_progressive(data: bytes, render_all: bool):
     """Progressive (SOF2) JPEG: spectral-selection + successive-
     approximation scan decode per ITU T.81 G.2 (huffman coding), then the
     same dequant/IDCT as baseline. Returns the ``_decode_jpeg_planes``
@@ -4674,9 +1816,7 @@ def _decode_progressive(data: bytes, render_all: bool,
     and AC first/refine (single-component, EOBRUN semantics, ZRL,
     correction bits); restart intervals reset predictors and EOBRUN.
     Same strict truncation contract as baseline: a band pass that consumed
-    zero-fill bits past end-of-stream raises. ``differential`` (r6): accept an SOF6 frame instead — no
-    level shift, zero DC prediction (T.81 J.1.1.2); the hierarchical
-    walker accumulates the returned plane onto its reference."""
+    zero-fill bits past end-of-stream raises."""
     import numpy as np
 
     qtables: dict[int, list[int]] = {}
@@ -4703,21 +1843,10 @@ def _decode_progressive(data: bytes, render_all: bool,
         pos += seglen
         if marker == 0xDB:
             _parse_dqt_body(body, qtables)
-        elif marker == 0xC2 or (differential and marker == 0xC6):
-            _prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
-            for c in range(ncomp):
-                cid, hv, tq = body[6 + 3 * c:9 + 3 * c]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F,
-                              "tq": tq})
+        elif marker == 0xC2:
+            height, width, comps = _parse_sof(body)
         elif marker == 0xC4:
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 0x0F
-                bits = list(body[i + 1:i + 17])
-                n = sum(bits)
-                vals = list(body[i + 17:i + 17 + n])
-                huff[(tc, th)] = _huff_decode_tree(bits, vals)
-                i += 17 + n
+            _parse_dht_body(body, huff)
         elif marker == 0xDD:
             (restart_interval,) = struct.unpack(">H", body[:2])
         elif marker == 0xDA:
@@ -4804,21 +1933,16 @@ def _decode_progressive(data: bytes, render_all: bool,
                             for bx in range(comp["h"]):
                                 blk = comp["coef"][my * comp["v"] + by,
                                                    mx * comp["h"] + bx]
-                                newp = _dc_pass(
+                                preds[comp["id"]] = _dc_pass(
                                     reader, dc_tab, blk, ah, al,
                                     preds[comp["id"]])
-                                # differential: PRED stays 0 (J.1.1.2)
-                                if not differential:
-                                    preds[comp["id"]] = newp
                 else:
                     comp, dc_tab, ac_tab = scomps[0]
                     by, bx = divmod(done, comp["nbx"])
                     blk = comp["coef"][by, bx]
                     if ss == 0:
-                        newp = _dc_pass(
+                        preds[comp["id"]] = _dc_pass(
                             reader, dc_tab, blk, ah, al, preds[comp["id"]])
-                        if not differential:
-                            preds[comp["id"]] = newp
                     elif ah == 0:
                         eobrun = _ac_first_pass(
                             reader, ac_tab, blk, ss, se, al, eobrun, zz)
@@ -4847,8 +1971,7 @@ def _decode_progressive(data: bytes, render_all: bool,
         coefs = c["coef"].astype(np.float64) * qnat[c["tq"]]
         nby, nbx = coefs.shape[0], coefs.shape[1]
         blocks = coefs.reshape(nby, nbx, 8, 8)
-        px = (np.einsum("ji,yxjk,kl->yxil", C, blocks, C)
-              + (0.0 if differential else 128.0))
+        px = np.einsum("ji,yxjk,kl->yxil", C, blocks, C) + 128.0
         plane = px.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
         planes[c["id"]] = plane
     return width, height, comps, planes, hmax, vmax
@@ -5232,20 +2355,16 @@ def decode_bmp(data: bytes) -> tuple[int, int, int, bytes]:
 
 
 def _decode_bmp_rle(blob: bytes, width: int, height: int,
-                    bits: int, canvas=None) -> "np.ndarray":
+                    bits: int) -> "np.ndarray":
     """BI_RLE8 / BI_RLE4 stream -> (height, width) palette-index raster
     in STORED (bottom-up) row order. Escapes: 00 00 = end of line,
     00 01 = end of bitmap, 00 02 dx dy = position delta; 00 n (n>=3) =
     absolute mode (n literal indices, data padded to a word boundary);
     c v (c>0) = run of c indices (RLE4 alternates v's two nibbles).
-    Pixels never written stay 0 — or, when ``canvas`` is given (the
-    MS-RLE VIDEO delta semantics, r6), keep the previous frame's value:
-    the same escapes that skip pixels in a still BMP carry inter-frame
-    deltas in an AVI 'MRLE' stream."""
+    Pixels never written stay 0."""
     import numpy as np
 
-    out = (np.zeros((height, width), dtype=np.uint8)
-           if canvas is None else canvas)
+    out = np.zeros((height, width), dtype=np.uint8)
     x = y = 0
     i = 0
     n = len(blob)
@@ -5338,21 +2457,21 @@ def decode_avi_frames(data: bytes) -> tuple[int, int, str, list[bytes]]:
                         codec = "mjpg"
                     elif handler in (b"DIB ", b"RGB ", b"\x00\x00\x00\x00"):
                         codec = "dib"
-                    elif handler in (b"MRLE", b"mrle", b"RLE "):
-                        codec = "mrle"  # frames via decode_mrle_video (r6)
                     else:
                         raise NotImplementedError(
                             f"video codec {handler!r} needs a real decoder "
-                            "(pyav plugs in here); MJPG, uncompressed DIB "
-                            "and MS-RLE decode natively")
+                            "(pyav plugs in here); MJPG and uncompressed "
+                            "DIB decode natively")
             elif tag == b"strf" and in_vids and ln >= 20:
-                # a zeroed fccHandler may still signal MS-RLE via the
-                # strf biCompression field (review r6) — trust it over
-                # the handler default
+                # a zeroed fccHandler may still name a compressed codec
+                # (e.g. MS-RLE) in the strf biCompression field (review
+                # r6) — trust it over the handler default
                 (bi_comp,) = struct.unpack(
                     "<I", data[body_start + 16:body_start + 20])
-                if codec == "dib" and bi_comp == 1:
-                    codec = "mrle"
+                if codec == "dib" and bi_comp != 0:
+                    raise NotImplementedError(
+                        f"video stream biCompression {bi_comp} needs a "
+                        "real decoder (pyav plugs in here)")
                 in_vids = False
             elif tag in (b"00dc", b"00db"):
                 frames.append(data[body_start:body_start + ln])
@@ -5362,140 +2481,6 @@ def decode_avi_frames(data: bytes) -> tuple[int, int, str, list[bytes]]:
     if width is None or not frames:
         raise ValueError("AVI missing header or frames")
     return width, height, codec or "mjpg", frames
-
-
-def _avi_vids_palette(data: bytes) -> list[tuple[int, int, int]]:
-    """The video stream's strf palette: BITMAPINFOHEADER (40 bytes)
-    followed by biClrUsed (or 2^biBitCount) BGRX entries -> [(r,g,b)].
-    Empty list when the stream carries no palette (truecolor DIBs)."""
-    palette: list[tuple[int, int, int]] = []
-
-    def walk(pos: int, end: int) -> None:
-        nonlocal palette
-        while pos + 8 <= end:
-            tag = data[pos:pos + 4]
-            (ln,) = struct.unpack("<I", data[pos + 4:pos + 8])
-            body_start = pos + 8
-            if tag == b"LIST":
-                walk(body_start + 4, body_start + ln)
-            elif tag == b"strf" and not palette and ln >= 40:
-                body = data[body_start:body_start + ln]
-                bits = struct.unpack("<H", body[14:16])[0]
-                (clr_used,) = struct.unpack("<I", body[32:36])
-                if bits <= 8:
-                    n = clr_used or (1 << bits)
-                    for k in range(min(n, (len(body) - 40) // 4)):
-                        b_, g_, r_ = body[40 + 4 * k:43 + 4 * k]
-                        palette.append((r_, g_, b_))
-            pos = body_start + ln + (ln & 1)
-
-    walk(12, len(data))
-    return palette
-
-
-def decode_mrle_video(data: bytes) -> tuple[int, int, list[bytes]]:
-    """MS-RLE ('MRLE') AVI -> (width, height, [interleaved top-down RGB
-    frame bytes]) (r6). Each frame chunk is a BI_RLE8 stream (the same
-    escapes as RLE BMP); pixels a frame never writes KEEP the previous
-    frame's value — that is the codec's whole inter-frame delta
-    mechanism — so frames composite onto a persistent palette-index
-    canvas (initially 0), mapped through the stream's strf palette and
-    flipped from the stored bottom-up row order."""
-    width, height, codec, frames = decode_avi_frames(data)
-    if codec != "mrle":
-        raise ValueError("decode_mrle_video called on a non-MRLE stream")
-    return width, height, _compose_mrle_frames(
-        width, height, frames, _avi_vids_palette(data))
-
-
-def _compose_mrle_frames(width: int, height: int, frames: list[bytes],
-                         palette: list) -> list[bytes]:
-    """The MRLE compositing core, split out so a caller that already
-    parsed the container (extract_video_frames) skips a second walk."""
-    import numpy as np
-
-    if not palette:
-        raise ValueError("MRLE stream missing its strf palette")
-    lut = np.zeros((256, 3), dtype=np.uint8)
-    for k, (r_, g_, b_) in enumerate(palette[:256]):
-        lut[k] = (r_, g_, b_)
-    canvas = np.zeros((height, width), dtype=np.uint8)
-    out = []
-    for frame in frames:
-        canvas = _decode_bmp_rle(frame, width, height, 8, canvas=canvas)
-        rgb = lut[canvas][::-1, :, :]  # bottom-up storage -> top-down
-        out.append(np.ascontiguousarray(rgb).tobytes())
-    return out
-
-
-def encode_avi_mrle(frames_idx: list[bytes], width: int, height: int,
-                    palette: list[tuple[int, int, int]] | None = None,
-                    fps: int = 10) -> bytes:
-    """Minimal MS-RLE AVI (handler 'MRLE', strf biCompression=BI_RLE8,
-    8-bit palette) (r6). ``frames_idx`` are width*height palette-index
-    bytes per frame, run-length encoded row by row (bottom-up, runs
-    capped at 255, EOL after every row, EOB at frame end). ``palette``
-    defaults to identity gray ((k,k,k)) so index == luma and the decoded
-    RGB sum is exactly 3x the index sum — the analytic-oracle path.
-    Delta frames (partial updates over the previous frame) are what the
-    FORMAT carries; this encoder always paints full frames — tests
-    hand-craft delta streams to pin the skip semantics."""
-    import numpy as np
-
-    if not frames_idx:
-        raise ValueError("need at least one frame")
-    palette = palette or [(k, k, k) for k in range(256)]
-
-    encoded = []
-    for f in frames_idx:
-        if len(f) != width * height:
-            raise ValueError("each frame must be width*height bytes")
-        img = np.frombuffer(f, dtype=np.uint8).reshape(height, width)
-        blob = bytearray()
-        for y in range(height - 1, -1, -1):  # stored bottom-up
-            row = img[y]
-            x = 0
-            while x < width:
-                run = 1
-                while (x + run < width and run < 255
-                       and row[x + run] == row[x]):
-                    run += 1
-                blob += bytes([run, int(row[x])])
-                x += run
-            blob += b"\x00\x00"  # end of line
-        blob += b"\x00\x01"  # end of bitmap
-        encoded.append(bytes(blob))
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) % 2 else b""
-        return tag + struct.pack("<I", len(body)) + body + pad
-
-    def list_chunk(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
-    max_bytes = max(len(e) for e in encoded)
-    avih = struct.pack(
-        "<14I", 1_000_000 // fps, max_bytes * fps, 0, 0x10, len(encoded),
-        0, 1, max_bytes, width, height, 0, 0, 0, 0)
-    strh = (b"vids" + b"MRLE"
-            + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, fps, 0,
-                          len(encoded), max_bytes, 0xFFFFFFFF, 0)
-            + struct.pack("<4h", 0, 0, width, height))
-    pal = b"".join(bytes([b_, g_, r_, 0]) for r_, g_, b_ in palette[:256])
-    strf = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 8, 1,
-                       width * height, 0, 0, len(palette[:256]), 0) + pal
-    hdrl = list_chunk(b"hdrl", chunk(b"avih", avih) + list_chunk(
-        b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = list_chunk(b"movi", b"".join(chunk(b"00dc", e)
-                                        for e in encoded))
-    entries = bytearray()
-    off = 4
-    for e in encoded:
-        entries += b"00dc" + struct.pack("<III", 0x10, off, len(e))
-        off += 8 + len(e) + (len(e) & 1)
-    idx1 = chunk(b"idx1", bytes(entries))
-    body = b"AVI " + hdrl + movi + idx1
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def decode_avi_mjpeg(data: bytes) -> tuple[int, int, list[bytes]]:
@@ -5514,103 +2499,6 @@ def encode_wav(samples, sample_rate: int = 8000) -> bytes:
     body = np.clip(np.asarray(list(samples), dtype=np.int64),
                    -32768, 32767).astype("<i2").tobytes()
     fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
-    riff = (b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(body)) + body)
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
-
-
-# ---------------------------------------------------------------------------
-# Companded / packed / ADPCM WAV (r6 — retires the a-law/mu-law, 24-bit
-# and IMA-ADPCM legs of the audio seam). Clean-room from the public
-# specs: ITU G.711 segment companding (the decode expansions below ARE
-# the normative piecewise-linear formulas), the IMA/DVI ADPCM algorithm
-# (step + index tables from the public IMA "Recommended Practices"
-# document, also in RFC 3551 terms), and the MS WAVEFORMAT block layout
-# for format tag 0x11 (4-byte per-channel block headers, nibble-packed
-# data, 4-byte channel interleave).
-# ---------------------------------------------------------------------------
-
-def _mulaw_decode_table():
-    """G.711 mu-law byte -> linear (int16-range) lookup, computed from
-    the normative expansion (bias 0x84, 3-bit exponent, 4-bit mantissa)."""
-    import numpy as np
-
-    u = np.arange(256, dtype=np.int32) ^ 0xFF
-    t = ((u & 0x0F) << 3) + 0x84
-    t <<= (u >> 4) & 0x07
-    return np.where(u & 0x80, 0x84 - t, t - 0x84).astype(np.int16)
-
-
-def _alaw_decode_table():
-    """G.711 A-law byte -> linear lookup (0x55 toggle, segmented gain)."""
-    import numpy as np
-
-    a = np.arange(256, dtype=np.int32) ^ 0x55
-    seg = (a >> 4) & 0x07
-    mant = a & 0x0F
-    t = np.where(seg == 0, (mant << 4) + 8,
-                 ((mant << 4) + 0x108) << np.maximum(seg - 1, 0))
-    return np.where(a & 0x80, t, -t).astype(np.int16)
-
-
-def _g711_encode(samples, law: str):
-    """Linear int16 -> companded byte, via exact inverse search over the
-    256-entry decode table (nearest decoded value, ties toward the
-    smaller magnitude) — guarantees decode(encode(x)) is the nearest
-    representable level, with no reliance on a second formula."""
-    import numpy as np
-
-    table = (_mulaw_decode_table() if law == "mulaw"
-             else _alaw_decode_table())
-    order = np.argsort(table, kind="stable")
-    levels = table[order].astype(np.int32)
-    s = np.clip(np.asarray(list(samples), dtype=np.int64),
-                -32768, 32767).astype(np.int32)
-    idx = np.searchsorted(levels, s)
-    idx = np.clip(idx, 1, 255)
-    lo, hi = levels[idx - 1], levels[idx]
-    pick = np.where((s - lo) <= (hi - s), idx - 1, idx)
-    return order[pick].astype(np.uint8)
-
-
-_IMA_STEP_TABLE = [
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-]
-_IMA_INDEX_TABLE = [-1, -1, -1, -1, 2, 4, 6, 8, -1, -1, -1, -1, 2, 4, 6, 8]
-
-
-def _ima_decode_nibble(n: int, pred: int, index: int) -> tuple[int, int]:
-    """One IMA ADPCM step: nibble + state -> (new predictor, new index)."""
-    step = _IMA_STEP_TABLE[index]
-    diff = step >> 3
-    if n & 1:
-        diff += step >> 2
-    if n & 2:
-        diff += step >> 1
-    if n & 4:
-        diff += step
-    pred = pred - diff if n & 8 else pred + diff
-    pred = max(-32768, min(32767, pred))
-    index = max(0, min(88, index + _IMA_INDEX_TABLE[n]))
-    return pred, index
-
-
-def encode_wav_g711(samples, law: str = "mulaw",
-                    sample_rate: int = 8000) -> bytes:
-    """Mono G.711 companded WAV: ``law`` = ``"mulaw"`` (format tag 7) or
-    ``"alaw"`` (format tag 6), 8 bits/sample."""
-    if law not in ("mulaw", "alaw"):
-        raise ValueError("law must be 'mulaw' or 'alaw'")
-    body = _g711_encode(samples, law).tobytes()
-    tag = 7 if law == "mulaw" else 6
-    fmt = struct.pack("<HHIIHHH", tag, 1, sample_rate, sample_rate, 1, 8, 0)
     riff = (b"WAVE"
             + b"fmt " + struct.pack("<I", len(fmt)) + fmt
             + b"data" + struct.pack("<I", len(body)) + body)
@@ -5636,221 +2524,23 @@ def encode_wav_pcm24(samples, sample_rate: int = 8000,
     return b"RIFF" + struct.pack("<I", len(riff)) + riff
 
 
-_MSADPCM_COEFFS = [(256, 0), (512, -256), (0, 0), (192, 64), (240, 0),
-                   (460, -208), (392, -232)]
-_MSADPCM_ADAPT = [230, 230, 230, 230, 307, 409, 512, 614,
-                  768, 614, 512, 409, 307, 230, 230, 230]
-
-
-def _msadpcm_predict(s1: int, s2: int, c1: int, c2: int) -> int:
-    # the >> of a negative predictor sum is floor division by 256 in
-    # the reference algorithm (arithmetic shift)
-    return (s1 * c1 + s2 * c2) >> 8
-
-
-def encode_wav_ms_adpcm(samples, sample_rate: int = 8000,
-                        channels: int = 1,
-                        samples_per_block: int = 500,
-                        predictor: int = 0) -> bytes:
-    """MS-ADPCM WAV (format tag 2, public WAVEFORMAT spec): per-channel
-    7-byte block headers (predictor index, initial delta, the two
-    verbatim seed samples), 4-bit two's-complement nibbles against the
-    chosen coefficient pair, delta adapted by the 16-entry table with
-    the 16 floor. Nibbles alternate channels (first channel in the high
-    nibble). The last block is zero-padded; ``fact`` holds the true
-    frame count."""
-    import numpy as np
-
-    if channels not in (1, 2):
-        raise ValueError("channels must be 1 or 2")
-    if not 0 <= predictor < 7:
-        raise ValueError("predictor must be 0..6")
-    if samples_per_block < 2 or samples_per_block % 2 != 0:
-        raise ValueError("samples_per_block must be even and >= 2")
-    s = np.clip(np.asarray(list(samples), dtype=np.int64),
-                -32768, 32767).astype(np.int32)
-    if s.size % channels:
-        raise ValueError("sample count must be a multiple of channels")
-    n_frames = s.size // channels
-    chans = [s[c::channels] for c in range(channels)]
-    c1, c2 = _MSADPCM_COEFFS[predictor]
-    block_align = 7 * channels + (samples_per_block - 2) * channels // 2
-
-    out = bytearray()
-    for b0 in range(0, n_frames, samples_per_block):
-        frames = min(samples_per_block, n_frames - b0)
-        st = []
-        for c in range(channels):
-            ch = chans[c]
-            s1 = int(ch[b0 + 1]) if frames > 1 else 0
-            s2 = int(ch[b0])
-            st.append({"s1": s1, "s2": s2, "delta": 16})
-        for c in range(channels):
-            out.append(predictor)
-        for key in ("delta", "s1", "s2"):
-            for c in range(channels):
-                out += struct.pack("<h", st[c][key])
-        nibbles = []
-        for i in range(2, samples_per_block):
-            for c in range(channels):
-                d = st[c]
-                target = int(chans[c][b0 + i]) if i < frames else d["s1"]
-                pred = _msadpcm_predict(d["s1"], d["s2"], c1, c2)
-                err = target - pred
-                n = max(-8, min(7, int(round(err / d["delta"]))))
-                new = max(-32768, min(32767, pred + n * d["delta"]))
-                d["s2"], d["s1"] = d["s1"], new
-                d["delta"] = max(
-                    16, (_MSADPCM_ADAPT[n & 0x0F] * d["delta"]) >> 8)
-                nibbles.append(n & 0x0F)
-        for k in range(0, len(nibbles), 2):
-            out.append((nibbles[k] << 4) | nibbles[k + 1])
-    fmt = struct.pack("<HHIIHHHH", 2, channels, sample_rate,
-                      sample_rate * block_align // samples_per_block,
-                      block_align, 4, 2, samples_per_block)
-    fact = struct.pack("<I", n_frames)
-    riff = (b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"fact" + struct.pack("<I", len(fact)) + fact
-            + b"data" + struct.pack("<I", len(out)) + bytes(out))
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
-
-
-def _decode_ms_adpcm(body: bytes, channels: int, block_align: int,
-                     spb: int, fact_frames: int | None) -> list:
-    """MS-ADPCM data chunk -> channel-interleaved int list."""
-    import numpy as np
-
-    if block_align < 7 * channels + 1:
-        raise ValueError(
-            f"MS-ADPCM block align {block_align} smaller than the "
-            f"{7 * channels}-byte header")
-    out: list[list[int]] = [[] for _ in range(channels)]
-    for boff in range(0, len(body) - block_align + 1, block_align):
-        block = body[boff:boff + block_align]
-        preds = list(block[:channels])
-        if any(p > 6 for p in preds):
-            raise ValueError(f"MS-ADPCM predictor {max(preds)} out of range")
-        st = []
-        for c in range(channels):
-            delta, = struct.unpack_from("<h", block, channels + 2 * c)
-            s1, = struct.unpack_from("<h", block, 3 * channels + 2 * c)
-            s2, = struct.unpack_from("<h", block, 5 * channels + 2 * c)
-            st.append({"s1": s1, "s2": s2, "delta": delta,
-                       "c": _MSADPCM_COEFFS[preds[c]]})
-            out[c] += [s2, s1]
-        nib = []
-        for bt in block[7 * channels:]:
-            nib.append(bt >> 4)
-            nib.append(bt & 0x0F)
-        for k, n in enumerate(nib[:(spb - 2) * channels]):
-            d = st[k % channels]
-            c1, c2 = d["c"]
-            sn = n - 16 if n & 8 else n
-            pred = _msadpcm_predict(d["s1"], d["s2"], c1, c2)
-            new = max(-32768, min(32767, pred + sn * d["delta"]))
-            d["s2"], d["s1"] = d["s1"], new
-            d["delta"] = max(16, (_MSADPCM_ADAPT[n] * d["delta"]) >> 8)
-            out[k % channels].append(new)
-    if fact_frames is not None:
-        out = [ch[:fact_frames] for ch in out]
-    if channels == 1:
-        return out[0]
-    inter = np.empty(sum(len(ch) for ch in out), dtype=np.int64)
-    for c in range(channels):
-        inter[c::channels] = out[c]
-    return inter.tolist()
-
-
-def encode_wav_ima_adpcm(samples, sample_rate: int = 8000,
-                         channels: int = 1,
-                         samples_per_block: int = 505) -> bytes:
-    """IMA/DVI ADPCM WAV (format tag 0x11). ``samples`` is
-    channel-interleaved int16s; blocks carry ``samples_per_block``
-    samples per channel (header sample + 8*k nibbles, so the count must
-    be 1 mod 8); the last block is zero-padded to full size, with the
-    true total in a ``fact`` chunk."""
-    import numpy as np
-
-    if channels not in (1, 2):
-        raise ValueError("channels must be 1 or 2")
-    if samples_per_block % 8 != 1:
-        raise ValueError("samples_per_block must be 1 mod 8")
-    s = np.clip(np.asarray(list(samples), dtype=np.int64),
-                -32768, 32767).astype(np.int32)
-    if s.size % channels:
-        raise ValueError("sample count must be a multiple of channels")
-    n_frames = s.size // channels
-    chans = [s[c::channels] for c in range(channels)]
-    block_align = 4 * channels + (samples_per_block - 1) // 2 * channels
-
-    out = bytearray()
-    index = [0] * channels
-    for b0 in range(0, n_frames, samples_per_block):
-        frames = min(samples_per_block, n_frames - b0)
-        nib: list[list[int]] = []
-        for c in range(channels):
-            ch = chans[c]
-            pred = int(ch[b0])
-            out += struct.pack("<hBB", pred, index[c], 0)
-            nibs = []
-            for i in range(1, samples_per_block):
-                target = int(ch[b0 + i]) if i < frames else pred
-                step = _IMA_STEP_TABLE[index[c]]
-                delta = target - pred
-                n = 8 if delta < 0 else 0
-                delta = abs(delta)
-                if delta >= step:
-                    n |= 4
-                    delta -= step
-                if delta >= step >> 1:
-                    n |= 2
-                    delta -= step >> 1
-                if delta >= step >> 2:
-                    n |= 1
-                pred, index[c] = _ima_decode_nibble(n, pred, index[c])
-                nibs.append(n)
-            nib.append(nibs)
-        # pack: 4-byte (8-nibble) runs per channel, channels interleaved
-        for g in range(0, samples_per_block - 1, 8):
-            for c in range(channels):
-                run = nib[c][g:g + 8]
-                for k in range(0, 8, 2):
-                    out.append(run[k] | (run[k + 1] << 4))
-    fmt = struct.pack("<HHIIHHHH", 0x11, channels, sample_rate,
-                      sample_rate * block_align // samples_per_block,
-                      block_align, 4, 2, samples_per_block)
-    fact = struct.pack("<I", n_frames)
-    riff = (b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"fact" + struct.pack("<I", len(fact)) + fact
-            + b"data" + struct.pack("<I", len(out)) + bytes(out))
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
-
-
 def decode_wav(data: bytes) -> tuple[int, list]:
     """WAV -> (sample_rate, channel-interleaved samples).
 
     Supported (r2 mono PCM16; widened r5/r6): integer PCM (format 1) at
     8 bits (unsigned, returned re-centred to signed -128..127), 16 bits
-    (signed) or 24 bits packed (r6, returned as full-range ints); IEEE
-    float32 (format 3, returned as Python floats); G.711 A-law (format
-    6) and mu-law (format 7) companded 8-bit (r6, expanded to int16
-    range); and IMA/DVI ADPCM (format 0x11) plus MS-ADPCM (format 2)
-    (both r6, mono/stereo block decode honoring the ``fact`` frame
-    count). PCM, float32 and G.711 are sample-granular, so ANY channel
-    count 1-32 decodes (r6 — 5.1/7.1 beds and ambisonics included);
-    the ADPCM block layouts stay mono/stereo. Anything else — GSM,
-    MP3-in-WAV — raises NotImplementedError (the soundfile/torchaudio
-    seam)."""
+    (signed) or 24 bits packed (r6, returned as full-range ints) and
+    IEEE float32 (format 3, returned as Python floats), at any channel
+    count 1-32 (r6 — 5.1/7.1 beds and ambisonics included). Anything
+    else — G.711, ADPCM, GSM, MP3-in-WAV — raises NotImplementedError
+    (the soundfile/torchaudio seam)."""
     import numpy as np
 
     if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE file")
     pos = 12
     rate = None
-    afmt = bits = channels = None
-    block_align = spb = fact_frames = None
+    afmt = bits = None
     samples: list = []
     while pos + 8 <= len(data):
         tag = data[pos:pos + 4]
@@ -5858,49 +2548,23 @@ def decode_wav(data: bytes) -> tuple[int, list]:
         body = data[pos + 8:pos + 8 + length]
         pos += 8 + length + (length & 1)
         if tag == b"fmt ":
-            afmt, channels, rate, _, block_align, bits = struct.unpack(
+            afmt, channels, rate, _, _, bits = struct.unpack(
                 "<HHIIHH", body[:16])
-            anych = 1 <= channels <= 32  # sample-granular formats
-            supported = (
-                (afmt == 1 and bits in (8, 16, 24) and anych)
-                or (afmt == 3 and bits == 32 and anych)
-                or (afmt in (6, 7) and bits == 8 and anych)
-                or (afmt in (2, 0x11) and bits == 4 and channels in (1, 2)))
+            supported = 1 <= channels <= 32 and (
+                (afmt == 1 and bits in (8, 16, 24))
+                or (afmt == 3 and bits == 32))
             if not supported:
                 raise NotImplementedError(
-                    f"decode_wav supports integer PCM 8/16/24-bit, IEEE "
-                    f"float32 and G.711 a-law/mu-law at 1-32 channels, "
-                    f"and IMA/MS ADPCM mono/stereo (got fmt={afmt}, "
-                    f"ch={channels}, bits={bits}) — GSM/MP3-in-WAV is "
-                    "the soundfile/torchaudio seam")
-            if afmt == 0x11:
-                if len(body) >= 20:
-                    (spb,) = struct.unpack("<H", body[18:20])
-                else:
-                    spb = (block_align - 4 * channels) * 2 // channels + 1
-            elif afmt == 2:
-                if len(body) >= 20:
-                    (spb,) = struct.unpack("<H", body[18:20])
-                else:
-                    spb = (block_align - 7 * channels) * 2 // channels + 2
-        elif tag == b"fact":
-            (fact_frames,) = struct.unpack("<I", body[:4])
+                    f"decode_wav supports integer PCM 8/16/24-bit and IEEE "
+                    f"float32 at 1-32 channels (got fmt={afmt}, "
+                    f"ch={channels}, bits={bits}) — G.711/ADPCM/GSM/"
+                    "MP3-in-WAV is the soundfile/torchaudio seam")
         elif tag == b"data":
             if afmt is None:
                 raise ValueError("data chunk before fmt chunk")
             if afmt == 3:
                 samples = np.frombuffer(
                     body[:len(body) & ~3], dtype="<f4").tolist()
-            elif afmt in (6, 7):
-                table = (_alaw_decode_table() if afmt == 6
-                         else _mulaw_decode_table())
-                samples = table[np.frombuffer(body, np.uint8)].tolist()
-            elif afmt == 0x11:
-                samples = _decode_ima_adpcm(
-                    body, channels, block_align, spb, fact_frames)
-            elif afmt == 2:
-                samples = _decode_ms_adpcm(
-                    body, channels, block_align, spb, fact_frames)
             elif bits == 8:
                 samples = (np.frombuffer(body, dtype=np.uint8)
                            .astype(np.int16) - 128).tolist()
@@ -5917,44 +2581,3 @@ def decode_wav(data: bytes) -> tuple[int, list]:
     if rate is None:
         raise ValueError("missing fmt chunk")
     return rate, samples
-
-
-def _decode_ima_adpcm(body: bytes, channels: int, block_align: int,
-                      spb: int, fact_frames: int | None) -> list:
-    """IMA ADPCM data chunk -> channel-interleaved int list. Blocks are
-    independent (4-byte per-channel headers carry predictor + step
-    index); nibble data interleaves channels in 4-byte groups; the
-    ``fact`` chunk truncates the zero-padded tail of the last block."""
-    import numpy as np
-
-    if block_align < 4 * channels + 1:
-        raise ValueError(
-            f"IMA ADPCM block align {block_align} smaller than the "
-            f"{4 * channels}-byte header")
-    out: list[list[int]] = [[] for _ in range(channels)]
-    for boff in range(0, len(body) - block_align + 1, block_align):
-        block = body[boff:boff + block_align]
-        pred = [0] * channels
-        index = [0] * channels
-        for c in range(channels):
-            p, ix, _ = struct.unpack("<hBB", block[4 * c:4 * c + 4])
-            if ix > 88:
-                raise ValueError(f"IMA ADPCM step index {ix} out of range")
-            pred[c], index[c] = p, ix
-            out[c].append(p)
-        nib_bytes = block[4 * channels:]
-        for g in range(0, len(nib_bytes), 4 * channels):
-            for c in range(channels):
-                for bt in nib_bytes[g + 4 * c:g + 4 * c + 4]:
-                    for n in (bt & 0x0F, bt >> 4):
-                        pred[c], index[c] = _ima_decode_nibble(
-                            n, pred[c], index[c])
-                        out[c].append(pred[c])
-    if fact_frames is not None:
-        out = [ch[:fact_frames] for ch in out]
-    if channels == 1:
-        return out[0]
-    inter = np.empty(sum(len(ch) for ch in out), dtype=np.int64)
-    for c in range(channels):
-        inter[c::channels] = out[c]
-    return inter.tolist()

@@ -137,7 +137,8 @@ def build_positional_dicts(special_cases: Iterable[tuple] | None = None):
 # ---------------------------------------------------------------------------
 
 
-def _literal_map(mapping: dict[str, str]) -> Column:
+def literal_map(mapping: dict) -> Column:
+    """A literal map column with ``mapping``'s keys and values, in order."""
     pairs = []
     for k, v in mapping.items():
         pairs.append(F.lit(k))
@@ -153,12 +154,12 @@ def _null_safe_lookup(map_col: Column, value: Column) -> Column:
 
 def expand_direction(col: Column) -> Column:
     """P1: N->North ... WB->Westbound, fall back to input (expand.py:180-187)."""
-    return _null_safe_lookup(_literal_map(DIRECTION_EXPANSIONS), col)
+    return _null_safe_lookup(literal_map(DIRECTION_EXPANSIONS), col)
 
 
 def expand_type(col: Column) -> Column:
     """P2: 34 street-type abbreviations (expand.py:177-178, 23-59)."""
-    return _null_safe_lookup(_literal_map(TYPE_EXPANSIONS), col)
+    return _null_safe_lookup(literal_map(TYPE_EXPANSIONS), col)
 
 
 # ---------------------------------------------------------------------------

@@ -7,23 +7,17 @@ shapes, partitioning, the UDF signatures. The codec step:
 - ``decode_stub=True`` (default) runs a deterministic fake decoder over the
   raw bytes (no codec needed);
 - ``decode_stub=False`` REALLY decodes PNG (stdlib zlib/struct —
-  gray/RGB/gray+alpha/RGBA), GIF
-  (pure-Python LZW, r4), JPEG — baseline, progressive (SOF2 spectral
-  selection + successive approximation, r5), lossless (SOF3, r5), the
-  full arithmetic triad SOF9/10/11 (T.81 Annex E QM-coder + Annex G/H
-  models, r6), extended-sequential SOF1 (r6) AND hierarchical DHP
-  pyramids with SOF15 arithmetic or SOF7 huffman differentials (r6),
-  grayscale AND interleaved color, any sampling layout, full-RGB
-  output with nearest/bilinear chroma upsampling (pure Python + numpy
-  huffman/DCT, r4; chroma + progressive r5) — MJPEG-AVI video and WAV
-  (struct over RIFF) via functions/codecs.py; what remains behind
-  ``NotImplementedError`` for JPEG is parameter-space only — EVERY
-  T.81 frame type incl. all differentials decodes, 16-bit quant
-  tables parse, any component may be subsampled incl. luma, multi-scan
-  non-interleaved and Adobe CMYK/YCCK streams decode (r6). Video
-  covers MJPEG-AVI, uncompressed DIB, animated GIF and MS-RLE (r6);
-  what remains is modern compressed codecs (MSVC/Cinepak/H.26x/...) —
-  the exact seam where PIL / pyav plug in.
+  gray/RGB/palette/alpha), GIF (pure-Python LZW, r4), BMP, JPEG —
+  baseline/extended sequential and progressive huffman (SOF0/1/2,
+  8-bit; pure Python + numpy huffman/DCT, r4; chroma + progressive
+  r5), grayscale AND interleaved color, any sampling layout, full-RGB
+  output with nearest chroma upsampling — video (MJPEG-AVI,
+  uncompressed DIB AVI, animated GIF) and PCM/float WAV (struct over
+  RIFF) via functions/codecs.py. Every other JPEG frame type
+  (lossless, arithmetic, hierarchical, 12-bit, CMYK), compressed WAV
+  and compressed video codecs (MS-RLE/MSVC/Cinepak/H.26x/...) raise
+  ``NotImplementedError`` — the exact seam where PIL / pyav /
+  soundfile plug in.
 
 Scale notes: payloads never pass through Python row-at-a-time — each
 ``mapInPandas`` batch is one Arrow RecordBatch of binary blobs; cap batch
@@ -109,20 +103,16 @@ def extract_image_features(
                     raise NotImplementedError(
                         f"real image decoding for {fmt!r} requires an image "
                         "codec library; plug PIL/pyav in here (png, gif, "
-                        "bmp and baseline/progressive/lossless/arithmetic "
-                        "jpeg — grayscale or full-RGB color — decode "
-                        "natively via functions/codecs.py)")
+                        "bmp and baseline/progressive jpeg — grayscale or "
+                        "full-RGB color — decode natively via "
+                        "functions/codecs.py)")
                 from rlis2osm_spark.functions.codecs import (
                     decode_bmp, decode_gif, decode_jpeg, decode_png_ex)
 
                 if fmt == "jpeg":
-                    # every T.81 frame type decodes for real (r6):
-                    # baseline/extended/progressive/lossless huffman,
-                    # the arithmetic triad SOF9/10/11, and DHP pyramids
-                    # with all six differential frame types
-                    # (SOF5/6/7/13/14/15); color is full RGB (r5,
-                    # nearest chroma upsample); NotImplementedError
-                    # remains only for >4-component layouts
+                    # 8-bit sequential/progressive huffman, gray or
+                    # full-RGB color (r5, nearest chroma upsample); every
+                    # other frame type raises NotImplementedError
                     w, h, nch, px = decode_jpeg(b)
                 elif fmt == "png":
                     # gray/RGB/palette/alpha at depths 1-8, Adam7 (r5);
@@ -259,8 +249,8 @@ def extract_video_frames(
 
     def batches(frames_it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from rlis2osm_spark.functions.codecs import (
-            _avi_vids_palette, _compose_mrle_frames, decode_avi_frames,
-            decode_dib_frame, decode_gif_frames, decode_jpeg_gray)
+            decode_avi_frames, decode_dib_frame, decode_gif_frames,
+            decode_jpeg_gray)
 
         for pdf in frames_it:
             rows = []
@@ -274,18 +264,11 @@ def extract_video_frames(
                     codec = "gif"
                 else:
                     w, h, codec, frames = decode_avi_frames(b)
-                if codec == "mrle" and not decode_stub:
-                    # delta codec: frames composite onto a persistent
-                    # canvas, so decode the whole chain once (r6; the
-                    # container is already parsed — only the palette
-                    # needs a second, tiny header walk)
-                    frames = _compose_mrle_frames(
-                        w, h, frames, _avi_vids_palette(b))
                 for idx in range(0, len(frames), every_n):
                     if decode_stub:
                         rows.append((ref, len(frames), idx, w, h, None))
                         continue
-                    if codec in ("gif", "mrle"):
+                    if codec == "gif":
                         fw, fh, px = w, h, frames[idx]
                     elif codec == "dib":
                         fw, fh, _nch, px = decode_dib_frame(
@@ -345,8 +328,8 @@ def extract_audio_features(
                         raise NotImplementedError(
                             "real audio decoding for non-WAV payloads "
                             "requires a codec library; plug soundfile/"
-                            "torchaudio in here (16-bit PCM WAV decodes "
-                            "natively via functions/codecs.py)")
+                            "torchaudio in here (PCM and float32 WAV "
+                            "decode natively via functions/codecs.py)")
                     from rlis2osm_spark.functions.codecs import decode_wav
 
                     _, samples = decode_wav(b)

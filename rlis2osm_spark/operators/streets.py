@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from rlis2osm_spark.functions.expand import (
     expand_direction,
     expand_type,
+    literal_map,
     make_basename_udf,
     make_titlecase_udf,
 )
@@ -42,14 +43,6 @@ HIGHWAY_BY_TYPE = {
 }
 SERVICE_BY_TYPE = {1600: "alley", 1750: "driveway", 1850: "driveway"}
 SURFACE_BY_TYPE = {2000: "unpaved"}
-
-
-def _int_map(mapping: dict[int, str]) -> Column:
-    pairs: list[Column] = []
-    for k, v in mapping.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.lit(v))
-    return F.create_map(*pairs)
 
 
 def expand_street_names(df: DataFrame) -> DataFrame:
@@ -109,7 +102,7 @@ def translate_streets(df: DataFrame, strict: bool = True) -> DataFrame:
         )
     )
 
-    hw_lookup = F.element_at(_int_map(HIGHWAY_BY_TYPE), F.col("TYPE"))
+    hw_lookup = F.element_at(literal_map(HIGHWAY_BY_TYPE), F.col("TYPE"))
     if strict:
         # T2 is a closed domain: unknown TYPE must fail loudly
         # (plain dict access at translate.py:125 raises KeyError).
@@ -142,14 +135,16 @@ def translate_streets(df: DataFrame, strict: bool = True) -> DataFrame:
 
     out = df.withColumns(
         {
-            "access": F.element_at(_int_map(ACCESS_BY_TYPE), F.col("TYPE")),
+            "access": F.element_at(literal_map(ACCESS_BY_TYPE), F.col("TYPE")),
             "bridge": F.when(layer > 0, F.lit("yes")),
             "description": description,
             "highway": hw,
             "layer": layer.cast("int"),
             "name": titlecase_udf(name_after),  # None -> '' (main.py:90)
-            "service": F.element_at(_int_map(SERVICE_BY_TYPE), F.col("TYPE")),
-            "surface": F.element_at(_int_map(SURFACE_BY_TYPE), F.col("TYPE")),
+            "service": F.element_at(literal_map(SERVICE_BY_TYPE),
+                                    F.col("TYPE")),
+            "surface": F.element_at(literal_map(SURFACE_BY_TYPE),
+                                    F.col("TYPE")),
             "tunnel": F.when(layer < 0, F.lit("yes")),
         }
     ).drop("_name0", "_hw0")

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rlis2osm_spark.functions.expand import make_basename_udf
+from rlis2osm_spark.functions.expand import literal_map, make_basename_udf
 
 # simple value maps (translate.py:170-196)
 TRAIL_ACCESS_MAP = {"Restricted_Private": "private", "Unknown": "unknown"}
@@ -28,14 +28,6 @@ TRAIL_SURFACE_MAP = {
     # 'Unknown' maps to None (translate.py:189) == absent for tag purposes
 }
 TRAIL_WHEELCHAIR_MAP = {"Accessible": "yes", "Not Accessible": "no"}
-
-
-def _str_map(mapping: dict[str, str]) -> Column:
-    pairs: list[Column] = []
-    for k, v in mapping.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.lit(v))
-    return F.create_map(*pairs)
 
 
 def _truthy(col: Column) -> Column:
@@ -220,20 +212,21 @@ def translate_trails(df: DataFrame) -> DataFrame:
     return df.withColumns(
         {
             "abandoned:highway": abandoned,
-            "access": F.element_at(_str_map(TRAIL_ACCESS_MAP), status),
+            "access": F.element_at(literal_map(TRAIL_ACCESS_MAP), status),
             "alt_name": alt_name,
             "bicycle": bicycle,
             "construction": construction,
-            "fee": F.element_at(_str_map(TRAIL_FEE_MAP), status),
+            "fee": F.element_at(literal_map(TRAIL_FEE_MAP), status),
             "foot": foot,
             "highway": highway,
             "horse": horse,
             "name": name,
             "operator": operator,
             "proposed": proposed,
-            "surface": F.element_at(_str_map(TRAIL_SURFACE_MAP), F.col("TRLSURFACE")),
+            "surface": F.element_at(literal_map(TRAIL_SURFACE_MAP),
+                                    F.col("TRLSURFACE")),
             "wheelchair": F.element_at(
-                _str_map(TRAIL_WHEELCHAIR_MAP), F.col("ACCESSIBLE")
+                literal_map(TRAIL_WHEELCHAIR_MAP), F.col("ACCESSIBLE")
             ),
         }
     ).drop("_bike_desig", "_is_stairs", "_is_path_multi", "_hw0")

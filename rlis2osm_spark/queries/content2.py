@@ -315,18 +315,19 @@ def m1_media_features(spark, sf_dir):
     - ``bmp``: real BMPs cycling all four layouts (24-bit BGR / 8-bit
       palettized / BI_RLE8 / BI_BITFIELDS-32, r6) — every mode decodes
       to B=G=R replication, so px_sum = 3x the gray sum analytically;
-    - ``jpeg``: real baseline JPEGs (pure Python + numpy huffman + DCT)
-      built from even-valued constant 8x8 blocks — the DCT-exact
-      subclass — alternating grayscale (restart intervals) / 4:4:4 color
-      / 4:2:0 color; color modes carry 128+17k constant chroma and decode
-      to full RGB (r5), so DuckDB predicts the clamped JFIF-converted RGB
-      sum analytically;
-    - ``avi``: real MJPEG-in-AVI videos (RIFF container parse + per-frame
-      JPEG decode, every-2nd-frame sampling) -> one row per sampled frame
-      with the exact decoded luma sum;
-    - ``wav``: real RIFF/WAVE 16-bit PCM from doc_id-derived samples,
-      decoded by ``extract_audio_features(decode_stub=False)`` ->
-      n_samples/peak/abs_sum over TRUE decoded samples;
+    - ``jpeg``: real JPEGs (pure Python + numpy huffman + DCT) built
+      from even-valued constant 8x8 blocks — the DCT-exact subclass —
+      cycling baseline grayscale (restart intervals) / 4:4:4 color /
+      4:2:0 color / progressive grayscale; color modes carry 128+17k
+      constant chroma and decode to full RGB (r5), so DuckDB predicts
+      the clamped JFIF-converted RGB sum analytically;
+    - ``avi``: real videos cycling MJPEG-in-AVI, uncompressed-DIB AVI
+      and animated GIF (container parse + per-frame decode,
+      every-2nd-frame sampling) -> one row per sampled frame with the
+      exact decoded pixel sum;
+    - ``wav``: real RIFF/WAVE 16-bit and 24-bit PCM from doc_id-derived
+      samples, decoded by ``extract_audio_features(decode_stub=False)``
+      -> n_samples/peak/abs_sum over TRUE decoded samples;
     - ``stub``: the codec-free fake-decode plumbing (pure function of
       payload length) over raw text bytes.
 
@@ -482,7 +483,7 @@ def _m1_payload_frames(spark, sf_dir):
         import numpy as np
 
         from rlis2osm_spark.functions.codecs import (
-            encode_jpeg_color, encode_jpeg_gray)
+            encode_jpeg_color, encode_jpeg_gray, encode_jpeg_progressive)
 
         out = []
         for d in doc_ids:
@@ -502,83 +503,18 @@ def _m1_payload_frames(spark, sf_dir):
             # (r5) encodes the same DCT-exact blocks with the SOF2
             # spectral-selection + successive-approximation script, so its
             # oracle is the plain luma sum — proving the progressive
-            # decoder end-to-end in the driver gate. Mode 4 (r5) is
-            # LOSSLESS (SOF3) — exact on any image by construction, same
-            # luma-sum oracle. Mode 5 (r6) is sequential ARITHMETIC (SOF9,
-            # T.81 Annex E QM-coder), mode 6 (r6) PROGRESSIVE ARITHMETIC
-            # (SOF10, Annex G scans) — both share mode 0's DCT/quant
-            # chain — mode 7 (r6) LOSSLESS ARITHMETIC (SOF11, Annex H
-            # contexts; exact like SOF3), and mode 8 (r6) HIERARCHICAL
-            # (DHP pyramid: SOF9 base + EXP + SOF15 lossless-differential
-            # refinement = exact overall). Mode 9 (r6) is EXTENDED
-            # SEQUENTIAL (SOF1 — mode 0's DCT chain under the extended
-            # SOF marker), mode 10 (r6) the HUFFMAN pyramid (SOF0 base +
-            # SOF7 lossless-huffman differential with restart intervals
-            # in the differential scan = exact overall). The same
-            # luma-sum oracle proves every decoder in the driver gate.
-            # (doc_ids here are multiples of 4, so the mode selector is
-            # d//4.)
-            mode = (d // 4) % 11
+            # decoder end-to-end in the oracle gate. (doc_ids here are
+            # multiples of 4, so the mode selector is d//4.)
+            mode = (d // 4) % 4
             if mode == 0:
-                # restart interval varied via d//4 (doc_ids are
-                # multiples of 4; d % 4 would always be 0)
+                # every mode-0 doc has d//4 % 4 == 0, so the restart
+                # interval varies with d//16 to keep the DRI/RSTn path
+                # in the gate
                 blob = encode_jpeg_gray(bw * 8, bh * 8, img.tobytes(),
-                                        restart_every=(d // 4) % 4)
-            elif mode == 5:
-                from rlis2osm_spark.functions.codecs import (
-                    encode_jpeg_arith_gray)
-
-                # doc_ids are multiples of 4, so vary the restart
-                # interval via d//4 (d % 4 would always be 0 and the
-                # gate would never exercise the QM restart path)
-                blob = encode_jpeg_arith_gray(bw * 8, bh * 8, img.tobytes(),
-                                              restart_every=(d // 4) % 4)
-            elif mode == 6:
-                from rlis2osm_spark.functions.codecs import (
-                    encode_jpeg_arith_progressive)
-
-                blob = encode_jpeg_arith_progressive(bw * 8, bh * 8,
-                                                     img.tobytes())
-            elif mode == 7:
-                from rlis2osm_spark.functions.codecs import (
-                    encode_jpeg_arith_lossless)
-
-                blob = encode_jpeg_arith_lossless(bw * 8, bh * 8,
-                                                  img.tobytes(),
-                                                  predictor=1 + d % 7)
-            elif mode == 8:
-                from rlis2osm_spark.functions.codecs import (
-                    encode_jpeg_hierarchical)
-
-                blob = encode_jpeg_hierarchical(bw * 8, bh * 8,
-                                                img.tobytes())
-            elif mode == 9:
-                from rlis2osm_spark.functions.codecs import (
-                    encode_jpeg_ext_gray)
-
-                blob = encode_jpeg_ext_gray(bw * 8, bh * 8, img.tobytes(),
-                                            precision=8,
-                                            restart_every=(d // 4) % 4)
-            elif mode == 10:
-                from rlis2osm_spark.functions.codecs import (
-                    encode_jpeg_hierarchical)
-
-                blob = encode_jpeg_hierarchical(bw * 8, bh * 8,
-                                                img.tobytes(),
-                                                entropy="huffman",
-                                                restart_every=(d // 4) % 4)
+                                        restart_every=(d // 16) % 4)
             elif mode == 3:
-                from rlis2osm_spark.functions.codecs import (
-                    encode_jpeg_progressive)
-
                 blob = encode_jpeg_progressive(bw * 8, bh * 8,
                                                img.tobytes())
-            elif mode == 4:
-                from rlis2osm_spark.functions.codecs import (
-                    encode_jpeg_lossless)
-
-                blob = encode_jpeg_lossless(bw * 8, bh * 8, img.tobytes(),
-                                            predictor=1 + d % 7)
             else:
                 cb = 128 + 17 * (d % 5 - 2)
                 cr = 128 + 17 * ((d // 5) % 5 - 2)
@@ -604,13 +540,11 @@ def _m1_payload_frames(spark, sf_dir):
         for d in doc_ids:
             d = int(d)
             n = 2 + d % 3
-            # alternate MJPEG-AVI / uncompressed-DIB AVI / ANIMATED GIF /
-            # MS-RLE AVI (r6) — the GIF frames are full-canvas draws
-            # (disposal=keep), so the composited canvas after frame f IS
-            # frame f and the decoded sums share the MJPEG oracle (r5);
-            # MRLE paints full frames through the identity-gray palette,
-            # so its decoded RGB sum is exactly 3x the luma sum like DIB
-            mode = (d // 4) % 4
+            # alternate MJPEG-AVI / uncompressed-DIB AVI / ANIMATED GIF —
+            # the GIF frames are full-canvas draws (disposal=keep), so the
+            # composited canvas after frame f IS frame f and the decoded
+            # sums share the MJPEG oracle (r5)
+            mode = (d // 4) % 3
             frames = []
             for f in range(n):
                 img = np.zeros((8, 16), dtype=np.uint8)
@@ -624,11 +558,6 @@ def _m1_payload_frames(spark, sf_dir):
                 blob = encode_avi_mjpeg(frames, 16, 8)
             elif mode == 1:
                 blob = encode_avi_raw(frames, 16, 8)
-            elif mode == 3:
-                from rlis2osm_spark.functions.codecs import (
-                    encode_avi_mrle)
-
-                blob = encode_avi_mrle(frames, 16, 8)
             else:
                 blob = encode_gif_anim(16, 8, [
                     dict(left=0, top=0, width=16, height=8, pixels=p,
@@ -640,56 +569,20 @@ def _m1_payload_frames(spark, sf_dir):
     @F.pandas_udf(BinaryType())
     def wav_payload(doc_ids: pd.Series) -> pd.Series:
         from rlis2osm_spark.functions.codecs import (
-            encode_wav, encode_wav_g711, encode_wav_ima_adpcm,
-            encode_wav_pcm24)
+            encode_wav, encode_wav_pcm24)
 
         out = []
         for d in doc_ids:
             d = int(d)
             n = 32 + d % 32
-            # cycle six WAV codecs (r6), each with analytically exact
-            # decode so the plain-sum DuckDB oracle proves the decoder:
-            # G.711 samples are generated AT representable companded
-            # levels (mu-law |v| = ((8m+132)<<e)-132, A-law |v| =
-            # (16m+8 | (16m+264)<<(e-1))) so nearest-level encode is
-            # the identity; the IMA/MS ADPCM signals are constant, which
-            # both nibble algebras reproduce exactly (IMA: n=0 -> diff =
-            # 7>>3 = 0 at step index 0; MS: predictor 0 has c1=256 so
-            # pred == prev sample); 24-bit PCM is exact by construction.
-            mode = d % 6
-            if mode == 0:
+            # alternate 16-bit and 24-bit PCM, both exact by construction
+            if d % 2 == 0:
                 blob = encode_wav(
                     [((d * 7 + t * 13) % 2048) - 1024 for t in range(n)])
-            elif mode == 1:
-                s = []
-                for t in range(n):
-                    m = (d * 5 + t * 3) % 16
-                    e = (d + t * 7) % 8
-                    v = ((8 * m + 132) << e) - 132
-                    s.append(v if (d + t) % 2 == 0 else -v)
-                blob = encode_wav_g711(s, law="mulaw")
-            elif mode == 2:
-                s = []
-                for t in range(n):
-                    m = (d * 3 + t * 5) % 16
-                    e = (d + t * 11) % 8
-                    v = ((m << 4) + 8 if e == 0
-                         else ((m << 4) + 264) << (e - 1))
-                    s.append(v if (d + t) % 2 == 0 else -v)
-                blob = encode_wav_g711(s, law="alaw")
-            elif mode == 3:
+            else:
                 blob = encode_wav_pcm24(
                     [((d * 11 + t * 17) % (1 << 24)) - (1 << 23)
                      for t in range(n)])
-            elif mode == 4:
-                c = ((d * 13) % 4000) - 2000
-                blob = encode_wav_ima_adpcm([c] * n, samples_per_block=9)
-            else:
-                from rlis2osm_spark.functions.codecs import (
-                    encode_wav_ms_adpcm)
-
-                c = ((d * 17) % 5000) - 2500
-                blob = encode_wav_ms_adpcm([c] * n, samples_per_block=10)
             out.append(blob)
         return pd.Series(out, dtype=object)
 
@@ -765,24 +658,14 @@ bmp_leg AS (
 ),
 jpg AS (
   SELECT doc_id, 1 + doc_id % 3 AS bw, 1 + (doc_id // 3) % 3 AS bh,
-         (doc_id // 4) % 11 AS mode,
+         (doc_id // 4) % 4 AS mode,
          CAST(17 * (doc_id % 5 - 2) AS DOUBLE) AS cbv,
          CAST(17 * ((doc_id // 5) % 5 - 2) AS DOUBLE) AS crv
   FROM documents WHERE doc_id % 4 = 0
 ),
 -- mode 0: baseline grayscale; mode 3: PROGRESSIVE grayscale (SOF2,
 -- spectral selection + successive approximation — same DCT-exact
--- quantized coefficients, so same luma sum); mode 4: LOSSLESS (SOF3
--- predictive, exact on any image); mode 5: sequential ARITHMETIC
--- grayscale (SOF9 QM-coder, r6); mode 6: PROGRESSIVE ARITHMETIC
--- grayscale (SOF10 Annex G scans, r6) — 5 and 6 share mode 0's
--- DCT/quant chain; mode 7: LOSSLESS ARITHMETIC (SOF11 Annex H, r6,
--- exact like mode 4); mode 8: HIERARCHICAL (DHP + SOF9 base + SOF15
--- lossless differential, r6 — exact overall); mode 9: EXTENDED
--- SEQUENTIAL (SOF1, r6 — mode 0's DCT chain); mode 10: HUFFMAN
--- pyramid (SOF0 base + SOF7 lossless-huffman differential, r6 — exact
--- overall) — so the same luma sum.
--- modes 1/2 (4:4:4 / 4:2:0
+-- quantized coefficients, so same luma sum). modes 1/2 (4:4:4 / 4:2:0
 -- color): v = RGB sum — per-block constant Y plus per-image constant
 -- chroma (128 + 17k round-trips the chroma DC quant exactly), JFIF
 -- conversion with floor(x+0.5) and [0,255] clamp, matching
@@ -791,7 +674,7 @@ jpg AS (
 jpeg_leg AS (
   SELECT 'jpeg' AS kind, 'doc:' || doc_id AS media_ref,
          CAST(bw * 8 AS INT) AS d1, CAST(bh * 8 AS INT) AS d2,
-         CAST(CASE WHEN mode IN (0, 3, 4, 5, 6, 7, 8, 9, 10) THEN
+         CAST(CASE WHEN mode IN (0, 3) THEN
            64 * list_aggregate(list_transform(
                 generate_series(0, bw * bh - 1),
                 k -> 2 * ((doc_id * 13 + k * 29) % 128)), 'sum')
@@ -813,15 +696,14 @@ jpeg_leg AS (
 avi AS (
   SELECT doc_id, 2 + doc_id % 3 AS nf FROM documents WHERE doc_id % 4 = 0
 ),
--- (doc_id//4)%4 picks the container codec: MJPEG-AVI (luma sum),
--- uncompressed DIB AVI (B=G=R replication -> exactly 3x the luma sum),
--- ANIMATED GIF (full-canvas keep-disposal frames -> composited canvas
--- f == frame f -> same luma sum as MJPEG), or MS-RLE AVI (r6:
--- identity-gray palette -> RGB = 3x the index sum like DIB)
+-- (doc_id//4)%3 picks the container codec: MJPEG-AVI (luma sum),
+-- uncompressed DIB AVI (B=G=R replication -> exactly 3x the luma sum)
+-- or ANIMATED GIF (full-canvas keep-disposal frames -> composited canvas
+-- f == frame f -> same luma sum as MJPEG)
 avi_leg AS (
   SELECT 'avi' AS kind, 'doc:' || doc_id AS media_ref,
          CAST(f AS INT) AS d1, CAST(nf AS INT) AS d2,
-         CAST((CASE WHEN (doc_id // 4) % 4 IN (1, 3) THEN 3 ELSE 1 END)
+         CAST((CASE WHEN (doc_id // 4) % 3 = 1 THEN 3 ELSE 1 END)
               * 64 * (2 * ((doc_id * 11 + f * 17) % 128)
                       + 2 * ((doc_id * 11 + f * 17 + 23) % 128))
               AS BIGINT) AS v
@@ -829,26 +711,15 @@ avi_leg AS (
         FROM avi)
 ),
 wav AS (
-  SELECT doc_id, 32 + doc_id % 32 AS n, doc_id % 6 AS mode FROM documents
+  SELECT doc_id, 32 + doc_id % 32 AS n, doc_id % 2 AS mode FROM documents
 ),
--- doc_id%6 cycles the codec: 0 PCM16, 1 mu-law, 2 A-law, 3 24-bit PCM,
--- 4 IMA ADPCM, 5 MS-ADPCM (r6). G.711 samples are generated AT
--- representable companded levels and both ADPCM signals are constant,
--- so every decode is exact and |sample| is the closed form below.
+-- doc_id%2 picks 16-bit (0) or 24-bit (1) PCM; both decode exactly
 wav_abs AS (
   SELECT doc_id, n, mode,
          list_transform(generate_series(0, n - 1), t ->
            CASE mode
              WHEN 0 THEN ABS(((doc_id * 7 + t * 13) % 2048) - 1024)
-             WHEN 1 THEN (8 * ((doc_id * 5 + t * 3) % 16) + 132)
-                         * (1 << ((doc_id + t * 7) % 8)) - 132
-             WHEN 2 THEN CASE WHEN (doc_id + t * 11) % 8 = 0
-                  THEN ((doc_id * 3 + t * 5) % 16) * 16 + 8
-                  ELSE (((doc_id * 3 + t * 5) % 16) * 16 + 264)
-                       * (1 << (((doc_id + t * 11) % 8) - 1)) END
-             WHEN 3 THEN ABS(((doc_id * 11 + t * 17) % 16777216) - 8388608)
-             WHEN 4 THEN ABS(((doc_id * 13) % 4000) - 2000)
-             ELSE ABS(((doc_id * 17) % 5000) - 2500)
+             ELSE ABS(((doc_id * 11 + t * 17) % 16777216) - 8388608)
            END) AS avals
   FROM wav
 ),

@@ -1,6 +1,5 @@
 """Event-stream operators in batch form (tumbling window agg,
-sessionization). The same logic runs under Structured Streaming in
-streaming/stream_ops.py; here the batch equivalents carry exact oracles.
+sessionization, as-of enrichment), each with an exact oracle.
 """
 
 from __future__ import annotations
@@ -127,7 +126,7 @@ ORACLES = {
 def w5_session_window(spark, sf_dir):
     """Catalyst's native session_window in batch mode — must reproduce the
     w2 gaps-and-islands sessionization session-by-session (strict-gap
-    boundary). The streaming twin is streaming/stream_ops.session_windows."""
+    boundary)."""
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")

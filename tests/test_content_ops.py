@@ -155,15 +155,19 @@ def test_real_resize_decodes_resamples_reencodes(spark):
     import numpy as np
 
     from rlis2osm_spark.functions.codecs import (
-        decode_png_ex, encode_jpeg_lossless, encode_png)
+        decode_png_ex, encode_jpeg_gray, encode_png)
 
     rng = np.random.default_rng(23)
     gray = rng.integers(0, 256, (16, 16), dtype=np.uint8)
     rgb = rng.integers(0, 256, (8, 12, 3), dtype=np.uint8)
+    # even constant 8x8 blocks: the DCT-exact subclass baseline JPEG
+    # reproduces bit-for-bit
+    blocks = np.kron(rng.integers(0, 128, (2, 2)) * 2,
+                     np.ones((8, 8), int)).astype(np.uint8)
     rows = [
         ("g", encode_png(16, 16, gray.tobytes())),
         ("c", encode_png(12, 8, rgb.tobytes(), channels=3)),
-        ("j", encode_jpeg_lossless(16, 16, gray.tobytes())),
+        ("j", encode_jpeg_gray(16, 16, blocks.tobytes())),
     ]
     media = spark.createDataFrame(rows, "media_ref string, payload binary")
     out = {r.media_ref: bytes(r.payload) for r in multimodal.resize_stub(
@@ -182,10 +186,10 @@ def test_real_resize_decodes_resamples_reencodes(spark):
     assert (w, h, nch) == (4, 4, 3)
     assert np.array_equal(np.frombuffer(px, np.uint8).reshape(4, 4, 3),
                           nearest(rgb, 4, 4))
-    # lossless JPEG input resizes identically to its PNG twin
+    # exactly-decoded JPEG input resizes like its source pixels
     w, h, nch, px = decode_png_ex(out["j"])
     assert np.array_equal(np.frombuffer(px, np.uint8).reshape(4, 4),
-                          nearest(gray, 4, 4))
+                          nearest(blocks, 4, 4))
 
     frames = multimodal.frame_sample_refs(
         media.filter("payload is not null"), every_n=16).collect()

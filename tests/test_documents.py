@@ -204,6 +204,26 @@ def test_checkpoint_chained_stage_fingerprint(spark, tmp_path):
     assert len(calls) == 2  # upstream digest changed -> downstream rebuilt
 
 
+def test_checkpoint_partial_write_not_served(spark, tmp_path):
+    """A data directory without a committed manifest (crash mid-write) must
+    be rebuilt, never served."""
+    import os
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(9)
+
+    ck = Checkpointer(spark, str(tmp_path), "crash")
+    ck.stage("s", build)
+    assert len(calls) == 1
+    # simulate a crash: data present, manifest gone
+    os.remove(tmp_path / "crash" / "s" / "_manifest.json")
+    out = Checkpointer(spark, str(tmp_path), "crash").stage("s", build)
+    assert len(calls) == 2 and out.count() == 9
+
+
 def test_doc_probe_fold_detects_corruption(spark, synth_dir):
     """Negative control for the scaling probe's map-side fold verifier
     (VERDICT r3 #1): any post-exchange span corruption — content edit,
