@@ -4,6 +4,14 @@ Test/bench runs are single-JVM ``local[N]``; the configs below are the ones
 that matter identically on a 1000-executor cluster: AQE (runtime re-plan +
 skew-join splitting), Arrow for every pandas UDF exchange, explicit shuffle
 parallelism, and broadcast threshold tuned so dimension tables broadcast.
+
+PySpark's DataFrame call-site capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``): with it on, every
+``F.*`` and Column call walks the Python stack and makes about five extra
+py4j round trips, which doubles the cost of building the wide
+tag-translation plans. The trade-off: an analysis or runtime error still
+carries Spark's SQL context (the failing expression and plan fragment) but
+no longer the Python ``file:line`` of the call that built it.
 """
 
 from __future__ import annotations
@@ -52,6 +60,29 @@ def build_session(
         # t13_t20_trails measured 2.9s -> 0.58s at sf0.1 from this alone
         # (r4). Identical reasoning applies on a real cluster.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
+        # Spark caches generated classes in one JVM-wide cache of 100
+        # entries by default, split into 4 LRU segments; an entry is keyed
+        # by source text and class loader, so in local mode a whole-stage
+        # class is cached once for the driver and once for the executor.
+        # The engine's working set is far larger: 271 entries for the 17
+        # headline queries, about 590 for all 50 queries, 85 for the
+        # pipeline. At 100, every warm query_suite pass recompiled ~310
+        # classes with Janino (which the JIT then compiled again) and
+        # every warm pipeline repetition 20-27. 2048 is about 3x the
+        # largest single-session set (50 queries + pipeline, ~680), with
+        # room for uneven segments. Static conf: it takes effect with the
+        # first session in the JVM; the same reasoning holds for executors
+        # on a real cluster.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # Whole-stage classes are by default named after their codegen
+        # stage id. Under AQE that id follows the order in which query
+        # stages get planned, which races with shuffle-stage completion,
+        # so a repeated query could renumber its pipelines and miss the
+        # cache (q04_semi_anti_join, s8_proximity_joins: 4 classes on some
+        # second runs). With one fixed name, identical pipelines share one
+        # entry; explain output still shows the stage ids.
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
