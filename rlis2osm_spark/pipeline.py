@@ -4,18 +4,21 @@
    + tile assignment over the interleaved document table (documents joined
    to media geometry, one Arrow pass for coordinates, native Morton cells),
    preserving the span-sequence invariant.
-2. ``rlis_osm_pipeline`` — the full reference-parity job (EP1 stages 3-5):
-   combine -> dissolve -> tile, each stage a resumable snapshot.
+2. ``convert`` — the RLIS -> OSM conversion (reference EP1 stages 3-6):
+   combine -> snapshot -> dissolve + tag repair -> snapshot -> OSM sink.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rlis2osm_spark.operators.combine import combine, repair_and_filter_tags
 from rlis2osm_spark.operators.dissolve import dissolve_ways
-from rlis2osm_spark.plans.checkpoint import Checkpointer
+from rlis2osm_spark.operators.osm_sink import merge_fragments, write_osm_xml
+from rlis2osm_spark.plans.checkpoint import Checkpointer, source_token
 from rlis2osm_spark.sources.documents import attach_geometry, span_signature
 from rlis2osm_spark.spatial.tiles import TileGrid, parent_cell, with_tile
 
@@ -47,44 +50,57 @@ def tile_rollup(tiled: DataFrame, levels: int = 2) -> DataFrame:
     )
 
 
-def tile_rollup_salted(tiled: DataFrame, n_salts: int = 8) -> DataFrame:
-    """Skew-proof variant of tile_rollup: explicit salted keys + two-phase
-    aggregation (north-rule contract — downtown cells are orders of
-    magnitude hotter than rural ones; AQE helps, but the salt makes the
-    mitigation visible and deterministic).
-
-    Phase 1 shuffles on (cell, salt) — a hot cell spreads over n_salts
-    reducers; phase 2 merges the n_salts partials per cell (tiny)."""
-    salted = tiled.withColumn(
-        "salt", F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)))
-    phase1 = salted.groupBy("cell", "salt").agg(
-        F.count("*").alias("n_partial"))
-    return (
-        phase1.groupBy("cell")
-        .agg(F.sum("n_partial").alias("n_docs"))
-        .withColumn("parent_cell", parent_cell(F.col("cell"), 2))
-    )
+# modules whose code produces each snapshot: editing one rebuilds the stage
+_COMBINED_CODE = ("rlis2osm_spark.operators.combine",
+                  "rlis2osm_spark.operators.streets",
+                  "rlis2osm_spark.operators.trails",
+                  "rlis2osm_spark.operators.bike",
+                  "rlis2osm_spark.functions.expand",
+                  "rlis2osm_spark.functions.titlecase_port",
+                  "rlis2osm_spark.functions.wkb",
+                  "rlis2osm_spark.schemas")
+_DISSOLVED_CODE = ("rlis2osm_spark.operators.dissolve",
+                   "rlis2osm_spark.operators.cc_iterative",
+                   "rlis2osm_spark.operators.combine",
+                   "rlis2osm_spark.functions.wkb",
+                   "rlis2osm_spark.schemas")
 
 
-def rlis_osm_pipeline(
-    spark: SparkSession,
-    data_dir: str,
-    ckpt_root: str | None = None,
-    run_id: str = "rlis",
-) -> DataFrame:
-    """combine -> dissolve -> tags, optionally checkpointed per stage."""
-    streets = spark.read.parquet(f"{data_dir}/streets.parquet")
-    trails = spark.read.parquet(f"{data_dir}/trails.parquet")
-    bikes = spark.read.parquet(f"{data_dir}/bike_routes.parquet")
+def convert(spark: SparkSession, data_dir: str, out_dir: str,
+            run_id: str = "rlis", merged: str | None = None):
+    """The RLIS -> OSM conversion, every stage a resumable snapshot under
+    ``<out_dir>/<run_id>``.
 
-    if ckpt_root is None:
-        combined = combine(streets, trails, bikes)
-        dissolved = dissolve_ways(combined)
-        return repair_and_filter_tags(dissolved)
+    Reads ``streets``, ``trails`` and ``bike_routes`` parquet from
+    ``data_dir``, stages ``combined`` (gated on the three input paths),
+    dissolves with a total output order and repairs tags, stages
+    ``dissolved``, and writes the WGS84 ``.osm`` fragments to
+    ``<out_dir>/<run_id>/osm``. Both stages also gate on the source of
+    their producing modules, so a rewritten input or an edited operator
+    rebuilds instead of resuming. ``merged=<path>`` also merges the
+    fragments into the single ``rlis.osm`` (reference main.py:248-257).
 
-    ck = Checkpointer(spark, ckpt_root, run_id)
+    Returns ``(dissolved, sink, lineage)``: the dissolved frame, the sink
+    result — ``fragments`` (per-fragment stats rows), ``n_ways`` and
+    ``n_null_geoms``, plus ``merge_fragments``' fields when merged — and
+    the checkpoint lineage (``Checkpointer.report()``)."""
+    inputs = [os.path.join(data_dir, f"{n}.parquet")
+              for n in ("streets", "trails", "bike_routes")]
+    streets, trails, bikes = (spark.read.parquet(p) for p in inputs)
+    ck = Checkpointer(spark, out_dir, run_id)
     combined = ck.stage("combined", lambda: combine(streets, trails, bikes),
-                        inputs=["streets", "trails", "bike_routes"])
-    dissolved = ck.stage("dissolved", lambda: dissolve_ways(combined),
-                         inputs=["combined"])
-    return repair_and_filter_tags(dissolved)
+                        inputs=inputs,
+                        code_token=source_token(*_COMBINED_CODE))
+    dissolved = ck.stage(
+        "dissolved",
+        lambda: repair_and_filter_tags(dissolve_ways(combined, ordered=True)),
+        inputs=["combined"], code_token=source_token(*_DISSOLVED_CODE))
+    osm_dir = os.path.join(ck.root, "osm")
+    rows = write_osm_xml(dissolved, osm_dir).collect()
+    sink = {"fragments": rows,
+            "n_ways": sum(r.n_ways for r in rows),
+            "n_null_geoms": sum(r.n_null_geoms for r in rows)}
+    if merged is not None:
+        sink.update(merge_fragments(osm_dir, merged,
+                                    expect_fragments=len(rows)))
+    return dissolved, sink, ck.report()

@@ -4,9 +4,9 @@ This sandbox has no Iceberg runtime jars, so snapshots, manifests and
 bucket transforms are stood in by parquet directories + JSON manifests +
 Spark ``bucketBy`` managed tables. Every stand-in lives HERE, behind a
 function whose docstring spells out the Iceberg call it maps to
-(VERDICT r3 #7) — ``plans/checkpoint.py`` and ``plans/bucketing.py``
-consume only this module, so porting to a cluster with an Iceberg catalog
-means reimplementing these ~8 functions and nothing else:
+(VERDICT r3 #7) — ``plans/checkpoint.py`` consumes only this module, so
+porting to a cluster with an Iceberg catalog means reimplementing these ~8
+functions and nothing else:
 
 ==========================  ==================================================
 local stand-in              Iceberg call on a real cluster

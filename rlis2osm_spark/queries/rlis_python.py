@@ -192,7 +192,7 @@ def rlis_dissolve_cc(spark, sf_dir):
     # the translated frame is a CHECKPOINTED stage (r4): dissolve consumes
     # its input three times (endpoint index, group keys, merge join), and
     # in the production pipeline that input is a materialized snapshot
-    # (rlis_osm_pipeline checkpoints combine before dissolve) — without it
+    # (pipeline.convert checkpoints combine before dissolve) — without it
     # the expand/translate pandas-UDF chain recomputes per consumer
     osm = cached_stage(
         spark, sf_dir, "dissolve_input",

@@ -88,7 +88,7 @@ def cached_stage(spark: SparkSession, sf_dir: str, name: str, build,
     """Checkpointed-and-memoized derived input (the production shape: a
     pipeline stage materializes once per corpus snapshot and downstream
     operators consume the snapshot, not the recomputed lineage — exactly
-    what plans/checkpoint.py does in rlis_osm_pipeline). First call per
+    what plans/checkpoint.py does in pipeline.convert). First call per
     (session, sf_dir, name) builds/validates the parquet stage
     (input-fingerprinted); later calls reuse the eagerly localCheckpointed
     frame. Entries bound to dead SparkContexts are evicted.

@@ -1,16 +1,11 @@
-"""Catalog / path resolution (SURVEY §2.1 S4): the Spark-side descendant of
-the reference's ``RlisPaths`` (/root/reference/rlis2osm/data.py:21-106) —
-table-name -> location resolution with derived-artifact paths, no network
-(S3's HTTP download has no cluster analogue: object storage is read
-directly; in-sandbox the datagen module synthesizes inputs).
+"""Source-text decoding at scan time: the reference reads every .dbf
+attribute as cp1252 (main.py:20,70); ``decode_text_columns`` repairs the
+same bytes natively over a parquet scan.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType
 
@@ -65,49 +60,3 @@ def decode_text_columns(df: DataFrame, encoding: str = "cp1252",
         else:
             out.append(F.col(f"`{f_.name}`"))
     return df.select(*out)
-
-RLIS_TABLES = ("streets", "trails", "bike_routes")
-DERIVED_TABLES = ("combined", "dissolved", "documents_rlis", "media")
-ORACLE_TABLES = ("region", "nation", "customer", "supplier", "part",
-                 "orders", "lineitem", "events", "documents", "embeddings")
-
-
-@dataclass
-class Catalog:
-    """Resolves logical table names to parquet locations (locally) — the
-    same surface maps to Iceberg identifiers on a cluster."""
-
-    data_dir: str
-    derived_dir: str | None = None
-    overrides: dict = field(default_factory=dict)
-
-    def path(self, table: str) -> str:
-        if table in self.overrides:
-            return self.overrides[table]
-        root = self.data_dir
-        if table in DERIVED_TABLES and self.derived_dir:
-            root = self.derived_dir
-        return os.path.join(root, f"{table}.parquet")
-
-    def exists(self, table: str) -> bool:
-        return os.path.exists(self.path(table))
-
-    def load(self, spark: SparkSession, table: str,
-             encoding: str | None = None,
-             encoding_columns: list[str] | None = None) -> DataFrame:
-        """``encoding='cp1252'`` repairs source text at scan (the
-        reference's .dbf decode step); see ``decode_text_columns``."""
-        p = self.path(table)
-        if not os.path.exists(p):
-            raise FileNotFoundError(
-                f'table "{table}" not found at "{p}" '
-                "(reference parity: RlisPaths raises on missing inputs)")
-        df = spark.read.parquet(p)
-        if encoding:
-            df = decode_text_columns(df, encoding, encoding_columns)
-        return df
-
-    def save(self, df: DataFrame, table: str, mode: str = "overwrite") -> str:
-        p = self.path(table)
-        df.write.mode(mode).parquet(p)
-        return p

@@ -19,9 +19,10 @@ batched); everything downstream of (x, y) is native.
 At 100 TB: ``cell`` is the partition/bucket column (Iceberg
 ``bucket(N, cell)`` or directory partitioning on a cell prefix), so spatial
 predicates become partition pruning, and cell-keyed joins co-locate without
-a second shuffle. Downtown-vs-rural skew is handled by salting the hot cells
-(``pipeline.tile_rollup_salted``) — explicit, per the north rule, with AQE
-skew-join as the backstop.
+a second shuffle. Downtown-vs-rural skew: cell-keyed aggregations absorb it
+in their map-side partial aggregation, and candidate joins salt the hot
+cells explicitly (``joins.knn_join(n_salts=)``), with AQE skew-join as the
+backstop.
 """
 
 from __future__ import annotations

@@ -1,12 +1,15 @@
 #!/usr/bin/env python
-"""spark-submit entry point for the full pipeline (north-rule launch shape).
+"""spark-submit entry point for the full pipeline (north-rule launch shape):
+``pipeline.convert`` (combine -> dissolve -> OSM fragments under
+``<out>/<run-id>/osm``) plus the document tile assignment and rollup, every
+stage a snapshot that a rerun resumes.
 
 Cluster:
     python -c "from rlis2osm_spark.driver_support import ensure_package_on_workers"  # builds .cache zip
     spark-submit --py-files .cache/rlis2osm_spark_pyfiles.zip \
-        scripts/run_pipeline.py --data-dir <dir> --out <dir> [--resume]
+        scripts/run_pipeline.py --data-dir <dir> --out <dir> [--no-resume] [--osm <path>]
 
-Local (this sandbox):
+Local:
     python scripts/run_pipeline.py --data-dir .synth/verify_demo --out /tmp/out
 """
 
@@ -29,8 +32,9 @@ def main() -> int:
     ap.add_argument("--no-resume", action="store_true",
                     help="invalidate existing snapshots first")
     ap.add_argument("--osm", default=None, metavar="PATH",
-                    help="also write the single merged OSM XML artifact "
-                         "(reference main.py:248-257 emits one rlis.osm)")
+                    help="also merge the OSM fragments into this single "
+                         "artifact (reference main.py:248-257 emits one "
+                         "rlis.osm)")
     # reference CLI parity (main.py:171-206): -r refresh + -q/-v log control
     ap.add_argument("-r", "--refresh", action="store_true",
                     help="regenerate source data, overwriting existing files,"
@@ -46,8 +50,7 @@ def main() -> int:
 
     from rlis2osm_spark.datagen import ensure_dataset
     from rlis2osm_spark.driver_support import ensure_package_on_workers
-    from rlis2osm_spark.pipeline import (
-        rlis_osm_pipeline, tile_assignment, tile_rollup)
+    from rlis2osm_spark.pipeline import convert, tile_assignment, tile_rollup
     from rlis2osm_spark.plans.checkpoint import Checkpointer
     from rlis2osm_spark.session import build_session
 
@@ -63,35 +66,27 @@ def main() -> int:
         for stage in ("combined", "dissolved", "tiled"):
             ck.invalidate(stage)
 
-    dissolved = rlis_osm_pipeline(spark, args.data_dir,
-                                  ckpt_root=args.out, run_id=args.run_id)
+    dissolved, sink, lineage = convert(spark, args.data_dir, args.out,
+                                       run_id=args.run_id, merged=args.osm)
 
-    docs = spark.read.parquet(f"{args.data_dir}/documents_rlis.parquet")
-    media = spark.read.parquet(f"{args.data_dir}/media.parquet")
+    doc_paths = [os.path.join(args.data_dir, f"{n}.parquet")
+                 for n in ("documents_rlis", "media")]
+    docs, media = (spark.read.parquet(p) for p in doc_paths)
     tiled = ck.stage(
         "tiled",
         lambda: tile_assignment(docs, media, res=args.res).drop("spans"),
-        inputs=["documents_rlis", "media"],
+        inputs=doc_paths,
     )
     rollup = tile_rollup(tiled)
-
-    osm_info = None
-    if args.osm:
-        from rlis2osm_spark import api
-
-        # dissolved already carries the assembled tags map (pipeline.py)
-        osm_info = api.to_osm_xml(
-            dissolved, os.path.join(args.out, args.run_id, "osm_fragments"),
-            merged=args.osm, assemble_tags=False)
 
     summary = {
         "dissolved_ways": dissolved.count(),
         "tiled_docs": tiled.count(),
         "cells": rollup.count(),
-        "osm": osm_info,
+        "osm": {k: v for k, v in sink.items() if k != "fragments"},
     }
     if not args.quiet:  # -q keeps only the result line, like the reference
-        summary["lineage"] = ck.report()
+        summary["lineage"] = lineage + ck.report()
     print(json.dumps(summary, indent=1, default=str))
     spark.stop()
     return 0

@@ -2,7 +2,8 @@
 
 from pyspark.sql import functions as F
 
-from rlis2osm_spark.plans.bucketing import bucketed_join, save_bucketed
+from rlis2osm_spark.plans.iceberg_shim import (
+    write_bucketed, write_range_clustered)
 from rlis2osm_spark.sources.documents import first_media_ref
 
 
@@ -12,15 +13,16 @@ def test_bucketed_doc_media_join_no_shuffle(spark, synth_dir):
     keyed = docs.select(
         "doc_id", first_media_ref(F.col("spans")).alias("media_ref"))
 
-    save_bucketed(keyed, "docs_b", "media_ref", n_buckets=4)
-    save_bucketed(media.select("media_ref", "media_kind"),
-                  "media_b", "media_ref", n_buckets=4)
+    write_bucketed(keyed, "docs_b", "media_ref", n_buckets=4)
+    write_bucketed(media.select("media_ref", "media_kind"),
+                   "media_b", "media_ref", n_buckets=4)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         # at sandbox scale the planner would broadcast; disable it so the
         # plan shows what a 100TB fact<->fact bucketed join does
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, "docs_b", "media_b", "media_ref")
+        joined = spark.table("docs_b").join(spark.table("media_b"),
+                                            "media_ref")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
         assert "Exchange hashpartitioning" not in plan  # co-located buckets
@@ -41,7 +43,6 @@ def test_range_clustered_write_disjoint_file_ranges(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from rlis2osm_spark.plans.bucketing import write_range_clustered
     from rlis2osm_spark.spatial.tiles import tile_cell
 
     pts = spark.range(5000).select(

@@ -1,11 +1,16 @@
-"""Dead-code guard: every top-level function and class in the package must
-be referenced somewhere other than its own definition.
+"""Dead-code guards over the package's top-level functions and classes:
+
+1. every one must be referenced somewhere other than its own definition;
+2. every one must be referenced from outside ``tests/`` (the package, the
+   scripts, the benchmark or the Spark entry point), unless it is on the
+   commented ``TEST_ONLY`` allowlist below.
 
 A reference is a name, an attribute, an imported name (or its alias) or a
 string constant that is exactly the identifier (``getattr``/registry
 lookups), found in the package, the tests, the scripts, the benchmark or
 the Spark entry point. Name matching is by identifier only, so a guard
-pass means "possibly used"; a failure means nothing can reach the code.
+pass means "possibly used"; a failure means nothing can reach the code,
+or only a test can.
 """
 
 import ast
@@ -13,10 +18,44 @@ import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "rlis2osm_spark")
-SEARCH = [PKG, os.path.join(ROOT, "tests"), os.path.join(ROOT, "scripts"),
+TESTS = os.path.join(ROOT, "tests")
+SEARCH = [PKG, TESTS, os.path.join(ROOT, "scripts"),
           os.path.join(ROOT, "perfbench"),
           os.path.join(ROOT, "__spark_entry__.py")]
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+# Package definitions that only tests call. The list may only shrink: give
+# an entry a production caller or delete it with its tests.
+TEST_ONLY = {
+    # reference implementations the tests check the engine against
+    "functions/wkb.py:decode_linestring",
+    "spatial/proj.py:lonlat_to_feet",
+    "operators/similarity.py:brute_force_topk",
+    # capability no query, script or benchmark runs yet
+    "functions/codecs.py:decode_png",
+    "functions/codecs.py:decode_png16",
+    "functions/codecs.py:decode_avi_mjpeg",
+    "operators/dedup.py:exact_dedup",
+    "operators/dedup.py:ngram_jaccard_pairs",
+    "operators/dedup.py:simhash_dup_pairs",
+    "operators/multimodal.py:resize_stub",
+    "operators/multimodal.py:frame_sample_refs",
+    "operators/similarity.py:lsh_bucket_udf",
+    "operators/textstats.py:rolling_fingerprint",
+    "sources/catalog.py:decode_text_columns",
+    "sources/documents.py:explode_spans",
+    "sources/documents.py:reassemble_spans",
+    "sources/documents.py:transform_text_spans",
+    "sources/documents.py:documents_to_rlis_frame",
+    "sources/documents.py:frame_columns",
+    "spatial/joins.py:raster_vector_join",
+    "spatial/joins.py:snap_trails_to_streets",
+    "spatial/tiles.py:tile_cell",
+    "spatial/tiles.py:k_ring",
+    # table layouts the tests assert; no production writer uses them yet
+    "plans/iceberg_shim.py:write_bucketed",
+    "plans/iceberg_shim.py:write_range_clustered",
+}
 
 
 def _py_files(path: str) -> list[str]:
@@ -41,9 +80,10 @@ def _names(node: ast.AST):
             yield n.value
 
 
-def test_no_unreferenced_top_level_definitions():
-    defs = []  # (file, name)
-    refs = {}  # name -> {(file, enclosing top-level definition or None)}
+def _scan():
+    """Package definitions as (file, name), and every reference as
+    name -> {(file, enclosing top-level definition or None)}."""
+    defs, refs = [], {}
     for path in SEARCH:
         for f in _py_files(path):
             with open(f) as fh:
@@ -54,6 +94,25 @@ def test_no_unreferenced_top_level_definitions():
                     defs.append((f, owner))
                 for name in _names(top):
                     refs.setdefault(name, set()).add((f, owner))
+    return defs, refs
+
+
+def test_no_unreferenced_top_level_definitions():
+    defs, refs = _scan()
     dead = [f"{os.path.relpath(f, ROOT)}:{name}" for f, name in defs
             if not refs.get(name, set()) - {(f, name)}]
     assert not dead, f"referenced nowhere but their own definition: {dead}"
+
+
+def test_no_definitions_referenced_only_from_tests():
+    defs, refs = _scan()
+    test_only = set()
+    for f, name in defs:
+        others = refs.get(name, set()) - {(f, name)}
+        if others and all(g.startswith(TESTS + os.sep) for g, _ in others):
+            test_only.add(f"{os.path.relpath(f, PKG)}:{name}")
+    new = sorted(test_only - TEST_ONLY)
+    assert not new, f"referenced only from tests/: {new}"
+    # an entry that gained a production caller or was deleted must go
+    stale = sorted(TEST_ONLY - test_only)
+    assert not stale, f"no longer test-only, drop from TEST_ONLY: {stale}"

@@ -93,20 +93,6 @@ def test_checkpoint_resume(spark, synth_dir, tmp_path):
     assert len(calls) == 2
 
 
-def test_salted_rollup_matches_unsalted(spark, synth_dir):
-    """Two-phase salted aggregation is value-identical to the plain path."""
-    from rlis2osm_spark.pipeline import tile_rollup_salted
-
-    docs, media = _docs(spark, synth_dir), _media(spark, synth_dir)
-    tiled = tile_assignment(docs, media, res=6)  # coarse -> hot cells
-    a = {(r.cell, r.parent_cell): r.n_docs for r in tile_rollup(tiled).collect()}
-    b = {(r.cell, r.parent_cell): r.n_docs
-         for r in tile_rollup_salted(tiled, n_salts=4).collect()}
-    assert a == b
-    plan = tile_rollup_salted(tiled)._jdf.queryExecution().executedPlan().toString()
-    assert "salt" in plan  # the salted shuffle key is really in the plan
-
-
 def test_checkpoint_invalidates_on_input_change(spark, tmp_path):
     """ADVICE r1: a committed snapshot must NOT be served after its inputs
     changed — the input fingerprint gates the resume."""

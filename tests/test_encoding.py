@@ -3,7 +3,7 @@
 import pandas as pd
 import pytest
 
-from rlis2osm_spark.sources.catalog import Catalog, decode_text_columns
+from rlis2osm_spark.sources.catalog import decode_text_columns
 
 
 @pytest.fixture(scope="module")
@@ -19,13 +19,14 @@ def enc_dir(spark, tmp_path_factory):
                     t.encode("cp1252").decode("latin-1") for t in text],
         "n": [1.5, 2.5, 3.5, 4.5],
     })
-    spark.createDataFrame(pdf).coalesce(1).write.parquet(str(d / "streets.parquet"))
-    return str(d), text
+    path = str(d / "streets.parquet")
+    spark.createDataFrame(pdf).coalesce(1).write.parquet(path)
+    return path, text
 
 
 def test_cp1252_binary_and_mangled_columns(spark, enc_dir):
-    d, text = enc_dir
-    df = Catalog(d).load(spark, "streets", encoding="cp1252")
+    path, text = enc_dir
+    df = decode_text_columns(spark.read.parquet(path), "cp1252")
     rows = {r.fid: r for r in df.collect()}
     for i, t in enumerate(text):
         assert rows[i].raw == t
@@ -34,9 +35,9 @@ def test_cp1252_binary_and_mangled_columns(spark, enc_dir):
 
 
 def test_cp1252_column_subset(spark, enc_dir):
-    d, text = enc_dir
-    df = Catalog(d).load(spark, "streets", encoding="cp1252",
-                         encoding_columns=["raw"])
+    path, text = enc_dir
+    df = decode_text_columns(spark.read.parquet(path), "cp1252",
+                             columns=["raw"])
     # fid 1 carries an en-dash (0x96) — the cp1252/latin-1 divergent block
     r1 = {r.fid: r for r in df.collect()}[1]
     assert r1.raw == text[1]
@@ -44,7 +45,7 @@ def test_cp1252_column_subset(spark, enc_dir):
 
 
 def test_decode_is_native(spark, enc_dir):
-    d, _ = enc_dir
-    df = Catalog(d).load(spark, "streets", encoding="cp1252")
+    path, _ = enc_dir
+    df = decode_text_columns(spark.read.parquet(path), "cp1252")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan  # pure encode/decode expressions

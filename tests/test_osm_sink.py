@@ -58,18 +58,6 @@ def test_tag_values_escaped_exactly_once(spark, tmp_path):
     assert "Tom &amp; Jerry" in raw and "&amp;amp;" not in raw
 
 
-def test_api_facade(spark, synth_dir, tmp_path):
-    """Reference-shaped workflow through the api module end-to-end."""
-    from rlis2osm_spark import api
-    from rlis2osm_spark.sources.catalog import Catalog
-
-    cat = Catalog(synth_dir)
-    combined = api.expand_translate_combine(spark, cat)
-    dissolved = api.dissolve(combined)
-    stats = api.to_osm_xml(dissolved, str(tmp_path / "osm_api")).collect()
-    assert sum(s.n_ways for s in stats) == dissolved.count()
-
-
 def test_nodes_are_wgs84(spark, synth_dir, tmp_path):
     """ADVICE r1: the sink must reproject EPSG:2913 feet to lat/lon (the
     reference's `ogr2osm -e 2913`); raw feet are not valid OSM XML."""
@@ -91,13 +79,15 @@ def test_nodes_are_wgs84(spark, synth_dir, tmp_path):
 def test_merge_single_artifact(spark, synth_dir, tmp_path):
     """S8 completion: one rlis.osm (reference main.py:248-257), nodes
     deduplicated across fragments, every way ref resolvable."""
-    from rlis2osm_spark import api
-    from rlis2osm_spark.sources.catalog import Catalog
+    from rlis2osm_spark.operators.osm_sink import merge_fragments
 
-    combined = api.expand_translate_combine(spark, Catalog(synth_dir))
+    combined = combine(*(spark.read.parquet(f"{synth_dir}/{n}.parquet")
+                         for n in ("streets", "trails", "bike_routes")))
     dest = str(tmp_path / "rlis.osm")
-    info = api.to_osm_xml(combined.repartition(4), str(tmp_path / "frags"),
-                          merged=dest)
+    frags = write_osm_xml(repair_and_filter_tags(combined).repartition(4),
+                          str(tmp_path / "frags")).collect()
+    info = merge_fragments(str(tmp_path / "frags"), dest,
+                           expect_fragments=len(frags))
     assert info["n_fragments"] >= 2 and info["dest"] == dest
 
     root = ET.parse(dest).getroot()

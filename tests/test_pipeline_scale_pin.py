@@ -1,6 +1,6 @@
-"""End-to-end determinism pin for the benchmarked conversion chain
-(VERDICT r4 #6): two full combine -> checkpoint -> dissolve(ordered) + tag
-repair -> checkpoint -> OSM-sink runs must produce byte-identical parquet
+"""End-to-end determinism pin for the conversion chain (VERDICT r4 #6): two
+full ``pipeline.convert`` runs (combine -> checkpoint -> dissolve(ordered) +
+tag repair -> checkpoint -> OSM sink) must produce byte-identical parquet
 AND .osm fragments. Extends the per-operator two-run pin in
 tests/test_dissolve.py to the chain perfbench's ``pipeline`` workload
 runs (``perfbench/workloads.py``, ``Pipeline.convert``)."""
@@ -8,10 +8,7 @@ runs (``perfbench/workloads.py``, ``Pipeline.convert``)."""
 import hashlib
 import os
 
-from rlis2osm_spark.operators.combine import combine, repair_and_filter_tags
-from rlis2osm_spark.operators.dissolve import dissolve_ways
-from rlis2osm_spark.operators.osm_sink import write_osm_xml
-from rlis2osm_spark.plans.checkpoint import Checkpointer
+from rlis2osm_spark.pipeline import convert
 
 
 def _part_hashes(root: str, suffix: str) -> list:
@@ -31,25 +28,14 @@ def _part_hashes(root: str, suffix: str) -> list:
 
 
 def _convert(spark, data_dir: str, out_dir: str) -> dict:
-    inputs = [f"{data_dir}/{n}.parquet"
-              for n in ("streets", "trails", "bike_routes")]
-    streets, trails, bikes = (spark.read.parquet(p) for p in inputs)
-    ck = Checkpointer(spark, out_dir, run_id="ckpt")
-    combined = ck.stage("combined",
-                        lambda: combine(streets, trails, bikes),
-                        inputs=inputs)
-    dissolved = ck.stage(
-        "dissolved",
-        lambda: repair_and_filter_tags(dissolve_ways(combined, ordered=True)),
-        inputs=["combined"])
-    osm_dir = os.path.join(out_dir, "osm")
-    sink = write_osm_xml(dissolved, osm_dir).collect()
+    _dissolved, sink, _lineage = convert(spark, data_dir, out_dir)
     return {
-        "n_ways": sum(r.n_ways for r in sink),
-        "osm_bytes": sum(os.path.getsize(r.part_file) for r in sink),
-        "parquet": _part_hashes(os.path.join(out_dir, "ckpt", "dissolved"),
+        "n_ways": sink["n_ways"],
+        "osm_bytes": sum(os.path.getsize(r.part_file)
+                         for r in sink["fragments"]),
+        "parquet": _part_hashes(os.path.join(out_dir, "rlis", "dissolved"),
                                 ".parquet"),
-        "osm": _part_hashes(osm_dir, ".osm"),
+        "osm": _part_hashes(os.path.join(out_dir, "rlis", "osm"), ".osm"),
     }
 
 
