@@ -1,26 +1,44 @@
-"""Shared helpers for the driver-contract queries."""
+"""Shared helpers for the driver-contract queries, and the registry's one
+in-process cache layer (``session_memo``)."""
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rlis2osm_spark.plans.iceberg_shim import fingerprint_path
 
-# r7 (guide §1.2 / §6): session-scoped memo of resolved base relations.
-# ``spark.read.parquet`` re-lists the file and re-reads the footer on every
-# call (~0.13s/table measured); a production engine resolves a table through
-# the catalog once per application. The memo holds UNEXECUTED relations —
-# no rows are cached, every action still scans parquet.
-_LOAD_MEMO: dict = {}
+
+def session_memo(spark: SparkSession, key, inputs: list[str], build):
+    """``build()``, memoized on the session object under ``key``.
+
+    Entries live in a dict attached to ``spark`` itself, so they die with
+    it and a ``newSession()`` starts empty. Each entry is stored with a
+    token, the session's SQL conf plus ``fingerprint_path`` of every path
+    in ``inputs``, and is rebuilt when the token changes: a plan built
+    under an old conf, or a file listing from before a rewrite, is never
+    served. The conf is read as one JVM string (0.4-0.9 ms on a 4-core
+    host; the public ``spark.conf.getAll`` takes about 40 ms), and
+    fingerprinting a 10-file sf directory about 0.2-0.4 ms, so a hit
+    costs about 1 ms."""
+    memo = spark.__dict__.setdefault("_rlis2osm_memo", {})
+    token = (spark._jsparkSession.sessionState().conf().getAllConfs()
+             .toString(), [fingerprint_path(p) for p in inputs])
+    hit = memo.get(key)
+    if hit is None or hit[0] != token:
+        hit = memo[key] = (token, build())
+    return hit[1]
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, f"{sf_dir}/{name}.parquet")
-    for stale in [k for k in _LOAD_MEMO if k[0] != key[0]]:
-        del _LOAD_MEMO[stale]
-    if key not in _LOAD_MEMO:
-        _LOAD_MEMO[key] = spark.read.parquet(key[1])
-    return _LOAD_MEMO[key]
+    """``spark.read.parquet`` of table ``name``, resolved once per session:
+    a read re-lists the files and re-reads the footer (~0.13 s a table).
+    Only the unexecuted relation is kept; every action still scans."""
+    path = f"{sf_dir}/{name}.parquet"
+    return session_memo(spark, ("load", path), [path],
+                        lambda: spark.read.parquet(path))
 
 
 def sql_str_list(values) -> str:
@@ -78,9 +96,6 @@ def spark_int_map(mapping: dict) -> Column:
     return F.create_map(*pairs)
 
 
-_STAGE_MEMO: dict = {}
-
-
 def cached_stage(spark: SparkSession, sf_dir: str, name: str, build,
                  inputs: list[str],
                  code_modules: list[str] | None = None,
@@ -88,10 +103,11 @@ def cached_stage(spark: SparkSession, sf_dir: str, name: str, build,
     """Checkpointed-and-memoized derived input (the production shape: a
     pipeline stage materializes once per corpus snapshot and downstream
     operators consume the snapshot, not the recomputed lineage — exactly
-    what plans/checkpoint.py does in pipeline.convert). First call per
-    (session, sf_dir, name) builds/validates the parquet stage
-    (input-fingerprinted); later calls reuse the eagerly localCheckpointed
-    frame. Entries bound to dead SparkContexts are evicted.
+    what plans/checkpoint.py does in pipeline.convert). The stage lives
+    under ``<repo>/.synth/query_stage/<sf_dir tag>/<name>``; the first call
+    per session (and after a conf change or an input rewrite, see
+    ``session_memo``) builds or validates it (input-fingerprinted), and
+    later calls reuse the eagerly localCheckpointed frame.
 
     ``code_modules`` names the modules whose code produces the stage
     (defaulting to the module that defined ``build``); their source bytes
@@ -99,19 +115,15 @@ def cached_stage(spark: SparkSession, sf_dir: str, name: str, build,
     instead of silently serving output of the OLD code (ADVICE r4)."""
     from rlis2osm_spark.plans.checkpoint import Checkpointer, source_token
 
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    for stale in [k for k in _STAGE_MEMO if k[0] != key[0]]:
-        del _STAGE_MEMO[stale]
-    if key not in _STAGE_MEMO:
+    def materialize():
         tag = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-        root = _os.path.join(_os.path.dirname(_os.path.dirname(
-            _os.path.dirname(_os.path.abspath(__file__)))),
+        root = os.path.join(os.path.dirname(os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__)))),
             ".synth", "query_stage")
         ck = Checkpointer(spark, root, run_id=tag)
         token = source_token(*(code_modules or [build.__module__]))
         df = ck.stage(name, build, inputs=inputs, code_token=token,
                       partition_by=partition_by)
-        _STAGE_MEMO[key] = df.localCheckpoint(eager=True)
-    return _STAGE_MEMO[key]
+        return df.localCheckpoint(eager=True)
+
+    return session_memo(spark, ("stage", sf_dir, name), inputs, materialize)

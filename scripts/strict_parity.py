@@ -42,7 +42,7 @@ def main():
     import __spark_entry__ as mod
     from rlis2osm_spark.session import build_session
 
-    spark = build_session(master="local[8]", shuffle_partitions=8)
+    spark = build_session()
     con = duckdb.connect()
     for t in TABLES:
         p = f"{SF_DIR}/{t}.parquet"
