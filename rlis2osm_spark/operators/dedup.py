@@ -6,17 +6,17 @@ xxhash64 production variants).
 All operators are DataFrame -> DataFrame, native-expression-only (the only
 shuffle per operator is the one its semantics require):
 
-- exact:      one groupBy on a content hash (map-side partial agg).
 - MinHash+LSH: shingle -> h hashes -> band buckets -> bucket self-join.
   The band bucket is the shuffle key; hot buckets (boilerplate shingles)
   are the skew risk — cap bucket width with ``max_bucket`` (drops
   pathological buckets loudly rather than letting one reducer own the job).
 - SimHash:    per-token bit votes folded into ``bits`` conditional sums in
-  ONE groupBy (no per-bit explode) -> 64-bit signature; pair generation via
-  exact match (Hamming-0) or chunk banding + bit_count verify (Hamming-k,
-  full recall for k <= n_bands-1).
-- n-gram Jaccard: exact verification join for candidate pairs, with a
-  ``max_df`` hot-shingle cap (boilerplate shingles are quadratic reducers).
+  ONE groupBy (no per-bit explode) -> 64-bit signature; Hamming-k pairs
+  via chunk banding + bit_count verify (full recall for k <= n_bands-1).
+
+Exact dedup (one groupBy on a content hash) and the exact n-gram Jaccard
+join run inline in the ``d1_exact_dedup`` and ``d2_ngram_jaccard``
+queries.
 """
 
 from __future__ import annotations
@@ -32,17 +32,6 @@ def tokenize(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select(
         "*", F.posexplode(F.split(F.col(text_col), r"\s+")).alias("pos", "token")
     ).filter(F.col("token") != "").drop(text_col)
-
-
-def exact_dedup(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """Exact duplicate groups; survivor = min id (deterministic)."""
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
-        .agg(F.min(id_col).alias("survivor"),
-             F.count("*").alias("n_copies"),
-             F.sort_array(F.collect_list(id_col)).alias("members"))
-    )
 
 
 def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -103,71 +92,6 @@ def minhash_lsh_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    max_df: int | None = None,
-):
-    """Exact n-gram Jaccard similarity join (the verification stage after
-    LSH candidates at scale; standalone here).
-
-    ``max_df`` is the hot-shingle skew guard (VERDICT r1): a shingle present
-    in more than ``max_df`` documents ("terms of service" boilerplate) is an
-    O(df^2) reducer in the self-join and carries ~no similarity signal, so
-    it is dropped from BOTH the intersection and the per-doc sizes (jaccard
-    stays a true jaccard over the kept shingle sets). The drop is loud:
-    with ``max_df`` set the return is ``(pairs_df, Observation)`` whose
-    metrics (``hot_shingle_rows`` / ``hot_shingles``) are populated by the
-    action that materializes the pairs.
-    """
-    sh = shingles(df, id_col, text_col, n)
-    obs = None
-    if max_df is not None:
-        from pyspark.sql import Observation
-
-        wide = sh.withColumn(
-            "_df", F.count("*").over(Window.partitionBy("shingle")))
-        obs = Observation("ngram_jaccard_hot_shingles")
-        # attach the observation to the SIZES branch only: sh feeds three
-        # subtrees (sizes + both self-join sides), and duplicated observe
-        # nodes under subplan/exchange reuse can leave the surviving
-        # CollectMetrics instance unexecuted (metrics read as zero). The
-        # sizes subtree always executes exactly once.
-        observed_wide = wide.observe(
-            obs,
-            F.sum((F.col("_df") > max_df).cast("long")).alias("hot_shingle_rows"),
-            # DISTINCT aggs are disallowed in observed metrics; HLL is fine
-            F.approx_count_distinct(
-                F.when(F.col("_df") > max_df, F.col("shingle"))).alias("hot_shingles"),
-        )
-        sizes_src = observed_wide.filter(F.col("_df") <= max_df).drop("_df")
-        sh = wide.filter(F.col("_df") <= max_df).drop("_df")
-    else:
-        sizes_src = sh
-    sizes = sizes_src.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("doc_a"),
-                 F.col(f"b.{id_col}").alias("doc_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("nb"))
-    pairs = (
-        inter.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn("jaccard",
-                    F.col("n_inter")
-                    / (F.col("na") + F.col("nb") - F.col("n_inter")))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return pairs if obs is None else (pairs, obs)
-
-
 def simhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -196,19 +120,6 @@ def simhash_signatures(
         sig = sig + F.when(2 * F.col(f"_c{k}") > F.col("_n"),
                            F.expr(f"shiftleft(1L, {k})")).otherwise(F.lit(0))
     return per_doc.select(id_col, sig.alias("simhash"))
-
-
-def simhash_dup_pairs(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", bits: int = 64) -> DataFrame:
-    """Exact-signature SimHash duplicate pairs (Hamming-0; see
-    ``simhash_hamming_pairs`` for the Hamming-k banded variant)."""
-    sig = simhash_signatures(df, id_col, text_col, bits)
-    a, b = sig.alias("a"), sig.alias("b")
-    return a.join(
-        b, (F.col("a.simhash") == F.col("b.simhash"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    ).select(F.col(f"a.{id_col}").alias("doc_a"),
-             F.col(f"b.{id_col}").alias("doc_b"))
 
 
 def simhash_hamming_pairs(

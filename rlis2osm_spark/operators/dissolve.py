@@ -301,21 +301,14 @@ def _fused_greedy_group(dissolve_fields: list[str], geom_col: str,
 
 
 def endpoint_nodes(df: DataFrame, geom_col: str = "geometry",
-                   with_idx: bool = False,
                    extra_cols: list[str] | None = None) -> DataFrame:
     """J3: explode each way into two (way_id, node) rows, node = raw 16-byte
-    coordinate payload sliced natively from the WKB. ``with_idx`` also emits
-    ``node_idx`` (0 = from-node, 1 = to-node) for order-sensitive consumers
-    (the greedy frontier); ``extra_cols`` are carried through."""
+    coordinate payload sliced natively from the WKB; ``extra_cols`` are
+    carried through."""
     f_node = F.expr(f"substring({geom_col}, 10, 16)")
     t_node = F.expr(
         f"substring({geom_col}, length({geom_col}) - 15, 16)")
     carry = list(extra_cols or [])
-    if with_idx:
-        return df.select(
-            "way_id", *carry,
-            F.posexplode(F.array(f_node, t_node)).alias("node_idx", "node"),
-        )
     return df.select(
         "way_id", *carry,
         F.explode(F.array(f_node, t_node)).alias("node"),
@@ -440,8 +433,7 @@ def dissolve_ways(
     cheap map-side-combined agg) and routes groups above ``max_group_rows``
     — the degenerate-skew hazard, e.g. unnamed service roads spanning the
     whole extent — to the iterative large-star/small-star CC, everything
-    else to the per-partition union-find. "unionfind"/"iterative" force one
-    path (tests, known-shaped inputs).
+    else to the per-partition union-find.
 
     ``algorithm="greedy"`` (r3) is the reference-compat mode: it replays
     the reference's greedy single-path BFS exactly — including on forked /
@@ -499,10 +491,9 @@ def dissolve_ways(
         ).otherwise(g),
     )
 
-    if algorithm not in ("auto", "greedy", "unionfind", "iterative"):
+    if algorithm not in ("auto", "greedy"):
         raise ValueError(
-            f"unknown algorithm {algorithm!r}; expected one of "
-            "'auto', 'greedy', 'unionfind', 'iterative'")
+            f"unknown algorithm {algorithm!r}; expected 'auto' or 'greedy'")
 
     if algorithm == "greedy":
         # source visit order = (src_table, fid, part_idx), the reference's
@@ -555,71 +546,62 @@ def dissolve_ways(
         out = _dissolve_fused(frame, dissolve_fields, geom_col, n_parts)
         return out.orderBy("component_id") if ordered else out
 
-    if algorithm == "unionfind" or (
-            algorithm == "auto" and approx_rows is not None
-            and approx_rows <= max_group_rows):
-        # every group fits a worker (by contract / by the approx_rows
-        # bound short-circuiting auto) -> the FUSED one-exchange path
-        # (r5): payload repartitions by group_key once; union-find and
-        # linemerge happen inside the partition. The unfused shape paid
-        # two more full-payload exchanges (merge join + component
-        # groupBy) plus their sorts.
+    if approx_rows is not None and approx_rows <= max_group_rows:
+        # every group fits a worker (the approx_rows bound short-circuits
+        # the routing job) -> the FUSED one-exchange path (r5): payload
+        # repartitions by group_key once; union-find and linemerge happen
+        # inside the partition. The unfused shape paid two more
+        # full-payload exchanges (merge join + component groupBy) plus
+        # their sorts.
         return fused(df)
 
+    # auto: route only degenerate groups to the iterative path.
+    # NOTE: the routing decision needs the group-size distribution, so
+    # "auto" runs ONE planning-time Spark job here (map-side-combined
+    # count + the big-key collect). Plan-only callers that must stay
+    # action-free should pass approx_rows.
+    sizes = df.groupBy("group_key").agg(F.count("*").alias("_gsz"))
+    big_df = sizes.filter(F.col("_gsz") > max_group_rows).select(
+        "group_key")
+    # degenerate groups are by definition FEW (> max_group_rows each),
+    # so the key set collects to the driver once. Guard: cap the collect
+    # at 100k keys (pathological inputs fail loudly, not driver-OOM).
+    big_keys = [r.group_key
+                for r in big_df.limit(100_001).collect()]
+    if len(big_keys) > 100_000:
+        raise ValueError(
+            "more than 100k tag-groups exceed max_group_rows="
+            f"{max_group_rows}; raise the threshold")
+    if not big_keys:
+        return fused(df)
+    # route via a broadcast-joined key frame, NOT isin literals:
+    # 100k literals would inflate every downstream plan and task
+    # closure (ADVICE r2); a local-list DataFrame broadcasts once.
+    # Small groups take the fused path; degenerate groups go through
+    # iterative CC + the unfused merge (their payload cannot sit on
+    # one worker, so the component groupBy exchange is unavoidable
+    # there).
+    spark = combined.sparkSession
+    bk = F.broadcast(spark.createDataFrame(
+        [(k,) for k in big_keys], "group_key long"))
+    small_df = df.join(bk, "group_key", "left_anti")
+    big_df_rows = df.join(bk, "group_key", "left_semi")
     # group_key rides through the endpoint explode (narrow projection) —
     # joining it back on way_id would be a full sort-merge self-join of the
     # node frame against the input, i.e. two extra exchanges of every node
     # row before the one repartition CC actually needs (r5)
-    nodes = endpoint_nodes(df, geom_col, extra_cols=["group_key"])
-    if algorithm == "iterative":
-        comps = _comps_iterative(nodes, df.select("way_id"))
-    else:  # auto: route only degenerate groups to the iterative path.
-        # NOTE: the routing decision needs the group-size distribution, so
-        # "auto" runs ONE planning-time Spark job here (map-side-combined
-        # count + the big-key collect). Plan-only callers that must stay
-        # action-free should pass algorithm="unionfind" or approx_rows.
-        sizes = df.groupBy("group_key").agg(F.count("*").alias("_gsz"))
-        big_df = sizes.filter(F.col("_gsz") > max_group_rows).select(
-            "group_key")
-        # degenerate groups are by definition FEW (> max_group_rows each),
-        # so the key set collects to the driver once. Guard: cap the collect
-        # at 100k keys (pathological inputs fail loudly, not driver-OOM).
-        big_keys = [r.group_key
-                    for r in big_df.limit(100_001).collect()]
-        if len(big_keys) > 100_000:
-            raise ValueError(
-                "more than 100k tag-groups exceed max_group_rows="
-                f"{max_group_rows}; raise the threshold or use "
-                "algorithm='iterative'")
-        if not big_keys:
-            return fused(df)
-        # route via a broadcast-joined key frame, NOT isin literals:
-        # 100k literals would inflate every downstream plan and task
-        # closure (ADVICE r2); a local-list DataFrame broadcasts once.
-        # Small groups take the fused path; degenerate groups go through
-        # iterative CC + the unfused merge (their payload cannot sit on
-        # one worker, so the component groupBy exchange is unavoidable
-        # there).
-        spark = combined.sparkSession
-        bk = F.broadcast(spark.createDataFrame(
-            [(k,) for k in big_keys], "group_key long"))
-        small_df = df.join(bk, "group_key", "left_anti")
-        big_df_rows = df.join(bk, "group_key", "left_semi")
-        big_n = nodes.join(bk, "group_key", "left_semi")
-        comps_big = _comps_iterative(big_n, big_df_rows.select("way_id"))
-        out = _dissolve_fused(
-            small_df, dissolve_fields, geom_col, n_parts
-        ).unionByName(_merge_components(
-            big_df_rows, comps_big, dissolve_fields, geom_col))
-        return out.orderBy("component_id") if ordered else out
-
-    return _merge_components(df, comps, dissolve_fields, geom_col,
-                             ordered=ordered)
+    big_n = endpoint_nodes(df, geom_col, extra_cols=["group_key"]).join(
+        bk, "group_key", "left_semi")
+    comps_big = _comps_iterative(big_n, big_df_rows.select("way_id"))
+    out = _dissolve_fused(
+        small_df, dissolve_fields, geom_col, n_parts
+    ).unionByName(_merge_components(
+        big_df_rows, comps_big, dissolve_fields, geom_col))
+    return out.orderBy("component_id") if ordered else out
 
 
 def _merge_components(df: DataFrame, comps: DataFrame,
-                      dissolve_fields: list[str],
-                      geom_col: str, ordered: bool = False) -> DataFrame:
+                      dissolve_fields: list[str], geom_col: str) -> DataFrame:
     """A1/A2: per-component fid-ordered collect + Arrow linemerge + first-row
     tags (equal within group by construction, reference dissolve.py:81-82)."""
     with_comp = df.join(comps, "way_id")
@@ -629,7 +611,7 @@ def _merge_components(df: DataFrame, comps: DataFrame,
         return geom_lists.map(
             lambda gl: wkb.linemerge_wkb([bytes(g) for g in gl]))
 
-    out = (
+    return (
         with_comp.groupBy("component_id")
         .agg(
             *[F.first(F.col(f"`{c}`")).alias(c) for c in dissolve_fields],
@@ -644,6 +626,3 @@ def _merge_components(df: DataFrame, comps: DataFrame,
         )
         .drop("_members")
     )
-    # component_id is unique per output row and a pure hash of source
-    # lineage, so this total order is identical across runs (VERDICT r3 #4)
-    return out.orderBy("component_id") if ordered else out

@@ -116,7 +116,7 @@ def extract_image_features(
                     w, h, nch, px = decode_jpeg(b)
                 elif fmt == "png":
                     # gray/RGB/palette/alpha at depths 1-8, Adam7 (r5);
-                    # 16-bit raises toward decode_png16
+                    # 16-bit raises NotImplementedError
                     w, h, nch, px = decode_png_ex(b)
                 elif fmt == "bmp":
                     w, h, nch, px = decode_bmp(b)
@@ -136,86 +136,6 @@ def extract_image_features(
 
     return media.select("media_ref", "payload").mapInPandas(
         batches, IMAGE_FEATURE_SCHEMA)
-
-
-def resize_stub(media: DataFrame, width: int, height: int,
-                decode_stub: bool = True) -> DataFrame:
-    """Resize: binary in -> binary out, one Arrow pass.
-
-    ``decode_stub=True`` truncates/pads the payload deterministically to
-    w*h bytes (codec-free plumbing). ``decode_stub=False`` (REAL as of
-    r5): decode the image through the native codecs (png/gif/jpeg — any
-    supported subformat), nearest-neighbor resample each channel to
-    (width, height), and re-encode as PNG preserving the channel count —
-    the spatial-pipeline shape of an image-normalization stage. Formats
-    the codec layer can't decode raise its NotImplementedError seam."""
-    target = width * height
-
-    def batches(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rlis2osm_spark.functions.codecs import (
-            decode_bmp, decode_gif, decode_jpeg, decode_png_ex, encode_png)
-
-        for pdf in frames:
-            out = []
-            for payload in pdf["payload"]:
-                if payload is None:
-                    out.append(None)
-                    continue
-                b = bytes(payload)
-                if decode_stub:
-                    out.append((b * (target // max(len(b), 1) + 1))[:target])
-                    continue
-                fmt = _sniff(b)
-                if fmt == "png":
-                    w, h, nch, px = decode_png_ex(b)
-                elif fmt == "jpeg":
-                    w, h, nch, px = decode_jpeg(b)
-                elif fmt == "bmp":
-                    w, h, nch, px = decode_bmp(b)
-                elif fmt == "gif":
-                    w, h, px = decode_gif(b)
-                    nch = 1
-                else:
-                    raise NotImplementedError(
-                        f"real resize for {fmt!r} payloads requires an "
-                        "image codec library (PIL's seam); png/gif/bmp/"
-                        "jpeg resize natively")
-                src = np.frombuffer(px, dtype=np.uint8).reshape(h, w, nch)
-                ys = (np.arange(height) * h // height).clip(0, h - 1)
-                xs = (np.arange(width) * w // width).clip(0, w - 1)
-                resized = src[np.ix_(ys, xs)]
-                out.append(encode_png(
-                    width, height, np.ascontiguousarray(resized).tobytes(),
-                    channels=nch))
-            pdf = pdf.copy()
-            pdf["payload"] = out
-            yield pdf
-
-    return media.mapInPandas(batches, media.schema)
-
-
-def frame_sample_refs(media: DataFrame, every_n: int = 10,
-                      n_frames_col: str | None = None) -> DataFrame:
-    """Video frame sampling plumbing: one row per sampled frame index.
-    Without a container parse the frame count is a deterministic function
-    of payload length (stub); the explode/shape is the real thing. For
-    REAL per-frame decode over AVI/animated-GIF payloads use
-    :func:`extract_video_frames`, which parses the container itself."""
-    n_frames = (
-        F.col(n_frames_col) if n_frames_col
-        else (F.length("payload") % 300 + 1)
-    )
-    return (
-        media.withColumn("n_frames", n_frames)
-        .select(
-            "media_ref", "n_frames",
-            F.explode(
-                F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
-            ).alias("frame_idx"),
-        )
-        .withColumn("frame_ref",
-                    F.concat_ws("#", "media_ref", "frame_idx"))
-    )
 
 
 VIDEO_FRAME_SCHEMA = StructType([

@@ -79,7 +79,13 @@ def _lcg_weights(plane: int, dim: int, seed: int = 1234567) -> list[float]:
 
 def lsh_bucket_expr(vec: Column, dim: int, n_planes: int = 8,
                     seed: int = 1234567) -> Column:
-    """Random-hyperplane signature -> integer bucket id (native)."""
+    """Random-hyperplane signature -> integer bucket id (native).
+
+    The weights fold in as plan-time literal arrays: ideal at dim <= ~128
+    (whole-stage codegen, zero Python), but the plan grows
+    O(n_planes * dim) and codegen compile time explodes at dim 1k+ —
+    there ``lsh_table_buckets_udf`` applies the same hyperplanes as one
+    numpy matmul per Arrow batch."""
     bucket = F.lit(0)
     for p in range(n_planes):
         w = F.array(*[F.lit(x) for x in _lcg_weights(p, dim, seed)])
@@ -108,7 +114,7 @@ def lsh_table_buckets_udf(dim: int, n_planes: int, n_tables: int,
     (returns ``array<long>``, one bucket per table). Same LCG hyperplanes /
     per-table seeds as ``_table_buckets`` — the expression path unrolls
     n_tables*n_planes*dim literal terms, which blows up codegen compile
-    time well before the data costs anything (see ``lsh_bucket_udf``)."""
+    time well before the data costs anything."""
     import numpy as np
     from pyspark.sql.types import ArrayType, LongType
 
@@ -420,7 +426,8 @@ def cosine_neardup_pairs(
                 Window.partitionBy("tbl", "bucket")))
         obs = Observation("neardup_hot_buckets")
         # observe ONE join side only — duplicated observe nodes under
-        # subplan reuse can report zeros (see dedup.ngram_jaccard_pairs)
+        # subplan/exchange reuse can leave the surviving CollectMetrics
+        # instance unexecuted, so the metrics read as zero
         left = wide.observe(
             obs,
             F.sum((F.col("_bn") > max_bucket).cast("long"))
@@ -442,34 +449,3 @@ def cosine_neardup_pairs(
         .select("doc_a", "doc_b", "cos")
     )
     return pairs if obs is None else (pairs, obs)
-
-
-def lsh_bucket_udf(dim: int, n_planes: int = 8, seed: int = 1234567):
-    """High-dimension bucket assigner: the same LCG hyperplanes as
-    ``lsh_bucket_expr`` but applied as ONE numpy matmul per Arrow batch.
-
-    ``lsh_bucket_expr`` folds plan-time literal weight arrays — ideal at
-    dim <= ~128 (whole-stage codegen, zero Python), but the plan grows
-    O(n_planes * dim) and codegen chokes at dim 1k+. This variant ships the
-    (dim x n_planes) matrix in the UDF closure (auto-broadcast) and pays
-    one vectorized Arrow pass instead. Same signature semantics; the two
-    paths may disagree only on projections within float rounding of zero.
-    """
-    import numpy as np
-    from pyspark.sql.types import LongType
-
-    W = np.array([_lcg_weights(p, dim, seed) for p in range(n_planes)],
-                 dtype=np.float64).T  # (dim, n_planes)
-    powers = (1 << np.arange(n_planes)).astype(np.int64)
-
-    @F.pandas_udf(LongType())
-    def bucket(vecs):
-        import pandas as pd
-
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int64")
-        M = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        proj = M @ W                     # (batch, n_planes)
-        return pd.Series(((proj > 0) @ powers).astype("int64"))
-
-    return bucket

@@ -140,11 +140,12 @@ def fingerprint(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def rolling_fingerprint(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", window: int = 4,
-                        n_keep: int = 8, base: int = 31,
-                        prime: int = 2147483647) -> DataFrame:
-    """Winnowing-style document fingerprint via polynomial rolling hashes.
+def rolling_fingerprint_from_ids(wid_df: DataFrame, id_col: str = "doc_id",
+                                 window: int = 4, n_keep: int = 8,
+                                 base: int = 31,
+                                 prime: int = 2147483647) -> DataFrame:
+    """Winnowing-style document fingerprint over an (id_col, pos, wid)
+    frame of word ids, via polynomial rolling hashes.
 
     Each ``window``-gram of word ids gets the Rabin-Karp polynomial hash
     ``sum(wid[i+j] * base^(window-1-j)) mod prime`` (computed with lead()
@@ -152,24 +153,8 @@ def rolling_fingerprint(df: DataFrame, id_col: str = "doc_id",
     detail of sequential scanners, not a semantic), and the document's
     fingerprint is its ``n_keep`` smallest window hashes — a stable sketch:
     editing one region disturbs only nearby windows, so near-identical
-    documents share most of their min-hashes. This production path derives
-    word ids via xxhash64; the oracle query (x7_rolling_fingerprint) runs
-    the same core over deterministic vocabulary ids DuckDB reproduces."""
-    toks = df.select(
-        id_col, F.posexplode(F.split(F.col(text_col), r"\s+")).alias("pos", "t")
-    ).filter(F.col("t") != "")
-    wid = toks.withColumn("wid", F.pmod(F.xxhash64("t"), F.lit(prime)))
-    return rolling_fingerprint_from_ids(
-        wid, id_col=id_col, window=window, n_keep=n_keep,
-        base=base, prime=prime)
-
-
-def rolling_fingerprint_from_ids(wid_df: DataFrame, id_col: str = "doc_id",
-                                 window: int = 4, n_keep: int = 8,
-                                 base: int = 31,
-                                 prime: int = 2147483647) -> DataFrame:
-    """Core winnowing over an (id_col, pos, wid) frame — shared by the
-    production path (xxhash64 ids) and the oracle path (derived ids)."""
+    documents share most of their min-hashes. The x7_rolling_fingerprint
+    query runs it over deterministic vocabulary ids DuckDB reproduces."""
     from pyspark.sql import Window as W
 
     w = W.partitionBy(id_col).orderBy("pos")

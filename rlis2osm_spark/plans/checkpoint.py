@@ -102,7 +102,6 @@ class Checkpointer:
         build,
         inputs: list[str] | None = None,
         partition_by: list[str] | None = None,
-        force: bool = False,
         code_token: str | None = None,
     ) -> DataFrame:
         """Materialize ``build()`` as snapshot ``name`` (or read the existing
@@ -115,7 +114,7 @@ class Checkpointer:
         fp = self._fingerprint_inputs(inputs, code_token)
         stale = (self._read_manifest(name) is not None
                  and not self.has_valid(name, fp))
-        if self.has_valid(name, fp) and not force:
+        if self.has_valid(name, fp):
             self.lineage.append(self._read_manifest(name) | {"resumed": True})
             return shim.read_table(self.spark, location)
 

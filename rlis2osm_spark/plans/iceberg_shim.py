@@ -1,12 +1,11 @@
 """The ONE file to swap on a real cluster: table-format primitives.
 
-This sandbox has no Iceberg runtime jars, so snapshots, manifests and
-bucket transforms are stood in by parquet directories + JSON manifests +
-Spark ``bucketBy`` managed tables. Every stand-in lives HERE, behind a
-function whose docstring spells out the Iceberg call it maps to
-(VERDICT r3 #7) — ``plans/checkpoint.py`` consumes only this module, so
-porting to a cluster with an Iceberg catalog means reimplementing these ~8
-functions and nothing else:
+This sandbox has no Iceberg runtime jars, so snapshots and manifests are
+stood in by parquet directories + JSON manifests. Every stand-in lives
+HERE, behind a function whose docstring spells out the Iceberg call it
+maps to (VERDICT r3 #7) — ``plans/checkpoint.py`` consumes only this
+module, so porting to a cluster with an Iceberg catalog means
+reimplementing these seven functions and nothing else:
 
 ==========================  ==================================================
 local stand-in              Iceberg call on a real cluster
@@ -26,10 +25,6 @@ local stand-in              Iceberg call on a real cluster
                             parquet-footer reads here)
 ``fingerprint_path``        the upstream table's current ``snapshot_id``
                             (content-addressed lineage for free)
-``write_bucketed``          ``df.writeTo(ident).partitionedBy(``
-                            ``  bucket(n_buckets, key)).createOrReplace()``
-``write_range_clustered``   ``ALTER TABLE ident WRITE ORDERED BY (col)`` then
-                            a plain append (Iceberg sort-order file clustering)
 ==========================  ==================================================
 """
 
@@ -133,40 +128,3 @@ def fingerprint_path(path: str) -> tuple:
         return ("file", path, os.path.getsize(path),
                 os.stat(path).st_mtime_ns)
     return ("missing", path)
-
-
-def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int,
-                   mode: str = "overwrite") -> None:
-    """Hash-bucketed table layout so equi-joins on ``key`` are shuffle-free.
-
-    Iceberg: ``df.writeTo(ident).partitionedBy(bucket(n_buckets, key))``
-    ``.createOrReplace()`` — plus storage-partitioned joins
-    (``spark.sql.sources.v2.bucketing.enabled``) on the read side. Locally
-    Spark's ``bucketBy`` managed table gives the same no-Exchange plan
-    (asserted in tests/test_bucketing.py)."""
-    (
-        df.write.mode(mode)
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def write_range_clustered(df: DataFrame, path: str, col: str,
-                          n_files: int, mode: str = "overwrite") -> None:
-    """Range-partitioned, sorted file layout: every file carries a DISJOINT
-    [min, max] range of ``col`` in its footer, so range predicates prune
-    whole files (asserted in tests/test_partition_pruning.py).
-
-    Iceberg: ``ALTER TABLE ident WRITE ORDERED BY (col)`` then append —
-    the table's sort order makes every data file carry the same disjoint
-    column bounds in manifest metadata."""
-    from pyspark.sql import functions as F
-
-    (
-        df.repartitionByRange(n_files, F.col(col))
-        .sortWithinPartitions(col)
-        .write.mode(mode)
-        .parquet(path)
-    )

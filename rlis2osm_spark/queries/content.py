@@ -506,8 +506,8 @@ ORACLES = {
 
 def x7_rolling_fingerprint(spark, sf_dir):
     """Winnowing fingerprint (rolling w-gram hashes, min-k sketch) over
-    deterministic vocabulary ids so DuckDB reproduces it exactly; the
-    xxhash64 production twin is operators/textstats.rolling_fingerprint."""
+    deterministic vocabulary ids so DuckDB reproduces it exactly
+    (operators/textstats.rolling_fingerprint_from_ids)."""
     from rlis2osm_spark.operators.textstats import rolling_fingerprint_from_ids
 
     wid = _word_ids(_words(spark, sf_dir, limit=200)).select(

@@ -341,8 +341,12 @@ def media_feature_legs(spark, sf_dir) -> dict:
             inputs=[f"{sf_dir}/documents.parquet"],
             code_modules=["rlis2osm_spark.functions.codecs", __name__],
         )
-        # n/4 partitions per slice: 7 unioned decode legs then launch
-        # ~1.75x shuffle-parallelism tasks total — enough to fill every
+        # each slice gets min(shuffle.partitions // 4, snapshot
+        # partitions) partitions: coalesce only merges, so a slice never
+        # has more partitions than the m1_payloads snapshot's file splits
+        # (4 under local[4] at sf0.001 with 32 shuffle partitions). Where
+        # the snapshot has enough, the 7 unioned decode legs launch
+        # ~1.75x shuffle-parallelism tasks in total — enough to fill every
         # core, without paying 7 x n python-worker roundtrips for the
         # many cheap-to-decode slices (per-task mapInPandas overhead
         # dominated the 7 x 64-task shape)

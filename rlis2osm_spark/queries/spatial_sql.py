@@ -3,9 +3,9 @@
 Coordinates are derived from integer keys with pure int arithmetic (exactly
 representable as doubles), so cells, distances, and ranks are
 bit-deterministic in both engines. The Spark side uses the *real* engine
-primitives (morton_cell / k_ring / point_in_polygon / point_segment_dist2);
-the SQL side re-derives them independently (shift-mask interleave, BETWEEN
-candidate bands, range CASE containment).
+primitives (morton_cell / explode_ring_coords / point_in_polygon /
+point_segment_dist2); the SQL side re-derives them independently
+(shift-mask interleave, BETWEEN candidate bands, range CASE containment).
 """
 
 from __future__ import annotations
@@ -141,7 +141,8 @@ FROM p
 
 def s5_knn_points(spark, sf_dir):
     """Bounded kNN: probe docs vs part-derived base points; ring candidates
-    via the real k_ring machinery, rank by exact integer-squared distance."""
+    via the real ring machinery (explode_ring_coords), rank by exact
+    integer-squared distance."""
     probes = _doc_points(spark, sf_dir).filter(F.col("doc_id") < 60)
     part = load(spark, sf_dir, "part")
     base = part.select(

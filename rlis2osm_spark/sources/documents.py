@@ -4,8 +4,8 @@ The engine-native table is ``documents(doc_id string, spans
 array<struct<kind,text,media_ref,offset>>)`` with a sidecar ``media`` blob
 table. Every operator here is a native column expression over the spans
 array (higher-order functions — no explode/shuffle for per-doc work, no
-Python), and every explode/re-assembly preserves the **span-sequence
-invariant** (kind, text, media_ref, order) per document.
+Python); ``span_signature`` is the **span-sequence invariant** (kind,
+text, media_ref, order) per document that any rewrite must preserve.
 
 At 100 TB the documents and media tables are Iceberg tables bucketed by
 ``doc_id`` / ``media_ref`` so the doc<->media join is co-partitioned.
@@ -15,23 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def text_attrs(spans: Column) -> Column:
-    """Parse ``k=v`` text spans into a map<string,string> (first '=' splits;
-    span order preserved by map insertion order irrelevance — lookups only).
-    """
-    texts = F.filter(spans, lambda s: s["kind"] == F.lit("text"))
-    entries = F.transform(
-        texts,
-        lambda s: F.struct(
-            F.substring_index(s["text"], "=", 1).alias("key"),
-            F.substr(
-                s["text"], F.instr(s["text"], "=") + F.lit(1), F.length(s["text"])
-            ).alias("value"),
-        ),
-    )
-    return F.map_from_entries(entries)
 
 
 def media_refs(spans: Column) -> Column:
@@ -61,106 +44,6 @@ def span_signature(spans: Column) -> Column:
             F.coalesce(s["media_ref"], F.lit("\x00")),
         ),
     )
-
-
-def explode_spans(docs: DataFrame) -> DataFrame:
-    """Span explode carrying position (E2-style posexplode): downstream
-    re-assembly sorts on ``offset``, so order survives any shuffle."""
-    return docs.select(
-        "doc_id", F.posexplode("spans").alias("pos", "span")
-    ).select(
-        "doc_id", "pos",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
-
-
-def reassemble_spans(exploded: DataFrame) -> DataFrame:
-    """Inverse of explode_spans: group back to one row per doc with spans in
-    offset order (sort_array on the leading offset field — SURVEY §1.4's
-    re-assembly contract)."""
-    return (
-        exploded.groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("offset", "kind", "text", "media_ref")
-                )
-            ).alias("_s")
-        )
-        .select(
-            "doc_id",
-            F.transform(
-                "_s",
-                lambda s: F.struct(
-                    s["kind"].alias("kind"),
-                    s["text"].alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                    s["offset"].alias("offset"),
-                ),
-            ).alias("spans"),
-        )
-    )
-
-
-def transform_text_spans(docs: DataFrame, text_fn,
-                         only_keys: list[str] | None = None) -> DataFrame:
-    """Rewrite the text payload of (selected) text spans IN PLACE — a pure
-    higher-order-function transform: kind/media_ref/offset of every span and
-    the span order are untouched (the order half of the sequence invariant),
-    no explode, no shuffle.
-
-    ``text_fn(text_col) -> Column``; ``only_keys`` restricts the rewrite to
-    ``k=v`` spans whose key matches."""
-    def rewrite(s):
-        new_text = text_fn(s["text"])
-        if only_keys is not None:
-            key = F.substring_index(s["text"], "=", 1)
-            new_text = F.when(key.isin(*only_keys), new_text).otherwise(s["text"])
-        return F.struct(
-            s["kind"].alias("kind"),
-            F.when(s["kind"] == "text", new_text).otherwise(s["text"])
-            .alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset"),
-        )
-
-    return docs.withColumn("spans", F.transform("spans", rewrite))
-
-
-def documents_to_rlis_frame(docs: DataFrame, media: DataFrame, src: str,
-                            int_cols: tuple = ()) -> DataFrame:
-    """Reconstruct a typed RLIS frame from interleaved documents: filter by
-    the doc_id namespace, pivot the k=v text spans through the attrs map
-    (native), join the geometry payload. The inverse of datagen's
-    document assembly — proves the doc-native path computes exactly what
-    the table path computes (tested in test_documents.py)."""
-    d = docs.filter(F.col("doc_id").startswith(f"{src}:"))
-    d = d.withColumn("_attrs", text_attrs(F.col("spans")))
-    d = attach_geometry(d, media)
-    d = d.withColumn(
-        "fid", F.split(F.col("doc_id"), ":").getItem(1).cast("long"))
-    return d, "_attrs"
-
-
-def frame_columns(df_attrs, columns: dict[str, str]) -> DataFrame:
-    """Materialize attrs-map entries as typed columns:
-    columns = {name: sparktype}. Integer targets route through double —
-    nullable int attributes serialize as '-2.0'-style strings (pandas
-    None-coercion in the synthesizer), which ANSI int casts reject."""
-    df, attrs_col = df_attrs
-
-    def typed(name, t):
-        v = F.element_at(F.col(attrs_col), name)
-        if t in ("int", "long", "bigint", "smallint"):
-            return v.cast("double").cast(t)
-        return v.cast(t)
-
-    return df.withColumns({
-        name: typed(name, t) for name, t in columns.items()
-    }).drop(attrs_col)
 
 
 def attach_geometry(docs: DataFrame, media: DataFrame,

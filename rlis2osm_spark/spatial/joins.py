@@ -1,6 +1,7 @@
-"""Spatial joins over the tile index: cell equi-join, point-in-polygon,
-kNN matching, raster<->vector join (north-rule operators; SURVEY §2.4 "joins
-absent from the reference but mandated").
+"""Spatial joins over the tile index: point-in-polygon and kNN matching
+(north-rule operators; SURVEY §2.4 "joins absent from the reference but
+mandated"). A raster<->vector join is a plain equi-join on the Morton
+``cell`` (the s6_raster_vector query).
 
 Design rules:
 - candidate generation is always a **cell equi-join** (shuffle on the Morton
@@ -25,17 +26,6 @@ from rlis2osm_spark.spatial.tiles import (
     explode_ring_coords,
     grid_coords,
 )
-
-
-# ---------------------------------------------------------------------------
-# raster<->vector (cell equi-join)
-# ---------------------------------------------------------------------------
-
-def raster_vector_join(vector_df: DataFrame, raster_df: DataFrame,
-                       how: str = "left") -> DataFrame:
-    """Raster tiles keyed by the same Morton cell join vector features as a
-    plain equi-join — rasters become just another cell-keyed table."""
-    return vector_df.join(raster_df, "cell", how)
 
 
 # ---------------------------------------------------------------------------
@@ -183,7 +173,7 @@ def knn_join(
     Plan: base keyed by its bbox-COVERING cells (not the midpoint — a long
     segment's midpoint cell can sit outside the probe ring even when the
     segment passes nearby; covering cells make ring candidacy independent
-    of segment length); probe explodes its k_ring -> cell equi-join ->
+    of segment length); probe explodes its 3x3 ring -> cell equi-join ->
     native exact distance -> per-probe window top-k.
     The window partitions by probe_id (uniform), so the skewed side is the
     candidate join — AQE skew-split applies.

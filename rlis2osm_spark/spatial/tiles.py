@@ -10,8 +10,8 @@ design S2 uses (Hilbert) and GeoParquet/BigQuery use (Z-order):
   interleaving) — JVM-side, whole-stage codegen, also expressible 1:1 in
   ANSI SQL for the DuckDB oracle;
 - cells at resolution R partition space into 2^R x 2^R tiles over a
-  configured bounding grid; ``k_ring`` gives the 3x3 neighborhood for
-  kNN candidate generation.
+  configured bounding grid; ``explode_ring_coords`` gives the 3x3
+  neighborhood for kNN candidate generation.
 
 Coordinate extraction from WKB geometry is the only Arrow step (pandas UDF,
 batched); everything downstream of (x, y) is native.
@@ -40,7 +40,6 @@ from rlis2osm_spark.functions import wkb
 # Portland-metro-ish EPSG:2913 extent (feet); any grid works as long as all
 # participants share it — it's a config, not data.
 DEFAULT_GRID = dict(x0=7_500_000.0, y0=550_000.0, extent=400_000.0)
-MAX_RES = 16
 
 
 @dataclass(frozen=True)
@@ -82,30 +81,9 @@ def grid_coords(x: Column, y: Column, res: int, grid: TileGrid = TileGrid()):
     return clamp(ix), clamp(iy)
 
 
-def tile_cell(x: Column, y: Column, res: int, grid: TileGrid = TileGrid()) -> Column:
-    """Tile assignment: (x, y) -> Morton cell id at resolution ``res``."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"resolution must be 0..{MAX_RES}")
-    ix, iy = grid_coords(x, y, res, grid)
-    return morton_cell(ix, iy)
-
-
 def parent_cell(cell: Column, levels: int = 1) -> Column:
     """Hierarchical rollup: each level halves resolution (cell >> 2)."""
     return F.shiftright(cell, 2 * levels)
-
-
-def k_ring(ix: Column, iy: Column, res: int) -> Column:
-    """3x3 neighborhood of a grid cell as an array of Morton ids (k=1 ring),
-    clipped at the grid edge. Native: explode for candidate joins."""
-    n = 1 << res
-    cells = []
-    for dx in (-1, 0, 1):
-        for dy in (-1, 0, 1):
-            nx, ny = ix + dx, iy + dy
-            valid = (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n)
-            cells.append(F.when(valid, morton_cell(nx, ny)))
-    return F.array_compact(F.array(*cells))
 
 
 _XY_SCHEMA = StructType(
@@ -140,17 +118,13 @@ def with_tile(
     res: int,
     geom_col: str = "geometry",
     grid: TileGrid = TileGrid(),
-    keep_xy: bool = True,
 ) -> DataFrame:
     """Assign each row its tile: geometry -> (x, y) via one Arrow pass,
     then native quantize + Morton interleave."""
     df = df.withColumn("_xy", geom_midpoint(F.col(geom_col)))
     df = df.withColumn("x", F.col("_xy.x")).withColumn("y", F.col("_xy.y")).drop("_xy")
     ix, iy = grid_coords(F.col("x"), F.col("y"), res, grid)
-    df = df.withColumns(
-        {"ix": ix, "iy": iy, "cell": morton_cell(ix, iy)}
-    )
-    return df if keep_xy else df.drop("x", "y")
+    return df.withColumns({"ix": ix, "iy": iy, "cell": morton_cell(ix, iy)})
 
 
 def explode_ring_coords(df: DataFrame, ix: Column, iy: Column) -> DataFrame:

@@ -7,18 +7,25 @@ import zlib
 import pytest
 
 from rlis2osm_spark.functions.codecs import (
-    PNG_SIG, _chunk, decode_png, decode_wav, encode_png, encode_wav)
+    PNG_SIG, _chunk, decode_png_ex, decode_wav, encode_png, encode_wav)
 
 
 def _pixels(w, h, seed=7):
     return bytes((seed * 31 + k * 13) % 256 for k in range(w * h))
 
 
+def _decode_gray(data):
+    """decode_png_ex on a grayscale stream -> (width, height, pixels)."""
+    w, h, nch, px = decode_png_ex(data)
+    assert nch == 1
+    return w, h, px
+
+
 @pytest.mark.parametrize("w,h", [(1, 1), (4, 4), (7, 3), (16, 9), (33, 2)])
 @pytest.mark.parametrize("ft", [0, 1, 2])
 def test_png_roundtrip(w, h, ft):
     px = _pixels(w, h)
-    assert decode_png(encode_png(w, h, px, ft)) == (w, h, px)
+    assert _decode_gray(encode_png(w, h, px, ft)) == (w, h, px)
 
 
 def test_png_decode_average_and_paeth_filters():
@@ -49,27 +56,28 @@ def test_png_decode_average_and_paeth_filters():
             + _chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
             + _chunk(b"IDAT", zlib.compress(bytes(raw)))
             + _chunk(b"IEND", b""))
-    assert decode_png(data) == (w, h, px)
+    assert _decode_gray(data) == (w, h, px)
 
 
 def test_png_rejects_unsupported():
     with pytest.raises(ValueError):
-        decode_png(b"not a png at all")
-    # 16-bit depth stays behind the seam (RGB/palette decode as of r5)
-    deep_ihdr = struct.pack(">IIBBBBB", 2, 2, 16, 0, 0, 0, 0)
-    data = (PNG_SIG + _chunk(b"IHDR", deep_ihdr) + _chunk(b"IEND", b""))
-    with pytest.raises(NotImplementedError):
-        decode_png(data)
+        decode_png_ex(b"not a png at all")
+    # 16-bit depth stays behind the seam, gray and color alike
+    for ctype in (0, 2, 4, 6):
+        deep_ihdr = struct.pack(">IIBBBBB", 2, 2, 16, ctype, 0, 0, 0)
+        data = (PNG_SIG + _chunk(b"IHDR", deep_ihdr) + _chunk(b"IEND", b""))
+        with pytest.raises(NotImplementedError, match="16-bit PNG"):
+            decode_png_ex(data)
     # a palette image without PLTE is malformed, loudly
     pal_ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0)
     data = (PNG_SIG + _chunk(b"IHDR", pal_ihdr) + _chunk(b"IEND", b""))
     with pytest.raises(ValueError, match="PLTE"):
-        decode_png(data)
+        decode_png_ex(data)
     # a supported header with NO IDAT is malformed input, not a zlib crash
     rgb_ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
     data = (PNG_SIG + _chunk(b"IHDR", rgb_ihdr) + _chunk(b"IEND", b""))
     with pytest.raises(ValueError, match="IDAT"):
-        decode_png(data)
+        decode_png_ex(data)
 
 
 def test_wav_roundtrip_and_clamp():
@@ -118,7 +126,7 @@ from hypothesis import given, settings, strategies as st  # noqa: E402
 )
 def test_png_roundtrip_property(w, h, ft, seed):
     px = bytes((seed * 31 + k * 7919) % 256 for k in range(w * h))
-    assert decode_png(encode_png(w, h, px, ft)) == (w, h, px)
+    assert _decode_gray(encode_png(w, h, px, ft)) == (w, h, px)
 
 
 @settings(max_examples=150, deadline=None, derandomize=True)
@@ -414,15 +422,15 @@ def test_avi_mjpeg_roundtrip_and_frame_decode():
     import numpy as np
 
     from rlis2osm_spark.functions.codecs import (
-        decode_avi_mjpeg, decode_jpeg_gray, encode_avi_mjpeg,
+        decode_avi_frames, decode_jpeg_gray, encode_avi_mjpeg,
         encode_jpeg_gray)
 
     w, h = 24, 16
     imgs = [_const_block_image(3, 2, seed=s) for s in range(5)]
     frames = [encode_jpeg_gray(w, h, im.tobytes()) for im in imgs]
     avi = encode_avi_mjpeg(frames, w, h, fps=12)
-    w2, h2, out = decode_avi_mjpeg(avi)
-    assert (w2, h2) == (w, h) and out == frames
+    w2, h2, codec, out = decode_avi_frames(avi)
+    assert (w2, h2, codec) == (w, h, "mjpg") and out == frames
     for f, im in zip(out, imgs):
         _, _, px = decode_jpeg_gray(f)
         assert np.array_equal(np.frombuffer(px, np.uint8).reshape(h, w), im)
@@ -430,17 +438,17 @@ def test_avi_mjpeg_roundtrip_and_frame_decode():
 
 def test_avi_rejects_and_seam():
     from rlis2osm_spark.functions.codecs import (
-        decode_avi_mjpeg, encode_avi_mjpeg, encode_jpeg_gray)
+        decode_avi_frames, encode_avi_mjpeg, encode_jpeg_gray)
 
     with pytest.raises(ValueError):
-        decode_avi_mjpeg(b"RIFF\x00\x00\x00\x00WAVE")  # not AVI
+        decode_avi_frames(b"RIFF\x00\x00\x00\x00WAVE")  # not AVI
     with pytest.raises(ValueError):
         encode_avi_mjpeg([], 8, 8)
     frame = encode_jpeg_gray(8, 8, bytes(64))
     avi = encode_avi_mjpeg([frame], 8, 8)
     h264 = avi.replace(b"vidsMJPG", b"vidsH264", 1)
     with pytest.raises(NotImplementedError, match="MJPG"):
-        decode_avi_mjpeg(h264)
+        decode_avi_frames(h264)
 
 
 def test_extract_video_frames_operator(spark):
@@ -740,8 +748,6 @@ def test_png_color_types_decode_all_filters(ctype, ch):
     every standard filter, with the left-neighbor at bpp distance."""
     import numpy as np
 
-    from rlis2osm_spark.functions.codecs import decode_png, decode_png_ex
-
     rng = np.random.default_rng(31)
     for w, h in [(1, 1), (5, 4), (16, 11)]:
         img = rng.integers(0, 256, (h, w, ch), dtype=np.uint8)
@@ -750,9 +756,6 @@ def test_png_color_types_decode_all_filters(ctype, ch):
         assert (dw, dh, nch) == (w, h, ch)
         assert np.array_equal(
             np.frombuffer(px, np.uint8).reshape(h, w, ch), img)
-    if ch != 1:
-        with pytest.raises(ValueError, match="grayscale API"):
-            decode_png(blob)
 
 
 def test_png_adam7_interlace_decode():
@@ -891,64 +894,13 @@ def test_png_sub_byte_depths_decode():
                           pal[vals])
 
 
-def test_png16_exact_decode():
-    """r5: 16-bit PNG decodes EXACTLY via decode_png16 (no 8-bit
-    truncation); filters run byte-level with the 2*channels distance."""
-    import struct as _st
-    import zlib as _zl
-
-    import numpy as np
-
-    from rlis2osm_spark.functions.codecs import decode_png16, decode_png_ex
-
-    def chunk(tag, body):
-        return (_st.pack(">I", len(body)) + tag + body
-                + _st.pack(">I", _zl.crc32(tag + body) & 0xFFFFFFFF))
-
-    rng = np.random.default_rng(7)
-    for ctype, ch in [(0, 1), (2, 3)]:
-        w, h = 7, 5
-        img = rng.integers(0, 1 << 16, (h, w, ch), dtype=np.uint16)
-        be = img.astype(">u2").tobytes()
-        rows = np.frombuffer(be, np.uint8).reshape(h, w * ch * 2)
-        raw = bytearray()
-        prior = np.zeros(w * ch * 2, dtype=np.int64)
-        bpp = ch * 2
-        for r in range(h):
-            row = rows[r].astype(np.int64)
-            ft = [0, 1, 2][r % 3]
-            if ft == 0:
-                enc = row
-            elif ft == 1:
-                left = np.concatenate([np.zeros(bpp, np.int64), row[:-bpp]])
-                enc = row - left
-            else:
-                enc = row - prior
-            raw.append(ft)
-            raw.extend((enc & 0xFF).astype(np.uint8).tobytes())
-            prior = row
-        ihdr = _st.pack(">IIBBBBB", w, h, 16, ctype, 0, 0, 0)
-        blob = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", _zl.compress(bytes(raw)))
-                + chunk(b"IEND", b""))
-        dw, dh, nch, px = decode_png16(blob)
-        assert (dw, dh, nch) == (w, h, ch)
-        assert np.array_equal(
-            np.frombuffer(px, "<u2").reshape(h, w, ch), img)
-        # the 8-bit API points at decode_png16, loudly
-        with pytest.raises(NotImplementedError, match="decode_png16"):
-            decode_png_ex(blob)
-
-
 def test_png_adam7_sub_byte_and_16bit():
-    """r5: Adam7 at sub-byte depths (per-pass bit packing) and Adam7
-    16-bit (via decode_png16) — independent writers again."""
+    """r5: Adam7 at sub-byte depths (per-pass bit packing) decodes —
+    independent writers again; Adam7 16-bit hits the codec seam."""
     import struct as _st
     import zlib as _zl
 
     import numpy as np
-
-    from rlis2osm_spark.functions.codecs import decode_png16, decode_png_ex
 
     passes = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
               (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
@@ -1009,9 +961,8 @@ def test_png_adam7_sub_byte_and_16bit():
     blob = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
             + chunk(b"IDAT", _zl.compress(bytes(raw)))
             + chunk(b"IEND", b""))
-    dw, dh, nch, px = decode_png16(blob)
-    assert (dw, dh, nch) == (w, h, 1)
-    assert np.array_equal(np.frombuffer(px, "<u2").reshape(h, w), img)
+    with pytest.raises(NotImplementedError, match="16-bit PNG"):
+        decode_png_ex(blob)
 
 
 def test_png_palette_decode():
@@ -1267,13 +1218,9 @@ def test_avi_raw_dib_roundtrip_and_codec_routing():
             assert nch == 3
             for c in range(3):  # B=G=R replication round-trips exactly
                 assert np.array_equal(rgb[:, :, c], gray)
-    # mjpeg still routes through the back-compat API
     jb = C.encode_jpeg_gray(16, 8, bytes(128 for _ in range(128)))
     mb = C.encode_avi_mjpeg([jb], 16, 8)
-    assert C.decode_avi_frames(mb)[2] == "mjpg"
-    assert len(C.decode_avi_mjpeg(mb)[2]) == 1
-    with pytest.raises(ValueError):
-        C.decode_avi_mjpeg(C.encode_avi_raw([bytes(128)], 16, 8))
+    assert C.decode_avi_frames(mb)[2:] == ("mjpg", [jb])
     with pytest.raises(NotImplementedError, match="XVID"):
         C.decode_avi_frames(mb.replace(b"vidsMJPG", b"vidsXVID"))
     # MS-RLE is a seam too, whether the handler names it or a zeroed

@@ -31,30 +31,9 @@ TEST_ONLY = {
     "functions/wkb.py:decode_linestring",
     "spatial/proj.py:lonlat_to_feet",
     "operators/similarity.py:brute_force_topk",
-    # capability no query, script or benchmark runs yet
-    "functions/codecs.py:decode_png",
-    "functions/codecs.py:decode_png16",
-    "functions/codecs.py:decode_avi_mjpeg",
-    "operators/dedup.py:exact_dedup",
-    "operators/dedup.py:ngram_jaccard_pairs",
-    "operators/dedup.py:simhash_dup_pairs",
-    "operators/multimodal.py:resize_stub",
-    "operators/multimodal.py:frame_sample_refs",
-    "operators/similarity.py:lsh_bucket_udf",
-    "operators/textstats.py:rolling_fingerprint",
-    "sources/catalog.py:decode_text_columns",
-    "sources/documents.py:explode_spans",
-    "sources/documents.py:reassemble_spans",
-    "sources/documents.py:transform_text_spans",
-    "sources/documents.py:documents_to_rlis_frame",
-    "sources/documents.py:frame_columns",
-    "spatial/joins.py:raster_vector_join",
+    # the trail->street snap that ROADMAP direction 2's certified
+    # (bound-then-expand) kNN join is to take over
     "spatial/joins.py:snap_trails_to_streets",
-    "spatial/tiles.py:tile_cell",
-    "spatial/tiles.py:k_ring",
-    # table layouts the tests assert; no production writer uses them yet
-    "plans/iceberg_shim.py:write_bucketed",
-    "plans/iceberg_shim.py:write_range_clustered",
 }
 
 

@@ -152,7 +152,8 @@ def test_dissolve_synth_end_to_end(spark, synth_dir):
 
 def test_dissolve_iterative_matches_unionfind(spark, synth_dir):
     """Scale-path CC (large-star/small-star) produces the same dissolve
-    groups as the per-group union-find."""
+    groups as the per-group union-find: with max_group_rows=0 every group
+    routes to the iterative path."""
     from rlis2osm_spark.operators.combine import combine
 
     streets = spark.read.parquet(f"{synth_dir}/streets.parquet")
@@ -160,7 +161,7 @@ def test_dissolve_iterative_matches_unionfind(spark, synth_dir):
     bikes = spark.read.parquet(f"{synth_dir}/bike_routes.parquet")
     combined = combine(streets, trails, bikes)
     a = dissolve_ways(combined).select("component_id", "n_members")
-    b = dissolve_ways(combined, algorithm="iterative").select(
+    b = dissolve_ways(combined, max_group_rows=0).select(
         "component_id", "n_members")
     ra = sorted((r.component_id, r.n_members) for r in a.collect())
     rb = sorted((r.component_id, r.n_members) for r in b.collect())
@@ -203,22 +204,20 @@ def test_dissolve_auto_routes_degenerate_group(spark):
                                           decode_lines(bytes(r.geometry)))))))
             for r in res.collect())
 
-    auto = dissolve_ways(df, algorithm="auto", max_group_rows=20)
-    uf = dissolve_ways(df, algorithm="unionfind")
+    auto = dissolve_ways(df, max_group_rows=20)
+    uf = dissolve_ways(df)  # default cap: every group takes union-find
     assert canon(auto) == canon(uf)
     # the degenerate group really did split into its two chains
     svc = [r for r in auto.collect() if r.highway == "service"]
     assert sorted(r.n_members for r in svc) == [10, 60]
     # ordered=True on the HYBRID path (fused small side + iterative big
     # side unioned) is still a deterministic total order (r5)
-    o1 = dissolve_ways(df, algorithm="auto", max_group_rows=20,
-                       ordered=True).collect()
-    o2 = dissolve_ways(df, algorithm="auto", max_group_rows=20,
-                       ordered=True).collect()
+    o1 = dissolve_ways(df, max_group_rows=20, ordered=True).collect()
+    o2 = dissolve_ways(df, max_group_rows=20, ordered=True).collect()
     assert [r.component_id for r in o1] == [r.component_id for r in o2]
     assert [r.component_id for r in o1] == sorted(
         r.component_id for r in o1)
-    assert canon(dissolve_ways(df, algorithm="auto", max_group_rows=20,
+    assert canon(dissolve_ways(df, max_group_rows=20,
                                ordered=True)) == canon(uf)
 
 

@@ -194,7 +194,7 @@ def test_fused_dissolve_single_shuffle(spark):
         (1, "residential", "Oak", _seg(1, 0, 2, 0)),
         (2, "tertiary", "Elm", _seg(5, 5, 6, 6)),
     ])
-    plan = dissolve_ways(df, algorithm="unionfind") \
+    plan = dissolve_ways(df, approx_rows=1) \
         ._jdf.queryExecution().executedPlan().toString()
     shuffles = re.findall(r"Exchange hashpartitioning\(([^,]*)", plan)
     assert len(shuffles) == 1, plan

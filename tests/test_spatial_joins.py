@@ -1,5 +1,4 @@
-"""Spatial join tests: PIP ray casting, kNN with exact distances,
-raster<->vector tile join."""
+"""Spatial join tests: PIP ray casting, kNN with exact distances."""
 
 import math
 
@@ -9,9 +8,8 @@ from rlis2osm_spark.spatial.joins import (
     knn_join,
     point_in_polygon,
     point_segment_dist2,
-    raster_vector_join,
 )
-from rlis2osm_spark.spatial.tiles import TileGrid, tile_cell
+from rlis2osm_spark.spatial.tiles import TileGrid
 
 
 def test_point_in_polygon_triangle(spark):
@@ -74,18 +72,6 @@ def test_knn_ring_candidates_cross_cells(spark):
     out = knn_join(probe, base, k=1, res=3, probe_id="pid", base_id="bid",
                    grid=grid).collect()
     assert [r.bid for r in out] == ["w"]
-
-
-def test_raster_vector_join(spark):
-    grid = TileGrid(0.0, 0.0, 1024.0)
-    vec = spark.createDataFrame([("v1", 100.0, 100.0), ("v2", 900.0, 900.0)],
-                                "id string, x double, y double")
-    vec = vec.withColumn("cell", tile_cell(F.col("x"), F.col("y"), 4, grid))
-    raster = vec.select("cell").distinct().withColumn(
-        "elevation", F.col("cell") % 100)
-    out = raster_vector_join(vec, raster).collect()
-    assert len(out) == 2
-    assert all(r.elevation == r.cell % 100 for r in out)
 
 
 def test_knn_salted_matches_unsalted(spark):

@@ -1,5 +1,5 @@
 """Z-order tile index tests: Morton parity with a reference implementation,
-hierarchy, k-ring, native-plan checks."""
+hierarchy, clamping, native-plan checks."""
 
 import numpy as np
 import pandas as pd
@@ -9,10 +9,8 @@ from rlis2osm_spark.functions.wkb import encode_linestring, encode_point
 from rlis2osm_spark.spatial.tiles import (
     TileGrid,
     grid_coords,
-    k_ring,
     morton_cell,
     parent_cell,
-    tile_cell,
     with_tile,
 )
 
@@ -48,21 +46,12 @@ def test_tile_cell_bounds_clamped(spark):
     g = TileGrid(0.0, 0.0, 1000.0)
     df = spark.createDataFrame(
         [(-50.0, -50.0), (999.9, 999.9), (2000.0, 2000.0)], "x double, y double")
-    out = df.select(tile_cell(F.col("x"), F.col("y"), 4, g).alias("c")).collect()
+    cell = morton_cell(*grid_coords(F.col("x"), F.col("y"), 4, g))
+    out = df.select(cell.alias("c")).collect()
     n = (1 << 4) - 1
     assert out[0].c == 0
     assert out[1].c == _morton_py(n, n)
     assert out[2].c == _morton_py(n, n)  # clamped, not wrapped
-
-
-def test_k_ring(spark):
-    g = TileGrid(0.0, 0.0, 1000.0)
-    df = spark.createDataFrame([(500.0, 500.0), (1.0, 1.0)], "x double, y double")
-    ix, iy = grid_coords(F.col("x"), F.col("y"), 4, g)
-    out = df.select(k_ring(ix, iy, 4).alias("ring")).collect()
-    assert len(out[0].ring) == 9  # interior cell: full 3x3
-    assert len(out[1].ring) == 4  # corner cell: clipped
-    assert len(set(out[0].ring)) == 9
 
 
 def test_with_tile_geometry(spark):
@@ -82,7 +71,8 @@ def test_tile_expr_is_native(spark):
     """Quantize+interleave must contain no Python UDF at all."""
     df = spark.createDataFrame([(1.0, 2.0)], "x double, y double")
     plan = (
-        df.select(tile_cell(F.col("x"), F.col("y"), 12).alias("c"))
+        df.select(morton_cell(*grid_coords(F.col("x"), F.col("y"), 12))
+                  .alias("c"))
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Python" not in plan and "Arrow" not in plan
