@@ -130,21 +130,6 @@ def endpoint_slices_batch(geoms) -> np.ndarray:
     return buf[offs[:, None] + np.arange(16)].reshape(n, 2, 16)
 
 
-def endpoints(wkb: bytes) -> tuple[float, float, float, float]:
-    """(fx, fy, tx, ty) of a single-part LineString — exact float values,
-    no snapping (dissolve.py:144-145). Raises on MultiGeometry, mirroring
-    the reference's explicit rejection (dissolve.py:137-142)."""
-    gtype, off = _read_header(wkb, 0)
-    if gtype != WKB_LINESTRING:
-        raise NotImplementedError(
-            "dissolve does not support MultiGeometries; explode to single "
-            "part first (reference parity: dissolve.py:137-142)")
-    (n,) = _U32.unpack_from(wkb, off)
-    fx, fy = struct.unpack_from("<2d", wkb, off + 4)
-    tx, ty = struct.unpack_from("<2d", wkb, off + 4 + 16 * (n - 1))
-    return fx, fy, tx, ty
-
-
 # ---------------------------------------------------------------------------
 # linemerge (shapely.ops.linemerge equivalent)
 # ---------------------------------------------------------------------------

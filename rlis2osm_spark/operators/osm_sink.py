@@ -57,15 +57,13 @@ def write_osm_xml(
     out_dir: str,
     geom_col: str = "geometry",
     tags_col: str = "tags",
-    reproject: bool = True,
 ) -> DataFrame:
     """Write one .osm fragment per partition; returns per-partition stats.
 
     Expects the sink-assembled frame (repair_and_filter_tags): a map<k,v>
     ``tags`` column with ''/null values already dropped (S9 semantics).
-    ``reproject=True`` converts EPSG:2913 feet to WGS84 lat/lon (the
-    reference's ``ogr2osm -e 2913`` step); False keeps source coordinates
-    (debug only — not valid OSM XML).
+    Coordinates are converted from EPSG:2913 feet to WGS84 lat/lon (the
+    reference's ``ogr2osm -e 2913`` step).
 
     Staged write (ADVICE r2): tasks emit ``part-*.osm.tmp``, the action
     runs EAGERLY here, and only after it succeeds are the previous
@@ -154,10 +152,7 @@ def write_osm_xml(
                 f"node id collision within fragment: {nid} for "
                 f"{tuple(uniq[where[0]])} vs {tuple(uniq[where[1]])}")
 
-        if reproject and n_uniq:
-            lons, lats = feet_to_lonlat(uniq[:, 0], uniq[:, 1])
-        else:
-            lons, lats = uniq[:, 0], uniq[:, 1]
+        lons, lats = feet_to_lonlat(uniq[:, 0], uniq[:, 1])
 
         id_strs = [str(i) for i in ids]
         # every <nd> line exists once per unique node; the way bodies below

@@ -78,7 +78,7 @@ def layer_expr(f_zlev: Column, t_zlev: Column) -> Column:
     )
 
 
-def translate_streets(df: DataFrame, strict: bool = True) -> DataFrame:
+def translate_streets(df: DataFrame) -> DataFrame:
     """T1-T12: street attributes -> OSM tag columns.
 
     Expects name parts already expanded (expand_street_names). Keeps
@@ -103,21 +103,18 @@ def translate_streets(df: DataFrame, strict: bool = True) -> DataFrame:
     )
 
     hw_lookup = F.element_at(literal_map(HIGHWAY_BY_TYPE), F.col("TYPE"))
-    if strict:
-        # T2 is a closed domain: unknown TYPE must fail loudly
-        # (plain dict access at translate.py:125 raises KeyError).
-        # Lazy-engine caveat: the raise_error lives inside the `highway`
-        # expression, so a plan that prunes that column (e.g. bare count())
-        # won't trip it; every real sink materializes highway and does.
-        hw_base = F.when(
-            hw_lookup.isNull(),
-            F.raise_error(
-                F.concat(F.lit("unknown street TYPE code: "),
-                         F.col("TYPE").cast("string"))
-            ),
-        ).otherwise(hw_lookup)
-    else:
-        hw_base = hw_lookup
+    # T2 is a closed domain: unknown TYPE must fail loudly
+    # (plain dict access at translate.py:125 raises KeyError).
+    # Lazy-engine caveat: the raise_error lives inside the `highway`
+    # expression, so a plan that prunes that column (e.g. bare count())
+    # won't trip it; every real sink materializes highway and does.
+    hw_base = F.when(
+        hw_lookup.isNull(),
+        F.raise_error(
+            F.concat(F.lit("unknown street TYPE code: "),
+                     F.col("TYPE").cast("string"))
+        ),
+    ).otherwise(hw_lookup)
 
     df = df.withColumns({"_name0": name_raw, "_hw0": hw_base})
 

@@ -55,15 +55,6 @@ def rlis_titlecase_names(spark, sf_dir):
     return part.select("p_partkey", make_titlecase_udf()(name).alias("name"))
 
 
-@F.pandas_udf(BinaryType())
-def _point_wkb(xs: pd.Series, ys: pd.Series) -> pd.Series:
-    from rlis2osm_spark.functions.wkb import encode_point
-
-    return pd.Series(
-        [encode_point(float(x), float(y)) for x, y in zip(xs, ys)],
-        dtype=object)
-
-
 def s2_tile_assignment_wkb(spark, sf_dir):
     """Flagship WKB path: identical coordinates packed as WKB points, run
     through the *real* geometry->midpoint->cell pipeline, emitted alongside
@@ -72,13 +63,14 @@ def s2_tile_assignment_wkb(spark, sf_dir):
     row, so the shared oracle pins WKB-path == arithmetic-path parity
     inside one result)."""
     ensure_package_on_workers(spark)
-    from rlis2osm_spark.spatial.tiles import grid_coords, morton_cell, with_tile
+    from rlis2osm_spark.spatial.tiles import (
+        grid_coords, morton_cell, point_wkb, with_tile)
 
     pts = spatial_sql._doc_points(spark, sf_dir)
     ixn, iyn = grid_coords(F.col("x"), F.col("y"),
                            spatial_sql.RES, spatial_sql.GRID)
     geo = pts.select("doc_id", morton_cell(ixn, iyn).alias("cell_native"),
-                     _point_wkb("x", "y").alias("geometry"))
+                     point_wkb("x", "y").alias("geometry"))
     tiled = with_tile(geo, spatial_sql.RES, grid=spatial_sql.GRID)
     return tiled.select(
         "doc_id", "ix", "iy", "cell", "cell_native",

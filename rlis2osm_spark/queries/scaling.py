@@ -11,25 +11,13 @@ kNN against the part-derived segment set, and a hierarchical rollup.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType
 
 from rlis2osm_spark.queries.util import load
-from rlis2osm_spark.queries.spatial_sql import GRID, _AX, _AY, _EXT
-from rlis2osm_spark.spatial.tiles import (
-    explode_ring_coords,
-    grid_coords,
-    with_tile,
-)
-
-
-@F.pandas_udf(BinaryType())
-def _pt_wkb(xs: pd.Series, ys: pd.Series) -> pd.Series:
-    from rlis2osm_spark.functions.wkb import encode_point
-
-    return pd.Series([encode_point(float(x), float(y))
-                      for x, y in zip(xs, ys)], dtype=object)
+from rlis2osm_spark.queries.spatial_sql import (
+    GRID, _AX, _AY, _EXT, _part_points)
+from rlis2osm_spark.spatial.joins import _ring_candidates
+from rlis2osm_spark.spatial.tiles import point_wkb, with_tile
 
 
 def expanded_points(spark, sf_dir: str, mult: int):
@@ -51,46 +39,36 @@ def expanded_points(spark, sf_dir: str, mult: int):
     )
 
 
-# res 5 -> ~180 candidates/probe: distance math dominates the fixed
-# per-doc shuffle, which is what makes the probe measure compute scaling
+# res 5 -> 16.8 candidates/probe at sf0.01 (1,078,195 over 64,000 docs at
+# mult=128), ~180 at sf0.1: the part-derived base grows with sf, so the
+# distance math per probe grows with it
 SCALE_RES = 5
 
 
 def scaling_flagship(spark, sf_dir: str, mult: int = 64):
     """tile-assign (WKB path) -> ring-kNN -> hierarchical rollup.
 
-    Shuffle-minimal by design (the 100 TB contract): generation and the
-    candidate join are narrow (broadcast base), nearest-neighbor selection
-    is ``min_by`` partial aggregation — map-side combine collapses the ~64
-    candidates per probe before anything hits the wire — and the only full
-    shuffle moves one row per document. A window top-k here would shuffle
-    every candidate row; that design measured 2-3x slower and capped
-    scaling at ~0.4 efficiency.
+    Shuffle-minimal by design (the 100 TB contract): generation is narrow,
+    the candidate join (``_ring_candidates``) broadcasts the base while it
+    fits the planner's broadcast threshold and shuffles on (cx, cy) once
+    it does not, nearest-neighbor selection is ``min_by`` partial
+    aggregation — map-side combine collapses the candidates of each probe
+    (16.8 on average at sf0.01) before anything hits the wire — and the
+    only full shuffle moves one row per document. A window top-k here
+    would shuffle every candidate row; that design measured 2-3x slower
+    and capped scaling at ~0.4 efficiency. ``n_matches`` counts candidates.
     """
     pts = expanded_points(spark, sf_dir, mult)
-    geo = pts.select("doc_id", _pt_wkb("x", "y").alias("geometry"))
+    geo = pts.select("doc_id", point_wkb("x", "y").alias("geometry"))
     tiled = with_tile(geo, SCALE_RES, grid=GRID)
-
-    part = load(spark, sf_dir, "part")
-    base = part.select(
-        "p_partkey",
-        ((F.col("p_partkey") * 40503 + 7) % _EXT).cast("double").alias("bx"),
-        ((F.col("p_partkey") * 69069 + 11) % _EXT).cast("double").alias("by"),
-    )
-    bix, biy = grid_coords(F.col("bx"), F.col("by"), SCALE_RES, GRID)
-    based = base.withColumns({"cx": bix, "cy": biy})
-
-    pix, piy = grid_coords(F.col("x"), F.col("y"), SCALE_RES, GRID)
-    cands = explode_ring_coords(
-        tiled.select("doc_id", "cell", "x", "y"), pix, piy
-    ).join(F.broadcast(based), ["cx", "cy"])
-    d2 = (F.col("x") - F.col("bx")) ** 2 + (F.col("y") - F.col("by")) ** 2
+    cands = _ring_candidates(tiled.select("doc_id", "cell", "x", "y"),
+                             _part_points(spark, sf_dir), SCALE_RES, GRID,
+                             "doc_id")
     nn = (
-        cands.withColumn("d2", d2)
-        .groupBy("doc_id")
+        cands.groupBy("doc_id")
         .agg(
-            F.min_by(F.struct("p_partkey", "d2"), F.struct("d2", "p_partkey"))
-            .alias("nn"),
+            F.min_by(F.struct("p_partkey", "dist2"),
+                     F.struct("dist2", "p_partkey")).alias("nn"),
             F.first("cell").alias("home_cell"),
             F.count("*").alias("n_cands"),
         )
@@ -98,7 +76,7 @@ def scaling_flagship(spark, sf_dir: str, mult: int = 64):
     return (
         nn.groupBy(F.shiftright("home_cell", 4).alias("macro_cell"))
         .agg(F.count("*").alias("n_docs"),
-             F.sum(F.col("nn.d2").cast("long")).alias("sum_d2"),
+             F.sum(F.col("nn.dist2").cast("long")).alias("sum_d2"),
              F.sum("n_cands").alias("n_matches"))
     )
 

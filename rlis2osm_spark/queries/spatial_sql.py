@@ -3,21 +3,23 @@
 Coordinates are derived from integer keys with pure int arithmetic (exactly
 representable as doubles), so cells, distances, and ranks are
 bit-deterministic in both engines. The Spark side uses the *real* engine
-primitives (morton_cell / explode_ring_coords / point_in_polygon /
-point_segment_dist2); the SQL side re-derives them independently
+primitives (morton_cell / knn_join / within_distance_join /
+point_in_polygon); the SQL side re-derives them independently
 (shift-mask interleave, BETWEEN candidate bands, range CASE containment).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from rlis2osm_spark.queries.util import load
-from rlis2osm_spark.spatial.joins import point_in_polygon, point_segment_dist2
+from rlis2osm_spark.spatial.joins import (
+    knn_join,
+    point_in_polygon,
+    within_distance_join,
+)
 from rlis2osm_spark.spatial.tiles import (
     TileGrid,
-    explode_ring_coords,
     grid_coords,
     morton_cell,
 )
@@ -139,38 +141,26 @@ FROM p
 """
 
 
-def s5_knn_points(spark, sf_dir):
-    """Bounded kNN: probe docs vs part-derived base points; ring candidates
-    via the real ring machinery (explode_ring_coords), rank by exact
-    integer-squared distance."""
-    probes = _doc_points(spark, sf_dir).filter(F.col("doc_id") < 60)
+def _part_points(spark, sf_dir):
+    """Base points derived from part keys, as the degenerate segments
+    (p_partkey, x1, y1, x2, y2) the ring-candidate joins take."""
     part = load(spark, sf_dir, "part")
-    base = part.select(
-        "p_partkey",
-        ((F.col("p_partkey") * 40503 + 7) % _EXT).cast("double").alias("bx"),
-        ((F.col("p_partkey") * 69069 + 11) % _EXT).cast("double").alias("by"),
-    )
-    bix, biy = grid_coords(F.col("bx"), F.col("by"), RES, GRID)
-    based = base.withColumns({"cx": bix, "cy": biy})
+    x = ((F.col("p_partkey") * 40503 + 7) % _EXT).cast("double")
+    y = ((F.col("p_partkey") * 69069 + 11) % _EXT).cast("double")
+    return part.select("p_partkey", x.alias("x1"), y.alias("y1"),
+                       x.alias("x2"), y.alias("y2"))
 
-    pix, piy = grid_coords(F.col("x"), F.col("y"), RES, GRID)
-    # the ring-exploded probe set is tiny (60 probes x 9 cells) — pin the
-    # broadcast so the 20k-row base never shuffles (r3, VERDICT r2 #4)
-    cands = F.broadcast(explode_ring_coords(
-        probes.select("doc_id", "x", "y"), pix, piy
-    )).join(based, ["cx", "cy"])
 
-    d2 = point_segment_dist2(
-        F.col("x"), F.col("y"), F.col("bx"), F.col("by"),
-        F.col("bx"), F.col("by"))  # degenerate segment == point distance
-    w = Window.partitionBy("doc_id").orderBy(F.asc("d2"), F.asc("p_partkey"))
-    return (
-        cands.withColumn("d2", d2)
-        .withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= 3)
-        .select("doc_id", "p_partkey", F.col("d2").cast("long").alias("d2"),
-                "knn_rank")
-    )
+def s5_knn_points(spark, sf_dir):
+    """Bounded kNN: the 3 nearest part-derived base points of each of 60
+    probe docs through the engine's ring kNN (``knn_join``), ranked by
+    exact integer-squared distance."""
+    probes = _doc_points(spark, sf_dir).filter(F.col("doc_id") < 60)
+    return knn_join(probes, _part_points(spark, sf_dir), k=3, res=RES,
+                    probe_id="doc_id", base_id="p_partkey", grid=GRID
+                    ).select("doc_id", "p_partkey",
+                             F.col("dist2").cast("long").alias("d2"),
+                             "knn_rank")
 
 
 _S5_SQL = f"""
@@ -380,8 +370,6 @@ def s9_within_distance(spark, sf_dir):
     coordinates keep the distance arithmetic bit-identical across engines;
     the oracle brute-forces all pairs, so equality also proves ring-candidate
     completeness."""
-    from rlis2osm_spark.spatial.joins import within_distance_join
-
     pts = _doc_points(spark, sf_dir).filter(F.col("doc_id") < 1500).select(
         F.col("doc_id").alias("pid"), "x", "y")
     p = F.col("p_partkey")

@@ -46,14 +46,11 @@ def span_signature(spans: Column) -> Column:
     )
 
 
-def attach_geometry(docs: DataFrame, media: DataFrame,
-                    broadcast_media: bool = False) -> DataFrame:
+def attach_geometry(docs: DataFrame, media: DataFrame) -> DataFrame:
     """Join each document to its geometry payload via the first media span.
 
     At scale: both tables bucketed by the join key -> no shuffle; locally a
     plain equi-join (broadcast if the media side is small)."""
     keyed = docs.withColumn("media_ref", first_media_ref(F.col("spans")))
     m = media.select("media_ref", F.col("payload").alias("geometry"))
-    if broadcast_media:
-        m = F.broadcast(m)
     return keyed.join(m, "media_ref", "left")

@@ -95,53 +95,8 @@ def point_in_polygon(
 
 
 # ---------------------------------------------------------------------------
-# kNN (e.g. trail -> nearest streets snapping)
+# ring-candidate kNN and radius joins
 # ---------------------------------------------------------------------------
-
-def snap_trails_to_streets(
-    trails: DataFrame,
-    streets: DataFrame,
-    res: int = 10,
-    k: int = 1,
-    grid: TileGrid = TileGrid(),
-) -> DataFrame:
-    """North-star convenience: nearest-street matching for trail snapping.
-
-    trails/streets are WKB-geometry frames (``fid``, ``geometry``); trails
-    snap by representative point, streets match as exact segments. Returns
-    (trail_fid, street_fid, dist2, knn_rank).
-    """
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType, StructField as SF, StructType as ST)
-
-    from rlis2osm_spark.functions import wkb as _wkb
-    from rlis2osm_spark.spatial.tiles import geom_midpoint
-
-    seg_schema = ST([SF("x1", DoubleType()), SF("y1", DoubleType()),
-                     SF("x2", DoubleType()), SF("y2", DoubleType())])
-
-    @F.pandas_udf(seg_schema)
-    def seg_ends(geoms: pd.Series) -> pd.DataFrame:
-        rows = []
-        for g in geoms:
-            if g is None:
-                rows.append((None, None, None, None))
-            else:
-                rows.append(_wkb.endpoints(bytes(g)))
-        return pd.DataFrame(rows, columns=["x1", "y1", "x2", "y2"])
-
-    probe = trails.withColumn("_xy", geom_midpoint(F.col("geometry"))).select(
-        F.col("fid").alias("trail_fid"),
-        F.col("_xy.x").alias("x"), F.col("_xy.y").alias("y"))
-    base = streets.withColumn("_s", seg_ends(F.col("geometry"))).select(
-        F.col("fid").alias("street_fid"),
-        F.col("_s.x1").alias("x1"), F.col("_s.y1").alias("y1"),
-        F.col("_s.x2").alias("x2"), F.col("_s.y2").alias("y2"))
-    return knn_join(probe, base, k=k, res=res, probe_id="trail_fid",
-                    base_id="street_fid", grid=grid).select(
-        "trail_fid", "street_fid", "dist2", "knn_rank")
-
 
 def point_segment_dist2(px: Column, py: Column, x1: Column, y1: Column,
                         x2: Column, y2: Column) -> Column:
@@ -153,6 +108,50 @@ def point_segment_dist2(px: Column, py: Column, x1: Column, y1: Column,
     cx = x1 + t * dx
     cy = y1 + t * dy
     return (px - cx) * (px - cx) + (py - cy) * (py - cy)
+
+
+def _ring_candidates(
+    probe: DataFrame,
+    base: DataFrame,
+    res: int,
+    grid: TileGrid,
+    probe_id: str,
+    n_salts: int = 1,
+) -> DataFrame:
+    """Every (probe point, base segment) pair that meets in the probe
+    cell's 3x3 ring, with the exact squared distance ``dist2``: the one
+    candidate generator of the kNN and radius joins.
+
+    probe: (probe_id, x, y, ...); base: (x1, y1, x2, y2, ...), a point being
+    the degenerate segment x1 == x2, y1 == y2. Other columns pass through.
+    The base is keyed by its bbox-COVERING cells, not the midpoint: a long
+    segment's midpoint cell can sit outside the probe ring even when the
+    segment passes nearby, and covering cells make ring candidacy
+    independent of segment length. A segment that covers 2+ ring cells
+    yields one row per cell, so callers that need one row per pair dedup.
+    Which side broadcasts is the planner's choice from the inputs' sizes.
+    """
+    based = _segment_cells(base, res, grid, prefix="")
+    pix, piy = grid_coords(F.col("x"), F.col("y"), res, grid)
+    probed = explode_ring_coords(probe, pix, piy)
+
+    join_keys = ["cx", "cy"]
+    if n_salts > 1:
+        # explicit skew salting for a shuffle-side candidate join
+        # (hot downtown cells): replicate the base across n_salts shuffle
+        # keys, give each probe one deterministic salt — same candidate
+        # set, n_salts-way fan-out of the hottest reducer.
+        based = based.withColumn(
+            "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
+        probed = probed.withColumn(
+            "salt", F.pmod(F.xxhash64(F.col(probe_id)), F.lit(n_salts)))
+        join_keys = ["cx", "cy", "salt"]
+
+    d2 = point_segment_dist2(
+        F.col("x"), F.col("y"),
+        F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"),
+    )
+    return probed.join(based, join_keys).withColumn("dist2", d2)
 
 
 def knn_join(
@@ -170,42 +169,17 @@ def knn_join(
     expected nearest-neighbor distance).
 
     probe: (probe_id, x, y); base: (base_id, x1, y1, x2, y2).
-    Plan: base keyed by its bbox-COVERING cells (not the midpoint — a long
-    segment's midpoint cell can sit outside the probe ring even when the
-    segment passes nearby; covering cells make ring candidacy independent
-    of segment length); probe explodes its 3x3 ring -> cell equi-join ->
-    native exact distance -> per-probe window top-k.
+    Plan: ``_ring_candidates`` -> per-probe window top-k.
     The window partitions by probe_id (uniform), so the skewed side is the
     candidate join — AQE skew-split applies.
     """
-    based = _segment_cells(base, res, grid, prefix="")
-
-    pix, piy = grid_coords(F.col("x"), F.col("y"), res, grid)
-    probed = explode_ring_coords(probe.select(probe_id, "x", "y"), pix, piy)
-
-    join_keys = ["cx", "cy"]
-    if n_salts > 1:
-        # explicit skew salting for a shuffle-side candidate join
-        # (hot downtown cells): replicate the base across n_salts shuffle
-        # keys, give each probe one deterministic salt — same candidate
-        # set, n_salts-way fan-out of the hottest reducer.
-        based = based.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
-        probed = probed.withColumn(
-            "salt", F.pmod(F.xxhash64(F.col(probe_id)), F.lit(n_salts)))
-        join_keys = ["cx", "cy", "salt"]
-
-    cands = probed.join(based, join_keys)
-
-    d2 = point_segment_dist2(
-        F.col("x"), F.col("y"),
-        F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"),
-    )
+    cands = _ring_candidates(probe.select(probe_id, "x", "y"), base, res,
+                             grid, probe_id, n_salts)
     w = Window.partitionBy(probe_id).orderBy(
         F.asc("dist2"), F.asc(base_id)  # deterministic tie-break
     )
     return (
-        cands.withColumn("dist2", d2)
+        cands
         # ONE exchange for dedup + ranking: hash on probe_id satisfies both
         # the (probe_id, base_id) clustering the dedup aggregate needs and
         # the window's probe_id clustering — without this, dropDuplicates
@@ -453,13 +427,12 @@ def within_distance_join(
 ) -> DataFrame:
     """Radius search: every (probe, base-segment) pair within ``radius``.
 
-    Same candidate machinery as ``knn_join`` (base keyed by bbox-covering
-    cells, probe 3x3 ring, cell equi-join, native exact distance) but with
-    a distance predicate instead of a ranking window — so it needs NO
-    window at all: candidates -> filter -> one probe-keyed exchange for
-    the pair dedup. ``res`` must be chosen so the cell size is >= radius
-    (ring completeness — with covering-cell keying this is sufficient for
-    ANY segment length: the nearest segment point within radius lies in a
+    Same candidates as ``knn_join`` (``_ring_candidates``) but with a
+    distance predicate instead of a ranking window — so it needs NO window
+    at all: candidates -> filter -> one probe-keyed exchange for the pair
+    dedup. ``res`` must be chosen so the cell size is >= radius (ring
+    completeness — with covering-cell keying this is sufficient for ANY
+    segment length: the nearest segment point within radius lies in a
     covering cell at most one cell away); violating it raises.
     """
     size = grid.cell_size(res)
@@ -467,16 +440,10 @@ def within_distance_join(
         raise ValueError(
             f"radius {radius} exceeds cell size {size} at res={res}; "
             "use a coarser res (ring candidates would miss pairs)")
-    based = _segment_cells(base, res, grid, prefix="")
-    pix, piy = grid_coords(F.col("x"), F.col("y"), res, grid)
-    probed = explode_ring_coords(probe.select(probe_id, "x", "y"), pix, piy)
-    cands = probed.join(based, ["cx", "cy"])
-    d2 = point_segment_dist2(
-        F.col("x"), F.col("y"),
-        F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"))
+    cands = _ring_candidates(probe.select(probe_id, "x", "y"), base, res,
+                             grid, probe_id)
     return (
-        cands.withColumn("dist2", d2)
-        .filter(F.col("dist2") <= radius * radius)
+        cands.filter(F.col("dist2") <= radius * radius)
         .select(probe_id, base_id, "dist2")
         .repartition(F.col(probe_id))
         .dropDuplicates([probe_id, base_id])

@@ -11,7 +11,8 @@ design S2 uses (Hilbert) and GeoParquet/BigQuery use (Z-order):
   ANSI SQL for the DuckDB oracle;
 - cells at resolution R partition space into 2^R x 2^R tiles over a
   configured bounding grid; ``explode_ring_coords`` gives the 3x3
-  neighborhood for kNN candidate generation.
+  neighborhood that ``joins._ring_candidates``, the one candidate
+  generator of the kNN and radius joins, keys its join on.
 
 Coordinate extraction from WKB geometry is the only Arrow step (pandas UDF,
 batched); everything downstream of (x, y) is native.
@@ -20,9 +21,9 @@ At 100 TB: ``cell`` is the partition/bucket column (Iceberg
 ``bucket(N, cell)`` or directory partitioning on a cell prefix), so spatial
 predicates become partition pruning, and cell-keyed joins co-locate without
 a second shuffle. Downtown-vs-rural skew: cell-keyed aggregations absorb it
-in their map-side partial aggregation, and candidate joins salt the hot
-cells explicitly (``joins.knn_join(n_salts=)``), with AQE skew-join as the
-backstop.
+in their map-side partial aggregation, and the ring-candidate join salts
+the hot cells explicitly (``joins.knn_join(n_salts=)``), with AQE skew-join
+as the backstop.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType, DoubleType
+from pyspark.sql.types import BinaryType, StructField, StructType, DoubleType
 
 from rlis2osm_spark.functions import wkb
 
@@ -111,6 +112,14 @@ def geom_midpoint(geoms: pd.Series) -> pd.DataFrame:
             xs[i] = (allc[:, 0].min() + allc[:, 0].max()) / 2.0
             ys[i] = (allc[:, 1].min() + allc[:, 1].max()) / 2.0
     return pd.DataFrame({"x": xs, "y": ys})
+
+
+@F.pandas_udf(BinaryType())
+def point_wkb(xs: pd.Series, ys: pd.Series) -> pd.Series:
+    """WKB Point of each (x, y) (Arrow-batched): how derived coordinates
+    enter the geometry -> ``geom_midpoint`` -> cell path."""
+    return pd.Series([wkb.encode_point(float(x), float(y))
+                      for x, y in zip(xs, ys)], dtype=object)
 
 
 def with_tile(

@@ -31,9 +31,6 @@ TEST_ONLY = {
     "functions/wkb.py:decode_linestring",
     "spatial/proj.py:lonlat_to_feet",
     "operators/similarity.py:brute_force_topk",
-    # the trail->street snap that ROADMAP direction 2's certified
-    # (bound-then-expand) kNN join is to take over
-    "spatial/joins.py:snap_trails_to_streets",
 }
 
 

@@ -4,6 +4,7 @@ fixtures."""
 
 import re
 
+import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from rlis2osm_spark.functions.expand import (
@@ -86,7 +87,8 @@ def test_wkb_roundtrip(pts):
     dec = wkb.decode_linestring(enc)
     assert [(float(x), float(y)) for x, y in dec] == [
         (float(x), float(y)) for x, y in pts]
-    fx, fy, tx, ty = wkb.endpoints(enc)
+    fx, fy, tx, ty = np.frombuffer(
+        wkb.endpoint_slices_batch([enc]).tobytes(), "<f8")
     assert (fx, fy) == (float(pts[0][0]), float(pts[0][1]))
     assert (tx, ty) == (float(pts[-1][0]), float(pts[-1][1]))
 

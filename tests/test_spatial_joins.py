@@ -100,25 +100,6 @@ def test_knn_salted_matches_unsalted(spark):
     assert "salt" in plan
 
 
-def test_snap_trails_to_streets_synth(spark, synth_dir):
-    """North-star trail snapping over the synthetic RLIS tables: every
-    trail inside the street grid's ring radius gets its nearest street."""
-    from rlis2osm_spark.spatial.joins import snap_trails_to_streets
-    from rlis2osm_spark.spatial.tiles import TileGrid
-
-    streets = spark.read.parquet(f"{synth_dir}/streets.parquet")
-    trails = spark.read.parquet(f"{synth_dir}/trails.parquet")
-    grid = TileGrid()  # default metro grid covers the synth extent
-    out = snap_trails_to_streets(trails, streets, res=6, k=1, grid=grid)
-    rows = out.collect()
-    assert len(rows) > 0
-    assert all(r.knn_rank == 1 for r in rows)
-    assert all(r.dist2 >= 0 for r in rows)
-    # each matched trail appears exactly once at k=1
-    ids = [r.trail_fid for r in rows]
-    assert len(ids) == len(set(ids))
-
-
 def test_polygon_cell_join_matches_broadcast_pip(spark):
     """The distributed polygon JOIN (cell candidates + per-candidate ray
     cast) assigns exactly what the broadcast-list PIP assigns, with the
