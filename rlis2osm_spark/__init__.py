@@ -6,7 +6,9 @@ Spark DataFrame engine, generalized to web scale per BASELINE.json:
 
 - interleaved text+media document tables
   (``doc_id string, spans array<struct<kind,text,media_ref,offset>>``)
-- vectorized pandas/Arrow UDFs only (no per-row Python in the hot path)
+- vectorized Arrow UDFs only; the conversion's kernels (dissolve, tile
+  midpoints, OSM sink) read Arrow buffers with numpy, with no Python
+  object per row (per output component or unique node at most)
 - Z-order (Morton) hierarchical tile index implemented with *native* column
   expressions (JVM-side, whole-stage-codegen friendly), point-in-polygon,
   kNN, raster<->vector tile joins

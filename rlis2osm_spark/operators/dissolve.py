@@ -15,16 +15,17 @@ single-path BFS (dissolve.py:51-160) — the documented scalability wall. Here:
   exact greedy-BFS emulation (``algorithm="greedy"``, r3) covers users who
   need byte-parity with reference output on forked topologies.
   Components are computed with a per-group union-find inside an Arrow
-  partition pass: a tag-group (one street name + identical tags) is
-  city-sized, so a pandas group fits comfortably; the shuffle key is the
-  tag-group hash, which is exactly the explicit-partitioning contract the
-  north rule asks for.
+  partition pass (``mapInArrow``, reading the WKB straight from the
+  binary column's buffers): a tag-group (one street name + identical
+  tags) is city-sized, so a group fits a worker comfortably; the shuffle
+  key is the tag-group hash, which is exactly the explicit-partitioning
+  contract the north rule asks for.
 - **A1/A2 merge, FUSED with CC (r5)**: when every group fits a worker the
   payload repartitions by group_key ONCE and union-find + way_id-ordered
   linemerge + first-row tags all happen inside that partition — the
   unfused shape (node self-join, comps merge join, component groupBy)
   moved the full payload through three exchanges and two sorts. The
-  greedy compat mode is fused the same way (its applyInPandas grouping
+  greedy compat mode is fused the same way (its applyInArrow grouping
   IS the one payload exchange). Routed degenerate groups still use
   groupBy component -> sorted collect_list -> Arrow-batched linemerge
   after iterative CC.
@@ -42,13 +43,15 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType, LongType, StructField, StructType,
+    BinaryType, IntegerType, LongType, StructField, StructType,
 )
 
 from rlis2osm_spark.functions import wkb
+from rlis2osm_spark.plans.iceberg_shim import file_row_counts
 from rlis2osm_spark.schemas import COMBINED_FIELDS
 
 _NULL_SENTINEL = "\x00<null>"
@@ -111,20 +114,25 @@ def _group_node_ids(gk: np.ndarray, node_bits: np.ndarray,
     node payload viewed as ``(rows, 2)`` int64 bit patterns (exact-byte
     equality — ±0.0 stay distinct, like the dict interning it replaces).
     Returns (per-row node index, number of distinct nodes)."""
-    trip = np.empty((len(gk), 3), np.int64)
-    trip[:, 0] = gk
-    trip[:, 1:] = node_bits
-    rec = np.ascontiguousarray(trip).view(
-        [("g", "<i8"), ("a", "<i8"), ("b", "<i8")]).ravel()
-    uniq, inverse = np.unique(rec, return_inverse=True)
-    return inverse, len(uniq)
+    ids = pd.DataFrame({"g": gk, "a": node_bits[:, 0], "b": node_bits[:, 1]}
+                       ).groupby(["g", "a", "b"], sort=False).ngroup()
+    ids = ids.to_numpy(np.int64)
+    return ids, int(ids.max()) + 1 if len(ids) else 0
 
 
-def _fused_dissolve_partitions(dissolve_fields: list[str], geom_col: str,
-                               field_kinds: dict[str, str]):
-    """mapInPandas driver for the fused union-find + merge path (r5): a
+def _arrow_input(table: pa.Table, geom_col: str) -> pa.Table:
+    """One contiguous chunk per column; geometry gets 64-bit offsets, since
+    a partition's WKB payload may pass 2 GiB."""
+    i = table.schema.get_field_index(geom_col)
+    return table.set_column(
+        i, geom_col, table[geom_col].cast(pa.large_binary())
+    ).combine_chunks()
+
+
+def _fused_dissolve_partitions(dissolve_fields: list[str], geom_col: str):
+    """mapInArrow driver for the fused union-find + merge path (r5): a
     partition holds WHOLE tag-groups' payload rows; one pass slices the
-    endpoint nodes straight from the WKB bytes (same 16-byte ranges the
+    endpoint nodes straight from the WKB buffer (same 16-byte ranges the
     native substring path uses), unions same-node ways per group, then
     linemerges each component's way_id-ordered members and emits the
     merged row with the first member's tags — identical output to a
@@ -133,32 +141,29 @@ def _fused_dissolve_partitions(dissolve_fields: list[str], geom_col: str,
     times (node self-join exchange + merge-join exchange + component
     groupBy exchange)."""
 
-    def run(frames):
-        pdfs = [p for p in frames]
-        if not pdfs:
+    def run(batches):
+        batches = list(batches)
+        if not any(b.num_rows for b in batches):
             return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        comp = _fused_components(pdf, geom_col)
-        yield _merge_component_rows(pdf, comp, dissolve_fields,
-                                    geom_col, field_kinds)
+        table = _arrow_input(pa.Table.from_batches(batches), geom_col)
+        comp = _fused_components(table, geom_col)
+        yield _merge_component_rows(table, comp, dissolve_fields, geom_col)
 
     return run
 
 
-def _fused_components(pdf: pd.DataFrame, geom_col: str) -> np.ndarray:
+def _fused_components(table: pa.Table, geom_col: str) -> np.ndarray:
     """Per-payload-row component ids (min way_id of the endpoint-connected
     same-group ways — identical labels to the r1-r5 dict union-find), all
-    numpy (r6): endpoint payloads sliced in one fancy-indexed gather
-    (wkb.endpoint_slices_batch), (group_key, node) keys densified, CC over
-    the bipartite way-node graph — no per-row Python."""
-    way_ids = pdf["way_id"].to_numpy(np.int64)
-    way_codes, way_uniques = pd.factorize(way_ids)
+    numpy (r6): endpoint payloads gathered from the WKB buffer in one
+    fancy-indexed pass (wkb.endpoint_slices_batch), (group_key, node) keys
+    densified, CC over the bipartite way-node graph — no per-row Python."""
+    way_codes, way_uniques = pd.factorize(table["way_id"].to_numpy())
     way_uniques = np.asarray(way_uniques, np.int64)
     n_ways = len(way_uniques)
-    ends = wkb.endpoint_slices_batch(
-        [bytes(g) for g in pdf[geom_col]])          # (n, 2, 16) uint8
+    ends = wkb.endpoint_slices_batch(table[geom_col].chunk(0))  # (n, 2, 16)
     node_bits = ends.reshape(-1, 16).view("<i8")    # (2n, 2) int64
-    gk2 = np.repeat(pdf["group_key"].to_numpy(np.int64), 2)
+    gk2 = np.repeat(table["group_key"].to_numpy(), 2)
     node_idx, m = _group_node_ids(gk2, node_bits)
     # bipartite edges: each endpoint node -> its way vertex
     labels = _cc_labels(
@@ -170,79 +175,172 @@ def _fused_components(pdf: pd.DataFrame, geom_col: str) -> np.ndarray:
     return min_way[comp_way][way_codes]
 
 
-def _merge_component_rows(pdf: pd.DataFrame, comp: np.ndarray,
-                          dissolve_fields: list[str], geom_col: str,
-                          field_kinds: dict[str, str]) -> pd.DataFrame:
+def _merge_component_rows(table: pa.Table, comp: np.ndarray,
+                          dissolve_fields: list[str],
+                          geom_col: str) -> pa.RecordBatch:
     """Shared merge step of the fused dissolve paths: given payload rows
-    and a per-row component-id array, emit one merged row per component
-    (way_id-ordered linemerge, first member's tags). r6: grouping is one
-    stable lexsort + boundary scan; only the linemerge itself (one call
-    per OUTPUT component) remains Python."""
-    ways = pdf["way_id"].to_numpy(np.int64)
-    geoms = pdf[geom_col].to_numpy()
-    order = np.lexsort((ways, comp))        # stable: ties keep row order
+    (``_arrow_input``) and a per-row component-id array, emit one merged
+    row per component (way_id-ordered linemerge, first member's tags).
+    Grouping is one stable lexsort + boundary scan; tags and single-member
+    geometries are Arrow ``take``s and simple-path components merge in one
+    batched pass (``_merge_paths``), so only a component with a fork, a
+    cycle or a malformed member pays a Python linemerge."""
+    order = np.lexsort((table["way_id"].to_numpy(), comp))  # stable
     comp_sorted = comp[order]
     bounds = np.flatnonzero(
         np.r_[True, comp_sorted[1:] != comp_sorted[:-1]])
     ends = np.r_[bounds[1:], len(order)]
-    comp_ids = comp_sorted[bounds]
     first_idx = order[bounds]               # min-way_id row per component
     n_members = ends - bounds
-    # r7 (guide §1.2 per-task work): most components are single-member on
-    # real street topologies, and linemerge of ONE plain little-endian
-    # LineString is byte-identical to its input (encode_linestring writes
-    # exactly header+count+raw coords, decode reads the same bytes back) —
-    # so the decode->concat->encode round trip is skipped when the blob's
-    # header is exactly (0x01, type=2, no flag bits) and its length matches
-    # the declared point count. Multi-member components and multi/flagged/
-    # oversized blobs take the full merge path unchanged.
-    merged = []
-    for s, e in zip(bounds, ends):
-        if e - s == 1:
-            b = bytes(geoms[order[s]])
-            if (b[:5] == b"\x01\x02\x00\x00\x00"
-                    and len(b) == 9 + 16 * int.from_bytes(b[5:9], "little")):
-                merged.append(b)
-                continue
-            merged.append(wkb.linemerge_wkb([b]))
-            continue
-        merged.append(
-            wkb.linemerge_wkb([bytes(geoms[i]) for i in order[s:e]]))
+    geoms = table[geom_col].chunk(0)
+    offs, data = wkb.binary_buffers(geoms)
+    # the native guard pinned every header to (0x01, type=2, no flags); a
+    # lone member whose length matches its declared point count is then
+    # byte-identical to its own linemerge, so it passes through untouched
+    head = offs[first_idx]
+    size = offs[first_idx + 1] - head
+    plain = size >= 9
+    plain[plain] = size[plain] == 9 + 16 * wkb.u32_at(data, head[plain] + 5)
+    merge = (n_members > 1) | ~plain
+    is_path, paths = _merge_paths(
+        data, offs, order[np.repeat(merge, n_members)], n_members[merge])
+    merged = [
+        wkb.linemerge_wkb([data[offs[i]:offs[i + 1]].tobytes()
+                           for i in order[s:e]])
+        for s, e in zip(bounds[merge][~is_path], ends[merge][~is_path])]
+    at = np.empty(len(is_path), np.int64)  # pool index of each merged row
+    at[is_path] = np.arange(len(paths))
+    at[~is_path] = len(paths) + np.arange(len(merged))
+    pick = first_idx.copy()
+    pick[merge] = len(geoms) + at
+    geom_out = pa.concat_arrays(
+        [geoms, paths, pa.array(merged, pa.large_binary())]
+    ).take(pick).cast(pa.binary())
+    tags = table.select(dissolve_fields).take(first_idx)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(comp_sorted[bounds], pa.int64()),
+         *[tags[f].combine_chunks() for f in dissolve_fields],
+         pa.array(n_members, pa.int32()), geom_out],
+        names=["component_id", *dissolve_fields, "n_members", geom_col])
 
-    out = pd.DataFrame({"component_id": comp_ids})
-    for f in dissolve_fields:
-        s = pdf[f].iloc[first_idx].reset_index(drop=True)
-        if field_kinds.get(f) == "int" and s.dtype.kind == "f":
-            # Arrow hands nullable int columns to pandas as float64;
-            # hand exact ints (or None) back so the declared schema
-            # round-trips without an unsafe float cast
-            s = s.map(lambda v: None if pd.isna(v) else int(v))
-        out[f] = s.astype(object).where(s.notna(), None)
-    out["n_members"] = pd.Series(n_members, dtype="int32")
-    out[geom_col] = pd.Series(merged, dtype=object)
-    return out
+
+def _merge_paths(data: np.ndarray, offs: np.ndarray, members: np.ndarray,
+                 sizes: np.ndarray) -> tuple[np.ndarray, pa.Array]:
+    """``wkb.linemerge_wkb`` over many components at once, for those whose
+    members form one simple path (the usual street chain). ``members``
+    lists each component's rows, ``sizes`` rows per component, in the
+    linemerge input order; ``(data, offs)`` are the binary buffers.
+
+    Returns ``(is_path, merged)``: which components are simple paths, and
+    the merged LineString WKB of each of them, byte-identical to
+    ``linemerge_wkb``. Each component's members must be connected through
+    byte-equal endpoints, as dissolve components are. Nodes match by float
+    equality as in ``linemerge`` (-0.0 == 0.0); a component with a NaN
+    endpoint, a closed or malformed member, a fork or a cycle is not a
+    path and is left to ``linemerge_wkb``. A path is walked as
+    ``linemerge`` walks it: from the free end of its first member that has
+    one, dropping each later member's first vertex. Positions along the
+    walk come from pointer jumping over (member, exit end) states, so the
+    Python loop runs once per doubling round, not per member."""
+    n_mem, n_comp = len(members), len(sizes)
+    comp = np.repeat(np.arange(n_comp), sizes)
+    head = offs[members]
+    size = offs[members + 1] - head
+    ok = size >= 9
+    cnt = np.zeros(n_mem, np.int64)
+    cnt[ok] = wkb.u32_at(data, head[ok] + 5)
+    # plain members only: their byte endpoints (which connected the
+    # component) are then their first and last declared vertices
+    ok &= (cnt >= 1) & (9 + 16 * cnt == size)
+    ok[ok] = ((data[head[ok]] == 1)
+              & (data[head[ok] + 1] == wkb.WKB_LINESTRING))
+    # endpoint coordinates; -0.0 + 0.0 == 0.0 gives float-equality keys
+    pos = np.stack([head + 9, head + 9 + 16 * (cnt - 1)], 1)[ok]
+    xy = np.full((n_mem, 2, 2), np.nan)
+    xy[ok] = data[pos[..., None] + np.arange(16)].view("<f8") + 0.0
+    ok &= ~np.isnan(xy).any(axis=(1, 2))
+    bits = xy.view("<i8").reshape(2 * n_mem, 2)
+    node, n_nodes = _group_node_ids(np.repeat(comp, 2), bits)
+    deg = np.bincount(node, minlength=n_nodes)
+    node_comp = np.empty(n_nodes, np.int64)
+    node_comp[node] = np.repeat(comp, 2)
+    bad = ~ok | (node[0::2] == node[1::2])
+    is_path = ((np.bincount(comp, bad, n_comp) == 0)
+               & (np.bincount(node_comp, deg > 2, n_comp) == 0)
+               & (np.bincount(node_comp, minlength=n_comp) == sizes + 1))
+    in_path = is_path[comp]
+
+    # member-end e of member m is entry 2m + e; a degree-2 node pairs its
+    # two entries. State 2m + out leaves m by end ``out``; its successor
+    # enters the partner member and leaves by that member's other end.
+    ends_by_node = np.argsort(node, kind="stable")
+    twin = node[ends_by_node[1:]] == node[ends_by_node[:-1]]
+    partner = np.full(2 * n_mem, -1, np.int64)
+    partner[ends_by_node[:-1][twin]] = ends_by_node[1:][twin]
+    partner[ends_by_node[1:][twin]] = ends_by_node[:-1][twin]
+    state = np.arange(2 * n_mem)
+    live = (partner >= 0) & np.repeat(in_path, 2)
+    nxt = np.where(live, partner ^ 1, state)
+    dist = live.astype(np.int64)            # steps to the walk's end
+    while True:
+        jumped = nxt[nxt]
+        if np.array_equal(jumped, nxt):
+            break
+        dist = dist + dist[nxt]
+        nxt = jumped
+    # linemerge starts at the first member with a free end, leaving by
+    # its other end; the walk that ends back at that free end runs the
+    # other way
+    free = (partner[0::2] < 0) | (partner[1::2] < 0)
+    cand = np.flatnonzero(free & in_path)
+    new_comp = np.ones(len(cand), bool)
+    new_comp[1:] = comp[cand][1:] != comp[cand][:-1]
+    first = cand[new_comp]
+    back_sink = np.zeros(n_comp, np.int64)
+    back_sink[comp[first]] = 2 * first + (partner[2 * first] >= 0)
+    out_end = (nxt[2 * np.arange(n_mem) + 1] != back_sink[comp]).astype(
+        np.int64)
+    step = sizes[comp] - 1 - dist[2 * np.arange(n_mem) + out_end]
+
+    walk = np.flatnonzero(in_path)
+    walk = walk[np.lexsort((step[walk], comp[walk]))]
+    c = cnt[walk]
+    n_vert = np.bincount(comp[walk], c, n_comp).astype(np.int64) - (sizes - 1)
+    n_vert = n_vert[is_path]
+    vm = np.repeat(np.arange(len(walk)), c)           # vertex -> member
+    j = np.arange(len(vm)) - np.repeat(np.cumsum(c) - c, c)
+    keep = (j > 0) | (step[walk][vm] == 0)
+    j = np.where(out_end[walk][vm] == 1, j, c[vm] - 1 - j)[keep]
+    src = head[walk][vm[keep]] + 9 + 16 * j
+    out_size = 9 + 16 * n_vert
+    out_offs = np.zeros(len(n_vert) + 1, np.int64)
+    np.cumsum(out_size, out=out_offs[1:])
+    out = np.empty(int(out_offs[-1]), np.uint8)
+    starts = out_offs[:-1]
+    out[starts] = 1
+    out[(starts[:, None] + np.arange(1, 5)).ravel()] = np.tile(
+        np.array([wkb.WKB_LINESTRING, 0, 0, 0], np.uint8), len(starts))
+    out[(starts[:, None] + np.arange(5, 9)).ravel()] = (
+        n_vert.astype("<u4").view(np.uint8))
+    dst = (np.repeat(starts + 9, n_vert)
+           + 16 * (np.arange(len(src))
+                   - np.repeat(np.cumsum(n_vert) - n_vert, n_vert)))
+    out[dst[:, None] + np.arange(16)] = data[src[:, None] + np.arange(16)]
+    return is_path, pa.Array.from_buffers(
+        pa.large_binary(), len(n_vert),
+        [None, pa.py_buffer(out_offs), pa.py_buffer(out)])
 
 
 def _fused_schema(df: DataFrame, dissolve_fields: list[str],
-                  geom_col: str):
-    """(output StructType, field-kind map) shared by the fused paths."""
-    from pyspark.sql.types import (ByteType, IntegerType, LongType as _Long,
-                                   ShortType)
-
-    integral = (ByteType, ShortType, IntegerType, _Long)
+                  geom_col: str) -> StructType:
+    """Output StructType shared by the fused paths."""
     schema_by_name = {f.name: f for f in df.schema.fields}
-    out_schema = StructType(
+    return StructType(
         [StructField("component_id", LongType(), False)]
         + [StructField(c, schema_by_name[c].dataType, True)
            for c in dissolve_fields]
         + [StructField("n_members", IntegerType(), False),
            StructField(geom_col, BinaryType(), True)])
-    field_kinds = {
-        c: ("int" if isinstance(schema_by_name[c].dataType, integral)
-            else "other")
-        for c in dissolve_fields
-    }
-    return out_schema, field_kinds
 
 
 def _dissolve_fused(df: DataFrame, dissolve_fields: list[str],
@@ -250,52 +348,46 @@ def _dissolve_fused(df: DataFrame, dissolve_fields: list[str],
     """One-exchange dissolve for inputs whose tag-groups all fit a worker
     (the union-find contract): hash-partition whole groups WITH their
     payload, then component-find and merge inside the partition."""
-    out_schema, field_kinds = _fused_schema(df, dissolve_fields, geom_col)
     return (
         df.select("group_key", "way_id", *[F.col(f"`{c}`")
                                            for c in dissolve_fields],
                   geom_col)
         .repartition(n_parts, "group_key")
-        .mapInPandas(
-            _fused_dissolve_partitions(dissolve_fields, geom_col,
-                                       field_kinds),
-            out_schema)
+        .mapInArrow(
+            _fused_dissolve_partitions(dissolve_fields, geom_col),
+            _fused_schema(df, dissolve_fields, geom_col))
     )
 
 
 def _fused_greedy_group(dissolve_fields: list[str], geom_col: str,
-                        field_kinds: dict[str, str],
                         max_group_rows: int | None):
-    """applyInPandas driver fusing the reference-greedy traversal with
+    """applyInArrow driver fusing the reference-greedy traversal with
     the component merge (r5): one tag-group's payload rows arrive
-    together; endpoint edge rows are sliced from the WKB in-process,
+    together; endpoint edge rows are sliced from the WKB buffer,
     ``_greedy_components`` replays the reference BFS, and the merged
     rows are emitted directly — same one-payload-exchange shape as the
     union-find fused path (the unfused greedy paid the merge join +
-    component groupBy exchanges on top of the applyInPandas shuffle)."""
+    component groupBy exchanges on top of the grouped shuffle)."""
 
-    def run(_key, pdf):  # no hints: pyspark infers the grouped-map type
-        edge = {"group_key": [], "order_key": [], "way_id": [],
-                "node_idx": [], "node": []}
-        for wid, okey, gk, g in zip(
-            pdf["way_id"].to_numpy(), pdf["order_key"].to_numpy(),
-            pdf["group_key"].to_numpy(), pdf[geom_col]
-        ):
-            b = bytes(g)
-            for i, nd in enumerate((b[9:25], b[len(b) - 16:])):
-                edge["group_key"].append(int(gk))
-                edge["order_key"].append(okey)
-                edge["way_id"].append(int(wid))
-                edge["node_idx"].append(i)
-                edge["node"].append(nd)
-        comps = _greedy_components(pd.DataFrame(edge), max_group_rows)
-        comp_of = dict(zip((int(w) for w in comps["way_id"]),
-                           (int(c) for c in comps["component_id"])))
-        comp = np.fromiter(
-            (comp_of[int(w)] for w in pdf["way_id"].to_numpy()),
-            dtype=np.int64, count=len(pdf))
-        return _merge_component_rows(pdf, comp, dissolve_fields,
-                                     geom_col, field_kinds)
+    def run(table):
+        table = _arrow_input(table, geom_col)
+        n = table.num_rows
+        ways = table["way_id"].to_numpy()
+        ends = wkb.endpoint_slices_batch(table[geom_col].chunk(0))
+        comps = _greedy_components(pd.DataFrame({
+            "group_key": np.repeat(table["group_key"].to_numpy(), 2),
+            "order_key": np.repeat(
+                table["order_key"].to_numpy(zero_copy_only=False), 2),
+            "way_id": np.repeat(ways, 2),
+            "node_idx": np.tile([0, 1], n),
+            "node": list(ends.reshape(2 * n, 16)),
+        }), max_group_rows)
+        comp_ways = comps["way_id"].to_numpy(np.int64)
+        by_way = np.argsort(comp_ways)
+        comp = comps["component_id"].to_numpy(np.int64)[by_way][
+            np.searchsorted(comp_ways[by_way], ways)]
+        return pa.Table.from_batches([_merge_component_rows(
+            table, comp, dissolve_fields, geom_col)])
 
     return run
 
@@ -429,11 +521,15 @@ def dissolve_ways(
     (dissolve.py:137-142 / its hard crash on missing geometry) — run
     ``explode_multipart`` first.
 
-    ``algorithm="auto"`` (default) counts rows per tag-group first (one
-    cheap map-side-combined agg) and routes groups above ``max_group_rows``
+    ``algorithm="auto"`` (default) routes groups above ``max_group_rows``
     — the degenerate-skew hazard, e.g. unnamed service roads spanning the
     whole extent — to the iterative large-star/small-star CC, everything
-    else to the per-partition union-find.
+    else to the per-partition union-find. To find them it counts rows per
+    tag-group first (one cheap map-side-combined agg), unless a total-row
+    bound at or under the cap is known: ``approx_rows``, or, when
+    ``combined`` is a bare parquet scan (a ``Checkpointer.stage`` or
+    ``spark.read.parquet`` result), the row counts in its files' parquet
+    footers.
 
     ``algorithm="greedy"`` (r3) is the reference-compat mode: it replays
     the reference's greedy single-path BFS exactly — including on forked /
@@ -446,18 +542,21 @@ def dissolve_ways(
     job: when the caller knows a total-row upper bound <= max_group_rows
     (parquet footer metadata, an Iceberg snapshot's record count — free at
     any scale), NO group can exceed the cap, so auto routes straight to
-    union-find without the extra count job.
+    union-find without the extra count job. It defaults to the footer
+    count of a bare parquet input (above); the bound also sizes the
+    union-find shuffle.
 
     ``ordered=True`` (r4, VERDICT r3 #4) totally orders the output by
     ``component_id`` (unique per row, deterministic — min way_id of the
-    component, itself a pure hash of source lineage), so two identical runs
-    produce byte-identical sink files for display/diff consumers — the
-    reference's output is deterministic by construction
-    (/root/reference/rlis2osm/main.py:76-138). Costs one extra range-sort
-    exchange, and the range partitioner's sampling job re-executes the
-    stage that feeds it, so the fused ``mapInPandas`` dissolve stage runs
-    twice (once to sample, once to write the shuffle). Leave False for
-    set-semantics pipelines.
+    component, itself a pure hash of source lineage), so row order is
+    fixed for display/diff consumers — the reference's output is
+    deterministic by construction (/root/reference/rlis2osm/main.py:76-138).
+    Where that order is cut into files is not fixed: Spark's range
+    partitioner seeds its sample with the RDD id, so once an input
+    partition holds more rows than the sample takes, two runs in one
+    session can split the same rows differently. Costs one hash exchange
+    plus one range exchange of the output rows; the Python kernel runs
+    once (see ``_total_order``). Leave False for set-semantics pipelines.
     """
     tag_fields = [c for c in COMBINED_FIELDS if c in combined.columns]
     dissolve_fields = _define_filter_fields(tag_fields, fields, exclude)
@@ -495,6 +594,18 @@ def dissolve_ways(
         raise ValueError(
             f"unknown algorithm {algorithm!r}; expected 'auto' or 'greedy'")
 
+    if approx_rows is None:
+        approx_rows = _footer_rows(combined)
+    n_parts = max(spark_partitions(combined), 8)
+    if approx_rows is not None:
+        # size the CC shuffle to the data: ~50k node rows per partition,
+        # never above the session parallelism (tiny inputs stop paying
+        # 64-task overhead; 100 TB inputs still spread fully)
+        n_parts = max(8, min(n_parts, approx_rows // 50_000 + 1))
+
+    def finish(out):
+        return _total_order(out, n_parts) if ordered else out
+
     if algorithm == "greedy":
         # source visit order = (src_table, fid, part_idx), the reference's
         # ways.items() iteration (fids can COLLIDE across source tables in
@@ -521,30 +632,16 @@ def dissolve_ways(
             .otherwise(F.raise_error(F.lit(
                 "greedy dissolve: part_idx outside [0, 10^6) breaks the "
                 "reference visit-order encoding"))))
-        out_schema, field_kinds = _fused_schema(df, dissolve_fields,
-                                                geom_col)
-        out = (
+        return finish(
             df.withColumn("order_key", order_key)
             .select("group_key", "order_key", "way_id",
                     *[F.col(f"`{c}`") for c in dissolve_fields], geom_col)
             .groupBy("group_key")
-            .applyInPandas(
+            .applyInArrow(
                 _fused_greedy_group(dissolve_fields, geom_col,
-                                    field_kinds, max_group_rows),
-                out_schema)
+                                    max_group_rows),
+                _fused_schema(df, dissolve_fields, geom_col))
         )
-        return out.orderBy("component_id") if ordered else out
-
-    n_parts = max(spark_partitions(combined), 8)
-    if approx_rows is not None:
-        # size the CC shuffle to the data: ~50k node rows per partition,
-        # never above the session parallelism (tiny inputs stop paying
-        # 64-task overhead; 100 TB inputs still spread fully)
-        n_parts = max(8, min(n_parts, approx_rows // 50_000 + 1))
-
-    def fused(frame):
-        out = _dissolve_fused(frame, dissolve_fields, geom_col, n_parts)
-        return out.orderBy("component_id") if ordered else out
 
     if approx_rows is not None and approx_rows <= max_group_rows:
         # every group fits a worker (the approx_rows bound short-circuits
@@ -553,13 +650,14 @@ def dissolve_ways(
         # inside the partition. The unfused shape paid two more
         # full-payload exchanges (merge join + component groupBy) plus
         # their sorts.
-        return fused(df)
+        return finish(_dissolve_fused(df, dissolve_fields, geom_col,
+                                      n_parts))
 
     # auto: route only degenerate groups to the iterative path.
     # NOTE: the routing decision needs the group-size distribution, so
     # "auto" runs ONE planning-time Spark job here (map-side-combined
-    # count + the big-key collect). Plan-only callers that must stay
-    # action-free should pass approx_rows.
+    # count + the big-key collect) unless a row bound came from the caller
+    # or the input's parquet footers.
     sizes = df.groupBy("group_key").agg(F.count("*").alias("_gsz"))
     big_df = sizes.filter(F.col("_gsz") > max_group_rows).select(
         "group_key")
@@ -573,7 +671,8 @@ def dissolve_ways(
             "more than 100k tag-groups exceed max_group_rows="
             f"{max_group_rows}; raise the threshold")
     if not big_keys:
-        return fused(df)
+        return finish(_dissolve_fused(df, dissolve_fields, geom_col,
+                                      n_parts))
     # route via a broadcast-joined key frame, NOT isin literals:
     # 100k literals would inflate every downstream plan and task
     # closure (ADVICE r2); a local-list DataFrame broadcasts once.
@@ -593,11 +692,35 @@ def dissolve_ways(
     big_n = endpoint_nodes(df, geom_col, extra_cols=["group_key"]).join(
         bk, "group_key", "left_semi")
     comps_big = _comps_iterative(big_n, big_df_rows.select("way_id"))
-    out = _dissolve_fused(
+    return finish(_dissolve_fused(
         small_df, dissolve_fields, geom_col, n_parts
     ).unionByName(_merge_components(
-        big_df_rows, comps_big, dissolve_fields, geom_col))
-    return out.orderBy("component_id") if ordered else out
+        big_df_rows, comps_big, dissolve_fields, geom_col)))
+
+
+def _total_order(out: DataFrame, n_parts: int) -> DataFrame:
+    """``ordered=True``'s total order on ``component_id``. A global sort
+    directly above a Python node makes the range partitioner's sampling
+    job run that node again; the hash exchange first turns the kernel's
+    output into a shuffle stage of its own, so the sampler reads the
+    stage's shuffle files instead."""
+    return out.repartition(n_parts, "component_id").orderBy("component_id")
+
+
+def _footer_rows(df: DataFrame) -> int | None:
+    """Total rows of a bare parquet scan (what ``Checkpointer.stage`` and
+    ``spark.read.parquet`` return), read from its files' footers on the
+    driver (``iceberg_shim.file_row_counts``, one metadata read per file);
+    None for any other plan."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    relation = plan.relation()
+    if (relation.getClass().getSimpleName() != "HadoopFsRelation"
+            or relation.fileFormat().shortName() != "parquet"):
+        return None
+    counts = file_row_counts(df.inputFiles())
+    return None if counts is None else sum(counts)
 
 
 def _merge_components(df: DataFrame, comps: DataFrame,

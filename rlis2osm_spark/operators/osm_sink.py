@@ -4,9 +4,12 @@ WGS84 — and the tag-repair plugin (repair_keys.py), producing ONE
 ``rlis.osm``.  Here the sink is two stages, both covered:
 
 1. ``write_osm_xml`` — distributed: each partition serializes its ways +
-   interned nodes to one ``part-*.osm`` fragment via ``mapInPandas``
-   (Arrow-batched), coordinates reprojected to lat/lon (spatial/proj.py),
-   negative ids per OSM convention for new objects.
+   interned nodes to one ``part-*.osm`` fragment via ``mapInArrow``,
+   coordinates reprojected to lat/lon (spatial/proj.py), negative ids per
+   OSM convention for new objects. Vertices come from the WKB buffers
+   (``wkb.vertices_batch``) and tags from the map column's offsets; the
+   fragment text is one Arrow ``take`` over a pool of distinct pieces, so
+   Python formats once per unique node, key and value, never per way.
 2. ``merge_fragments`` — single-writer merge into one artifact (the .osm
    file is inherently a one-file deliverable, same as the reference):
    streams fragments twice (nodes then ways), deduplicates nodes by id,
@@ -29,7 +32,8 @@ from hashlib import blake2b
 from xml.sax.saxutils import quoteattr
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -44,6 +48,21 @@ _OUT_SCHEMA = StructType([
     StructField("digest", StringType()),  # r6: hashed while writing, so the
     # driver's manifest never re-reads fragment bytes serially at promotion
 ])
+
+
+_OUT_ARROW_SCHEMA = pa.schema([
+    ("part_file", pa.string()), ("n_ways", pa.int64()),
+    ("n_nodes", pa.int64()), ("n_null_geoms", pa.int64()),
+    ("digest", pa.string())])
+
+# the fixed text of a fragment, in pool order
+_PIECES = ("<?xml version='1.0' encoding='UTF-8'?>\n",
+           "<osm version='0.6' generator='rlis2osm_spark'>\n",
+           "  <way id='", "' visible='true'>\n",
+           "    <tag k=", " v=", " />\n",
+           "  </way>\n", "</osm>\n")
+(_XML_HEAD, _OSM_HEAD, _WAY_OPEN, _WAY_OPEN_END, _TAG_K, _TAG_V, _TAG_END,
+ _WAY_CLOSE, _OSM_CLOSE) = range(len(_PIECES))
 
 
 def _node_id_from_key(key: bytes) -> int:
@@ -84,50 +103,36 @@ def write_osm_xml(
     silently merged (ADVICE r3)."""
     import glob as _glob
 
-    def serialize(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def serialize(batches: Iterator[pa.RecordBatch]
+                  ) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else 0
         path = os.path.join(out_dir, f"part-{pid:05d}.osm.tmp")
-        # r6 vectorization (VERDICT r5 #1): the r5 serializer interned and
-        # formatted per VERTEX in Python (pack + dict probe + f-string per
-        # <nd>), ~66 executor-µs/way at mult=2500. Now coordinates are
-        # gathered into one (N, 2) float64 array per partition, interned
-        # with a bit-exact np.unique (uint64-pair view — same exact-byte
-        # rule as pack('<2d'), so -0.0/0.0 and NaN payloads stay distinct),
-        # and every per-vertex string is a fancy-indexed gather of one
-        # precomputed per-UNIQUE-node line. Fragment bytes are pinned
-        # identical to the loop they replace (tests/golden/rlis_small.osm).
-        coord_parts: list[np.ndarray] = []  # (n_i, 2) float64 per way
-        way_counts: list[int] = []          # vertex count per way
-        way_tags: list[dict] = []
+        coord_parts: list[np.ndarray] = []  # (n_i, 2) float64 per batch
+        count_parts: list[np.ndarray] = []  # vertex count per way
+        tag_parts: list[pa.Array] = []      # tags map per way
         n_null = 0
-        for pdf in frames:
-            geoms = pdf[geom_col].to_numpy()
-            tag_vals = pdf[tags_col].to_numpy()
-            for i in range(len(geoms)):
-                geom = geoms[i]
-                if geom is None:
-                    n_null += 1
-                    continue
-                lines = wkb.decode_lines(bytes(geom))
-                if len(lines) == 1:
-                    coord_parts.append(lines[0])
-                    way_counts.append(len(lines[0]))
-                else:  # multi-part: parts stay separate (no per-way concat)
-                    coord_parts.extend(lines)
-                    way_counts.append(sum(map(len, lines)))
-                t = tag_vals[i]
-                way_tags.append(dict(t) if t else {})
+        for batch in batches:
+            geoms = batch.column(0)
+            valid = np.asarray(geoms.is_valid(), bool)
+            coords, counts, types = wkb.vertices_batch(geoms)
+            if (types == wkb.WKB_POINT).any():
+                raise ValueError(
+                    f"unsupported geometry type {wkb.WKB_POINT}")
+            n_null += int((~valid).sum())
+            coord_parts.append(coords)
+            count_parts.append(counts[valid])
+            tag_parts.append(batch.column(1).filter(pa.array(valid)))
 
-        n_ways = len(way_counts)
-        if coord_parts:
-            all_coords = np.ascontiguousarray(
-                np.concatenate(coord_parts), dtype="<f8").reshape(-1, 2)
-        else:
-            all_coords = np.empty((0, 2), "<f8")
-        # first-occurrence-ordered unique on the raw coordinate BITS
-        # (float compare would merge -0.0 with 0.0 and misorder NaN)
+        counts = (np.concatenate(count_parts) if count_parts
+                  else np.empty(0, np.int64))
+        n_ways = len(counts)
+        all_coords = (np.concatenate(coord_parts) if coord_parts
+                      else np.empty((0, 2), "<f8"))
+        # Coordinates are interned with a bit-exact np.unique (uint64-pair
+        # view — same exact-byte rule as pack('<2d'), so -0.0/0.0 and NaN
+        # payloads stay distinct), in first-occurrence order
         bit_pairs = all_coords.view([("x", "<u8"), ("y", "<u8")]).ravel()
         _, first_idx, inverse = np.unique(
             bit_pairs, return_index=True, return_inverse=True)
@@ -153,64 +158,99 @@ def write_osm_xml(
                 f"{tuple(uniq[where[0]])} vs {tuple(uniq[where[1]])}")
 
         lons, lats = feet_to_lonlat(uniq[:, 0], uniq[:, 1])
+        node_lines = [f"  <node id='{i}' visible='true' "
+                      f"lat='{la!r}' lon='{lo!r}' />\n"
+                      for i, la, lo in zip(ids, lats.tolist(), lons.tolist())]
+        nd_lines = [f"    <nd ref='{i}' />\n" for i in ids]
 
-        id_strs = [str(i) for i in ids]
-        # every <nd> line exists once per unique node; the way bodies below
-        # are pure gathers + joins over this array
-        nd_lines = np.empty(n_uniq, object)
-        nd_lines[:] = [f"    <nd ref='{s}' />\n" for s in id_strs]
-        bounds = np.zeros(n_ways + 1, np.int64)
-        np.cumsum(way_counts, out=bounds[1:])
-        tag_cache: dict[tuple, str] = {}  # (k, v) -> rendered line
+        # tag entries of each way, sorted by key, as codes into the
+        # distinct keys and values (str() of each, quoted once)
+        n_tags = np.zeros(n_ways, np.int64)
+        qkeys: list[str] = []
+        qvals: list[str] = []
+        if n_ways:
+            maps = pa.concat_arrays(tag_parts)
+            moffs = np.asarray(maps.offsets, np.int64)
+            n_tags = np.diff(moffs)
+            n_tags[~np.asarray(maps.is_valid(), bool)] = 0
+        tag_way = np.repeat(np.arange(n_ways), n_tags)
+        tag_first = np.cumsum(n_tags) - n_tags   # way -> its first entry
+        tag_rank = np.arange(len(tag_way)) - tag_first[tag_way]
+        kcode = vcode = np.empty(0, np.int64)
+        if len(tag_way):
+            entry = moffs[:-1][tag_way] + tag_rank
+            kdict = pc.dictionary_encode(maps.keys)
+            vdict = pc.dictionary_encode(maps.items, null_encoding="encode")
+            kcode = np.asarray(kdict.indices, np.int64)[entry]
+            vcode = np.asarray(vdict.indices, np.int64)[entry]
+            keys = [str(k) for k in kdict.dictionary.to_pylist()]
+            krank = np.empty(len(keys), np.int64)
+            krank[sorted(range(len(keys)), key=keys.__getitem__)] = (
+                np.arange(len(keys)))
+            by_key = np.lexsort((krank[kcode], tag_way))
+            kcode, vcode = kcode[by_key], vcode[by_key]
+            # quoteattr escapes &<>'" itself — wrapping escape() around
+            # the value double-escaped ampersands (r5 fix: 'A & B' used to
+            # serialize as 'A &amp;amp; B')
+            qkeys = [quoteattr(k) for k in keys]
+            qvals = [quoteattr(str(v))
+                     for v in vdict.dictionary.to_pylist()]
+
+        # The fragment is one gather over a pool of distinct text pieces:
+        # the fixed pieces, one line per unique node, one <nd> line per
+        # unique node, the quoted keys and values, the way ids.
+        node0 = len(_PIECES)
+        nd0 = node0 + n_uniq
+        key0 = nd0 + n_uniq
+        val0 = key0 + len(qkeys)
+        way0 = val0 + len(qvals)
+        way_ids = -((pid << 32) + np.arange(n_ways, dtype=np.int64)) - 1
+        pool = pa.concat_arrays([
+            pa.array([*_PIECES, *node_lines, *nd_lines, *qkeys, *qvals],
+                     pa.large_string()),
+            pc.cast(pa.array(way_ids, pa.int64()), pa.large_string())])
+        # each way: <way id=..> header (3 pieces), its <nd> lines, 5 pieces
+        # per tag, </way>
+        size = 4 + counts + 5 * n_tags
+        start = 2 + n_uniq + np.cumsum(size) - size
+        idx = np.empty(3 + n_uniq + int(size.sum()), np.int64)
+        idx[:2] = (_XML_HEAD, _OSM_HEAD)
+        idx[2:2 + n_uniq] = node0 + np.arange(n_uniq)
+        idx[start] = _WAY_OPEN
+        idx[start + 1] = way0 + np.arange(n_ways)
+        idx[start + 2] = _WAY_OPEN_END
+        vert_way = np.repeat(np.arange(n_ways), counts)
+        vert_first = np.cumsum(counts) - counts
+        idx[start[vert_way] + 3 + np.arange(len(inv))
+            - vert_first[vert_way]] = nd0 + inv
+        tag_pos = start[tag_way] + 3 + counts[tag_way] + 5 * tag_rank
+        idx[tag_pos] = _TAG_K
+        idx[tag_pos + 1] = key0 + kcode
+        idx[tag_pos + 2] = _TAG_V
+        idx[tag_pos + 3] = val0 + vcode
+        idx[tag_pos + 4] = _TAG_END
+        idx[start + size - 1] = _WAY_CLOSE
+        idx[-1] = _OSM_CLOSE
 
         hasher = blake2b(digest_size=8)
         with open(path, "wb") as fh:
-            buf: list[str] = []
-            emit = buf.append
-
-            def flush(force=False):
-                if force or len(buf) >= 65536:
-                    chunk = "".join(buf).encode("utf-8")
-                    fh.write(chunk)
-                    hasher.update(chunk)
-                    buf.clear()
-
-            emit("<?xml version='1.0' encoding='UTF-8'?>\n")
-            emit("<osm version='0.6' generator='rlis2osm_spark'>\n")
-            for j, (la, lo) in enumerate(zip(lats.tolist(), lons.tolist())):
-                emit(f"  <node id='{id_strs[j]}' visible='true' "
-                     f"lat='{la!r}' lon='{lo!r}' />\n")
-                flush()
-            for w in range(n_ways):
-                # deterministic, partition-disjoint negative way ids
-                emit(f"  <way id='{-((pid << 32) + w) - 1}' visible='true'>\n")
-                lo_b, hi_b = bounds[w], bounds[w + 1]
-                if hi_b > lo_b:
-                    emit("".join(nd_lines[inv[lo_b:hi_b]].tolist()))
-                for k, v in sorted(way_tags[w].items()):
-                    line = tag_cache.get((k, v))
-                    if line is None:
-                        # quoteattr escapes &<>'" itself — wrapping escape()
-                        # around the value double-escaped ampersands (r5 fix:
-                        # 'A & B' used to serialize as 'A &amp;amp; B')
-                        line = (f"    <tag k={quoteattr(str(k))} "
-                                f"v={quoteattr(str(v))} />\n")
-                        tag_cache[(k, v)] = line
-                    emit(line)
-                emit("  </way>\n")
-                flush()
-            emit("</osm>\n")
-            flush(force=True)
-        yield pd.DataFrame(
-            [(path, n_ways, n_uniq, n_null, hasher.hexdigest())],
-            columns=["part_file", "n_ways", "n_nodes", "n_null_geoms",
-                     "digest"])
+            for lo in range(0, len(idx), 1 << 16):
+                text = pool.take(pa.array(idx[lo:lo + (1 << 16)]))
+                offs = np.frombuffer(text.buffers()[1], "<i8")
+                chunk = memoryview(text.buffers()[2])[offs[0]:offs[-1]]
+                fh.write(chunk)
+                hasher.update(chunk)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([path]), pa.array([n_ways], pa.int64()),
+             pa.array([n_uniq], pa.int64()), pa.array([n_null], pa.int64()),
+             pa.array([hasher.hexdigest()])],
+            schema=_OUT_ARROW_SCHEMA)
 
     projected = df.select(geom_col, tags_col)  # analyzes (raises on bad input)
     os.makedirs(out_dir, exist_ok=True)
     for stale in _glob.glob(os.path.join(out_dir, "part-*.osm.tmp")):
         os.remove(stale)
-    rows = projected.mapInPandas(serialize, _OUT_SCHEMA).collect()
+    rows = projected.mapInArrow(serialize, _OUT_SCHEMA).collect()
     # the action succeeded: record the expected fragment set FIRST (the
     # manifest makes any later partial state detectable), then promote
     # (os.replace atomically overwrites a same-named old fragment), THEN
@@ -270,8 +310,7 @@ def _write_fragment_manifest(out_dir: str, digests: dict[str, str]) -> None:
     os.replace(tmp, os.path.join(out_dir, _FRAG_MANIFEST))
 
 
-_FRAGMENT_HEADER = ("<?xml version='1.0' encoding='UTF-8'?>\n",
-                    "<osm version='0.6' generator='rlis2osm_spark'>\n")
+_FRAGMENT_HEADER = _PIECES[:2]
 
 
 def merge_fragments(out_dir: str, dest_path: str,

@@ -201,10 +201,12 @@ def rlis_dissolve_cc(spark, sf_dir):
         ],
     )
     # row bound from the parquet footer (free; at scale: Iceberg snapshot
-    # record count) lets auto skip its group-size planning job (VERDICT r2 #5)
-    import pyarrow.parquet as pq
+    # record count) lets auto skip its group-size planning job (VERDICT r2
+    # #5); the staged frame is a local checkpoint, not a parquet scan, so
+    # dissolve cannot read the footers itself
+    from rlis2osm_spark.plans.iceberg_shim import file_row_counts
 
-    n_rows = pq.ParquetFile(f"{sf_dir}/part.parquet").metadata.num_rows
+    (n_rows,) = file_row_counts([f"{sf_dir}/part.parquet"])
     dissolved = dissolve_ways(osm, approx_rows=n_rows)
     return (
         dissolved.groupBy("n_members")

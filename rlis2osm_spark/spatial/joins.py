@@ -376,10 +376,10 @@ def _segment_cells(df: DataFrame, res: int, grid: TileGrid,
     size = grid.cell_size(res)
     x1, y1 = F.col(f"{prefix}x1"), F.col(f"{prefix}y1")
     x2, y2 = F.col(f"{prefix}x2"), F.col(f"{prefix}y2")
-    ix0 = F.floor((F.least(x1, x2) - grid.x0) / size).cast("int")
-    ix1 = F.floor((F.greatest(x1, x2) - grid.x0) / size).cast("int")
-    iy0 = F.floor((F.least(y1, y2) - grid.y0) / size).cast("int")
-    iy1 = F.floor((F.greatest(y1, y2) - grid.y0) / size).cast("int")
+    ix0 = F.floor((F.least(x1, x2) - grid.x0) / size).cast("long")
+    ix1 = F.floor((F.greatest(x1, x2) - grid.x0) / size).cast("long")
+    iy0 = F.floor((F.least(y1, y2) - grid.y0) / size).cast("long")
+    iy1 = F.floor((F.greatest(y1, y2) - grid.y0) / size).cast("long")
     return (
         df.select("*", F.explode(F.sequence(ix0, ix1)).alias("cx"),
                   iy0.alias("_iy0"), iy1.alias("_iy1"))

@@ -14,8 +14,9 @@ design S2 uses (Hilbert) and GeoParquet/BigQuery use (Z-order):
   neighborhood that ``joins._ring_candidates``, the one candidate
   generator of the kNN and radius joins, keys its join on.
 
-Coordinate extraction from WKB geometry is the only Arrow step (pandas UDF,
-batched); everything downstream of (x, y) is native.
+Coordinate extraction from WKB geometry is the only Python step: an Arrow
+UDF that reads whole binary buffers with numpy, no Python object per row;
+everything downstream of (x, y) is native.
 
 At 100 TB: ``cell`` is the partition/bucket column (Iceberg
 ``bucket(N, cell)`` or directory partitioning on a cell prefix), so spatial
@@ -31,9 +32,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import BinaryType, StructField, StructType, DoubleType
 
 from rlis2osm_spark.functions import wkb
@@ -92,34 +94,37 @@ _XY_SCHEMA = StructType(
 )
 
 
-@F.pandas_udf(_XY_SCHEMA)
-def geom_midpoint(geoms: pd.Series) -> pd.DataFrame:
-    """Representative point of a WKB geometry (Arrow-batched): Point -> the
-    point; LineString/Multi -> midpoint of the coordinate bounding box.
+@arrow_udf(_XY_SCHEMA)
+def geom_midpoint(geoms: pa.Array) -> pa.Array:
+    """Representative point of a WKB geometry, over whole Arrow buffers:
+    Point -> the point; LineString/Multi -> midpoint of the coordinate
+    bounding box; null geometry (or a NaN coordinate) -> null x/y.
     Deterministic and cheap; adequate for cell assignment of small features.
     """
-    xs = np.full(len(geoms), np.nan)
-    ys = np.full(len(geoms), np.nan)
-    for i, g in enumerate(geoms):
-        if g is None:
-            continue
-        b = bytes(g)
-        if wkb.geom_type(b) == wkb.WKB_POINT:
-            xs[i], ys[i] = wkb.decode_point(b)
-        else:
-            parts = wkb.decode_lines(b)
-            allc = np.concatenate(parts, axis=0)
-            xs[i] = (allc[:, 0].min() + allc[:, 0].max()) / 2.0
-            ys[i] = (allc[:, 1].min() + allc[:, 1].max()) / 2.0
-    return pd.DataFrame({"x": xs, "y": ys})
+    coords, counts, types = wkb.vertices_batch(geoms)
+    if ((types != 0) & (counts == 0)).any():
+        raise ValueError("empty geometry has no midpoint")
+    xy = np.full((len(geoms), 2), np.nan)
+    rows = np.flatnonzero(counts)
+    first = (np.cumsum(counts) - counts)[rows]   # each row's first vertex
+    if len(rows):
+        lo = np.minimum.reduceat(coords, first, axis=0)
+        hi = np.maximum.reduceat(coords, first, axis=0)
+        point = types[rows] == wkb.WKB_POINT
+        xy[rows[point]] = lo[point]             # a Point's one vertex
+        xy[rows[~point]] = (lo[~point] + hi[~point]) / 2.0
+    return pa.StructArray.from_arrays(
+        [pa.array(xy[:, 0], from_pandas=True),
+         pa.array(xy[:, 1], from_pandas=True)], names=["x", "y"])
 
 
-@F.pandas_udf(BinaryType())
-def point_wkb(xs: pd.Series, ys: pd.Series) -> pd.Series:
-    """WKB Point of each (x, y) (Arrow-batched): how derived coordinates
-    enter the geometry -> ``geom_midpoint`` -> cell path."""
-    return pd.Series([wkb.encode_point(float(x), float(y))
-                      for x, y in zip(xs, ys)], dtype=object)
+@arrow_udf(BinaryType())
+def point_wkb(xs: pa.Array, ys: pa.Array) -> pa.Array:
+    """WKB Point of each (x, y), a null coordinate as NaN, over whole Arrow
+    buffers: how derived coordinates enter the geometry ->
+    ``geom_midpoint`` -> cell path."""
+    return wkb.encode_points_batch(xs.to_numpy(zero_copy_only=False),
+                                   ys.to_numpy(zero_copy_only=False))
 
 
 def with_tile(
@@ -128,8 +133,8 @@ def with_tile(
     geom_col: str = "geometry",
     grid: TileGrid = TileGrid(),
 ) -> DataFrame:
-    """Assign each row its tile: geometry -> (x, y) via one Arrow pass,
-    then native quantize + Morton interleave."""
+    """Assign each row its tile: geometry -> (x, y) via one Arrow UDF
+    pass, then native quantize + Morton interleave."""
     df = df.withColumn("_xy", geom_midpoint(F.col(geom_col)))
     df = df.withColumn("x", F.col("_xy.x")).withColumn("y", F.col("_xy.y")).drop("_xy")
     ix, iy = grid_coords(F.col("x"), F.col("y"), res, grid)

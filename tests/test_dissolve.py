@@ -3,6 +3,7 @@ fork-free so greedy-BFS and true-CC semantics coincide (SURVEY §7.3)."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -211,14 +212,78 @@ def test_dissolve_auto_routes_degenerate_group(spark):
     svc = [r for r in auto.collect() if r.highway == "service"]
     assert sorted(r.n_members for r in svc) == [10, 60]
     # ordered=True on the HYBRID path (fused small side + iterative big
-    # side unioned) is still a deterministic total order (r5)
-    o1 = dissolve_ways(df, max_group_rows=20, ordered=True).collect()
+    # side unioned) is still a deterministic total order (r5), and each of
+    # its Python nodes runs once
+    d1 = dissolve_ways(df, max_group_rows=20, ordered=True)
+    o1 = d1.collect()
+    assert _python_rows_received(d1) == len(o1)
     o2 = dissolve_ways(df, max_group_rows=20, ordered=True).collect()
     assert [r.component_id for r in o1] == [r.component_id for r in o2]
     assert [r.component_id for r in o1] == sorted(
         r.component_id for r in o1)
     assert canon(dissolve_ways(df, max_group_rows=20,
                                ordered=True)) == canon(uf)
+
+
+def test_dissolve_plans_checkpoint_input_without_a_job(spark, synth_dir,
+                                                      tmp_path):
+    """Over a bare parquet input (a ``Checkpointer.stage`` read) auto
+    takes its row bound from the parquet footers, so planning the dissolve
+    starts no Spark job (over ``createDataFrame`` input it still counts
+    group sizes: test_dissolve_auto_routes_degenerate_group)."""
+    from rlis2osm_spark.operators.combine import combine
+    from rlis2osm_spark.plans.checkpoint import Checkpointer
+
+    streets, trails, bikes = (
+        spark.read.parquet(f"{synth_dir}/{n}.parquet")
+        for n in ("streets", "trails", "bike_routes"))
+    combined = Checkpointer(spark, str(tmp_path)).stage(
+        "combined", lambda: combine(streets, trails, bikes))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    before = set(tracker.getJobIdsForGroup(group))
+    dissolve_ways(combined, ordered=True)
+    assert set(tracker.getJobIdsForGroup(group)) <= before
+
+
+def _python_rows_received(df) -> int:
+    """``pythonNumRowsReceived`` summed over every Python node of df's
+    executed plan, walking into AQE's query stages. After one action it
+    equals the rows the Python kernels produced, so a node that a range
+    partitioner's sampling job ran again counts its rows twice."""
+    total, stack = 0, [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        metric = node.metrics().get("pythonNumRowsReceived")
+        if metric.isDefined():
+            total += metric.get().value()
+        children = node.children().iterator()
+        while children.hasNext():
+            stack.append(children.next())
+    return total
+
+
+@pytest.mark.parametrize("algorithm", ["auto", "greedy"])
+def test_ordered_dissolve_runs_kernel_once(spark, algorithm):
+    """``ordered=True`` range-sorts the kernel's output without running
+    the kernel again in the range partitioner's sampling job (the hybrid
+    path is checked in test_dissolve_auto_routes_degenerate_group)."""
+    rows = [(4 * street + k, "residential", f"S{street % 25}",
+             _seg(k, street, k + 1, street))
+            for street in range(100) for k in range(4)]
+    out = dissolve_ways(_combined_df(spark, rows), ordered=True,
+                        algorithm=algorithm)
+    n = len(out.collect())
+    assert n == 100  # one component per 4-segment street
+    assert _python_rows_received(out) == n
 
 
 def test_dissolve_same_tag_fork_divergence_pin(spark):
@@ -323,6 +388,50 @@ def test_cc_labels_matches_reference_union_find():
         assert np.array_equal(got, expect), f"trial {trial}"
 
 
+def test_merge_paths_matches_linemerge():
+    """The batched simple-path merge is byte-identical to linemerge_wkb on
+    every component it takes (chains of shuffled, randomly reversed
+    multi-vertex members, ±0.0 junctions, parallel members), and leaves
+    forks, cycles, closed members and NaN endpoints to linemerge_wkb."""
+    from rlis2osm_spark.functions import wkb
+    from rlis2osm_spark.operators.dissolve import _merge_paths
+
+    rng = np.random.default_rng(1)
+
+    def component(kind):
+        n = int(rng.integers(1, 7))
+        pts = (rng.integers(0, 3, (n + 1, 2)).astype(float) if kind == 5
+               else np.cumsum(rng.normal(size=(n + 1, 2)), 0))
+        if kind == 4:  # junctions that differ only in the sign of zero
+            pts[rng.integers(0, n + 1)] = [-0.0, 0.0]
+            pts[rng.integers(0, n + 1)] = [0.0, -0.0]
+        lines = []
+        for i in range(n):
+            line = np.vstack([pts[i], rng.normal(size=(rng.integers(0, 3), 2)),
+                              pts[i + 1]])
+            lines.append(line[::-1] if rng.random() < 0.5 else line)
+        if kind == 1 and n >= 2:
+            lines.append(np.vstack([pts[0], pts[-1]]))         # cycle
+        if kind == 2 and n >= 2:
+            lines.append(np.vstack([pts[1], pts[1] + 5]))      # fork
+        if kind == 3:
+            lines[0][0] = np.nan
+        return [encode_linestring(lines[i])
+                for i in rng.permutation(len(lines))]
+
+    comps = [component(i % 6) for i in range(600)]
+    flat = [g for c in comps for g in c]
+    offs, data = wkb.binary_buffers(pa.array([b"x"] + flat).slice(1))
+    is_path, merged = _merge_paths(data, offs, np.arange(len(flat)),
+                                   np.array([len(c) for c in comps]))
+    assert len(merged) == is_path.sum() > 200
+    for c, got in zip([c for c, p in zip(comps, is_path) if p], merged):
+        assert got.as_py() == wkb.linemerge_wkb(c)
+    for kind in (1, 2, 3):  # cycles, forks and NaN endpoints fall back
+        assert not any(p for i, p in enumerate(is_path)
+                       if i % 6 == kind and len(comps[i]) > 2)
+
+
 def test_endpoint_slices_batch_matches_substring():
     from rlis2osm_spark.functions.wkb import endpoint_slices_batch
 
@@ -331,11 +440,15 @@ def test_endpoint_slices_batch_matches_substring():
         encode_linestring([(1.0, 2.0), (3.0, 4.0), (5.0, 6.0)]),
         _seg(-0.0, 0.0, 1e300, -1e-300),
     ]
-    out = endpoint_slices_batch(geoms)
+    out = endpoint_slices_batch(pa.array(geoms, pa.binary()))
     assert out.shape == (3, 2, 16)
     for i, g in enumerate(geoms):
         assert out[i, 0].tobytes() == g[9:25]
         assert out[i, 1].tobytes() == g[len(g) - 16:]
+    # a sliced array starts at a non-zero offset into the same buffers
+    assert np.array_equal(
+        endpoint_slices_batch(pa.array(geoms, pa.binary()).slice(1)),
+        out[1:])
     import pytest as _pytest
     with _pytest.raises(ValueError):
-        endpoint_slices_batch([b"\x01\x02\x00\x00\x00"])
+        endpoint_slices_batch(pa.array([b"\x01\x02\x00\x00\x00"]))

@@ -105,6 +105,22 @@ def test_ring_knn_base_never_shuffles(spark):
                              plan), plan
 
 
+def test_ring_join_keys_are_not_cast(spark):
+    """Both sides of the ring-candidate join key on bigint (cx, cy), so
+    AQE's final plans of s5 and the scaling flagship cast neither side's
+    keys; s5's answer is unchanged."""
+    from rlis2osm_spark.queries.scaling import scaling_flagship
+
+    sf = "/root/testdata/sf0.01"
+    s5 = Q["s5_knn_points"](spark, sf)
+    assert len(s5.collect()) == 13
+    flagship = scaling_flagship(spark, sf, mult=2)
+    flagship.collect()
+    for df in (s5, flagship):
+        plan = _plan(df)  # after the action: the final adaptive plan
+        assert "cast(cx" not in plan and "cast(cy" not in plan, plan
+
+
 def test_minhash_band_join_shuffles_on_bucket(spark):
     plan = _plan(Q["d3_minhash_lsh"](spark, SF))
     assert "band" in plan and "bucket" in plan

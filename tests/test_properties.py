@@ -3,8 +3,10 @@ structural invariants that hold for ANY input, complementing the golden
 fixtures."""
 
 import re
+import struct
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from rlis2osm_spark.functions.expand import (
@@ -88,7 +90,7 @@ def test_wkb_roundtrip(pts):
     assert [(float(x), float(y)) for x, y in dec] == [
         (float(x), float(y)) for x, y in pts]
     fx, fy, tx, ty = np.frombuffer(
-        wkb.endpoint_slices_batch([enc]).tobytes(), "<f8")
+        wkb.endpoint_slices_batch(pa.array([enc])).tobytes(), "<f8")
     assert (fx, fy) == (float(pts[0][0]), float(pts[0][1]))
     assert (tx, ty) == (float(pts[-1][0]), float(pts[-1][1]))
 
@@ -103,6 +105,40 @@ def test_wkb_multi_roundtrip_and_explode(lines):
         dec = wkb.decode_linestring(part)
         assert [(float(x), float(y)) for x, y in dec] == [
             (float(x), float(y)) for x, y in line]
+
+
+geometries = st.one_of(
+    st.none(),
+    coords.map(lambda pts: struct.pack("<BI2d", 1, wkb.WKB_POINT, *pts[0])),
+    coords.map(wkb.encode_linestring),
+    st.lists(coords, max_size=4).map(wkb.encode_multilinestring),
+)
+
+
+@settings(max_examples=100, deadline=None, derandomize=True)
+@given(st.lists(geometries, max_size=8), st.integers(0, 3))
+def test_vertices_batch_matches_per_blob_decode(geoms, skip):
+    """The whole-buffer vertex gather equals the per-blob decoders, on a
+    sliced array too (non-zero offset into the buffers)."""
+    geoms = [None] * skip + geoms
+    coords_out, counts, types = wkb.vertices_batch(
+        pa.array(geoms, pa.binary()).slice(skip))
+    want, want_counts = [], []
+    for g in geoms[skip:]:
+        if g is None:
+            want_counts.append(0)
+            continue
+        if wkb.geom_type(g) == wkb.WKB_POINT:
+            parts = [np.array([struct.unpack_from("<2d", g, 5)])]
+        else:
+            parts = wkb.decode_lines(g)
+        want.extend(parts)
+        want_counts.append(sum(map(len, parts)))
+    want = np.concatenate(want) if want else np.empty((0, 2))
+    assert coords_out.tobytes() == want.astype("<f8").tobytes()
+    assert counts.tolist() == want_counts
+    assert types.tolist() == [0 if g is None else wkb.geom_type(g)
+                              for g in geoms[skip:]]
 
 
 @settings(max_examples=100, deadline=None, derandomize=True)

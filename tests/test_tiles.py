@@ -5,7 +5,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from rlis2osm_spark.functions.wkb import encode_linestring, encode_point
+from rlis2osm_spark.functions.wkb import encode_linestring, encode_points_batch
 from rlis2osm_spark.spatial.tiles import (
     TileGrid,
     grid_coords,
@@ -57,7 +57,8 @@ def test_tile_cell_bounds_clamped(spark):
 def test_with_tile_geometry(spark):
     g = TileGrid(0.0, 0.0, 1024.0)
     rows = [
-        ("p", encode_point(100.0, 100.0)),
+        ("p", encode_points_batch(np.array([100.0]),
+                                  np.array([100.0]))[0].as_py()),
         ("l", encode_linestring([(0.0, 0.0), (200.0, 200.0)])),
     ]
     df = spark.createDataFrame(rows, "id string, geometry binary")
