@@ -283,11 +283,16 @@ def write_osm_xml(
                 "requires out_dir on a filesystem shared by driver and "
                 "executors (local mode or an NFS/object-store mount) — see "
                 "the docstring's filesystem contract") from None
-        final_rows.append((dest, n_ways, n_nodes, n_null, dig))
+        final_rows.append(dict(zip(_OUT_SCHEMA.names,
+                                   (dest, n_ways, n_nodes, n_null, dig))))
     for old in _glob.glob(os.path.join(out_dir, "part-*.osm")):
         if old not in seen:
             os.remove(old)
-    return df.sparkSession.createDataFrame(final_rows, _OUT_SCHEMA)
+    # an Arrow table becomes a local relation; a list of rows would become
+    # an RDD that runs one Python task per core just to convert them
+    return df.sparkSession.createDataFrame(
+        pa.Table.from_pylist(final_rows, schema=_OUT_ARROW_SCHEMA),
+        _OUT_SCHEMA)
 
 
 _FRAG_MANIFEST = "_fragments.json"
