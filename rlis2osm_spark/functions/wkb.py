@@ -142,10 +142,11 @@ def endpoint_slices_batch(geoms: pa.Array) -> np.ndarray:
     """Vectorized endpoint extraction over a binary array of single-part
     LineString WKBs: returns ``(n, 2, 16)`` uint8 — each geometry's
     first- and last-vertex 16-byte coordinate payloads, the exact ranges
-    the native ``substring(geom, 10, 16)`` path slices (see
-    ``endpoint_nodes``). One fancy-indexed gather from the array's data
-    buffer; no Python object per row. It does not validate geometry type —
-    callers guard multi/null geometries upstream (operators/dissolve.py)."""
+    the native ``substring(geom, 10, 16)`` slices (the dissolve's merge
+    join keys a way by its first one). One fancy-indexed gather from the
+    array's data buffer; no Python object per row. It does not validate
+    geometry type — callers guard multi/null geometries upstream
+    (operators/dissolve.py)."""
     offs, data = binary_buffers(geoms)
     n = len(geoms)
     if (np.diff(offs) < 25).any():

@@ -4,39 +4,33 @@
 The reference builds node maps in driver memory and runs a greedy
 single-path BFS (dissolve.py:51-160) — the documented scalability wall. Here:
 
-- **J3 endpoint index, zero UDF**: a LineString's endpoints are contiguous
-  byte ranges of its WKB (`substring(geom, 10, 16)` / last 16 bytes), so the
-  node key is the raw 16-byte coordinate payload — byte equality IS the
-  reference's exact-float-tuple equality (dissolve.py:144-145), no snapping,
-  and the whole index pass stays inside WholeStageCodegen.
+- **J3 endpoint index**: a LineString's endpoints are contiguous byte
+  ranges of its WKB (bytes 10-25 and the last 16), so the node key is the
+  raw 16-byte coordinate payload — byte equality IS the reference's
+  exact-float-tuple equality (dissolve.py:144-145), no snapping. The
+  kernels gather them from the Arrow buffers in one pass
+  (``wkb.endpoint_slices_batch``).
 - **J4 grouping = true connected components per tag-group**, not the
   reference's greedy BFS: CC is deterministic and parallel; the two coincide
   on fork-free topologies (SURVEY §7.3 hazard — goldens use those). An
   exact greedy-BFS emulation (``algorithm="greedy"``, r3) covers users who
   need byte-parity with reference output on forked topologies.
-  Components are computed with a per-group union-find inside an Arrow
-  partition pass (``mapInArrow``, reading the WKB straight from the
-  binary column's buffers): a tag-group (one street name + identical
-  tags) is city-sized, so a group fits a worker comfortably; the shuffle
-  key is the tag-group hash, which is exactly the explicit-partitioning
-  contract the north rule asks for.
-- **A1/A2 merge, FUSED with CC (r5)**: when every group fits a worker the
-  payload repartitions by group_key ONCE and union-find + way_id-ordered
-  linemerge + first-row tags all happen inside that partition — the
-  unfused shape (node self-join, comps merge join, component groupBy)
-  moved the full payload through three exchanges and two sorts. The
-  greedy compat mode is fused the same way (its applyInArrow grouping
-  IS the one payload exchange). Routed degenerate groups still use
-  groupBy component -> sorted collect_list -> Arrow-batched linemerge
-  after iterative CC.
+- **A1/A2 merge, fused with CC**: the payload reaches the merge kernel
+  (``mapInArrow``) partitioned so that whole components sit together;
+  way_id-ordered linemerge and first-row tags happen there, in one
+  vectorized pass (``_merge_component_rows``).
 
-Scale notes (100 TB): degenerate groups (e.g. unnamed service roads
-spanning a continent) are the skew risk. ``algorithm="auto"`` measures
-group sizes first (one map-side-combined count) and routes any group above
-``max_group_rows`` to the O(log^2 n) large-star/small-star iterative CC
-(cc_iterative.py) while the rest take the cheap per-partition union-find —
-no caller tuning required, and both paths are proven equivalent in
-tests/test_dissolve.py.
+One route serves every input size (``dissolve_ways``). From a bound on the
+input's rows it picks a tile level L, the smallest with
+``rows <= MAX_GROUP_ROWS * 4**L``. At L = 0 every tag-group fits a worker:
+the payload repartitions by tag-group once and union-find plus merge run in
+one kernel. Above it, degenerate groups (e.g. unnamed service roads
+spanning a continent) are contracted over the level-L Morton cells of
+``spatial/tiles.py`` in a fixed sequence of four steps — local components
+per (group, cell), a native aggregate where labels meet at nodes, one
+union-find over the meeting labels per group, and the merge keyed on the
+component. No step loops on the driver, and the output equals the L = 0
+route's byte for byte.
 """
 
 from __future__ import annotations
@@ -53,13 +47,34 @@ from pyspark.sql.types import (
 from rlis2osm_spark.functions import wkb
 from rlis2osm_spark.plans.iceberg_shim import file_row_counts
 from rlis2osm_spark.schemas import COMBINED_FIELDS
+from rlis2osm_spark.spatial.tiles import with_tile
 
 _NULL_SENTINEL = "\x00<null>"
+
+# rows one worker's union-find takes in one partition: the tag-group size
+# bound below which a group needs no contraction
+MAX_GROUP_ROWS = 250_000
+
+_LOCAL_SCHEMA = StructType([
+    StructField("group_key", LongType(), False),
+    StructField("label", LongType(), False),
+    StructField("node_f", BinaryType(), False),
+    StructField("node_t", BinaryType(), False)])
+_ROOT_SCHEMA = StructType([StructField("label", LongType(), False),
+                           StructField("root", LongType(), False)])
 
 
 def spark_partitions(df: DataFrame) -> int:
     """Session shuffle parallelism (the CC bucket count)."""
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+
+
+def _tile_level(rows: int) -> int:
+    """The smallest tile level L with ``rows <= MAX_GROUP_ROWS * 4**L``."""
+    level = 0
+    while rows > MAX_GROUP_ROWS * 4 ** level:
+        level += 1
+    return level
 
 
 def _define_filter_fields(all_fields: list[str], fields=None, exclude=False):
@@ -129,42 +144,42 @@ def _arrow_input(table: pa.Table, geom_col: str) -> pa.Table:
     ).combine_chunks()
 
 
-def _fused_dissolve_partitions(dissolve_fields: list[str], geom_col: str):
-    """mapInArrow driver for the fused union-find + merge path (r5): a
-    partition holds WHOLE tag-groups' payload rows; one pass slices the
-    endpoint nodes straight from the WKB buffer (same 16-byte ranges the
-    native substring path uses), unions same-node ways per group, then
-    linemerges each component's way_id-ordered members and emits the
-    merged row with the first member's tags — identical output to a
-    separate components pass + ``_merge_components``, but the payload
-    crosses the wire ONCE (the group_key repartition) instead of three
-    times (node self-join exchange + merge-join exchange + component
-    groupBy exchange)."""
+def _partition_table(batches, geom_col: str) -> pa.Table | None:
+    """A mapInArrow partition as one ``_arrow_input`` table; None when it
+    holds no rows."""
+    batches = list(batches)
+    if not any(b.num_rows for b in batches):
+        return None
+    return _arrow_input(pa.Table.from_batches(batches), geom_col)
+
+
+def _merge_partitions(dissolve_fields: list[str], geom_col: str,
+                      components):
+    """mapInArrow driver of the merge: a partition holds WHOLE components'
+    payload rows, ``components(table)`` gives each row's component id,
+    and ``_merge_component_rows`` emits one merged row per component."""
 
     def run(batches):
-        batches = list(batches)
-        if not any(b.num_rows for b in batches):
-            return
-        table = _arrow_input(pa.Table.from_batches(batches), geom_col)
-        comp = _fused_components(table, geom_col)
-        yield _merge_component_rows(table, comp, dissolve_fields, geom_col)
+        table = _partition_table(batches, geom_col)
+        if table is not None:
+            yield _merge_component_rows(table, components(table),
+                                        dissolve_fields, geom_col)
 
     return run
 
 
-def _fused_components(table: pa.Table, geom_col: str) -> np.ndarray:
-    """Per-payload-row component ids (min way_id of the endpoint-connected
-    same-group ways — identical labels to the r1-r5 dict union-find), all
-    numpy (r6): endpoint payloads gathered from the WKB buffer in one
-    fancy-indexed pass (wkb.endpoint_slices_batch), (group_key, node) keys
-    densified, CC over the bipartite way-node graph — no per-row Python."""
-    way_codes, way_uniques = pd.factorize(table["way_id"].to_numpy())
+def _fused_components(keys: np.ndarray, ways: np.ndarray,
+                      ends: np.ndarray) -> np.ndarray:
+    """Per-row component ids: the min way_id of the ways that share an
+    endpoint node under the same key, all numpy — ``ends`` is each row's
+    ``(2, 16)`` endpoint payloads (``wkb.endpoint_slices_batch``),
+    (key, node) pairs are densified, and CC runs over the bipartite
+    way-node graph — no per-row Python."""
+    way_codes, way_uniques = pd.factorize(ways)
     way_uniques = np.asarray(way_uniques, np.int64)
     n_ways = len(way_uniques)
-    ends = wkb.endpoint_slices_batch(table[geom_col].chunk(0))  # (n, 2, 16)
     node_bits = ends.reshape(-1, 16).view("<i8")    # (2n, 2) int64
-    gk2 = np.repeat(table["group_key"].to_numpy(), 2)
-    node_idx, m = _group_node_ids(gk2, node_bits)
+    node_idx, m = _group_node_ids(np.repeat(keys, 2), node_bits)
     # bipartite edges: each endpoint node -> its way vertex
     labels = _cc_labels(
         node_idx, m + np.repeat(way_codes.astype(np.int64), 2),
@@ -345,29 +360,129 @@ def _fused_schema(df: DataFrame, dissolve_fields: list[str],
 
 def _dissolve_fused(df: DataFrame, dissolve_fields: list[str],
                     geom_col: str, n_parts: int) -> DataFrame:
-    """One-exchange dissolve for inputs whose tag-groups all fit a worker
-    (the union-find contract): hash-partition whole groups WITH their
-    payload, then component-find and merge inside the partition."""
+    """Level 0: one exchange. Whole tag-groups hash-partition WITH their
+    payload; component-find and merge run inside the partition."""
     return (
         df.select("group_key", "way_id", *[F.col(f"`{c}`")
                                            for c in dissolve_fields],
                   geom_col)
         .repartition(n_parts, "group_key")
         .mapInArrow(
-            _fused_dissolve_partitions(dissolve_fields, geom_col),
+            _merge_partitions(
+                dissolve_fields, geom_col,
+                lambda t: _fused_components(
+                    t["group_key"].to_numpy(), t["way_id"].to_numpy(),
+                    wkb.endpoint_slices_batch(t[geom_col].chunk(0)))),
             _fused_schema(df, dissolve_fields, geom_col))
     )
 
 
-def _fused_greedy_group(dissolve_fields: list[str], geom_col: str,
-                        max_group_rows: int | None):
+def _dissolve_contracted(df: DataFrame, dissolve_fields: list[str],
+                         geom_col: str, n_parts: int,
+                         level: int) -> DataFrame:
+    """Level L > 0: contract each tag-group over its level-L tile cells
+    in four fixed steps (``dissolve_ways`` doc)."""
+    # 1. local: components per (group, cell of the way's midpoint); a
+    # way's label is the min way_id of its local component
+    local = (
+        with_tile(df.select("group_key", "way_id", geom_col), level,
+                  geom_col)
+        .select("group_key", "way_id", geom_col,
+                F.xxhash64("group_key", "cell").alias("cell_key"))
+        # AQE sizes the inner exchanges; only the last one, whose
+        # partitions become the output files, has a fixed count
+        .repartition("cell_key")
+        .mapInArrow(_local_labels(geom_col), _LOCAL_SCHEMA))
+    # 2. meet: per (group, node), the least label there and every label.
+    # Both uses below read this one aggregate's exchange, so the local
+    # kernel runs once.
+    meet = (
+        local.select("group_key", "label",
+                     F.explode(F.array("node_f", "node_t")).alias("node"))
+        .groupBy("group_key", "node")
+        .agg(F.min("label").alias("least"),
+             F.collect_set("label").alias("labels"))
+        .select("group_key", "node", "least",
+                F.explode("labels").alias("label")))
+    # 3. resolve: an edge from each label to the least one at its node;
+    # one union-find per group over those edges roots every label
+    roots = (
+        meet.where(F.col("label") != F.col("least"))
+        .select("group_key", "label", "least")
+        .repartition("group_key")
+        .mapInArrow(_resolve_roots, _ROOT_SCHEMA))
+    # 4. merge: a node's component is its least label's root; a way's is
+    # its first node's, and one payload exchange on it brings every
+    # component's rows together
+    node_comp = (
+        meet.where(F.col("label") == F.col("least"))
+        .join(roots, "label", "left")
+        .select("group_key", "node",
+                F.coalesce("root", "label").alias("component_id")))
+    return (
+        df.select("group_key", "way_id",
+                  *[F.col(f"`{c}`") for c in dissolve_fields], geom_col,
+                  F.substring(geom_col, 10, 16).alias("node"))
+        .join(node_comp, ["group_key", "node"])
+        .repartition(n_parts, "component_id")
+        .mapInArrow(
+            _merge_partitions(dissolve_fields, geom_col,
+                              lambda t: t["component_id"].to_numpy()),
+            _fused_schema(df, dissolve_fields, geom_col))
+    )
+
+
+def _local_labels(geom_col: str):
+    """mapInArrow driver of step 1: per row, its group_key, its local
+    label — the component id under ``cell_key`` — and its two endpoint
+    nodes as 16-byte binaries. No tag payload comes in."""
+
+    def node_array(ends: np.ndarray) -> pa.Array:
+        return pa.FixedSizeBinaryArray.from_buffers(
+            pa.binary(16), len(ends),
+            [None, pa.py_buffer(np.ascontiguousarray(ends))]
+        ).cast(pa.binary())
+
+    def run(batches):
+        table = _partition_table(batches, geom_col)
+        if table is None:
+            return
+        ends = wkb.endpoint_slices_batch(table[geom_col].chunk(0))
+        label = _fused_components(table["cell_key"].to_numpy(),
+                                  table["way_id"].to_numpy(), ends)
+        yield pa.RecordBatch.from_arrays(
+            [table["group_key"].chunk(0), pa.array(label, pa.int64()),
+             node_array(ends[:, 0]), node_array(ends[:, 1])],
+            names=_LOCAL_SCHEMA.names)
+
+    return run
+
+
+def _resolve_roots(batches):
+    """mapInArrow kernel of step 3: the partition's (label, least) edges,
+    whole groups of them, resolved by ``_cc_labels``. Labels are way ids,
+    unique across groups, so one pass serves every group here; each
+    label's root is the least label of its component."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    edges = pa.Table.from_batches(batches)
+    u = edges["label"].to_numpy()
+    labels, idx = np.unique(
+        np.concatenate([u, edges["least"].to_numpy()]), return_inverse=True)
+    parent = _cc_labels(idx[:len(u)], idx[len(u):], len(labels))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(labels, pa.int64()), pa.array(labels[parent], pa.int64())],
+        names=["label", "root"])
+
+
+def _fused_greedy_group(dissolve_fields: list[str], geom_col: str):
     """applyInArrow driver fusing the reference-greedy traversal with
     the component merge (r5): one tag-group's payload rows arrive
     together; endpoint edge rows are sliced from the WKB buffer,
     ``_greedy_components`` replays the reference BFS, and the merged
-    rows are emitted directly — same one-payload-exchange shape as the
-    union-find fused path (the unfused greedy paid the merge join +
-    component groupBy exchanges on top of the grouped shuffle)."""
+    rows are emitted directly — the same one-payload-exchange shape as
+    the level-0 union-find route."""
 
     def run(table):
         table = _arrow_input(table, geom_col)
@@ -381,7 +496,7 @@ def _fused_greedy_group(dissolve_fields: list[str], geom_col: str,
             "way_id": np.repeat(ways, 2),
             "node_idx": np.tile([0, 1], n),
             "node": list(ends.reshape(2 * n, 16)),
-        }), max_group_rows)
+        }))
         comp_ways = comps["way_id"].to_numpy(np.int64)
         by_way = np.argsort(comp_ways)
         comp = comps["component_id"].to_numpy(np.int64)[by_way][
@@ -392,23 +507,7 @@ def _fused_greedy_group(dissolve_fields: list[str], geom_col: str,
     return run
 
 
-def endpoint_nodes(df: DataFrame, geom_col: str = "geometry",
-                   extra_cols: list[str] | None = None) -> DataFrame:
-    """J3: explode each way into two (way_id, node) rows, node = raw 16-byte
-    coordinate payload sliced natively from the WKB; ``extra_cols`` are
-    carried through."""
-    f_node = F.expr(f"substring({geom_col}, 10, 16)")
-    t_node = F.expr(
-        f"substring({geom_col}, length({geom_col}) - 15, 16)")
-    carry = list(extra_cols or [])
-    return df.select(
-        "way_id", *carry,
-        F.explode(F.array(f_node, t_node)).alias("node"),
-    )
-
-
-def _greedy_components(pdf: pd.DataFrame,
-                       max_group_rows: int | None = None) -> pd.DataFrame:
+def _greedy_components(pdf: pd.DataFrame) -> pd.DataFrame:
     """Exact emulation of the reference's greedy single-path BFS
     (/root/reference/rlis2osm/dissolve.py:51-160) over (group_key, order_key,
     way_id, node) edge rows — the r3 compat mode for users diffing against a
@@ -424,9 +523,9 @@ def _greedy_components(pdf: pd.DataFrame,
     byte key would split that node. The global algorithm decomposes
     exactly per tag-group (cross-tag ways are skipped by the tag-equality
     check), so whole groups parallelize across partitions while each group
-    replays the reference's traversal. ``max_group_rows`` guards the
+    replays the reference's traversal. ``MAX_GROUP_ROWS`` guards the
     degenerate-group hazard loudly: greedy is inherently sequential per
-    group, so there is NO iterative fallback for oversized groups."""
+    group, so oversized groups have no contracted fallback."""
     from struct import pack, unpack
 
     def norm_node(b: bytes) -> bytes:
@@ -436,12 +535,12 @@ def _greedy_components(pdf: pd.DataFrame,
     out_ways: list[int] = []
     out_comps: list[int] = []
     for _gk, g in pdf.groupby("group_key", sort=False):
-        if max_group_rows is not None and len(g) > 2 * max_group_rows:
+        if len(g) > 2 * MAX_GROUP_ROWS:
             raise ValueError(
                 f"greedy dissolve: tag-group with {len(g) // 2} ways "
-                f"exceeds max_group_rows={max_group_rows}; the reference "
-                "traversal is sequential per group (no iterative fallback) "
-                "— raise the cap or use algorithm='auto'")
+                f"exceeds {MAX_GROUP_ROWS}; the reference traversal is "
+                "sequential per group (no contracted route) — use "
+                "algorithm='auto'")
         tagged: dict[int, list[tuple[int, bytes]]] = {}
         order: dict[int, str] = {}
         for way_id, okey, nidx, node in zip(
@@ -480,35 +579,12 @@ def _greedy_components(pdf: pd.DataFrame,
     return pd.DataFrame({"way_id": out_ways, "component_id": out_comps})
 
 
-def _comps_iterative(nodes: DataFrame, ways: DataFrame) -> DataFrame:
-    """O(log^2 n) large-star/small-star CC over DataFrame self-joins — the
-    path for groups too large for one worker (cc_iterative.py). ``ways``
-    supplies singleton ways so isolated members keep a component."""
-    from rlis2osm_spark.operators.cc_iterative import connected_components
-
-    node_ids = nodes.withColumn("node_id", F.xxhash64("group_key", "node"))
-    pairs = (
-        node_ids.alias("a")
-        .join(node_ids.alias("b"),
-              (F.col("a.node_id") == F.col("b.node_id"))
-              & (F.col("a.way_id") < F.col("b.way_id")))
-        .select(F.col("a.way_id").alias("u"),
-                F.col("b.way_id").alias("v"))
-    )
-    all_ways = ways.select(F.col("way_id").alias("u"),
-                           F.col("way_id").alias("v"))
-    return connected_components(pairs.union(all_ways)).select(
-        F.col("node").alias("way_id"),
-        F.col("component").alias("component_id"))
-
-
 def dissolve_ways(
     combined: DataFrame,
     fields: list[str] | None = None,
     exclude: bool = False,
     geom_col: str = "geometry",
     algorithm: str = "auto",
-    max_group_rows: int = 250_000,
     approx_rows: int | None = None,
     ordered: bool = False,
 ) -> DataFrame:
@@ -521,42 +597,57 @@ def dissolve_ways(
     (dissolve.py:137-142 / its hard crash on missing geometry) — run
     ``explode_multipart`` first.
 
-    ``algorithm="auto"`` (default) routes groups above ``max_group_rows``
-    — the degenerate-skew hazard, e.g. unnamed service roads spanning the
-    whole extent — to the iterative large-star/small-star CC, everything
-    else to the per-partition union-find. To find them it counts rows per
-    tag-group first (one cheap map-side-combined agg), unless a total-row
-    bound at or under the cap is known: ``approx_rows``, or, when
+    ``algorithm="auto"`` (default) is one route for every input size. It
+    takes a bound on the input's rows — ``approx_rows`` (an Iceberg
+    snapshot's record count, say), else the parquet footers when
     ``combined`` is a bare parquet scan (a ``Checkpointer.stage`` or
-    ``spark.read.parquet`` result), the row counts in its files' parquet
-    footers.
+    ``spark.read.parquet`` result), else ``combined.count()`` — and works
+    at tile level L, the smallest with ``rows <= MAX_GROUP_ROWS * 4**L``.
+    The bound also sizes the exchange into the last kernel, whose
+    partitions become the output files: ~50k rows each, at least 8, at
+    most the session's shuffle partitions.
+
+    - L = 0: no group can pass ``MAX_GROUP_ROWS``. The payload
+      repartitions by tag-group once; union-find and merge run in one
+      kernel per partition.
+    - L > 0: four fixed steps, with no driver loop.
+      1. *Local*: each way is keyed by its tag-group and the level-L
+         Morton cell of its midpoint; union-find per key over
+         (key, way_id, geometry), no tags, labels each way with the least
+         way_id of its local component.
+      2. *Meet*: a native aggregate over (group, endpoint node) emits an
+         edge from each label meeting at a node to the least of them.
+      3. *Resolve*: the edges repartition by group and one union-find per
+         group roots each label at the least label of its component —
+         exactly the L = 0 route's ``component_id``.
+      4. *Merge*: each node takes its least label's root; the payload
+         joins that on (group, first endpoint node) and takes one
+         exchange on ``component_id`` into the merge kernel.
+
+      Step 3 gets only int64 (group, label, least label) rows, one per
+      extra label at each node where ways of different cells meet, and
+      never any payload: no more of a group has to sit on one worker.
+      The output is the same for any spatial layout — geometry outside
+      the grid lands in its edge cells — and the layout only changes how
+      the work is split.
 
     ``algorithm="greedy"`` (r3) is the reference-compat mode: it replays
     the reference's greedy single-path BFS exactly — including on forked /
     cyclic topologies where true CC merges more aggressively — so a user
     diffing against a real rlis2osm run gets identical grouping
     (differential-pinned in tests/test_dissolve_differential.py). Whole
-    tag-groups still parallelize across workers.
+    tag-groups still parallelize across workers; a group above
+    ``MAX_GROUP_ROWS`` raises.
 
-    ``approx_rows`` (r3, VERDICT r2 #5) short-circuits the auto planning
-    job: when the caller knows a total-row upper bound <= max_group_rows
-    (parquet footer metadata, an Iceberg snapshot's record count — free at
-    any scale), NO group can exceed the cap, so auto routes straight to
-    union-find without the extra count job. It defaults to the footer
-    count of a bare parquet input (above); the bound also sizes the
-    union-find shuffle.
-
-    ``ordered=True`` (r4, VERDICT r3 #4) totally orders the output by
-    ``component_id`` (unique per row, deterministic — min way_id of the
-    component, itself a pure hash of source lineage), so row order is
-    fixed for display/diff consumers — the reference's output is
-    deterministic by construction (/root/reference/rlis2osm/main.py:76-138).
-    Where that order is cut into files is not fixed: Spark's range
-    partitioner seeds its sample with the RDD id, so once an input
-    partition holds more rows than the sample takes, two runs in one
-    session can split the same rows differently. Costs one hash exchange
-    plus one range exchange of the output rows; the Python kernel runs
-    once (see ``_total_order``). Leave False for set-semantics pipelines.
+    ``ordered=True`` (r4) sorts each output partition by ``component_id``
+    (unique per row, deterministic — min way_id of the component, itself
+    a pure hash of source lineage), with no exchange after the kernel.
+    The kernel's partitions are placed by hash, so the files a write
+    produces and their contents are the same on every run, each sorted by
+    ``component_id`` — the reference's output is deterministic by
+    construction (/root/reference/rlis2osm/main.py:76-138). A ``collect()``
+    is sorted within partitions, not globally. Leave False for
+    set-semantics pipelines.
     """
     tag_fields = [c for c in COMBINED_FIELDS if c in combined.columns]
     dissolve_fields = _define_filter_fields(tag_fields, fields, exclude)
@@ -594,18 +685,6 @@ def dissolve_ways(
         raise ValueError(
             f"unknown algorithm {algorithm!r}; expected 'auto' or 'greedy'")
 
-    if approx_rows is None:
-        approx_rows = _footer_rows(combined)
-    n_parts = max(spark_partitions(combined), 8)
-    if approx_rows is not None:
-        # size the CC shuffle to the data: ~50k node rows per partition,
-        # never above the session parallelism (tiny inputs stop paying
-        # 64-task overhead; 100 TB inputs still spread fully)
-        n_parts = max(8, min(n_parts, approx_rows // 50_000 + 1))
-
-    def finish(out):
-        return _total_order(out, n_parts) if ordered else out
-
     if algorithm == "greedy":
         # source visit order = (src_table, fid, part_idx), the reference's
         # ways.items() iteration (fids can COLLIDE across source tables in
@@ -632,79 +711,27 @@ def dissolve_ways(
             .otherwise(F.raise_error(F.lit(
                 "greedy dissolve: part_idx outside [0, 10^6) breaks the "
                 "reference visit-order encoding"))))
-        return finish(
+        out = (
             df.withColumn("order_key", order_key)
             .select("group_key", "order_key", "way_id",
                     *[F.col(f"`{c}`") for c in dissolve_fields], geom_col)
             .groupBy("group_key")
             .applyInArrow(
-                _fused_greedy_group(dissolve_fields, geom_col,
-                                    max_group_rows),
+                _fused_greedy_group(dissolve_fields, geom_col),
                 _fused_schema(df, dissolve_fields, geom_col))
         )
-
-    if approx_rows is not None and approx_rows <= max_group_rows:
-        # every group fits a worker (the approx_rows bound short-circuits
-        # the routing job) -> the FUSED one-exchange path (r5): payload
-        # repartitions by group_key once; union-find and linemerge happen
-        # inside the partition. The unfused shape paid two more
-        # full-payload exchanges (merge join + component groupBy) plus
-        # their sorts.
-        return finish(_dissolve_fused(df, dissolve_fields, geom_col,
-                                      n_parts))
-
-    # auto: route only degenerate groups to the iterative path.
-    # NOTE: the routing decision needs the group-size distribution, so
-    # "auto" runs ONE planning-time Spark job here (map-side-combined
-    # count + the big-key collect) unless a row bound came from the caller
-    # or the input's parquet footers.
-    sizes = df.groupBy("group_key").agg(F.count("*").alias("_gsz"))
-    big_df = sizes.filter(F.col("_gsz") > max_group_rows).select(
-        "group_key")
-    # degenerate groups are by definition FEW (> max_group_rows each),
-    # so the key set collects to the driver once. Guard: cap the collect
-    # at 100k keys (pathological inputs fail loudly, not driver-OOM).
-    big_keys = [r.group_key
-                for r in big_df.limit(100_001).collect()]
-    if len(big_keys) > 100_000:
-        raise ValueError(
-            "more than 100k tag-groups exceed max_group_rows="
-            f"{max_group_rows}; raise the threshold")
-    if not big_keys:
-        return finish(_dissolve_fused(df, dissolve_fields, geom_col,
-                                      n_parts))
-    # route via a broadcast-joined key frame, NOT isin literals:
-    # 100k literals would inflate every downstream plan and task
-    # closure (ADVICE r2); a local-list DataFrame broadcasts once.
-    # Small groups take the fused path; degenerate groups go through
-    # iterative CC + the unfused merge (their payload cannot sit on
-    # one worker, so the component groupBy exchange is unavoidable
-    # there).
-    spark = combined.sparkSession
-    bk = F.broadcast(spark.createDataFrame(
-        [(k,) for k in big_keys], "group_key long"))
-    small_df = df.join(bk, "group_key", "left_anti")
-    big_df_rows = df.join(bk, "group_key", "left_semi")
-    # group_key rides through the endpoint explode (narrow projection) —
-    # joining it back on way_id would be a full sort-merge self-join of the
-    # node frame against the input, i.e. two extra exchanges of every node
-    # row before the one repartition CC actually needs (r5)
-    big_n = endpoint_nodes(df, geom_col, extra_cols=["group_key"]).join(
-        bk, "group_key", "left_semi")
-    comps_big = _comps_iterative(big_n, big_df_rows.select("way_id"))
-    return finish(_dissolve_fused(
-        small_df, dissolve_fields, geom_col, n_parts
-    ).unionByName(_merge_components(
-        big_df_rows, comps_big, dissolve_fields, geom_col)))
-
-
-def _total_order(out: DataFrame, n_parts: int) -> DataFrame:
-    """``ordered=True``'s total order on ``component_id``. A global sort
-    directly above a Python node makes the range partitioner's sampling
-    job run that node again; the hash exchange first turns the kernel's
-    output into a shuffle stage of its own, so the sampler reads the
-    stage's shuffle files instead."""
-    return out.repartition(n_parts, "component_id").orderBy("component_id")
+    else:
+        rows = (approx_rows if approx_rows is not None
+                else _footer_rows(combined))
+        if rows is None:
+            rows = combined.count()
+        n_parts = min(spark_partitions(combined), max(8, rows // 50_000 + 1))
+        level = _tile_level(rows)
+        out = (_dissolve_fused(df, dissolve_fields, geom_col, n_parts)
+               if level == 0 else
+               _dissolve_contracted(df, dissolve_fields, geom_col, n_parts,
+                                    level))
+    return out.sortWithinPartitions("component_id") if ordered else out
 
 
 def _footer_rows(df: DataFrame) -> int | None:
@@ -721,31 +748,3 @@ def _footer_rows(df: DataFrame) -> int | None:
         return None
     counts = file_row_counts(df.inputFiles())
     return None if counts is None else sum(counts)
-
-
-def _merge_components(df: DataFrame, comps: DataFrame,
-                      dissolve_fields: list[str], geom_col: str) -> DataFrame:
-    """A1/A2: per-component fid-ordered collect + Arrow linemerge + first-row
-    tags (equal within group by construction, reference dissolve.py:81-82)."""
-    with_comp = df.join(comps, "way_id")
-
-    @F.pandas_udf(BinaryType())
-    def merge_geoms(geom_lists: pd.Series) -> pd.Series:
-        return geom_lists.map(
-            lambda gl: wkb.linemerge_wkb([bytes(g) for g in gl]))
-
-    return (
-        with_comp.groupBy("component_id")
-        .agg(
-            *[F.first(F.col(f"`{c}`")).alias(c) for c in dissolve_fields],
-            F.sort_array(
-                F.collect_list(F.struct("way_id", F.col(geom_col)))
-            ).alias("_members"),
-        )
-        .withColumn("n_members", F.size("_members"))
-        .withColumn(
-            geom_col,
-            merge_geoms(F.transform("_members", lambda m: m[geom_col])),
-        )
-        .drop("_members")
-    )

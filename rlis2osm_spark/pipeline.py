@@ -60,10 +60,9 @@ _COMBINED_CODE = ("rlis2osm_spark.operators.combine",
                   "rlis2osm_spark.functions.wkb",
                   "rlis2osm_spark.schemas")
 _DISSOLVED_CODE = ("rlis2osm_spark.operators.dissolve",
-                   "rlis2osm_spark.operators.cc_iterative",
-                   "rlis2osm_spark.operators.combine",
-                   "rlis2osm_spark.functions.wkb",
-                   "rlis2osm_spark.schemas")
+                   "rlis2osm_spark.spatial.tiles",
+                   "rlis2osm_spark.plans.iceberg_shim",
+                   *_COMBINED_CODE)
 
 
 def convert(spark: SparkSession, data_dir: str, out_dir: str,

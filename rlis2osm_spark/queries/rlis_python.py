@@ -181,11 +181,10 @@ def rlis_dissolve_cc(spark, sf_dir):
         expand_street_names, translate_streets)
     from rlis2osm_spark.queries.util import cached_stage
 
-    # the translated frame is a CHECKPOINTED stage (r4): dissolve consumes
-    # its input three times (endpoint index, group keys, merge join), and
-    # in the production pipeline that input is a materialized snapshot
-    # (pipeline.convert checkpoints combine before dissolve) — without it
-    # the expand/translate pandas-UDF chain recomputes per consumer
+    # the translated frame is a CHECKPOINTED stage (r4), as dissolve's
+    # input is in the production pipeline (pipeline.convert checkpoints
+    # combine before dissolve) — without it the expand/translate
+    # pandas-UDF chain would recompute for every read of it
     osm = cached_stage(
         spark, sf_dir, "dissolve_input",
         lambda: translate_streets(
@@ -201,9 +200,9 @@ def rlis_dissolve_cc(spark, sf_dir):
         ],
     )
     # row bound from the parquet footer (free; at scale: Iceberg snapshot
-    # record count) lets auto skip its group-size planning job (VERDICT r2
-    # #5); the staged frame is a local checkpoint, not a parquet scan, so
-    # dissolve cannot read the footers itself
+    # record count) spares auto its row count (VERDICT r2 #5); the staged
+    # frame is a local checkpoint, not a parquet scan, so dissolve cannot
+    # read the footers itself
     from rlis2osm_spark.plans.iceberg_shim import file_row_counts
 
     (n_rows,) = file_row_counts([f"{sf_dir}/part.parquet"])

@@ -1,6 +1,8 @@
 """Dissolve goldens (FIXTURES.md §6.5; reference dissolve.py). Topologies are
 fork-free so greedy-BFS and true-CC semantics coincide (SURVEY §7.3)."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -15,6 +17,7 @@ from rlis2osm_spark.functions.wkb import (
 )
 from rlis2osm_spark.operators.dissolve import _define_filter_fields, dissolve_ways
 from rlis2osm_spark.schemas import COMBINED_FIELDS
+from rlis2osm_spark.spatial.tiles import TileGrid
 
 
 def _combined_df(spark, rows):
@@ -151,22 +154,22 @@ def test_dissolve_synth_end_to_end(spark, synth_dir):
         assert decode_lines(bytes(r.geometry))
 
 
-def test_dissolve_iterative_matches_unionfind(spark, synth_dir):
-    """Scale-path CC (large-star/small-star) produces the same dissolve
-    groups as the per-group union-find: with max_group_rows=0 every group
-    routes to the iterative path."""
+def test_dissolve_iterative_matches_unionfind(spark, synth_dir, tmp_path):
+    """Forced contraction gives the same rows as the level-0 union-find
+    route: component_id, tags, n_members and geometry bytes. A row bound
+    of 10**12 puts the route at tile level 11, whose cells (195 units) are
+    shorter than every synthetic member (200-800), so every chain crosses
+    cells at every joint."""
     from rlis2osm_spark.operators.combine import combine
+    from rlis2osm_spark.plans.checkpoint import Checkpointer
 
     streets = spark.read.parquet(f"{synth_dir}/streets.parquet")
     trails = spark.read.parquet(f"{synth_dir}/trails.parquet")
     bikes = spark.read.parquet(f"{synth_dir}/bike_routes.parquet")
-    combined = combine(streets, trails, bikes)
-    a = dissolve_ways(combined).select("component_id", "n_members")
-    b = dissolve_ways(combined, max_group_rows=0).select(
-        "component_id", "n_members")
-    ra = sorted((r.component_id, r.n_members) for r in a.collect())
-    rb = sorted((r.component_id, r.n_members) for r in b.collect())
-    assert ra == rb
+    combined = Checkpointer(spark, str(tmp_path)).stage(
+        "combined", lambda: combine(streets, trails, bikes))
+    assert _rows(dissolve_ways(combined, approx_rows=10**12).collect()) == (
+        _rows(dissolve_ways(combined).collect()))
 
 
 def test_dissolve_null_geometry_raises(spark):
@@ -182,55 +185,174 @@ def test_dissolve_null_geometry_raises(spark):
         dissolve_ways(df).collect()
 
 
+def _rows(rows) -> list:
+    """Collected output rows as sorted tuples, geometry as bytes."""
+    return sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
+                        else v for v in r) for r in rows)
+
+
+# inside TileGrid's extent; forced contraction (approx_rows=10**9) works
+# at tile level 6, whose cells are 6,250 units wide
+_X0, _Y0 = TileGrid().x0, TileGrid().y0
+
+
 def test_dissolve_auto_routes_degenerate_group(spark):
-    """VERDICT r1 #3: a tag-group larger than max_group_rows auto-routes to
-    the iterative CC and produces identical output to pure union-find."""
-    rows = []
-    # one degenerate group: a 60-segment chain + a disjoint 10-segment chain,
-    # all identically tagged (the 'unnamed service road' skew shape)
-    for i in range(60):
-        rows.append((i, "service", None, _seg(i, 0, i + 1, 0)))
-    for i in range(10):
-        rows.append((100 + i, "service", None, _seg(i, 50, i + 1, 50)))
+    """A degenerate tag-group (the 'unnamed service road' skew shape)
+    through forced contraction gives the level-0 route's rows. Every
+    member is longer than a cell, so both chains cross cells at every
+    joint."""
+    rows = [(i, "service", None,
+             _seg(_X0 + 1000 + 6500 * i, _Y0 + 1000,
+                  _X0 + 1000 + 6500 * (i + 1), _Y0 + 1000))
+            for i in range(60)]
+    rows += [(100 + i, "service", None,
+              _seg(_X0 + 1000, _Y0 + 200_000 + 6500 * i,
+                   _X0 + 1000, _Y0 + 200_000 + 6500 * (i + 1)))
+             for i in range(10)]
     # plus small healthy groups
-    rows.append((200, "residential", "Oak", _seg(0, 9, 1, 9)))
-    rows.append((201, "residential", "Oak", _seg(1, 9, 2, 9)))
-    rows.append((202, "tertiary", "Elm", _seg(5, 5, 6, 6)))
+    rows.append((200, "residential", "Oak", _seg(_X0, _Y0, _X0 + 7000, _Y0)))
+    rows.append((201, "residential", "Oak",
+                 _seg(_X0 + 7000, _Y0, _X0 + 14000, _Y0)))
+    rows.append((202, "tertiary", "Elm",
+                 _seg(_X0 + 5, _Y0 + 5, _X0 + 6, _Y0 + 6)))
     df = _combined_df(spark, rows)
 
-    def canon(res):
-        return sorted(
-            (r.highway, r.name, r.n_members,
-             tuple(sorted(map(tuple, map(lambda p: (tuple(p[0]), tuple(p[-1])),
-                                          decode_lines(bytes(r.geometry)))))))
-            for r in res.collect())
-
-    auto = dissolve_ways(df, max_group_rows=20)
-    uf = dissolve_ways(df)  # default cap: every group takes union-find
-    assert canon(auto) == canon(uf)
-    # the degenerate group really did split into its two chains
-    svc = [r for r in auto.collect() if r.highway == "service"]
-    assert sorted(r.n_members for r in svc) == [10, 60]
-    # ordered=True on the HYBRID path (fused small side + iterative big
-    # side unioned) is still a deterministic total order (r5), and each of
-    # its Python nodes runs once
-    d1 = dissolve_ways(df, max_group_rows=20, ordered=True)
+    # ordered=True over contraction: the level-0 route's rows, each
+    # partition sorted by component_id, and every Python node run once
+    # (midpoints, local labels, roots, merge)
+    d1 = dissolve_ways(df, approx_rows=10**9, ordered=True).withColumn(
+        "pid", F.spark_partition_id())
     o1 = d1.collect()
-    assert _python_rows_received(d1) == len(o1)
-    o2 = dissolve_ways(df, max_group_rows=20, ordered=True).collect()
-    assert [r.component_id for r in o1] == [r.component_id for r in o2]
-    assert [r.component_id for r in o1] == sorted(
-        r.component_id for r in o1)
-    assert canon(dissolve_ways(df, max_group_rows=20,
-                               ordered=True)) == canon(uf)
+    assert _rows(r[:-1] for r in o1) == _rows(
+        dissolve_ways(df, approx_rows=len(rows)).collect())
+    nodes = _python_nodes(d1)
+    assert sorted(n for n, _ in nodes) == [
+        "ArrowEvalPythonExec", "MapInArrowExec", "MapInArrowExec",
+        "MapInArrowExec"]
+    received = [n_rows for _, n_rows in nodes]
+    for once in (len(rows), len(rows), len(o1)):
+        received.remove(once)
+    for pid in {r.pid for r in o1}:
+        ids = [r.component_id for r in o1 if r.pid == pid]
+        assert ids == sorted(ids)
+    # the degenerate group really did split into its two chains
+    assert sorted(r.n_members for r in o1 if r.highway == "service") == [
+        10, 60]
+
+
+def _graph_ways(spark, edges, seed):
+    """One tag-group whose ways are the graph's edges: every node gets an
+    arbitrary point inside TileGrid's extent, edge (u, v) is the
+    LineString u -> v and a self-loop (u, u) the closed way u -> q -> u.
+    Returns the frame and each way's vertices."""
+    rng = np.random.default_rng(seed)
+    grid = TileGrid()
+    point = {}
+
+    def at(n):
+        if n not in point:
+            point[n] = tuple(float(c) for c in (
+                grid.x0, grid.y0) + rng.random(2) * grid.extent)
+        return point[n]
+
+    verts = [[at(u), at(v)] if u != v else [at(u), at(("q", i)), at(u)]
+             for i, (u, v) in enumerate(edges)]
+    df = _combined_df(spark, [(i, "service", None, encode_linestring(vs))
+                              for i, vs in enumerate(verts)])
+    return df, verts
+
+
+def _union_find_components(edges, verts) -> list:
+    """(n_members, vertex set) per component of ways sharing a node."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        parent[find(u)] = find(v)
+    comps = {}
+    for (u, _), vs in zip(edges, verts):
+        n, seen = comps.get(find(u), (0, frozenset()))
+        comps[find(u)] = (n + 1, seen | set(vs))
+    return sorted((n, sorted(vs)) for n, vs in comps.values())
+
+
+def _dissolved_components(rows) -> list:
+    return sorted((r.n_members, sorted({
+        tuple(p) for part in decode_lines(bytes(r.geometry)) for p in part}))
+        for r in rows)
+
+
+@pytest.mark.parametrize("seed,n_nodes,n_edges", [
+    (1, 30, 20), (2, 60, 60), (3, 100, 40), (4, 50, 120),
+])
+def test_dissolve_contraction_matches_union_find(spark, seed, n_nodes,
+                                                 n_edges):
+    """Random graphs (self-loops, parallel ways and isolated ways
+    included) through forced contraction: the components of a Python
+    union-find, and the level-0 route's rows."""
+    rng = np.random.RandomState(seed)
+    edges = [(int(a), int(b))
+             for a, b in rng.randint(0, n_nodes, size=(n_edges, 2))]
+    df, verts = _graph_ways(spark, edges, seed)
+    rows = dissolve_ways(df, approx_rows=10**9).collect()
+    assert _dissolved_components(rows) == _union_find_components(
+        edges, verts)
+    assert _rows(rows) == _rows(dissolve_ways(df).collect())
+
+
+def test_dissolve_contraction_long_chain(spark):
+    """A 20,000-way chain — the diameter killer for label propagation —
+    dissolves into one component through forced contraction, with the
+    same exchanges and the same number of jobs as a 200-way chain: the
+    route's shape does not depend on the graph."""
+    from rlis2osm_spark.spatial.tiles import TileGrid  # noqa: F811
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = sc.getLocalProperty("spark.jobGroup.id")
+
+    def run(n):
+        df, _ = _graph_ways(spark, [(i, i + 1) for i in range(n)], n)
+        out = dissolve_ways(df, approx_rows=10**9)
+        before = set(tracker.getJobIdsForGroup(group))
+        rows = out.collect()
+        jobs = set(tracker.getJobIdsForGroup(group)) - before
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "localCheckpoint" not in plan and "ExistingRDD" not in plan
+        return rows, len(jobs), sorted(re.findall(
+            r"Exchange (?:hashpartitioning\(([a-z_]+)|(SinglePartition))",
+            plan))
+
+    small, small_jobs, small_exchanges = run(200)
+    rows, jobs, exchanges = run(20_000)
+    assert [r.n_members for r in small] == [200]
+    assert [r.n_members for r in rows] == [20_000]
+    assert (jobs, exchanges) == (small_jobs, small_exchanges)
+
+
+def test_dissolve_contraction_self_loops_and_isolated(spark):
+    """A closed way alone, a closed way on a chain, and an isolated way
+    each keep their components through forced contraction."""
+    edges = [(5, 5), (7, 8), (9, 9), (9, 10), (10, 11)]
+    df, verts = _graph_ways(spark, edges, 0)
+    rows = dissolve_ways(df, approx_rows=10**9).collect()
+    assert sorted(r.n_members for r in rows) == [1, 1, 3]
+    assert _dissolved_components(rows) == _union_find_components(
+        edges, verts)
 
 
 def test_dissolve_plans_checkpoint_input_without_a_job(spark, synth_dir,
                                                       tmp_path):
     """Over a bare parquet input (a ``Checkpointer.stage`` read) auto
     takes its row bound from the parquet footers, so planning the dissolve
-    starts no Spark job (over ``createDataFrame`` input it still counts
-    group sizes: test_dissolve_auto_routes_degenerate_group)."""
+    starts no Spark job (over ``createDataFrame`` input, with no
+    ``approx_rows``, it counts the rows first)."""
     from rlis2osm_spark.operators.combine import combine
     from rlis2osm_spark.plans.checkpoint import Checkpointer
 
@@ -247,12 +369,13 @@ def test_dissolve_plans_checkpoint_input_without_a_job(spark, synth_dir,
     assert set(tracker.getJobIdsForGroup(group)) <= before
 
 
-def _python_rows_received(df) -> int:
-    """``pythonNumRowsReceived`` summed over every Python node of df's
-    executed plan, walking into AQE's query stages. After one action it
-    equals the rows the Python kernels produced, so a node that a range
-    partitioner's sampling job ran again counts its rows twice."""
-    total, stack = 0, [df._jdf.queryExecution().executedPlan()]
+def _python_nodes(df) -> list:
+    """``(class name, pythonNumRowsReceived)`` of every Python node in
+    df's executed plan, walking into AQE's query stages. After one action
+    a node's count is the rows its kernel produced, so a node that ran
+    again (say, in a range partitioner's sampling job) counts its rows
+    twice, and a node planned twice appears twice."""
+    nodes, stack = [], [df._jdf.queryExecution().executedPlan()]
     while stack:
         node = stack.pop()
         name = node.getClass().getSimpleName()
@@ -264,18 +387,23 @@ def _python_rows_received(df) -> int:
             continue
         metric = node.metrics().get("pythonNumRowsReceived")
         if metric.isDefined():
-            total += metric.get().value()
+            nodes.append((name, metric.get().value()))
         children = node.children().iterator()
         while children.hasNext():
             stack.append(children.next())
-    return total
+    return nodes
+
+
+def _python_rows_received(df) -> int:
+    """``pythonNumRowsReceived`` summed over df's Python nodes."""
+    return sum(n_rows for _, n_rows in _python_nodes(df))
 
 
 @pytest.mark.parametrize("algorithm", ["auto", "greedy"])
 def test_ordered_dissolve_runs_kernel_once(spark, algorithm):
-    """``ordered=True`` range-sorts the kernel's output without running
-    the kernel again in the range partitioner's sampling job (the hybrid
-    path is checked in test_dissolve_auto_routes_degenerate_group)."""
+    """``ordered=True`` sorts the kernel's output without running the
+    kernel again (the contracted route is checked in
+    test_dissolve_auto_routes_degenerate_group)."""
     rows = [(4 * street + k, "residential", f"S{street % 25}",
              _seg(k, street, k + 1, street))
             for street in range(100) for k in range(4)]

@@ -41,18 +41,24 @@ def _convert(spark, data_dir: str, out_dir: str) -> dict:
 
 def test_pipeline_scale_two_runs_byte_identical(spark, synth_dir, tmp_path):
     # AQE would coalesce this KB-sized input into one partition; a KB
-    # floor keeps several, so the pin covers order across fragments
-    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(key, "4KB")
+    # floor keeps several, so the pin covers order across fragments. A
+    # range sampler that takes fewer rows than a partition holds (as at
+    # any real size) would cut the same rows into files differently on
+    # each run, so the pin shrinks its sample below synth_dir's partitions
+    confs = {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "4KB",
+             "spark.sql.execution.rangeExchange.sampleSizePerPartition": "2"}
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         a, b = (_convert(spark, synth_dir, str(tmp_path / f"run{i}"))
                 for i in (0, 1))
     finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     assert a["n_ways"] == b["n_ways"]
     assert a["osm_bytes"] == b["osm_bytes"]
     # byte-identical artifacts, file by file, across more than one

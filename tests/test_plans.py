@@ -234,9 +234,14 @@ def test_fused_dissolve_single_shuffle(spark):
     assert "group_key" in shuffles[0]  # ...and it IS the group_key shuffle
 
 
-def test_ordered_dissolve_range_partitions_once(spark):
-    """``dissolve_ways(ordered=True)`` totally orders its output through
-    exactly one range-partitioned exchange on ``component_id``."""
+@pytest.mark.parametrize("route", [
+    dict(approx_rows=1), dict(approx_rows=10**9), dict(algorithm="greedy")],
+    ids=["level0", "contracted", "greedy"])
+def test_ordered_dissolve_no_exchange_after_kernel(spark, route):
+    """``dissolve_ways(ordered=True)`` sorts each of the kernel's
+    partitions in place: no exchange and no range sampler between the
+    Python kernel and the write, on the level-0, contracted and greedy
+    routes."""
     from test_dissolve import _combined_df, _seg
 
     from rlis2osm_spark.operators.dissolve import dissolve_ways
@@ -246,5 +251,8 @@ def test_ordered_dissolve_range_partitions_once(spark):
         (1, "residential", "Oak", _seg(1, 0, 2, 0)),
         (2, "tertiary", "Elm", _seg(5, 5, 6, 6)),
     ])
-    plan = _plan(dissolve_ways(df, ordered=True))
-    assert plan.count("Exchange rangepartitioning(component_id") == 1, plan
+    plan = _plan(dissolve_ways(df, ordered=True, **route))
+    above_kernel = plan.split("InArrow")[0]
+    assert "Sort [component_id" in above_kernel, plan
+    assert "Exchange" not in above_kernel, plan
+    assert "rangepartitioning" not in plan, plan
