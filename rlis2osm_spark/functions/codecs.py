@@ -22,7 +22,7 @@
 - AVI (r4): RIFF-AVI container walk + idx1 index; MJPEG (per-frame
   JPEG) and uncompressed DIB streams.
 
-These convert the multimodal operators' ``decode_stub=False`` seam into
+These turn the multimodal operators' real-decode seam into
 working decoders for the formats the derived corpus emits. Everything
 else raises ``NotImplementedError`` naming the library that plugs in
 there (see COVERAGE.md "Codec capability matrix"): JPEG lossless

@@ -235,7 +235,7 @@ def make_basename_udf(special_cases: Iterable[tuple] | None = RLIS_SPECIAL_CASES
 def make_titlecase_udf():
     """P7: streets-only OSM-name titlecasing as an Arrow-batched pandas UDF.
 
-    Wraps the ported titlecase algorithm (functions/titlecase_port.py);
+    Wraps the ported titlecase rules (functions/titlecase_port.py);
     note null -> '' (not null) per main.py:90. Memoized per batch like
     :func:`make_basename_udf` — titlecasing is regex-heavy and a pure
     function of the name."""

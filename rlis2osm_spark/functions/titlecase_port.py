@@ -3,8 +3,8 @@
 The reference titlecases street names via ``titlecase(name, callback=...)``
 with an edited small-word list (/root/reference/rlis2osm/main.py:90-91,
 145-168; dependency pin /root/reference/setup.py `titlecase>=0.8.1`). That
-package is not installed in this environment, so this module reimplements the
-algorithm (John Gruber's title.py as ported to Python by Stuart Colville /
+package is not installed in this environment, so this module reimplements its
+rules (John Gruber's title.py as ported to Python by Stuart Colville /
 Pat Pannuto) from its published behavior, plus the reference's two
 customizations:
 

@@ -1,4 +1,4 @@
-"""Pure-Python XXH64 (public algorithm, xxhash.com spec) — the independent
+"""Pure-Python XXH64 (public hash, xxhash.com spec) — the independent
 oracle-side twin of Spark's ``F.xxhash64`` (which hashes a column's bytes
 with XXH64, default seed 42; see Spark's XxHash64 expression docs).
 

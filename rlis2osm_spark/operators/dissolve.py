@@ -12,9 +12,10 @@ single-path BFS (dissolve.py:51-160) — the documented scalability wall. Here:
   (``wkb.endpoint_slices_batch``).
 - **J4 grouping = true connected components per tag-group**, not the
   reference's greedy BFS: CC is deterministic and parallel; the two coincide
-  on fork-free topologies (SURVEY §7.3 hazard — goldens use those). An
-  exact greedy-BFS emulation (``algorithm="greedy"``, r3) covers users who
-  need byte-parity with reference output on forked topologies.
+  on fork-free topologies (SURVEY §7.3 hazard — goldens use those). On a
+  forked topology CC merges the whole fork into one row where the reference
+  stops at the junction; the divergence is pinned by a test, and
+  reference-compatible grouping on forked topologies is not offered.
 - **A1/A2 merge, fused with CC**: the payload reaches the merge kernel
   (``mapInArrow``) partitioned so that whole components sit together;
   way_id-ordered linemerge and first-row tags happen there, in one
@@ -135,22 +136,18 @@ def _group_node_ids(gk: np.ndarray, node_bits: np.ndarray,
     return ids, int(ids.max()) + 1 if len(ids) else 0
 
 
-def _arrow_input(table: pa.Table, geom_col: str) -> pa.Table:
-    """One contiguous chunk per column; geometry gets 64-bit offsets, since
-    a partition's WKB payload may pass 2 GiB."""
+def _partition_table(batches, geom_col: str) -> pa.Table | None:
+    """A mapInArrow partition as one table, one contiguous chunk per
+    column, the geometry with 64-bit offsets (a partition's WKB payload may
+    pass 2 GiB); None when it holds no rows."""
+    batches = list(batches)
+    if not any(b.num_rows for b in batches):
+        return None
+    table = pa.Table.from_batches(batches)
     i = table.schema.get_field_index(geom_col)
     return table.set_column(
         i, geom_col, table[geom_col].cast(pa.large_binary())
     ).combine_chunks()
-
-
-def _partition_table(batches, geom_col: str) -> pa.Table | None:
-    """A mapInArrow partition as one ``_arrow_input`` table; None when it
-    holds no rows."""
-    batches = list(batches)
-    if not any(b.num_rows for b in batches):
-        return None
-    return _arrow_input(pa.Table.from_batches(batches), geom_col)
 
 
 def _merge_partitions(dissolve_fields: list[str], geom_col: str,
@@ -193,8 +190,8 @@ def _fused_components(keys: np.ndarray, ways: np.ndarray,
 def _merge_component_rows(table: pa.Table, comp: np.ndarray,
                           dissolve_fields: list[str],
                           geom_col: str) -> pa.RecordBatch:
-    """Shared merge step of the fused dissolve paths: given payload rows
-    (``_arrow_input``) and a per-row component-id array, emit one merged
+    """Merge step of both dissolve levels: given payload rows
+    (``_partition_table``) and a per-row component-id array, emit one merged
     row per component (way_id-ordered linemerge, first member's tags).
     Grouping is one stable lexsort + boundary scan; tags and single-member
     geometries are Arrow ``take``s and simple-path components merge in one
@@ -348,7 +345,7 @@ def _merge_paths(data: np.ndarray, offs: np.ndarray, members: np.ndarray,
 
 def _fused_schema(df: DataFrame, dissolve_fields: list[str],
                   geom_col: str) -> StructType:
-    """Output StructType shared by the fused paths."""
+    """Output StructType of the merge kernel, at every level."""
     schema_by_name = {f.name: f for f in df.schema.fields}
     return StructType(
         [StructField("component_id", LongType(), False)]
@@ -476,115 +473,11 @@ def _resolve_roots(batches):
         names=["label", "root"])
 
 
-def _fused_greedy_group(dissolve_fields: list[str], geom_col: str):
-    """applyInArrow driver fusing the reference-greedy traversal with
-    the component merge (r5): one tag-group's payload rows arrive
-    together; endpoint edge rows are sliced from the WKB buffer,
-    ``_greedy_components`` replays the reference BFS, and the merged
-    rows are emitted directly — the same one-payload-exchange shape as
-    the level-0 union-find route."""
-
-    def run(table):
-        table = _arrow_input(table, geom_col)
-        n = table.num_rows
-        ways = table["way_id"].to_numpy()
-        ends = wkb.endpoint_slices_batch(table[geom_col].chunk(0))
-        comps = _greedy_components(pd.DataFrame({
-            "group_key": np.repeat(table["group_key"].to_numpy(), 2),
-            "order_key": np.repeat(
-                table["order_key"].to_numpy(zero_copy_only=False), 2),
-            "way_id": np.repeat(ways, 2),
-            "node_idx": np.tile([0, 1], n),
-            "node": list(ends.reshape(2 * n, 16)),
-        }))
-        comp_ways = comps["way_id"].to_numpy(np.int64)
-        by_way = np.argsort(comp_ways)
-        comp = comps["component_id"].to_numpy(np.int64)[by_way][
-            np.searchsorted(comp_ways[by_way], ways)]
-        return pa.Table.from_batches([_merge_component_rows(
-            table, comp, dissolve_fields, geom_col)])
-
-    return run
-
-
-def _greedy_components(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Exact emulation of the reference's greedy single-path BFS
-    (/root/reference/rlis2osm/dissolve.py:51-160) over (group_key, order_key,
-    way_id, node) edge rows — the r3 compat mode for users diffing against a
-    real rlis2osm run on forked/cyclic topologies (VERDICT r2 "missing" #5).
-
-    Faithful semantics: ways visited in source order (order_key =
-    src_table + fid + part_idx — source fids can collide ACROSS tables in
-    the combined frame); the frontier is a LIFO of group end nodes; popping
-    a node scans its connected ways in visit order and extends the group
-    with the FIRST unassigned same-tag way only (break), adding that way's
-    non-shared endpoints. Node keys normalize -0.0 to 0.0 per coordinate —
-    the reference interns float TUPLES, where -0.0 == 0.0; the raw WKB
-    byte key would split that node. The global algorithm decomposes
-    exactly per tag-group (cross-tag ways are skipped by the tag-equality
-    check), so whole groups parallelize across partitions while each group
-    replays the reference's traversal. ``MAX_GROUP_ROWS`` guards the
-    degenerate-group hazard loudly: greedy is inherently sequential per
-    group, so oversized groups have no contracted fallback."""
-    from struct import pack, unpack
-
-    def norm_node(b: bytes) -> bytes:
-        x, y = unpack("<2d", b)
-        return pack("<2d", x + 0.0, y + 0.0)  # -0.0 + 0.0 == 0.0
-
-    out_ways: list[int] = []
-    out_comps: list[int] = []
-    for _gk, g in pdf.groupby("group_key", sort=False):
-        if len(g) > 2 * MAX_GROUP_ROWS:
-            raise ValueError(
-                f"greedy dissolve: tag-group with {len(g) // 2} ways "
-                f"exceeds {MAX_GROUP_ROWS}; the reference traversal is "
-                "sequential per group (no contracted route) — use "
-                "algorithm='auto'")
-        tagged: dict[int, list[tuple[int, bytes]]] = {}
-        order: dict[int, str] = {}
-        for way_id, okey, nidx, node in zip(
-            g["way_id"].to_numpy(), g["order_key"].to_numpy(),
-            g["node_idx"].to_numpy(), g["node"]
-        ):
-            w = int(way_id)
-            tagged.setdefault(w, []).append((int(nidx), norm_node(bytes(node))))
-            order[w] = str(okey)
-        per_way = {w: [n for _, n in sorted(pairs)]
-                   for w, pairs in tagged.items()}
-        fids = sorted(per_way, key=lambda w: (order[w], w))
-        node_way: dict[bytes, list[int]] = {}
-        for w in fids:  # insertion in fid order = reference map order
-            for n in per_way[w]:
-                node_way.setdefault(n, []).append(w)
-        assigned: set[int] = set()
-        for seed in fids:
-            if seed in assigned:
-                continue
-            comp = seed
-            assigned.add(seed)
-            members = [seed]
-            frontier = list(per_way[seed])
-            while frontier:
-                n = frontier.pop()
-                for cand in node_way[n]:
-                    if cand in assigned:
-                        continue
-                    assigned.add(cand)
-                    members.append(cand)
-                    frontier.extend(cn for cn in per_way[cand] if cn != n)
-                    break
-            out_ways.extend(members)
-            out_comps.extend([comp] * len(members))
-    return pd.DataFrame({"way_id": out_ways, "component_id": out_comps})
-
-
 def dissolve_ways(
     combined: DataFrame,
     fields: list[str] | None = None,
     exclude: bool = False,
     geom_col: str = "geometry",
-    algorithm: str = "auto",
     approx_rows: int | None = None,
     ordered: bool = False,
 ) -> DataFrame:
@@ -597,12 +490,12 @@ def dissolve_ways(
     (dissolve.py:137-142 / its hard crash on missing geometry) — run
     ``explode_multipart`` first.
 
-    ``algorithm="auto"`` (default) is one route for every input size. It
-    takes a bound on the input's rows — ``approx_rows`` (an Iceberg
-    snapshot's record count, say), else the parquet footers when
-    ``combined`` is a bare parquet scan (a ``Checkpointer.stage`` or
-    ``spark.read.parquet`` result), else ``combined.count()`` — and works
-    at tile level L, the smallest with ``rows <= MAX_GROUP_ROWS * 4**L``.
+    One route serves every input size. It takes a bound on the input's
+    rows — ``approx_rows`` (an Iceberg snapshot's record count, say), else
+    the parquet footers when ``combined`` is a bare parquet scan (a
+    ``Checkpointer.stage`` or ``spark.read.parquet`` result), else
+    ``combined.count()`` — and works at tile level L, the smallest with
+    ``rows <= MAX_GROUP_ROWS * 4**L``.
     The bound also sizes the exchange into the last kernel, whose
     partitions become the output files: ~50k rows each, at least 8, at
     most the session's shuffle partitions.
@@ -631,13 +524,10 @@ def dissolve_ways(
       the grid lands in its edge cells — and the layout only changes how
       the work is split.
 
-    ``algorithm="greedy"`` (r3) is the reference-compat mode: it replays
-    the reference's greedy single-path BFS exactly — including on forked /
-    cyclic topologies where true CC merges more aggressively — so a user
-    diffing against a real rlis2osm run gets identical grouping
-    (differential-pinned in tests/test_dissolve_differential.py). Whole
-    tag-groups still parallelize across workers; a group above
-    ``MAX_GROUP_ROWS`` raises.
+    Grouping is true connected components per tag-group. On forked or
+    cyclic topologies it merges more than the reference's greedy BFS; that
+    divergence is pinned in
+    tests/test_dissolve.py::test_dissolve_same_tag_fork_divergence_pin.
 
     ``ordered=True`` (r4) sorts each output partition by ``component_id``
     (unique per row, deterministic — min way_id of the component, itself
@@ -681,56 +571,15 @@ def dissolve_ways(
         ).otherwise(g),
     )
 
-    if algorithm not in ("auto", "greedy"):
-        raise ValueError(
-            f"unknown algorithm {algorithm!r}; expected 'auto' or 'greedy'")
-
-    if algorithm == "greedy":
-        # source visit order = (src_table, fid, part_idx), the reference's
-        # ways.items() iteration (fids can COLLIDE across source tables in
-        # the combined frame, so the table name leads the key); node_idx
-        # pins the (f, t) frontier order, which the shuffle would otherwise
-        # scramble (greedy traversal is order-SENSITIVE, unlike union-find).
-        # The lpad encoding is only order-preserving for 0 <= fid < 10^12
-        # (and 0 <= part_idx < 10^6) — outside that range the string sort
-        # would silently drift from the numeric visit order, so guard
-        # loudly (ADVICE r3).
-        fid_ok = (F.col("fid") >= 0) & (F.col("fid") < F.lit(10 ** 12))
-        part_ok = (F.coalesce(F.col("part_idx"), F.lit(0)) >= 0) & (
-            F.coalesce(F.col("part_idx"), F.lit(0)) < F.lit(10 ** 6))
-        order_key = F.concat_ws(
-            "\x00",
-            F.coalesce(F.col("src_table"), F.lit("?")),
-            F.when(fid_ok, F.lpad(F.col("fid").cast("string"), 12, "0"))
-            .otherwise(F.raise_error(F.lit(
-                "greedy dissolve: fid outside [0, 10^12) breaks the "
-                "reference visit-order encoding"))),
-            F.when(part_ok,
-                   F.lpad(F.coalesce(F.col("part_idx"), F.lit(0))
-                          .cast("string"), 6, "0"))
-            .otherwise(F.raise_error(F.lit(
-                "greedy dissolve: part_idx outside [0, 10^6) breaks the "
-                "reference visit-order encoding"))))
-        out = (
-            df.withColumn("order_key", order_key)
-            .select("group_key", "order_key", "way_id",
-                    *[F.col(f"`{c}`") for c in dissolve_fields], geom_col)
-            .groupBy("group_key")
-            .applyInArrow(
-                _fused_greedy_group(dissolve_fields, geom_col),
-                _fused_schema(df, dissolve_fields, geom_col))
-        )
-    else:
-        rows = (approx_rows if approx_rows is not None
-                else _footer_rows(combined))
-        if rows is None:
-            rows = combined.count()
-        n_parts = min(spark_partitions(combined), max(8, rows // 50_000 + 1))
-        level = _tile_level(rows)
-        out = (_dissolve_fused(df, dissolve_fields, geom_col, n_parts)
-               if level == 0 else
-               _dissolve_contracted(df, dissolve_fields, geom_col, n_parts,
-                                    level))
+    rows = approx_rows if approx_rows is not None else _footer_rows(combined)
+    if rows is None:
+        rows = combined.count()
+    n_parts = min(spark_partitions(combined), max(8, rows // 50_000 + 1))
+    level = _tile_level(rows)
+    out = (_dissolve_fused(df, dissolve_fields, geom_col, n_parts)
+           if level == 0 else
+           _dissolve_contracted(df, dissolve_fields, geom_col, n_parts,
+                                level))
     return out.sortWithinPartitions("component_id") if ordered else out
 
 

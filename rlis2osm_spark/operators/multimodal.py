@@ -2,22 +2,23 @@
 payloads with typed metadata, processed via Arrow-batched ``mapInPandas``.
 
 The Spark-side plumbing is real and tested — schemas, the media join, batch
-shapes, partitioning, the UDF signatures. The codec step:
+shapes, partitioning, the UDF signatures — and so is the codec step.
+Video and audio always decode for real; images decode for real with
+``decode_stub=False``, while ``decode_stub=True`` (the default) runs a
+deterministic fake decoder over the raw bytes (no codec needed; m1's
+``stub`` leg measures that plumbing alone).
 
-- ``decode_stub=True`` (default) runs a deterministic fake decoder over the
-  raw bytes (no codec needed);
-- ``decode_stub=False`` REALLY decodes PNG (stdlib zlib/struct —
-  gray/RGB/palette/alpha), GIF (pure-Python LZW, r4), BMP, JPEG —
-  baseline/extended sequential and progressive huffman (SOF0/1/2,
-  8-bit; pure Python + numpy huffman/DCT, r4; chroma + progressive
-  r5), grayscale AND interleaved color, any sampling layout, full-RGB
-  output with nearest chroma upsampling — video (MJPEG-AVI,
-  uncompressed DIB AVI, animated GIF) and PCM/float WAV (struct over
-  RIFF) via functions/codecs.py. Every other JPEG frame type
-  (lossless, arithmetic, hierarchical, 12-bit, CMYK), compressed WAV
-  and compressed video codecs (MS-RLE/MSVC/Cinepak/H.26x/...) raise
-  ``NotImplementedError`` — the exact seam where PIL / pyav /
-  soundfile plug in.
+Real decoding covers PNG (stdlib zlib/struct — gray/RGB/palette/alpha),
+GIF (pure-Python LZW, r4), BMP, JPEG — baseline/extended sequential and
+progressive huffman (SOF0/1/2, 8-bit; pure Python + numpy huffman/DCT,
+r4; chroma + progressive r5), grayscale AND interleaved color, any
+sampling layout, full-RGB output with nearest chroma upsampling — video
+(MJPEG-AVI, uncompressed DIB AVI, animated GIF) and PCM/float WAV (struct
+over RIFF) via functions/codecs.py. Every other JPEG frame type
+(lossless, arithmetic, hierarchical, 12-bit, CMYK), non-WAV audio,
+compressed WAV and compressed video codecs (MS-RLE/MSVC/Cinepak/H.26x/...)
+raise ``NotImplementedError`` — the exact seam where PIL / pyav /
+soundfile plug in.
 
 Scale notes: payloads never pass through Python row-at-a-time — each
 ``mapInPandas`` batch is one Arrow RecordBatch of binary blobs; cap batch
@@ -33,7 +34,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, FloatType, IntegerType, LongType, StringType,
     StructField, StructType,
@@ -151,7 +151,6 @@ VIDEO_FRAME_SCHEMA = StructType([
 def extract_video_frames(
     media: DataFrame,
     every_n: int = 1,
-    decode_stub: bool = True,
 ) -> DataFrame:
     """REAL video frame sampling + decode (r4; DIB + animated GIF r5):
     parse the container, take every ``every_n``-th frame, decode each —
@@ -162,10 +161,7 @@ def extract_video_frames(
     -> one row per sampled frame with exact decoded pixel sums. One
     Arrow pass; no per-pixel Python (numpy inside the batch). Other
     codecs raise NotImplementedError from the codec layer — the pyav
-    seam. ``decode_stub=True`` (default — the same contract as the
-    image/audio extractors) keeps the container parse real but skips the
-    per-frame decode (px_sum null); pass ``decode_stub=False`` to really
-    decode frames."""
+    seam."""
 
     def batches(frames_it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from rlis2osm_spark.functions.codecs import (
@@ -185,9 +181,6 @@ def extract_video_frames(
                 else:
                     w, h, codec, frames = decode_avi_frames(b)
                 for idx in range(0, len(frames), every_n):
-                    if decode_stub:
-                        rows.append((ref, len(frames), idx, w, h, None))
-                        continue
                     if codec == "gif":
                         fw, fh, px = w, h, frames[idx]
                     elif codec == "dib":
@@ -211,7 +204,7 @@ AUDIO_FEATURE_SCHEMA = StructType([
     StructField("n_windows", IntegerType()),
     StructField("rms", ArrayType(FloatType())),       # per-window energy
     StructField("zero_crossings", LongType()),
-    # real decode only (exact ints over decoded PCM16 samples)
+    # exact ints over the decoded samples
     StructField("n_samples", LongType()),
     StructField("abs_sum", LongType()),
     StructField("peak", IntegerType()),
@@ -222,14 +215,16 @@ def extract_audio_features(
     media: DataFrame,
     window: int = 1024,
     max_windows: int = 64,
-    decode_stub: bool = True,
 ) -> DataFrame:
-    """Audio plumbing: binary payload -> windowed energy features, one Arrow
-    pass. The stub treats the raw bytes as int8 PCM (deterministic); a real
-    decoder (soundfile/torchaudio) plugs in at the seam. Vectorized numpy
-    per batch — no per-sample Python."""
+    """Audio: RIFF/WAVE payload -> decoded samples -> windowed energy
+    features plus exact sample stats, one Arrow pass. Non-WAV payloads
+    raise NotImplementedError — the seam where a codec library
+    (soundfile/torchaudio) plugs in. Vectorized numpy per batch — no
+    per-sample Python."""
 
     def batches(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from rlis2osm_spark.functions.codecs import decode_wav
+
         for pdf in frames:
             rows = []
             for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
@@ -237,35 +232,29 @@ def extract_audio_features(
                     rows.append((ref, 0, None, None, None, None, None, None))
                     continue
                 b = bytes(payload)
-                extra = (None, None, None)
-                if decode_stub:
-                    sig = np.frombuffer(b, dtype=np.int8).astype("float32")
-                else:
-                    # check the full RIFF/WAVE signature: a RIFF container
-                    # that is not WAVE (e.g. RIFF/AVI) must hit this seam,
-                    # not a mid-job ValueError from decode_wav (ADVICE r3)
-                    if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                        raise NotImplementedError(
-                            "real audio decoding for non-WAV payloads "
-                            "requires a codec library; plug soundfile/"
-                            "torchaudio in here (PCM and float32 WAV "
-                            "decode natively via functions/codecs.py)")
-                    from rlis2osm_spark.functions.codecs import decode_wav
-
-                    _, samples = decode_wav(b)
-                    s = np.asarray(samples)
-                    if s.dtype.kind != "f":  # integer PCM: exact features
-                        s = s.astype(np.int64)
-                        extra = (len(s),
-                                 int(np.abs(s).sum()) if len(s) else 0,
-                                 int(np.abs(s).max()) if len(s) else 0)
-                    else:  # float32 WAV: round to the int feature contract
-                        extra = (len(s),
-                                 int(round(float(np.abs(s).sum())))
-                                 if len(s) else 0,
-                                 int(round(float(np.abs(s).max())))
-                                 if len(s) else 0)
-                    sig = s.astype("float32")
+                # check the full RIFF/WAVE signature: a RIFF container
+                # that is not WAVE (e.g. RIFF/AVI) must hit this seam,
+                # not a mid-job ValueError from decode_wav (ADVICE r3)
+                if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+                    raise NotImplementedError(
+                        "real audio decoding for non-WAV payloads "
+                        "requires a codec library; plug soundfile/"
+                        "torchaudio in here (PCM and float32 WAV "
+                        "decode natively via functions/codecs.py)")
+                _, samples = decode_wav(b)
+                s = np.asarray(samples)
+                if s.dtype.kind != "f":  # integer PCM: exact features
+                    s = s.astype(np.int64)
+                    extra = (len(s),
+                             int(np.abs(s).sum()) if len(s) else 0,
+                             int(np.abs(s).max()) if len(s) else 0)
+                else:  # float32 WAV: round to the int feature contract
+                    extra = (len(s),
+                             int(round(float(np.abs(s).sum())))
+                             if len(s) else 0,
+                             int(round(float(np.abs(s).max())))
+                             if len(s) else 0)
+                sig = s.astype("float32")
                 n_win = min(max(len(sig) // window, 1), max_windows)
                 used = sig[: n_win * window] if len(sig) >= window else sig
                 if len(used) >= window:

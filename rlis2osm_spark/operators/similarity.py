@@ -1,26 +1,28 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths, both pure native expressions (no Python in the hot loop):
-
-- ``brute_force_topk`` — exact cosine top-k; the correctness baseline and
-  the right answer when the probe set is small (broadcast probes, one pass
-  over the base, per-probe window top-k).
+- ``brute_force_topk`` — exact cosine top-k, pure native expressions; the
+  correctness baseline and the right answer when the probe set is small
+  (broadcast probes, one pass over the base, per-probe window top-k).
 - ``lsh_ann_topk`` — the scale path: random-hyperplane LSH buckets as the
   candidate generator (signature = sign bits of P pseudo-random
   projections, folded to a bucket id), exact cosine re-rank inside the
   bucket. Recall/latency trades via ``n_planes`` (fewer planes -> bigger
-  buckets -> higher recall, more compute). Hyperplane weights are
-  plan-time literal arrays derived from a seeded LCG, so signatures are
-  deterministic and identical on every executor.
+  buckets -> higher recall, more compute). One signature kernel,
+  ``lsh_table_buckets_udf``, serves every LSH caller (ANN and
+  ``cosine_neardup_pairs``): a numpy matmul per Arrow batch against
+  hyperplanes drawn from a seeded LCG, so signatures are deterministic and
+  identical on every executor.
+- ``ivf_ann_topk`` — k-means cells as the candidate generator, the same
+  exact re-rank (``rerank_topk``).
 
 At 100 TB the base table is bucketed by ``bucket`` (Iceberg bucket
 transform), so a probe touches one bucket's files only — ANN becomes
-partition pruning. An IVF variant (k-means centroids as bucket ids) drops
-in by replacing ``bucket_expr``.
+partition pruning.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -77,44 +79,14 @@ def _lcg_weights(plane: int, dim: int, seed: int = 1234567) -> list[float]:
     return out
 
 
-def lsh_bucket_expr(vec: Column, dim: int, n_planes: int = 8,
-                    seed: int = 1234567) -> Column:
-    """Random-hyperplane signature -> integer bucket id (native).
-
-    The weights fold in as plan-time literal arrays: ideal at dim <= ~128
-    (whole-stage codegen, zero Python), but the plan grows
-    O(n_planes * dim) and codegen compile time explodes at dim 1k+ —
-    there ``lsh_table_buckets_udf`` applies the same hyperplanes as one
-    numpy matmul per Arrow batch."""
-    bucket = F.lit(0)
-    for p in range(n_planes):
-        w = F.array(*[F.lit(x) for x in _lcg_weights(p, dim, seed)])
-        proj = _dot(vec, w)
-        bucket = bucket + F.when(proj > 0,
-                                 F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
-
-
-def _table_buckets(vec: Column, dim: int, n_planes: int,
-                   n_tables: int, seed: int) -> Column:
-    """array<struct<tbl, bucket>> — one LSH bucket per table (OR-construction;
-    per-table seeds as in ``cosine_neardup_pairs``)."""
-    return F.array(*[
-        F.struct(
-            F.lit(t).alias("tbl"),
-            lsh_bucket_expr(vec, dim, n_planes,
-                            seed=seed + t * 99991).alias("bucket"))
-        for t in range(n_tables)
-    ])
-
-
 def lsh_table_buckets_udf(dim: int, n_planes: int, n_tables: int,
                           seed: int = 1234567):
-    """All ``n_tables`` LSH buckets in ONE numpy matmul per Arrow batch
-    (returns ``array<long>``, one bucket per table). Same LCG hyperplanes /
-    per-table seeds as ``_table_buckets`` — the expression path unrolls
-    n_tables*n_planes*dim literal terms, which blows up codegen compile
-    time well before the data costs anything."""
+    """Random-hyperplane signatures -> one LSH bucket id per table
+    (``array<long>``), all ``n_tables`` in ONE numpy matmul per Arrow
+    batch. Table t uses ``n_planes`` LCG hyperplanes seeded
+    ``seed + t * 99991``; bit p of a bucket is set when the projection on
+    plane p is positive. Weights live in the closure, not the plan, so the
+    plan stays the same size at any ``dim``."""
     import numpy as np
     from pyspark.sql.types import ArrayType, LongType
 
@@ -132,9 +104,8 @@ def lsh_table_buckets_udf(dim: int, n_planes: int, n_tables: int,
 
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
-        # null / wrong-length vectors get all-zero buckets — the same
-        # outcome as the expression path (null projections fold to 0),
-        # instead of a ragged-ndarray ValueError (review r3)
+        # null / wrong-length vectors get all-zero buckets instead of a
+        # ragged-ndarray ValueError (review r3)
         rows, good_idx = [], []
         for i, v in enumerate(vecs):
             if v is not None and len(v) == dim:
@@ -160,37 +131,22 @@ def lsh_ann_candidates(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 1234567,
-    bucket_udf: bool | None = None,
 ) -> DataFrame:
     """LSH candidate pairs (probe_id, neighbor_id, pv, bv, bucket) —
     possibly with per-pair duplicates across tables; feed ``rerank_topk``.
-
-    ``bucket_udf`` picks the signature implementation: plan-time literal
-    expressions (pure codegen — best at small plane*dim products) vs one
-    numpy matmul per Arrow batch (``lsh_table_buckets_udf`` — best when
-    n_tables*n_planes*dim would bloat codegen). Default: auto by size.
-    The two agree except on projections within float rounding of zero."""
-    if bucket_udf is None:
-        bucket_udf = n_tables * n_planes * dim >= 1024
+    Signatures come from ``lsh_table_buckets_udf``; ``posexplode`` turns
+    each side's bucket array into (tbl, bucket) join keys."""
     b = base.select(F.col(id_col).alias("neighbor_id"),
                     as_double_vec(F.col(vec_col)).alias("bv"))
     p = probes.select(F.col(id_col).alias("probe_id"),
                       as_double_vec(F.col(vec_col)).alias("pv"))
-    if bucket_udf:
-        bu = lsh_table_buckets_udf(dim, n_planes, n_tables, seed)
-        b = b.select(
-            "neighbor_id", "bv",
-            F.posexplode(bu(F.col("bv"))).alias("tbl", "bucket"))
-        p = p.select(
-            "probe_id", "pv",
-            F.posexplode(bu(F.col("pv"))).alias("tbl", "bucket"))
-    else:
-        b = b.select("neighbor_id", "bv", F.explode(
-            _table_buckets(F.col("bv"), dim, n_planes, n_tables, seed)
-        ).alias("tb")).select("neighbor_id", "bv", "tb.tbl", "tb.bucket")
-        p = p.select("probe_id", "pv", F.explode(
-            _table_buckets(F.col("pv"), dim, n_planes, n_tables, seed)
-        ).alias("tb")).select("probe_id", "pv", "tb.tbl", "tb.bucket")
+    bu = lsh_table_buckets_udf(dim, n_planes, n_tables, seed)
+    b = b.select(
+        "neighbor_id", "bv",
+        F.posexplode(bu(F.col("bv"))).alias("tbl", "bucket"))
+    p = p.select(
+        "probe_id", "pv",
+        F.posexplode(bu(F.col("pv"))).alias("tbl", "bucket"))
 
     return p.join(b, ["tbl", "bucket"]).filter(
         F.col("probe_id") != F.col("neighbor_id")
@@ -234,7 +190,6 @@ def lsh_ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 1234567,
-    bucket_udf: bool | None = None,
 ) -> DataFrame:
     """ANN: bucket equi-join candidates, exact cosine re-rank.
 
@@ -245,13 +200,23 @@ def lsh_ann_topk(
     candidate set is deduped with a single probe-keyed exchange before the
     rank window (``rerank_topk``)."""
     cands = lsh_ann_candidates(base, probes, dim, n_planes, n_tables,
-                               id_col, vec_col, seed, bucket_udf)
+                               id_col, vec_col, seed)
     return rerank_topk(cands, k, dedup=n_tables > 1)
 
 
 def _dist2(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
                        F.lit(0.0), lambda acc, x: acc + x)
+
+
+def centroid_frame(spark, cents: list[list[float]]) -> DataFrame:
+    """``(cid int, c array<double>)``, one row per centroid. An Arrow table
+    becomes a local relation; a list of rows would become an RDD that runs
+    one Python task per core on every action over it."""
+    return spark.createDataFrame(
+        pa.table({"cid": pa.array(range(len(cents)), pa.int32()),
+                  "c": pa.array(cents, pa.list_(pa.float64()))}),
+        "cid int, c array<double>")
 
 
 def ivf_train_centroids(
@@ -279,8 +244,7 @@ def ivf_train_centroids(
     cents = [list(r.v) for r in init.collect()]
     spark = base.sparkSession
     for _ in range(n_iter):
-        cdf = spark.createDataFrame(
-            list(enumerate(cents)), "cid int, c array<double>")
+        cdf = centroid_frame(spark, cents)
         assigned = (
             b.crossJoin(F.broadcast(cdf))
             .withColumn("d2", _dist2(F.col("v"), F.col("c")))
@@ -319,9 +283,7 @@ def ivf_ann_candidates(
     cents = centroids if centroids is not None else ivf_train_centroids(
         base, dim, k_centroids, n_iter=n_iter, id_col=id_col,
         vec_col=vec_col)
-    spark = base.sparkSession
-    cdf = spark.createDataFrame(
-        list(enumerate(cents)), "cid int, c array<double>")
+    cdf = centroid_frame(base.sparkSession, cents)
 
     b = base.select(F.col(id_col).alias("neighbor_id"),
                     as_double_vec(F.col(vec_col)).alias("bv"))
@@ -404,18 +366,12 @@ def cosine_neardup_pairs(
     ``hot_bucket_rows``. Recall is preserved for any pair that also shares
     a non-hot bucket in another table (the OR-construction's job).
     """
-    v = df.select(F.col(id_col).alias("_id"),
-                  as_double_vec(F.col(vec_col)).alias("v"))
-    tagged = v.select(
+    tagged = df.select(
+        F.col(id_col).alias("_id"),
+        as_double_vec(F.col(vec_col)).alias("v")).select(
         "_id", "v",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                lsh_bucket_expr(F.col("v"), dim, n_planes,
-                                seed=1234567 + t * 99991).alias("bucket"))
-            for t in range(n_tables)
-        ])).alias("tb"),
-    ).select("_id", "v", "tb.tbl", "tb.bucket")
+        F.posexplode(lsh_table_buckets_udf(dim, n_planes, n_tables)(
+            F.col("v"))).alias("tbl", "bucket"))
     obs = None
     left = right = tagged
     if max_bucket is not None:

@@ -234,7 +234,7 @@ def d4_simhash(spark, sf_dir):
       64-bit xxhash64 token hashes, no global vocabulary state) over the
       derived corpus — its oracle is an expected-output VALUES relation
       recomputed by the pure-Python XXH64 twin (queries/derived_docs.py),
-      a fully independent implementation of the same public algorithm.
+      a fully independent implementation of the same public hash.
     """
     from rlis2osm_spark.operators.dedup import simhash_signatures
     from rlis2osm_spark.queries.derived_docs import derived_texts

@@ -95,14 +95,13 @@ def _ivf_centroids(spark, sf_dir, base, dim=64, k_centroids=8, n_iter=1):
     in a catalog table keyed by the corpus snapshot; the stage's input
     fingerprint (embeddings file set) forces a retrain when the corpus
     changes."""
-    from rlis2osm_spark.operators.similarity import ivf_train_centroids
+    from rlis2osm_spark.operators.similarity import (
+        centroid_frame, ivf_train_centroids)
 
     cdf = cached_stage(
         spark, sf_dir, "ivf_centroids",
-        lambda: spark.createDataFrame(
-            list(enumerate(ivf_train_centroids(
-                base, dim, k_centroids, n_iter=n_iter))),
-            "cid int, c array<double>"),
+        lambda: centroid_frame(spark, ivf_train_centroids(
+            base, dim, k_centroids, n_iter=n_iter)),
         inputs=[os.path.join(sf_dir, "embeddings.parquet")],
         code_modules=[__name__, "rlis2osm_spark.operators.similarity"],
     )
@@ -297,7 +296,7 @@ def m1_media_features(spark, sf_dir):
       every-2nd-frame sampling) -> one row per sampled frame with the
       exact decoded pixel sum;
     - ``wav``: real RIFF/WAVE 16-bit and 24-bit PCM from doc_id-derived
-      samples, decoded by ``extract_audio_features(decode_stub=False)``
+      samples, decoded by ``extract_audio_features``
       -> n_samples/peak/abs_sum over TRUE decoded samples;
     - ``stub``: the codec-free fake-decode plumbing (pure function of
       payload length) over raw text bytes.
@@ -381,16 +380,14 @@ def media_feature_legs(spark, sf_dir) -> dict:
     ).select(F.lit("jpeg").alias("kind"), "media_ref",
              F.col("width").alias("d1"), F.col("height").alias("d2"),
              F.col("px_sum").alias("v"))
-    avi = extract_video_frames(
-        slices["avi"], every_n=2, decode_stub=False,
-    ).select(F.lit("avi").alias("kind"), "media_ref",
-             F.col("frame_idx").alias("d1"), F.col("n_frames").alias("d2"),
-             F.col("px_sum").alias("v"))
-    wav = extract_audio_features(
-        slices["wav"], decode_stub=False,
-    ).select(F.lit("wav").alias("kind"), "media_ref",
-             F.col("n_samples").cast("int").alias("d1"),
-             F.col("peak").alias("d2"), F.col("abs_sum").alias("v"))
+    avi = extract_video_frames(slices["avi"], every_n=2).select(
+        F.lit("avi").alias("kind"), "media_ref",
+        F.col("frame_idx").alias("d1"), F.col("n_frames").alias("d2"),
+        F.col("px_sum").alias("v"))
+    wav = extract_audio_features(slices["wav"]).select(
+        F.lit("wav").alias("kind"), "media_ref",
+        F.col("n_samples").cast("int").alias("d1"),
+        F.col("peak").alias("d2"), F.col("abs_sum").alias("v"))
     stub = extract_image_features(
         slices["stub"], feat_dim=8,
     ).select(F.lit("stub").alias("kind"), "media_ref",

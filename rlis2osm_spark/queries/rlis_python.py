@@ -45,7 +45,7 @@ def rlis_titlecase_names(spark, sf_dir):
     expected-output oracle: the derived input domain (TPC-H part-name
     words + 'ST') contains no titlecase special cases — no small words,
     apostrophes, Mc-prefixes or mixed-case protections — so the ground
-    truth is per-word initcap; the algorithm's quirks themselves are
+    truth is per-word initcap; the titlecase quirks themselves are
     pinned by tests/test_titlecase.py goldens."""
     ensure_package_on_workers(spark)
     from rlis2osm_spark.functions.expand import make_titlecase_udf
@@ -172,7 +172,7 @@ FROM l GROUP BY highway ORDER BY highway
 
 def rlis_dissolve_cc(spark, sf_dir):
     """J4/A1: connected-components dissolve over derived chains — group size
-    distribution. The CC algorithm itself is iterative, but the derived
+    distribution. The CC runs in the dissolve kernel, but the derived
     topology's ground truth is analytic (disjoint 4-segment chains, chain-
     constant unique tags), so the histogram carries an exact oracle: every
     chain must dissolve into one component of its segment count."""

@@ -169,9 +169,17 @@ def knn_join(
     expected nearest-neighbor distance).
 
     probe: (probe_id, x, y); base: (base_id, x1, y1, x2, y2).
-    Plan: ``_ring_candidates`` -> per-probe window top-k.
+    Plan: ``_ring_candidates`` -> per-probe window top-k -> dedup.
     The window partitions by probe_id (uniform), so the skewed side is the
     candidate join — AQE skew-split applies.
+
+    A segment reachable via 2+ ring cells is a candidate more than once.
+    Ranking comes first: the copies of a pair tie on (dist2, base_id), so
+    ``dense_rank`` gives them one rank, the rank each pair would get after
+    a dedup, and only the top-k survivors are deduplicated. The dedup's
+    (probe_id, base_id) clustering is met by the window's probe_id
+    exchange, so the plan holds ONE exchange (VERDICT r1 #7; asserted in
+    tests/test_plans.py).
     """
     cands = _ring_candidates(probe.select(probe_id, "x", "y"), base, res,
                              grid, probe_id, n_salts)
@@ -179,17 +187,9 @@ def knn_join(
         F.asc("dist2"), F.asc(base_id)  # deterministic tie-break
     )
     return (
-        cands
-        # ONE exchange for dedup + ranking: hash on probe_id satisfies both
-        # the (probe_id, base_id) clustering the dedup aggregate needs and
-        # the window's probe_id clustering — without this, dropDuplicates
-        # shuffles on the pair key and the window reshuffles on probe_id
-        # (VERDICT r1 #7; asserted in tests/test_plans.py).
-        .repartition(F.col(probe_id))
-        # a candidate reachable via 2+ ring cells must count once
-        .dropDuplicates([probe_id, base_id])
-        .withColumn("knn_rank", F.row_number().over(w))
+        cands.withColumn("knn_rank", F.dense_rank().over(w))
         .filter(F.col("knn_rank") <= k)
+        .dropDuplicates([probe_id, base_id])
     )
 
 

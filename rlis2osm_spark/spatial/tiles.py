@@ -134,11 +134,15 @@ def with_tile(
     grid: TileGrid = TileGrid(),
 ) -> DataFrame:
     """Assign each row its tile: geometry -> (x, y) via one Arrow UDF
-    pass, then native quantize + Morton interleave."""
+    pass, then native quantize + Morton interleave. ``ix``/``iy`` are
+    columns before ``cell`` reads them: the interleave reads its input 16
+    times, so built on the quantize expressions the plan would repeat each
+    clamp term 16 times."""
     df = df.withColumn("_xy", geom_midpoint(F.col(geom_col)))
     df = df.withColumn("x", F.col("_xy.x")).withColumn("y", F.col("_xy.y")).drop("_xy")
     ix, iy = grid_coords(F.col("x"), F.col("y"), res, grid)
-    return df.withColumns({"ix": ix, "iy": iy, "cell": morton_cell(ix, iy)})
+    return df.withColumns({"ix": ix, "iy": iy}).withColumn(
+        "cell", morton_cell(F.col("ix"), F.col("iy")))
 
 
 def explode_ring_coords(df: DataFrame, ix: Column, iy: Column) -> DataFrame:

@@ -274,7 +274,7 @@ def test_gif_rejects_unsupported():
 
 
 def test_image_seam_routes_gif_and_audio_seam_rejects_avi(spark):
-    """decode_stub=False: gif payloads decode for real; a RIFF container
+    """Real decoding: gif payloads decode for real; a RIFF container
     that is NOT WAVE (e.g. AVI) hits the documented NotImplementedError
     seam, not a bare ValueError mid-job (ADVICE r3)."""
     from pyspark.errors.exceptions.captured import PythonException
@@ -292,7 +292,7 @@ def test_image_seam_routes_gif_and_audio_seam_rejects_avi(spark):
     avi = b"RIFF" + b"\x00\x00\x00\x00" + b"AVI " + b"\x00" * 16
     bad = spark.createDataFrame([("m:2", avi)], "media_ref string, payload binary")
     with pytest.raises(PythonException, match="NotImplementedError"):
-        extract_audio_features(bad, decode_stub=False).collect()
+        extract_audio_features(bad).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -472,7 +472,7 @@ def test_extract_video_frames_operator(spark):
         rows.append((f"v:{i}", encode_avi_mjpeg(frames, 16, 8)))
         expected[f"v:{i}"] = {(idx, sums[idx]) for idx in range(0, n, 2)}
     df = spark.createDataFrame(rows, "media_ref string, payload binary")
-    got = extract_video_frames(df, every_n=2, decode_stub=False).collect()
+    got = extract_video_frames(df, every_n=2).collect()
     by_ref: dict = {}
     for r in got:
         assert (r.width, r.height) == (16, 8)

@@ -112,8 +112,7 @@ def test_video_frames_from_animated_gif(spark):
     media = spark.createDataFrame([("g", blob)],
                                   "media_ref string, payload binary")
     rows = sorted(multimodal.extract_video_frames(
-        media, every_n=1, decode_stub=False).collect(),
-        key=lambda r: r.frame_idx)
+        media, every_n=1).collect(), key=lambda r: r.frame_idx)
     assert [r.frame_idx for r in rows] == [0, 1]
     assert all((r.width, r.height, r.n_frames) == (6, 4, 2) for r in rows)
     canvas = base.reshape(4, 6).copy()
@@ -166,15 +165,15 @@ def test_multimodal_real_png_decode(spark):
 
 
 def test_multimodal_real_wav_decode(spark):
-    """decode_stub=False decodes RIFF/WAVE 16-bit PCM: exact sample stats."""
+    """The audio extractor decodes RIFF/WAVE 16-bit PCM: exact sample
+    stats."""
     from rlis2osm_spark.functions.codecs import encode_wav
 
     samples = [((t * 37) % 900) - 450 for t in range(1500)]
     media = spark.createDataFrame(
         [("a:0", encode_wav(samples, 16000))],
         "media_ref string, payload binary")
-    (row,) = multimodal.extract_audio_features(
-        media, decode_stub=False).collect()
+    (row,) = multimodal.extract_audio_features(media).collect()
     assert row.n_samples == 1500
     assert row.abs_sum == sum(abs(s) for s in samples)
     assert row.peak == max(abs(s) for s in samples)
@@ -250,19 +249,24 @@ def test_ivf_centroids_deterministic(vectors):
 
 
 def test_audio_features_plumbing(spark):
-    rows = [("a:1", bytes(range(256)) * 20), ("a:2", b"\x01\x02"),
-            ("a:3", None)]
+    """Windowed features over decoded samples: a periodic 16-bit PCM
+    signal gives equal per-window energy, a null payload gives null
+    features, and a non-WAV payload hits the codec seam."""
+    from rlis2osm_spark.functions.codecs import encode_wav
+
+    samples = [((t % 64) - 32) * 100 for t in range(5120)]
+    rows = [("a:1", encode_wav(samples, 16000)), ("a:3", None)]
     media = spark.createDataFrame(rows, "media_ref string, payload binary")
     out = {r.media_ref: r
            for r in multimodal.extract_audio_features(media).collect()}
-    assert out["a:1"].n_windows == 5  # 5120 bytes // 1024
+    assert out["a:1"].n_windows == 5  # 5120 samples // 1024
     assert len(out["a:1"].rms) == 5
     assert out["a:1"].rms[0] == pytest.approx(out["a:1"].rms[1])  # periodic
-    assert out["a:2"].n_windows == 1 and out["a:2"].n_bytes == 2
-    assert out["a:3"].rms is None
+    assert out["a:3"].rms is None and out["a:3"].n_bytes == 0
+    raw = spark.createDataFrame([("a:2", bytes(range(256)) * 20)],
+                                "media_ref string, payload binary")
     with pytest.raises(Exception, match="codec"):
-        multimodal.extract_audio_features(
-            media.filter("payload is not null"), decode_stub=False).collect()
+        multimodal.extract_audio_features(raw).collect()
 
 
 def test_cosine_neardup_recall(spark):
@@ -288,40 +292,34 @@ def test_cosine_neardup_recall(spark):
 
 
 def test_lsh_bucket_udf_high_dim(spark):
-    """Arrow matmul bucket path (``lsh_table_buckets_udf``, one table):
-    deterministic, identical vectors share a bucket, and buckets match the
-    expr path away from the zero boundary."""
+    """The LSH signature kernel (``lsh_table_buckets_udf``): deterministic,
+    identical vectors share a bucket, and every table's bucket equals a
+    plain numpy sign-of-dot reference over the same LCG hyperplanes."""
     import numpy as np
 
-    from pyspark.sql import functions as F
-
     rng = np.random.RandomState(5)
-    dim = 256  # beyond comfortable plan-literal territory
+    dim, n_planes, n_tables, seed = 256, 6, 3, 1234567
     base = rng.randn(20, dim)
     rows = [(i, [float(x) for x in base[i]]) for i in range(20)]
     rows += [(100 + i, [float(x) for x in base[i]]) for i in range(20)]  # dups
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    bucket = similarity.lsh_table_buckets_udf(dim, n_planes=6, n_tables=1)
-    out = {r.vec_id: r.b for r in
-           df.select("vec_id", bucket("embedding")[0].alias("b")).collect()}
+    bucket = similarity.lsh_table_buckets_udf(dim, n_planes, n_tables, seed)
+    out = {r.vec_id: list(r.b) for r in
+           df.select("vec_id", bucket("embedding").alias("b")).collect()}
     for i in range(20):
         assert out[i] == out[100 + i]  # identical vector -> identical bucket
-    assert len(set(out.values())) > 1  # and buckets do spread
+    assert len({tuple(b) for b in out.values()}) > 1  # and buckets do spread
 
-    # parity with the expr path at dim where both run (projections of random
+    # reference: bit p of table t's bucket is the sign of the dot product
+    # with hyperplane p under seed + t * 99991 (projections of random
     # gaussians are ~never within rounding of zero)
-    small = spark.createDataFrame(
-        [(i, [float(x) for x in rng.randn(16)]) for i in range(50)],
-        "vec_id long, embedding array<double>")
-    b_expr = small.select(
-        "vec_id",
-        similarity.lsh_bucket_expr(F.col("embedding"), 16, 6).alias("b"))
-    b_udf = small.select(
-        "vec_id",
-        similarity.lsh_table_buckets_udf(16, 6, 1)("embedding")[0].alias("b"))
-    e = {r.vec_id: r.b for r in b_expr.collect()}
-    u = {r.vec_id: r.b for r in b_udf.collect()}
-    assert e == u
+    for i in range(20):
+        want = [
+            sum(1 << p for p in range(n_planes)
+                if float(np.dot(base[i], similarity._lcg_weights(
+                    p, dim, seed + t * 99991))) > 0)
+            for t in range(n_tables)]
+        assert out[i] == want
 
 
 def test_neardup_hot_bucket_cap(spark):

@@ -399,16 +399,14 @@ def _python_rows_received(df) -> int:
     return sum(n_rows for _, n_rows in _python_nodes(df))
 
 
-@pytest.mark.parametrize("algorithm", ["auto", "greedy"])
-def test_ordered_dissolve_runs_kernel_once(spark, algorithm):
+def test_ordered_dissolve_runs_kernel_once(spark):
     """``ordered=True`` sorts the kernel's output without running the
     kernel again (the contracted route is checked in
     test_dissolve_auto_routes_degenerate_group)."""
     rows = [(4 * street + k, "residential", f"S{street % 25}",
              _seg(k, street, k + 1, street))
             for street in range(100) for k in range(4)]
-    out = dissolve_ways(_combined_df(spark, rows), ordered=True,
-                        algorithm=algorithm)
+    out = dissolve_ways(_combined_df(spark, rows), ordered=True)
     n = len(out.collect())
     assert n == 100  # one component per 4-segment street
     assert _python_rows_received(out) == n
@@ -420,7 +418,9 @@ def test_dissolve_same_tag_fork_divergence_pin(spark):
     (dissolve.py:74-93) breaks at a T-junction and emits 2+ features; true
     connected components merge the fork into ONE feature whose geometry
     linemerges into 2 parts (a through-line + the stub). This is the
-    documented, deliberate semantic (operators/dissolve.py module doc)."""
+    documented, deliberate semantic (operators/dissolve.py module doc).
+    A 4-arm star, where the reference takes one arm per frontier pop,
+    merges into one component too."""
     df = _combined_df(spark, [
         (0, "residential", "Oak", _seg(0, 0, 1, 0)),
         (1, "residential", "Oak", _seg(1, 0, 2, 0)),
@@ -434,6 +434,14 @@ def test_dissolve_same_tag_fork_divergence_pin(spark):
     assert len(parts) == 3
     endpoints = {tuple(p[0]) for p in parts} | {tuple(p[-1]) for p in parts}
     assert (1.0, 1.0) in endpoints  # the stub is present, not dropped
+
+    star = _combined_df(spark, [
+        (0, "residential", "Oak", _seg(0, 0, 10, 0)),
+        (1, "residential", "Oak", _seg(10, 0, 20, 5)),
+        (2, "residential", "Oak", _seg(10, 0, 20, -5)),
+        (3, "residential", "Oak", _seg(10, 0, 20, 0)),
+    ])
+    assert [r.n_members for r in dissolve_ways(star).collect()] == [4]
 
 
 def test_ordered_dissolve_byte_identical_sinks(spark, tmp_path):

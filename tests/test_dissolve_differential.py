@@ -102,111 +102,3 @@ def test_dissolve_matches_reference_greedy_on_forkfree(spark, seed):
     got_hist = sorted((r.highway, r.name, r.n_members) for r in out)
     assert got_hist == ref_hist
     assert sum(n for _, _, n in got_hist) == len(ways)
-
-
-def _random_forked_ways(seed):
-    """Random topologies WITH forks and cycles: star junctions (degree-3+
-    nodes) where greedy-BFS and true CC genuinely diverge."""
-    rng = np.random.RandomState(seed)
-    tags_pool = [("residential", "Oak"), ("residential", "Elm"),
-                 ("service", None)]
-    ways = {}
-    fid = 0
-    for star in range(rng.randint(5, 10)):
-        hw, name = tags_pool[rng.randint(len(tags_pool))]
-        cx, cy = float(star * 1000), 0.0
-        n_arms = rng.randint(2, 6)  # degree-n_arms center node
-        for arm in range(n_arms):
-            ax = cx + 10.0 + arm * 7
-            ay = cy + 5.0 + arm * 3
-            coords = [(cx, cy), (ax, ay)]
-            if rng.rand() < 0.5:
-                coords = coords[::-1]
-            ways[fid] = ((hw, name), coords)
-            fid += 1
-            if rng.rand() < 0.6:  # extend some arms into chains
-                coords2 = [(ax, ay), (ax + 11.0, ay + 2.0)]
-                ways[fid] = ((hw, name), coords2)
-                fid += 1
-    # interleave fids across stars so frontier order matters
-    items = list(ways.items())
-    rng.shuffle(items)
-    return {new_fid: v for new_fid, (_, v) in enumerate(items)}
-
-
-@pytest.mark.parametrize("seed", [5, 23, 91])
-def test_greedy_mode_matches_reference_on_forks(spark, seed):
-    """algorithm='greedy' (r3, VERDICT r2 missing #5): the group-size
-    multiset must match the reference port on forked topologies (exact
-    per-way MEMBERSHIP is pinned Spark-free in
-    test_greedy_components_exact_membership below); the divergence from
-    true CC on forks is pinned in test_greedy_mode_group_membership_exact."""
-    ways = _random_forked_ways(seed)
-    ref_groups = reference_greedy_groups(ways)
-
-    rows = [
-        (fid, tags[0], tags[1], encode_linestring(coords))
-        for fid, (tags, coords) in ways.items()
-    ]
-    df = _combined_df(spark, rows).repartition(7)  # order-scrambling shuffle
-    out = dissolve_ways(df, algorithm="greedy").collect()
-    got_hist = sorted(r.n_members for r in out)
-    assert got_hist == sorted(len(g) for g in ref_groups)
-    assert sum(got_hist) == len(ways)
-
-
-@pytest.mark.parametrize("seed", [5, 23, 91])
-def test_greedy_components_exact_membership(seed):
-    """Spark-free: _greedy_components over shuffled edge rows must
-    reproduce the reference port's groups MEMBER BY MEMBER."""
-    import pandas as pd
-    from struct import pack
-
-    from rlis2osm_spark.operators.dissolve import _greedy_components
-
-    ways = _random_forked_ways(seed)
-    ref_sets = sorted(
-        tuple(sorted(g)) for g in reference_greedy_groups(ways))
-
-    recs = []
-    for fid, (tags, coords) in ways.items():
-        for nidx, pt in ((0, coords[0]), (1, coords[-1])):
-            recs.append({
-                "group_key": hash(tags) % (1 << 31),
-                "order_key": f"streets\x00{fid:012d}000000",
-                "way_id": fid,  # identity way ids keep the mapping direct
-                "node_idx": nidx,
-                "node": pack("<2d", float(pt[0]), float(pt[1])),
-            })
-    rng = np.random.RandomState(seed + 1)
-    pdf = pd.DataFrame(recs).sample(frac=1.0, random_state=rng)  # scramble
-    comps = _greedy_components(pdf)
-    groups = {}
-    for w, c in zip(comps["way_id"], comps["component_id"]):
-        groups.setdefault(int(c), []).append(int(w))
-    got_sets = sorted(tuple(sorted(g)) for g in groups.values())
-    assert got_sets == ref_sets
-
-
-def test_greedy_mode_group_membership_exact(spark):
-    """Pinned fork: center node with 3 same-tag arms + a chain. Greedy takes
-    ONE arm per frontier pop (reference break semantics); CC merges all."""
-    rows = [
-        (0, "residential", "Oak", encode_linestring([(0, 0), (10, 0)])),
-        (1, "residential", "Oak", encode_linestring([(10, 0), (20, 5)])),
-        (2, "residential", "Oak", encode_linestring([(10, 0), (20, -5)])),
-        (3, "residential", "Oak", encode_linestring([(10, 0), (20, 0)])),
-    ]
-    ways = {fid: (("residential", "Oak"),
-                  [(0.0, 0.0), (10.0, 0.0)] if fid == 0 else
-                  [(10.0, 0.0), (20.0, 5.0)] if fid == 1 else
-                  [(10.0, 0.0), (20.0, -5.0)] if fid == 2 else
-                  [(10.0, 0.0), (20.0, 0.0)])
-            for fid in range(4)}
-    ref = sorted(len(g) for g in reference_greedy_groups(ways))
-    out = dissolve_ways(_combined_df(spark, rows),
-                        algorithm="greedy").collect()
-    assert sorted(r.n_members for r in out) == ref
-    # and the divergence from CC is real: CC merges the whole star
-    cc = dissolve_ways(_combined_df(spark, rows)).collect()
-    assert [r.n_members for r in cc] == [4]

@@ -4,27 +4,12 @@ names, order-insensitive values) at sf0.001 (sf0.01 is the driver's scale;
 0.001 keeps the suite fast — same code paths)."""
 
 import math
-import os
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    return con
 
 
 def _canon(val):
@@ -51,14 +36,13 @@ QUERIES = entry_mod.queries()
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_oracle_match(spark, duck, name):
+def test_oracle_match(spark, oracle_result, name):
     sdf = QUERIES[name](spark, SF_DIR)
     s_cols = [c.lower() for c in sdf.columns]
     s_rows = [tuple(r) for r in sdf.collect()]
 
-    res = duck.execute(ORACLES[name])
-    d_cols = [d[0].lower() for d in res.description]
-    d_rows = res.fetchall()
+    columns, d_rows, _ = oracle_result(SF_DIR, ORACLES[name])
+    d_cols = [c.lower() for c in columns]
 
     assert sorted(s_cols) == sorted(d_cols), (
         f"{name}: column mismatch {s_cols} vs {d_cols}")

@@ -138,9 +138,10 @@ def test_dissolve_single_cc_shuffle(spark):
 
 
 def test_knn_single_probe_exchange(spark):
-    """VERDICT r1 #7: dedup + window share ONE hash exchange on the probe
-    id — hashpartitioning(probe_id) appears exactly once, and there is no
-    exchange keyed on the (probe_id, base_id) pair."""
+    """VERDICT r1 #7: window + dedup share ONE hash exchange on the probe
+    id — hashpartitioning(probe_id) appears exactly once, there is no
+    exchange keyed on the (probe_id, base_id) pair, and the dedup runs
+    above the rank window, over its top-k survivors only."""
     from rlis2osm_spark.spatial.joins import knn_join
 
     probe = spark.range(50).select(
@@ -161,6 +162,41 @@ def test_knn_single_probe_exchange(spark):
     # no pair-keyed exchange anywhere
     import re
     assert not re.search(r"hashpartitioning\(pid#\d+L?, bid", plan), plan
+    # rank first, then dedup only the top-k survivors
+    assert plan.index("HashAggregate") < plan.index("Window"), plan
+
+
+def _python_rdd_scans(df) -> list[str]:
+    """The RDD scans in df's executed plan whose lineage runs a Python RDD:
+    what ``spark.createDataFrame(<list of rows>)`` plans, so that every
+    action starts one Python task per core. (A ``localCheckpoint`` also
+    plans ``Scan ExistingRDD``, but over blocks the JVM holds.)"""
+    found, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        if name == "RDDScanExec" and "PythonRDD" in node.rdd().toDebugString():
+            found.append(node.toString())
+        children = node.children().iterator()
+        while children.hasNext():
+            stack.append(children.next())
+    return found
+
+
+def test_ann_topk_scans_no_python_rdd(spark):
+    """The IVF centroid frame is an Arrow-built local relation: running
+    ann_topk starts no Python task just to turn centroids into rows."""
+    df = Q["ann_topk"](spark, SF)
+    df.collect()
+    plan = _plan(df)
+    assert "LocalTableScan [cid" in plan, plan
+    assert _python_rdd_scans(df) == [], plan
 
 
 def test_semi_anti_join_plan_forms(spark):
@@ -235,13 +271,12 @@ def test_fused_dissolve_single_shuffle(spark):
 
 
 @pytest.mark.parametrize("route", [
-    dict(approx_rows=1), dict(approx_rows=10**9), dict(algorithm="greedy")],
-    ids=["level0", "contracted", "greedy"])
+    dict(approx_rows=1), dict(approx_rows=10**9)],
+    ids=["level0", "contracted"])
 def test_ordered_dissolve_no_exchange_after_kernel(spark, route):
     """``dissolve_ways(ordered=True)`` sorts each of the kernel's
     partitions in place: no exchange and no range sampler between the
-    Python kernel and the write, on the level-0, contracted and greedy
-    routes."""
+    Python kernel and the write, on the level-0 and contracted routes."""
     from test_dissolve import _combined_df, _seg
 
     from rlis2osm_spark.operators.dissolve import dissolve_ways

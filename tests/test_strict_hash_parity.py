@@ -4,28 +4,12 @@ test_oracle_parity, which canonicalizes floats): Spark toPandas vs DuckDB
 representation the driver hashes.  Catches Decimal-vs-float64 and
 HUGEINT-vs-int64 drift that value-level checks forgive."""
 
-import os
-
-import duckdb
 import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    return con
 
 
 def _canon_cell(v):
@@ -51,9 +35,9 @@ QUERIES = entry_mod.queries()
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_strict_hash_parity(spark, duck, name):
+def test_strict_hash_parity(spark, oracle_result, name):
     s_pdf = QUERIES[name](spark, SF_DIR).toPandas()
-    d_pdf = duck.execute(ORACLES[name]).df()
+    _, _, d_pdf = oracle_result(SF_DIR, ORACLES[name])
     s_rows, d_rows = _rows(s_pdf), _rows(d_pdf)
     assert len(s_rows) == len(d_rows), (
         f"{name}: rows {len(s_rows)} vs {len(d_rows)}")

@@ -68,6 +68,21 @@ def test_with_tile_geometry(spark):
     assert out["p"].cell == out["l"].cell
 
 
+def test_with_tile_plan_computes_each_clamp_once(spark):
+    """``cell`` is built on the staged ``ix``/``iy`` columns, so the
+    executed plan holds each coordinate's FLOOR(...) clamp term once,
+    not once per read of the Morton interleave (16 reads each)."""
+    df = spark.createDataFrame(
+        [("l", encode_linestring([(0.0, 0.0), (200.0, 200.0)]))],
+        "id string, geometry binary")
+    tiled = with_tile(df, 10, grid=TileGrid(0.0, 0.0, 1024.0))
+    plan = tiled._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FLOOR(") == 2, plan
+    (row,) = tiled.collect()
+    assert (row.ix, row.iy) == (100, 100)
+    assert row.cell == _morton_py(100, 100)
+
+
 def test_tile_expr_is_native(spark):
     """Quantize+interleave must contain no Python UDF at all."""
     df = spark.createDataFrame([(1.0, 2.0)], "x double, y double")
