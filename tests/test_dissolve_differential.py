@@ -1,7 +1,8 @@
 """Differential test: our CC dissolve vs an independent pure-Python port of
 the reference's greedy single-path BFS (reference dissolve.py:51-160) on
 randomized FORK-FREE topologies — where the two semantics provably coincide
-(SURVEY §7.3). Forks are pinned separately (test_dissolve.py divergence pin).
+(SURVEY §7.3). Forks are pinned separately (test_dissolve.py divergence pin,
+and one star fork against the port below).
 
 Port semantics (faithful): ways visited in fid order; frontier is a LIFO of
 group end nodes; popping a node scans its connected ways in fid order and
@@ -102,3 +103,21 @@ def test_dissolve_matches_reference_greedy_on_forkfree(spark, seed):
     got_hist = sorted((r.highway, r.name, r.n_members) for r in out)
     assert got_hist == ref_hist
     assert sum(n for _, _, n in got_hist) == len(ways)
+
+
+def test_greedy_mode_group_membership_exact(spark):
+    """Pinned fork: a center node with 3 same-tag arms and a lead-in way.
+    The reference port takes ONE arm per frontier pop (its break), so the
+    star splits into two 2-way groups; CC merges all four ways."""
+    ways = {
+        0: (("residential", "Oak"), [(0.0, 0.0), (10.0, 0.0)]),
+        1: (("residential", "Oak"), [(10.0, 0.0), (20.0, 5.0)]),
+        2: (("residential", "Oak"), [(10.0, 0.0), (20.0, -5.0)]),
+        3: (("residential", "Oak"), [(10.0, 0.0), (20.0, 0.0)]),
+    }
+    assert sorted(sorted(g) for g in reference_greedy_groups(ways)) == [
+        [0, 1], [2, 3]]
+    rows = [(fid, tags[0], tags[1], encode_linestring(coords))
+            for fid, (tags, coords) in ways.items()]
+    out = dissolve_ways(_combined_df(spark, rows)).collect()
+    assert [r.n_members for r in out] == [4]
