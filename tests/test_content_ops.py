@@ -250,18 +250,24 @@ def test_ivf_centroids_deterministic(vectors):
 
 def test_audio_features_plumbing(spark):
     """Windowed features over decoded samples: a periodic 16-bit PCM
-    signal gives equal per-window energy, a null payload gives null
+    signal gives equal per-window energy, a signal shorter than one
+    window gives one window over what it has, a null payload gives null
     features, and a non-WAV payload hits the codec seam."""
     from rlis2osm_spark.functions.codecs import encode_wav
 
     samples = [((t % 64) - 32) * 100 for t in range(5120)]
-    rows = [("a:1", encode_wav(samples, 16000)), ("a:3", None)]
+    short = encode_wav([1, -2], 16000)
+    rows = [("a:1", encode_wav(samples, 16000)), ("a:2", short),
+            ("a:3", None)]
     media = spark.createDataFrame(rows, "media_ref string, payload binary")
     out = {r.media_ref: r
            for r in multimodal.extract_audio_features(media).collect()}
     assert out["a:1"].n_windows == 5  # 5120 samples // 1024
     assert len(out["a:1"].rms) == 5
     assert out["a:1"].rms[0] == pytest.approx(out["a:1"].rms[1])  # periodic
+    assert out["a:2"].n_windows == 1 and len(out["a:2"].rms) == 1
+    assert out["a:2"].n_bytes == len(short)
+    assert out["a:2"].rms[0] == pytest.approx((2.5) ** 0.5)  # (1 + 4) / 2
     assert out["a:3"].rms is None and out["a:3"].n_bytes == 0
     raw = spark.createDataFrame([("a:2", bytes(range(256)) * 20)],
                                 "media_ref string, payload binary")
