@@ -272,7 +272,7 @@ def generate(out_dir: str, n_streets: int = 2000, n_trails: int = 400,
 
 
 def ensure_dataset(out_dir: str, n_streets: int = 2000, n_trails: int = 400,
-                   seed: int = 42, refresh: bool = False) -> dict[str, str]:
+                   refresh: bool = False) -> dict[str, str]:
     """Idempotent dataset materialization; ``refresh=True`` regenerates and
     overwrites existing files (the reference's ``-r/--refresh`` semantics,
     main.py:180-185 — 'downloaded overwriting any existing files')."""
@@ -280,4 +280,4 @@ def ensure_dataset(out_dir: str, n_streets: int = 2000, n_trails: int = 400,
     paths = {n: os.path.join(out_dir, f"{n}.parquet") for n in expected}
     if not refresh and all(os.path.exists(p) for p in paths.values()):
         return paths
-    return generate(out_dir, n_streets, n_trails, seed)
+    return generate(out_dir, n_streets, n_trails)

@@ -330,18 +330,18 @@ def encode_gif(width: int, height: int, pixels: bytes,
     return head + bytes(body) + b"\x3B"
 
 
-def encode_gif_anim(screen_w: int, screen_h: int, frames: list,
-                    bg: int = 0) -> bytes:
+def encode_gif_anim(screen_w: int, screen_h: int, frames: list) -> bytes:
     """Animated GIF89a (gray global palette). ``frames`` is a list of
     dicts: ``left top width height pixels`` (gray bytes = palette
     indices) plus optional ``disposal`` (0 none, 1 keep, 2
     restore-background, 3 restore-previous), ``transparent`` (index or
-    None) and ``interlace``. Each frame gets its own Graphic Control
-    Extension; the same literal LZW coding as :func:`encode_gif`."""
+    None) and ``interlace``; the background index is 0. Each frame gets
+    its own Graphic Control Extension; the same literal LZW coding as
+    :func:`encode_gif`."""
     if not frames:
         raise ValueError("need at least one frame")
     out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", screen_w, screen_h, 0xF7, bg, 0)
+    out += struct.pack("<HHBBB", screen_w, screen_h, 0xF7, 0, 0)
     out += _GIF_GRAY_PALETTE
     for f in frames:
         left, top = f.get("left", 0), f.get("top", 0)
@@ -1999,8 +1999,10 @@ def _ac_refine_pass(reader: _BitReader, ac_tab, blk, ss: int, se: int,
 # codecs (fourcc != MJPG) raise NotImplementedError — the video seam.
 # ---------------------------------------------------------------------------
 
-def encode_avi_mjpeg(frames: list[bytes], width: int, height: int,
-                     fps: int = 10) -> bytes:
+_AVI_FPS = 10  # frame rate the AVI encoders write (no decoder reads it)
+
+
+def encode_avi_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
     """Minimal single-stream MJPEG AVI: RIFF(AVI ) / LIST(hdrl)(avih +
     LIST(strl)(strh vids/MJPG + strf BITMAPINFOHEADER)) / LIST(movi) with
     one 00dc chunk per JPEG frame."""
@@ -2016,13 +2018,13 @@ def encode_avi_mjpeg(frames: list[bytes], width: int, height: int,
 
     max_bytes = max(len(f) for f in frames)
     avih = struct.pack(
-        "<14I", 1_000_000 // fps, max_bytes * fps, 0, 0x10, len(frames),
-        0, 1, max_bytes, width, height, 0, 0, 0, 0)
+        "<14I", 1_000_000 // _AVI_FPS, max_bytes * _AVI_FPS, 0, 0x10,
+        len(frames), 0, 1, max_bytes, width, height, 0, 0, 0, 0)
     # fccType fccHandler dwFlags wPriority wLanguage dwInitialFrames
     # dwScale dwRate dwStart dwLength dwSuggestedBufferSize dwQuality
     # dwSampleSize rcFrame(4 int16) — 56 bytes total
     strh = (b"vids" + b"MJPG"
-            + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, fps, 0,
+            + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, _AVI_FPS, 0,
                           len(frames), max_bytes, 0xFFFFFFFF, 0)
             + struct.pack("<4h", 0, 0, width, height))
     strf = struct.pack("<IiiHH4sIiiII", 40, width, height, 1, 24, b"MJPG",
@@ -2043,8 +2045,7 @@ def encode_avi_mjpeg(frames: list[bytes], width: int, height: int,
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def encode_avi_raw(frames_gray: list[bytes], width: int, height: int,
-                   fps: int = 10) -> bytes:
+def encode_avi_raw(frames_gray: list[bytes], width: int, height: int) -> bytes:
     """Minimal single-stream UNCOMPRESSED AVI (handler 'DIB ',
     biCompression=0): each frame is a classic bottom-up 24-bit BGR DIB
     with rows padded to 4 bytes.  ``frames_gray`` supplies width*height
@@ -2073,10 +2074,10 @@ def encode_avi_raw(frames_gray: list[bytes], width: int, height: int,
 
     max_bytes = stride * height
     avih = struct.pack(
-        "<14I", 1_000_000 // fps, max_bytes * fps, 0, 0x10, len(dibs),
-        0, 1, max_bytes, width, height, 0, 0, 0, 0)
+        "<14I", 1_000_000 // _AVI_FPS, max_bytes * _AVI_FPS, 0, 0x10,
+        len(dibs), 0, 1, max_bytes, width, height, 0, 0, 0, 0)
     strh = (b"vids" + b"DIB "
-            + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, fps, 0,
+            + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, _AVI_FPS, 0,
                           len(dibs), max_bytes, 0xFFFFFFFF, 0)
             + struct.pack("<4h", 0, 0, width, height))
     strf = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0,
@@ -2421,10 +2422,10 @@ def encode_wav(samples, sample_rate: int = 8000) -> bytes:
     return b"RIFF" + struct.pack("<I", len(riff)) + riff
 
 
-def encode_wav_pcm24(samples, sample_rate: int = 8000,
-                     channels: int = 1) -> bytes:
-    """24-bit packed little-endian PCM WAV (format 1); ``samples`` is
-    channel-interleaved ints clamped to the 24-bit signed range."""
+def encode_wav_pcm24(samples, channels: int = 1) -> bytes:
+    """24-bit packed little-endian PCM WAV (format 1) at 8000 Hz;
+    ``samples`` is channel-interleaved ints clamped to the 24-bit signed
+    range."""
     import numpy as np
 
     s = np.clip(np.asarray(list(samples), dtype=np.int64),
@@ -2432,8 +2433,7 @@ def encode_wav_pcm24(samples, sample_rate: int = 8000,
     raw = s.tobytes()
     body = b"".join(raw[i:i + 3] for i in range(0, len(raw), 4))
     ba = 3 * channels
-    fmt = struct.pack("<HHIIHH", 1, channels, sample_rate,
-                      sample_rate * ba, ba, 24)
+    fmt = struct.pack("<HHIIHH", 1, channels, 8000, 8000 * ba, ba, 24)
     riff = (b"WAVE"
             + b"fmt " + struct.pack("<I", len(fmt)) + fmt
             + b"data" + struct.pack("<I", len(body)) + body)

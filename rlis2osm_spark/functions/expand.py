@@ -16,7 +16,6 @@ Semantics reproduced from the reference's ``StreetNameExpander``
 from __future__ import annotations
 
 import re
-from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import Column
@@ -75,7 +74,7 @@ BASENAME_EXPANSIONS = [
     ("VA", "Veteran Affairs", "f"),
 ]
 
-# RLIS-regional special cases appended by the caller (main.py:22-44, P6)
+# RLIS-regional special cases over the basename table (main.py:22-44, P6)
 RLIS_SPECIAL_CASES = [
     ("AM", "Archibald M", "fm"),
     ("HM", "Howard M", "fm"),
@@ -96,8 +95,9 @@ RLIS_SPECIAL_CASES = [
 ]
 
 
-def build_positional_dicts(special_cases: Iterable[tuple] | None = None):
-    """Plan-time constant folding of the three positional lookup tables (P5).
+def build_positional_dicts():
+    """Plan-time constant folding of the three positional lookup tables (P5),
+    RLIS special cases included.
 
     Mirrors expand.py:102-137: ``first``/``last`` include the full DIRECTION
     table, ``middle`` only multi-letter directions; TYPE everywhere; BASENAME
@@ -106,7 +106,7 @@ def build_positional_dicts(special_cases: Iterable[tuple] | None = None):
     multi_letter_dirs = {
         k: v for k, v in DIRECTION_EXPANSIONS.items() if len(k) > 1
     }
-    rows = list(BASENAME_EXPANSIONS) + list(special_cases or [])
+    rows = list(BASENAME_EXPANSIONS) + RLIS_SPECIAL_CASES
 
     by_first: dict[str, str] = {}
     by_middle: dict[str, str] = {}
@@ -170,8 +170,8 @@ _SEPARATORS = (" ", "/")
 _SPLIT_RX = re.compile("([%s]+)" % "".join(_SEPARATORS))
 
 
-def expand_basename_py(name: str | None, dicts: dict[str, dict[str, str]],
-                       delimiter: str = "-") -> str | None:
+def expand_basename_py(name: str | None,
+                       dicts: dict[str, dict[str, str]]) -> str | None:
     """Pure-Python basename expansion, reference-faithful (expand.py:139-175).
 
     Key rules: periods stripped first; split at ``-`` into independently
@@ -185,7 +185,7 @@ def expand_basename_py(name: str | None, dicts: dict[str, dict[str, str]],
         return name
 
     out_parts = []
-    for part in name.replace(".", "").split(delimiter):
+    for part in name.replace(".", "").split("-"):
         tokens = _SPLIT_RX.split(part.strip())
         n_words = len([t for t in tokens if t and t not in _SEPARATORS])
         pos = 1
@@ -203,10 +203,10 @@ def expand_basename_py(name: str | None, dicts: dict[str, dict[str, str]],
             rebuilt.append(tok)
         out_parts.append("".join(rebuilt))
 
-    return delimiter.join(out_parts)
+    return "-".join(out_parts)
 
 
-def make_basename_udf(special_cases: Iterable[tuple] | None = RLIS_SPECIAL_CASES):
+def make_basename_udf():
     """Arrow-batched pandas UDF for P4 with dicts folded at plan time (P5/P6).
 
     Per-batch memoization (r5): street names repeat heavily in real RLIS
@@ -214,7 +214,7 @@ def make_basename_udf(special_cases: Iterable[tuple] | None = RLIS_SPECIAL_CASES
     the string — computing each distinct name once per Arrow batch cuts
     the Python work by the batch's duplication factor at zero cost to
     all-distinct inputs."""
-    dicts = build_positional_dicts(special_cases)
+    dicts = build_positional_dicts()
 
     @F.pandas_udf(StringType())
     def basename_expand(names: pd.Series) -> pd.Series:

@@ -76,12 +76,13 @@ def xxh64(data: bytes, seed: int = 42) -> int:
     return h
 
 
-def xxh64_signed(data: bytes, seed: int = 42) -> int:
-    """XXH64 -> signed 64-bit (Spark's LongType view of the same bits)."""
-    h = xxh64(data, seed)
+def xxh64_signed(data: bytes) -> int:
+    """XXH64 (seed 42, Spark's) -> signed 64-bit (Spark's LongType view of
+    the same bits)."""
+    h = xxh64(data)
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
-def xxh64_str(s: str, seed: int = 42) -> int:
+def xxh64_str(s: str) -> int:
     """Signed XXH64 of a string's UTF-8 bytes — Spark ``xxhash64(col)``."""
-    return xxh64_signed(s.encode("utf-8"), seed)
+    return xxh64_signed(s.encode("utf-8"))

@@ -19,40 +19,32 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    value_cols: list[str] | None = None,
-    suffix: str = "_asof",
-) -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
     """Backward as-of join: latest right row at or before each left row.
 
-    Ties on the same timestamp: the right row sorts BEFORE the left probe
-    (a right event at exactly t is visible to a left probe at t), matching
-    DuckDB ASOF JOIN's ``right.ts <= left.ts`` semantics.
+    Both sides carry their time in ``ts``; every other right column but
+    ``on`` comes back as ``<name>_asof``. Ties on the same timestamp: the
+    right row sorts BEFORE the left probe (a right event at exactly t is
+    visible to a left probe at t), matching DuckDB ASOF JOIN's
+    ``right.ts <= left.ts`` semantics.
     """
-    value_cols = value_cols or [
-        c for c in right.columns if c not in (on, right_ts)]
+    value_cols = [c for c in right.columns if c not in (on, "ts")]
 
     l_tag = left.withColumn("_side", F.lit(1))
     r_tag = right.select(
-        F.col(on),
-        F.col(right_ts).alias(left_ts),
-        *[F.col(c).alias(f"{c}{suffix}") for c in value_cols],
+        F.col(on), F.col("ts"),
+        *[F.col(c).alias(f"{c}_asof") for c in value_cols],
     ).withColumn("_side", F.lit(0))
 
     merged = l_tag.unionByName(r_tag, allowMissingColumns=True)
     # right rows (side 0) sort before left probes (side 1) at equal ts
     w = (
         Window.partitionBy(on)
-        .orderBy(F.col(left_ts).asc(), F.col("_side").asc())
+        .orderBy(F.col("ts").asc(), F.col("_side").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     filled = merged.withColumns({
-        f"{c}{suffix}": F.last(F.col(f"{c}{suffix}"), ignorenulls=True).over(w)
+        f"{c}_asof": F.last(F.col(f"{c}_asof"), ignorenulls=True).over(w)
         for c in value_cols
     })
     return filled.where(F.col("_side") == 1).drop("_side")

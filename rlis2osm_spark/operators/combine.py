@@ -36,7 +36,7 @@ def _explode_parts_udf(geoms: pd.Series) -> pd.Series:
     return geoms.map(lambda g: None if g is None else wkb.explode_parts(bytes(g)))
 
 
-def explode_multipart(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
+def explode_multipart(df: DataFrame) -> DataFrame:
     """E1: one row per LineString part, order-stable via posexplode.
 
     Emits ``part_idx`` so downstream ids stay deterministic. Single-part rows
@@ -45,14 +45,14 @@ def explode_multipart(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
     dissolve stage raises on them and the sink counts them, so row loss is
     always loud (ADVICE r1).
     """
-    g = F.col(geom_col)
+    g = F.col("geometry")
     is_single = F.substring(g, 1, 5) == F.lit(_LINESTRING_TYPE)
     parts = F.when(is_single, F.array(g)).otherwise(_explode_parts_udf(g))
     return (
         df.withColumn("_parts", parts)
         .select("*", F.posexplode_outer("_parts").alias("part_idx", "_part_geom"))
-        .drop("_parts", geom_col)
-        .withColumnRenamed("_part_geom", geom_col)
+        .drop("_parts", "geometry")
+        .withColumnRenamed("_part_geom", "geometry")
     )
 
 

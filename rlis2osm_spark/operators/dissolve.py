@@ -78,19 +78,6 @@ def _tile_level(rows: int) -> int:
     return level
 
 
-def _define_filter_fields(all_fields: list[str], fields=None, exclude=False):
-    """A4 parity (dissolve.py:104-122): validate + resolve dissolve columns."""
-    if fields:
-        for f in fields:
-            if f not in all_fields:
-                raise ValueError(
-                    f'supplied field: "{f}", does not exist in the input')
-        if exclude:
-            return [f for f in all_fields if f not in fields]
-        return list(fields)
-    return list(all_fields)
-
-
 def _group_key(cols: list[str]) -> F.Column:
     """Tag-group hash: null-safe concat then xxhash64 (plain multi-column
     xxhash64 would collide ('a', null) with (null, 'a'))."""
@@ -136,7 +123,7 @@ def _group_node_ids(gk: np.ndarray, node_bits: np.ndarray,
     return ids, int(ids.max()) + 1 if len(ids) else 0
 
 
-def _partition_table(batches, geom_col: str) -> pa.Table | None:
+def _partition_table(batches) -> pa.Table | None:
     """A mapInArrow partition as one table, one contiguous chunk per
     column, the geometry with 64-bit offsets (a partition's WKB payload may
     pass 2 GiB); None when it holds no rows."""
@@ -144,23 +131,22 @@ def _partition_table(batches, geom_col: str) -> pa.Table | None:
     if not any(b.num_rows for b in batches):
         return None
     table = pa.Table.from_batches(batches)
-    i = table.schema.get_field_index(geom_col)
+    i = table.schema.get_field_index("geometry")
     return table.set_column(
-        i, geom_col, table[geom_col].cast(pa.large_binary())
+        i, "geometry", table["geometry"].cast(pa.large_binary())
     ).combine_chunks()
 
 
-def _merge_partitions(dissolve_fields: list[str], geom_col: str,
-                      components):
+def _merge_partitions(dissolve_fields: list[str], components):
     """mapInArrow driver of the merge: a partition holds WHOLE components'
     payload rows, ``components(table)`` gives each row's component id,
     and ``_merge_component_rows`` emits one merged row per component."""
 
     def run(batches):
-        table = _partition_table(batches, geom_col)
+        table = _partition_table(batches)
         if table is not None:
             yield _merge_component_rows(table, components(table),
-                                        dissolve_fields, geom_col)
+                                        dissolve_fields)
 
     return run
 
@@ -188,8 +174,7 @@ def _fused_components(keys: np.ndarray, ways: np.ndarray,
 
 
 def _merge_component_rows(table: pa.Table, comp: np.ndarray,
-                          dissolve_fields: list[str],
-                          geom_col: str) -> pa.RecordBatch:
+                          dissolve_fields: list[str]) -> pa.RecordBatch:
     """Merge step of both dissolve levels: given payload rows
     (``_partition_table``) and a per-row component-id array, emit one merged
     row per component (way_id-ordered linemerge, first member's tags).
@@ -204,7 +189,7 @@ def _merge_component_rows(table: pa.Table, comp: np.ndarray,
     ends = np.r_[bounds[1:], len(order)]
     first_idx = order[bounds]               # min-way_id row per component
     n_members = ends - bounds
-    geoms = table[geom_col].chunk(0)
+    geoms = table["geometry"].chunk(0)
     offs, data = wkb.binary_buffers(geoms)
     # the native guard pinned every header to (0x01, type=2, no flags); a
     # lone member whose length matches its declared point count is then
@@ -233,7 +218,7 @@ def _merge_component_rows(table: pa.Table, comp: np.ndarray,
         [pa.array(comp_sorted[bounds], pa.int64()),
          *[tags[f].combine_chunks() for f in dissolve_fields],
          pa.array(n_members, pa.int32()), geom_out],
-        names=["component_id", *dissolve_fields, "n_members", geom_col])
+        names=["component_id", *dissolve_fields, "n_members", "geometry"])
 
 
 def _merge_paths(data: np.ndarray, offs: np.ndarray, members: np.ndarray,
@@ -343,8 +328,7 @@ def _merge_paths(data: np.ndarray, offs: np.ndarray, members: np.ndarray,
         [None, pa.py_buffer(out_offs), pa.py_buffer(out)])
 
 
-def _fused_schema(df: DataFrame, dissolve_fields: list[str],
-                  geom_col: str) -> StructType:
+def _fused_schema(df: DataFrame, dissolve_fields: list[str]) -> StructType:
     """Output StructType of the merge kernel, at every level."""
     schema_by_name = {f.name: f for f in df.schema.fields}
     return StructType(
@@ -352,44 +336,42 @@ def _fused_schema(df: DataFrame, dissolve_fields: list[str],
         + [StructField(c, schema_by_name[c].dataType, True)
            for c in dissolve_fields]
         + [StructField("n_members", IntegerType(), False),
-           StructField(geom_col, BinaryType(), True)])
+           StructField("geometry", BinaryType(), True)])
 
 
 def _dissolve_fused(df: DataFrame, dissolve_fields: list[str],
-                    geom_col: str, n_parts: int) -> DataFrame:
+                    n_parts: int) -> DataFrame:
     """Level 0: one exchange. Whole tag-groups hash-partition WITH their
     payload; component-find and merge run inside the partition."""
     return (
         df.select("group_key", "way_id", *[F.col(f"`{c}`")
                                            for c in dissolve_fields],
-                  geom_col)
+                  "geometry")
         .repartition(n_parts, "group_key")
         .mapInArrow(
             _merge_partitions(
-                dissolve_fields, geom_col,
+                dissolve_fields,
                 lambda t: _fused_components(
                     t["group_key"].to_numpy(), t["way_id"].to_numpy(),
-                    wkb.endpoint_slices_batch(t[geom_col].chunk(0)))),
-            _fused_schema(df, dissolve_fields, geom_col))
+                    wkb.endpoint_slices_batch(t["geometry"].chunk(0)))),
+            _fused_schema(df, dissolve_fields))
     )
 
 
 def _dissolve_contracted(df: DataFrame, dissolve_fields: list[str],
-                         geom_col: str, n_parts: int,
-                         level: int) -> DataFrame:
+                         n_parts: int, level: int) -> DataFrame:
     """Level L > 0: contract each tag-group over its level-L tile cells
     in four fixed steps (``dissolve_ways`` doc)."""
     # 1. local: components per (group, cell of the way's midpoint); a
     # way's label is the min way_id of its local component
     local = (
-        with_tile(df.select("group_key", "way_id", geom_col), level,
-                  geom_col)
-        .select("group_key", "way_id", geom_col,
+        with_tile(df.select("group_key", "way_id", "geometry"), level)
+        .select("group_key", "way_id", "geometry",
                 F.xxhash64("group_key", "cell").alias("cell_key"))
         # AQE sizes the inner exchanges; only the last one, whose
         # partitions become the output files, has a fixed count
         .repartition("cell_key")
-        .mapInArrow(_local_labels(geom_col), _LOCAL_SCHEMA))
+        .mapInArrow(_local_labels, _LOCAL_SCHEMA))
     # 2. meet: per (group, node), the least label there and every label.
     # Both uses below read this one aggregate's exchange, so the local
     # kernel runs once.
@@ -418,41 +400,39 @@ def _dissolve_contracted(df: DataFrame, dissolve_fields: list[str],
                 F.coalesce("root", "label").alias("component_id")))
     return (
         df.select("group_key", "way_id",
-                  *[F.col(f"`{c}`") for c in dissolve_fields], geom_col,
-                  F.substring(geom_col, 10, 16).alias("node"))
+                  *[F.col(f"`{c}`") for c in dissolve_fields], "geometry",
+                  F.substring("geometry", 10, 16).alias("node"))
         .join(node_comp, ["group_key", "node"])
         .repartition(n_parts, "component_id")
         .mapInArrow(
-            _merge_partitions(dissolve_fields, geom_col,
+            _merge_partitions(dissolve_fields,
                               lambda t: t["component_id"].to_numpy()),
-            _fused_schema(df, dissolve_fields, geom_col))
+            _fused_schema(df, dissolve_fields))
     )
 
 
-def _local_labels(geom_col: str):
-    """mapInArrow driver of step 1: per row, its group_key, its local
+def _node_array(ends: np.ndarray) -> pa.Array:
+    """16-byte endpoint payloads as a binary array."""
+    return pa.FixedSizeBinaryArray.from_buffers(
+        pa.binary(16), len(ends),
+        [None, pa.py_buffer(np.ascontiguousarray(ends))]
+    ).cast(pa.binary())
+
+
+def _local_labels(batches):
+    """mapInArrow kernel of step 1: per row, its group_key, its local
     label — the component id under ``cell_key`` — and its two endpoint
     nodes as 16-byte binaries. No tag payload comes in."""
-
-    def node_array(ends: np.ndarray) -> pa.Array:
-        return pa.FixedSizeBinaryArray.from_buffers(
-            pa.binary(16), len(ends),
-            [None, pa.py_buffer(np.ascontiguousarray(ends))]
-        ).cast(pa.binary())
-
-    def run(batches):
-        table = _partition_table(batches, geom_col)
-        if table is None:
-            return
-        ends = wkb.endpoint_slices_batch(table[geom_col].chunk(0))
-        label = _fused_components(table["cell_key"].to_numpy(),
-                                  table["way_id"].to_numpy(), ends)
-        yield pa.RecordBatch.from_arrays(
-            [table["group_key"].chunk(0), pa.array(label, pa.int64()),
-             node_array(ends[:, 0]), node_array(ends[:, 1])],
-            names=_LOCAL_SCHEMA.names)
-
-    return run
+    table = _partition_table(batches)
+    if table is None:
+        return
+    ends = wkb.endpoint_slices_batch(table["geometry"].chunk(0))
+    label = _fused_components(table["cell_key"].to_numpy(),
+                              table["way_id"].to_numpy(), ends)
+    yield pa.RecordBatch.from_arrays(
+        [table["group_key"].chunk(0), pa.array(label, pa.int64()),
+         _node_array(ends[:, 0]), _node_array(ends[:, 1])],
+        names=_LOCAL_SCHEMA.names)
 
 
 def _resolve_roots(batches):
@@ -475,17 +455,17 @@ def _resolve_roots(batches):
 
 def dissolve_ways(
     combined: DataFrame,
-    fields: list[str] | None = None,
-    exclude: bool = False,
-    geom_col: str = "geometry",
     approx_rows: int | None = None,
     ordered: bool = False,
 ) -> DataFrame:
     """EP3: dissolve connected, identically-tagged ways into merged geometries.
 
     Input: the combine-stage output (lineage cols + COMBINED_FIELDS +
-    geometry). Output: one row per dissolve group with the group's tag
-    columns and the linemerged geometry (A1), plus ``n_members`` lineage.
+    geometry). Ways group on the COMBINED_FIELDS columns present, so to
+    dissolve on a subset of tags (the reference's A4 field include/exclude
+    lists) select those columns first. Output: one row per dissolve group
+    with the group's tag columns and the linemerged geometry (A1), plus
+    ``n_members`` lineage.
     Rejects MultiGeometries AND null geometries loudly, like the reference
     (dissolve.py:137-142 / its hard crash on missing geometry) — run
     ``explode_multipart`` first.
@@ -539,8 +519,7 @@ def dissolve_ways(
     is sorted within partitions, not globally. Leave False for
     set-semantics pipelines.
     """
-    tag_fields = [c for c in COMBINED_FIELDS if c in combined.columns]
-    dissolve_fields = _define_filter_fields(tag_fields, fields, exclude)
+    dissolve_fields = [c for c in COMBINED_FIELDS if c in combined.columns]
 
     # stable surrogate way id (monotonically_increasing_id is retry-unstable)
     df = combined.withColumn(
@@ -555,9 +534,9 @@ def dissolve_ways(
     # native guards: geometry must be present (the reference fails loudly
     # on missing geometry — no silent row loss) and the WKB type word must
     # be LineString (parity with its NotImplementedError on multigeometries)
-    g = F.col(geom_col)
+    g = F.col("geometry")
     df = df.withColumn(
-        geom_col,
+        "geometry",
         F.when(
             g.isNull(),
             F.raise_error(F.lit(
@@ -576,10 +555,9 @@ def dissolve_ways(
         rows = combined.count()
     n_parts = min(spark_partitions(combined), max(8, rows // 50_000 + 1))
     level = _tile_level(rows)
-    out = (_dissolve_fused(df, dissolve_fields, geom_col, n_parts)
+    out = (_dissolve_fused(df, dissolve_fields, n_parts)
            if level == 0 else
-           _dissolve_contracted(df, dissolve_fields, geom_col, n_parts,
-                                level))
+           _dissolve_contracted(df, dissolve_fields, n_parts, level))
     return out.sortWithinPartitions("component_id") if ordered else out
 
 

@@ -63,14 +63,20 @@ def _sniff(b: bytes) -> str:
     return "unknown"
 
 
-def _fake_decode(payload: bytes, feat_dim: int) -> tuple[int, int, np.ndarray]:
+FEAT_DIM = 8        # image byte-histogram bins
+FRAME_STRIDE = 2    # video: every FRAME_STRIDE-th frame is decoded
+AUDIO_WINDOW = 1024  # samples per RMS window
+MAX_WINDOWS = 64     # RMS windows kept per clip
+
+
+def _fake_decode(payload: bytes) -> tuple[int, int, np.ndarray]:
     """Deterministic stand-in for a real image decode: derives a stable
     pseudo raster shape + a byte-histogram feature from the payload."""
     n = len(payload)
     width = 16 + (n * 31) % 240
     height = 16 + (n * 17) % 240
     hist = np.bincount(
-        np.frombuffer(payload, dtype=np.uint8) % feat_dim, minlength=feat_dim
+        np.frombuffer(payload, dtype=np.uint8) % FEAT_DIM, minlength=FEAT_DIM
     ).astype("float32")
     total = hist.sum()
     if total > 0:
@@ -80,7 +86,6 @@ def _fake_decode(payload: bytes, feat_dim: int) -> tuple[int, int, np.ndarray]:
 
 def extract_image_features(
     media: DataFrame,
-    feat_dim: int = 16,
     decode_stub: bool = True,
 ) -> DataFrame:
     """media(media_ref, payload, ...) -> per-blob features via mapInPandas."""
@@ -95,7 +100,7 @@ def extract_image_features(
                 b = bytes(payload)
                 fmt = _sniff(b)
                 if decode_stub:
-                    w, h, feat = _fake_decode(b, feat_dim)
+                    w, h, feat = _fake_decode(b)
                     rows.append((ref, len(b), fmt, w, h, None,
                                  feat.tolist(), None))
                     continue
@@ -124,8 +129,8 @@ def extract_image_features(
                     w, h, px = decode_gif(b)
                     nch = 1
                 arr = np.frombuffer(px, dtype=np.uint8)
-                hist = np.bincount(arr % feat_dim,
-                                   minlength=feat_dim).astype("float32")
+                hist = np.bincount(arr % FEAT_DIM,
+                                   minlength=FEAT_DIM).astype("float32")
                 total = hist.sum()
                 if total > 0:
                     hist /= total
@@ -148,12 +153,9 @@ VIDEO_FRAME_SCHEMA = StructType([
 ])
 
 
-def extract_video_frames(
-    media: DataFrame,
-    every_n: int = 1,
-) -> DataFrame:
+def extract_video_frames(media: DataFrame) -> DataFrame:
     """REAL video frame sampling + decode (r4; DIB + animated GIF r5):
-    parse the container, take every ``every_n``-th frame, decode each —
+    parse the container, take every ``FRAME_STRIDE``-th frame, decode each —
     AVI/MJPEG through the baseline JPEG decoder (px_sum = luma sum),
     AVI uncompressed 'DIB ' as bottom-up 24-bit BGR (px_sum over all RGB
     samples), and animated GIF as fully-composited canvas frames
@@ -180,7 +182,7 @@ def extract_video_frames(
                     codec = "gif"
                 else:
                     w, h, codec, frames = decode_avi_frames(b)
-                for idx in range(0, len(frames), every_n):
+                for idx in range(0, len(frames), FRAME_STRIDE):
                     if codec == "gif":
                         fw, fh, px = w, h, frames[idx]
                     elif codec == "dib":
@@ -211,11 +213,7 @@ AUDIO_FEATURE_SCHEMA = StructType([
 ])
 
 
-def extract_audio_features(
-    media: DataFrame,
-    window: int = 1024,
-    max_windows: int = 64,
-) -> DataFrame:
+def extract_audio_features(media: DataFrame) -> DataFrame:
     """Audio: RIFF/WAVE payload -> decoded samples -> windowed energy
     features plus exact sample stats, one Arrow pass. Non-WAV payloads
     raise NotImplementedError — the seam where a codec library
@@ -255,10 +253,11 @@ def extract_audio_features(
                              int(round(float(np.abs(s).max())))
                              if len(s) else 0)
                 sig = s.astype("float32")
-                n_win = min(max(len(sig) // window, 1), max_windows)
-                used = sig[: n_win * window] if len(sig) >= window else sig
-                if len(used) >= window:
-                    w = used.reshape(n_win, window)
+                n_win = min(max(len(sig) // AUDIO_WINDOW, 1), MAX_WINDOWS)
+                used = (sig[: n_win * AUDIO_WINDOW]
+                        if len(sig) >= AUDIO_WINDOW else sig)
+                if len(used) >= AUDIO_WINDOW:
+                    w = used.reshape(n_win, AUDIO_WINDOW)
                     rms = np.sqrt((w * w).mean(axis=1))
                 else:
                     rms = np.array([np.sqrt((used * used).mean())

@@ -71,12 +71,7 @@ def _node_id_from_key(key: bytes) -> int:
     return -(h % (1 << 62)) - 1
 
 
-def write_osm_xml(
-    df: DataFrame,
-    out_dir: str,
-    geom_col: str = "geometry",
-    tags_col: str = "tags",
-) -> DataFrame:
+def write_osm_xml(df: DataFrame, out_dir: str) -> DataFrame:
     """Write one .osm fragment per partition; returns per-partition stats.
 
     Expects the sink-assembled frame (repair_and_filter_tags): a map<k,v>
@@ -246,7 +241,7 @@ def write_osm_xml(
              pa.array([hasher.hexdigest()])],
             schema=_OUT_ARROW_SCHEMA)
 
-    projected = df.select(geom_col, tags_col)  # analyzes (raises on bad input)
+    projected = df.select("geometry", "tags")  # analyzes (raises on bad input)
     os.makedirs(out_dir, exist_ok=True)
     for stale in _glob.glob(os.path.join(out_dir, "part-*.osm.tmp")):
         os.remove(stale)

@@ -28,7 +28,6 @@ def interval_overlap_join(
     left_range: tuple[str, str],
     right_range: tuple[str, str],
     bucket_width: int,
-    how_strict: str = "overlaps",
 ) -> DataFrame:
     """Pairs (l, r) whose [start, end] intervals overlap (closed-interval
     semantics: touching endpoints count), optionally within an equality

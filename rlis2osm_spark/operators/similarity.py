@@ -26,6 +26,12 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+LSH_SEED = 1234567  # LCG seed of table 0's hyperplanes
+IVF_ITERS = 5       # Lloyd rounds when the IVF path trains its own centroids
+NEARDUP_THRESHOLD = 0.9  # cosine a near-dup pair must reach
+NEARDUP_TABLES = 6       # OR-construction tables of cosine_neardup_pairs
+NEARDUP_PLANES = 6       # hyperplanes per table
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -45,18 +51,13 @@ def as_double_vec(col: Column) -> Column:
     return F.transform(col, lambda v: v.cast("double"))
 
 
-def brute_force_topk(
-    base: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k: broadcast the probe set, scan the base once."""
-    b = base.select(F.col(id_col).alias("neighbor_id"),
-                    as_double_vec(F.col(vec_col)).alias("bv"))
-    p = probes.select(F.col(id_col).alias("probe_id"),
-                      as_double_vec(F.col(vec_col)).alias("pv"))
+def brute_force_topk(base: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k of (vec_id, embedding) rows: broadcast the probe
+    set, scan the base once."""
+    b = base.select(F.col("vec_id").alias("neighbor_id"),
+                    as_double_vec(F.col("embedding")).alias("bv"))
+    p = probes.select(F.col("vec_id").alias("probe_id"),
+                      as_double_vec(F.col("embedding")).alias("pv"))
     pairs = b.crossJoin(F.broadcast(p)).filter(
         F.col("probe_id") != F.col("neighbor_id"))
     w = Window.partitionBy("probe_id").orderBy(
@@ -69,7 +70,7 @@ def brute_force_topk(
     )
 
 
-def _lcg_weights(plane: int, dim: int, seed: int = 1234567) -> list[float]:
+def _lcg_weights(plane: int, dim: int, seed: int) -> list[float]:
     """Deterministic pseudo-random hyperplane in [-1, 1)^dim."""
     out = []
     state = (seed + plane * 2654435761) % (1 << 31)
@@ -79,19 +80,18 @@ def _lcg_weights(plane: int, dim: int, seed: int = 1234567) -> list[float]:
     return out
 
 
-def lsh_table_buckets_udf(dim: int, n_planes: int, n_tables: int,
-                          seed: int = 1234567):
+def lsh_table_buckets_udf(dim: int, n_planes: int, n_tables: int):
     """Random-hyperplane signatures -> one LSH bucket id per table
     (``array<long>``), all ``n_tables`` in ONE numpy matmul per Arrow
     batch. Table t uses ``n_planes`` LCG hyperplanes seeded
-    ``seed + t * 99991``; bit p of a bucket is set when the projection on
+    ``LSH_SEED + t * 99991``; bit p of a bucket is set when the projection on
     plane p is positive. Weights live in the closure, not the plan, so the
     plan stays the same size at any ``dim``."""
     import numpy as np
     from pyspark.sql.types import ArrayType, LongType
 
     W = np.array(
-        [_lcg_weights(p, dim, seed + t * 99991)
+        [_lcg_weights(p, dim, LSH_SEED + t * 99991)
          for t in range(n_tables) for p in range(n_planes)],
         dtype=np.float64).T  # (dim, n_tables*n_planes)
     powers = (1 << np.arange(n_planes)).astype(np.int64)
@@ -126,21 +126,19 @@ def lsh_ann_candidates(
     base: DataFrame,
     probes: DataFrame,
     dim: int,
-    n_planes: int = 6,
-    n_tables: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 1234567,
+    n_planes: int,
+    n_tables: int,
 ) -> DataFrame:
-    """LSH candidate pairs (probe_id, neighbor_id, pv, bv, bucket) —
-    possibly with per-pair duplicates across tables; feed ``rerank_topk``.
-    Signatures come from ``lsh_table_buckets_udf``; ``posexplode`` turns
-    each side's bucket array into (tbl, bucket) join keys."""
-    b = base.select(F.col(id_col).alias("neighbor_id"),
-                    as_double_vec(F.col(vec_col)).alias("bv"))
-    p = probes.select(F.col(id_col).alias("probe_id"),
-                      as_double_vec(F.col(vec_col)).alias("pv"))
-    bu = lsh_table_buckets_udf(dim, n_planes, n_tables, seed)
+    """LSH candidate pairs (probe_id, neighbor_id, pv, bv, bucket) of
+    (vec_id, embedding) rows — possibly with per-pair duplicates across
+    tables; feed ``rerank_topk``. Signatures come from
+    ``lsh_table_buckets_udf``; ``posexplode`` turns each side's bucket
+    array into (tbl, bucket) join keys."""
+    b = base.select(F.col("vec_id").alias("neighbor_id"),
+                    as_double_vec(F.col("embedding")).alias("bv"))
+    p = probes.select(F.col("vec_id").alias("probe_id"),
+                      as_double_vec(F.col("embedding")).alias("pv"))
+    bu = lsh_table_buckets_udf(dim, n_planes, n_tables)
     b = b.select(
         "neighbor_id", "bv",
         F.posexplode(bu(F.col("bv"))).alias("tbl", "bucket"))
@@ -187,9 +185,6 @@ def lsh_ann_topk(
     k: int = 5,
     n_planes: int = 6,
     n_tables: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 1234567,
 ) -> DataFrame:
     """ANN: bucket equi-join candidates, exact cosine re-rank.
 
@@ -199,8 +194,7 @@ def lsh_ann_topk(
     id is exploded into the join key — still ONE equi-join, and the
     candidate set is deduped with a single probe-keyed exchange before the
     rank window (``rerank_topk``)."""
-    cands = lsh_ann_candidates(base, probes, dim, n_planes, n_tables,
-                               id_col, vec_col, seed)
+    cands = lsh_ann_candidates(base, probes, dim, n_planes, n_tables)
     return rerank_topk(cands, k, dedup=n_tables > 1)
 
 
@@ -222,12 +216,11 @@ def centroid_frame(spark, cents: list[list[float]]) -> DataFrame:
 def ivf_train_centroids(
     base: DataFrame,
     dim: int,
-    k_centroids: int = 16,
-    n_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    k_centroids: int,
+    n_iter: int,
 ) -> list[list[float]]:
-    """Lloyd's k-means over DataFrame jobs — the IVF coarse quantizer.
+    """Lloyd's k-means over (vec_id, embedding) rows in DataFrame jobs —
+    the IVF coarse quantizer.
 
     Every heavy step is distributed (assignment = rows x k broadcast join
     with native dot products; update = posexplode + groupBy mean); only the
@@ -237,8 +230,8 @@ def ivf_train_centroids(
     sampled base at 100 TB (pass ``base.sample(...)`` / a hash band —
     centroid quality needs only ~1000 points per centroid).
     """
-    b = base.select(F.col(id_col).alias("_id"),
-                    as_double_vec(F.col(vec_col)).alias("v"))
+    b = base.select(F.col("vec_id").alias("_id"),
+                    as_double_vec(F.col("embedding")).alias("v"))
     init = (b.withColumn("_h", F.xxhash64(F.col("_id")))
             .orderBy("_h").limit(k_centroids))
     cents = [list(r.v) for r in init.collect()]
@@ -271,22 +264,20 @@ def ivf_ann_candidates(
     base: DataFrame,
     probes: DataFrame,
     dim: int,
-    k_centroids: int = 16,
-    n_probe: int = 2,
-    centroids: list[list[float]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_iter: int = 5,
+    k_centroids: int,
+    n_probe: int,
+    centroids: list[list[float]] | None,
 ) -> DataFrame:
-    """IVF candidate pairs (probe_id, neighbor_id, pv, bv, bucket) — a pair
-    may repeat across probed cells; feed ``rerank_topk``."""
+    """IVF candidate pairs (probe_id, neighbor_id, pv, bv, bucket) of
+    (vec_id, embedding) rows — a pair may repeat across probed cells; feed
+    ``rerank_topk``. Without ``centroids`` it trains its own
+    (``IVF_ITERS`` rounds)."""
     cents = centroids if centroids is not None else ivf_train_centroids(
-        base, dim, k_centroids, n_iter=n_iter, id_col=id_col,
-        vec_col=vec_col)
+        base, dim, k_centroids, IVF_ITERS)
     cdf = centroid_frame(base.sparkSession, cents)
 
-    b = base.select(F.col(id_col).alias("neighbor_id"),
-                    as_double_vec(F.col(vec_col)).alias("bv"))
+    b = base.select(F.col("vec_id").alias("neighbor_id"),
+                    as_double_vec(F.col("embedding")).alias("bv"))
     b_cell = (
         b.crossJoin(F.broadcast(cdf))
         .withColumn("d2", _dist2(F.col("bv"), F.col("c")))
@@ -295,8 +286,8 @@ def ivf_ann_candidates(
              F.first("bv").alias("bv"))
         .select("neighbor_id", "bv", F.col("best.cid").alias("bucket"))
     )
-    p = probes.select(F.col(id_col).alias("probe_id"),
-                      as_double_vec(F.col(vec_col)).alias("pv"))
+    p = probes.select(F.col("vec_id").alias("probe_id"),
+                      as_double_vec(F.col("embedding")).alias("pv"))
     wp = Window.partitionBy("probe_id").orderBy(F.asc("d2"), F.asc("cid"))
     p_cells = (
         p.crossJoin(F.broadcast(cdf))
@@ -319,9 +310,6 @@ def ivf_ann_topk(
     k_centroids: int = 16,
     n_probe: int = 2,
     centroids: list[list[float]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_iter: int = 5,
 ) -> DataFrame:
     """IVF ANN: k-means cells as the candidate generator (VERDICT r1 #10).
 
@@ -334,30 +322,29 @@ def ivf_ann_topk(
     plane count).
     """
     cands = ivf_ann_candidates(base, probes, dim, k_centroids, n_probe,
-                               centroids, id_col, vec_col, n_iter)
+                               centroids)
     return rerank_topk(cands, k)
 
 
 def cosine_neardup_pairs(
     df: DataFrame,
     dim: int,
-    threshold: float = 0.9,
-    n_tables: int = 4,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket: int | None = None,
 ):
-    """Embedding-cosine near-duplicate pairs (dedup family, build brief).
+    """Embedding-cosine near-duplicate pairs (dedup family, build brief) of
+    (vec_id, embedding) rows: every pair with cosine at least
+    ``NEARDUP_THRESHOLD``, as (doc_a, doc_b, cos) with doc_a < doc_b.
     Returns a DataFrame, or ``(DataFrame, Observation)`` when ``max_bucket``
     is set.
 
-    OR-construction over ``n_tables`` independent random-hyperplane
-    signatures: a true near-dup pair (cos -> 1) agrees on all planes of
-    SOME table with probability ~1 - (1 - p^n_planes)^n_tables, p =
-    1 - theta/pi. Candidates come from ONE self-join on (table, bucket)
-    (the table id is exploded into the key — no per-table job), then the
-    exact cosine verifies. Never all-pairs; the verify set is tiny.
+    OR-construction over ``NEARDUP_TABLES`` independent random-hyperplane
+    signatures of ``NEARDUP_PLANES`` planes: a true near-dup pair
+    (cos -> 1) agrees on all planes of SOME table with probability
+    ~1 - (1 - p^planes)^tables, p = 1 - theta/pi. Each vector's buckets
+    are computed once; ONE aggregate on (table, bucket) gathers each
+    bucket's members sorted by id, the candidate pairs are emitted from
+    those lists natively, and the exact cosine verifies. Never all-pairs;
+    the verify set is tiny.
 
     ``max_bucket`` is the hot-bucket skew guard (same contract as
     minhash's): a bucket holding a dense cluster is an O(n^2) reducer, so
@@ -366,42 +353,41 @@ def cosine_neardup_pairs(
     ``hot_bucket_rows``. Recall is preserved for any pair that also shares
     a non-hot bucket in another table (the OR-construction's job).
     """
+    buckets = lsh_table_buckets_udf(dim, NEARDUP_PLANES, NEARDUP_TABLES)
     tagged = df.select(
-        F.col(id_col).alias("_id"),
-        as_double_vec(F.col(vec_col)).alias("v")).select(
-        "_id", "v",
-        F.posexplode(lsh_table_buckets_udf(dim, n_planes, n_tables)(
-            F.col("v"))).alias("tbl", "bucket"))
+        F.col("vec_id").alias("_id"),
+        as_double_vec(F.col("embedding")).alias("v")).select(
+        F.struct("_id", "v").alias("m"),
+        F.posexplode(buckets(F.col("v"))).alias("tbl", "bucket"))
+    groups = tagged.groupBy("tbl", "bucket").agg(
+        F.array_sort(F.collect_list("m")).alias("ms")).select(
+        "ms", F.size("ms").alias("n"))
     obs = None
-    left = right = tagged
     if max_bucket is not None:
         from pyspark.sql import Observation
 
-        wide = tagged.withColumn(
-            "_bn", F.count("*").over(
-                Window.partitionBy("tbl", "bucket")))
         obs = Observation("neardup_hot_buckets")
-        # observe ONE join side only — duplicated observe nodes under
-        # subplan/exchange reuse can leave the surviving CollectMetrics
-        # instance unexecuted, so the metrics read as zero
-        left = wide.observe(
+        groups = groups.observe(
             obs,
-            F.sum((F.col("_bn") > max_bucket).cast("long"))
-            .alias("hot_bucket_rows")
-        ).filter(F.col("_bn") <= max_bucket).drop("_bn")
-        right = wide.filter(F.col("_bn") <= max_bucket).drop("_bn")
-    a, b = left.alias("a"), right.alias("b")
+            F.sum(F.when(F.col("n") > max_bucket, F.col("n"))
+                  .otherwise(0).cast("long")).alias("hot_bucket_rows")
+        ).filter(F.col("n") <= max_bucket)
+    # members i < j of each sorted list: the later ones paired with each
+    pairs_of = F.flatten(F.transform(
+        "ms", lambda a, i: F.transform(
+            F.slice("ms", i + 2, F.col("n") - i - 1),
+            lambda b: F.struct(a["_id"].alias("doc_a"),
+                               b["_id"].alias("doc_b"),
+                               a["v"].alias("va"), b["v"].alias("vb")))))
     cands = (
-        a.join(b, (F.col("a.tbl") == F.col("b.tbl"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a._id") < F.col("b._id")))
-        .select(F.col("a._id").alias("doc_a"), F.col("b._id").alias("doc_b"),
-                F.col("a.v").alias("va"), F.col("b.v").alias("vb"))
+        groups.filter(F.col("n") > 1)
+        .select(F.explode(pairs_of).alias("p")).select("p.*")
+        .filter(F.col("doc_a") < F.col("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
     pairs = (
         cands.withColumn("cos", cosine(F.col("va"), F.col("vb")))
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= NEARDUP_THRESHOLD)
         .select("doc_a", "doc_b", "cos")
     )
     return pairs if obs is None else (pairs, obs)

@@ -63,16 +63,16 @@ def lang_guess(text: Column) -> Column:
     return F.when(gmax > 0, expr)
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / punctuation / stopword / repetition features + a composite
-    quality score in [0, 1].
+def quality_features(df: DataFrame) -> DataFrame:
+    """Length / punctuation / stopword / repetition features of the
+    ``text`` column + a composite quality score in [0, 1].
 
     Staged through explicit intermediate columns: codegen subexpression
     elimination does NOT reach inside higher-order-function lambdas, so a
     flat expression tree re-splits the text once per feature (measured
     2-4x the whole feature set). Multi-referenced non-cheap aliases
     survive CollapseProject, so each stage evaluates once per row."""
-    text = F.col(text_col)
+    text = F.col("text")
     staged = df.withColumn("_toks", tokens(text))
     # r7: lowercase the token array ONCE as its own stage (it was inlined
     # into each of the four language-score filters, so the transform ran
@@ -124,52 +124,49 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
             "_n_chars", "_n_sub", *score_cols)
 
 
-def fingerprint(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """Order-sensitive 64-bit document fingerprint: xxhash64 rolling fold
-    over (position, token-hash) — the production variant of the
-    vocabulary-ranked oracle query (x2_fingerprint)."""
+def fingerprint(df: DataFrame) -> DataFrame:
+    """Order-sensitive 64-bit fingerprint of each (doc_id, text) row:
+    xxhash64 rolling fold over (position, token-hash) — the production
+    variant of the vocabulary-ranked oracle query (x2_fingerprint)."""
     toks = df.select(
-        id_col, F.posexplode(F.split(F.col(text_col), r"\s+")).alias("pos", "t")
+        "doc_id",
+        F.posexplode(F.split(F.col("text"), r"\s+")).alias("pos", "t"),
     ).filter(F.col("t") != "")
     h = toks.withColumn("th", F.xxhash64("t", "pos"))
-    return h.groupBy(id_col).agg(
+    return h.groupBy("doc_id").agg(
         F.bit_xor("th").alias("fp_xor"),
         F.sum(F.pmod("th", F.lit(2147483647))).alias("fp_sum"),
         F.count("*").alias("n_tokens"),
     )
 
 
-def rolling_fingerprint_from_ids(wid_df: DataFrame, id_col: str = "doc_id",
-                                 window: int = 4, n_keep: int = 8,
-                                 base: int = 31,
-                                 prime: int = 2147483647) -> DataFrame:
-    """Winnowing-style document fingerprint over an (id_col, pos, wid)
+def rolling_fingerprint_from_ids(wid_df: DataFrame) -> DataFrame:
+    """Winnowing-style document fingerprint over a (doc_id, pos, wid)
     frame of word ids, via polynomial rolling hashes.
 
-    Each ``window``-gram of word ids gets the Rabin-Karp polynomial hash
-    ``sum(wid[i+j] * base^(window-1-j)) mod prime`` (computed with lead()
+    Each 4-gram of word ids gets the Rabin-Karp polynomial hash
+    ``sum(wid[i+j] * 31^(3-j)) mod (2^31 - 1)`` (computed with lead()
     columns — vectorized and native; "rolling" reuse is an implementation
     detail of sequential scanners, not a semantic), and the document's
-    fingerprint is its ``n_keep`` smallest window hashes — a stable sketch:
+    fingerprint is its 8 smallest window hashes — a stable sketch:
     editing one region disturbs only nearby windows, so near-identical
     documents share most of their min-hashes. The x7_rolling_fingerprint
     query runs it over deterministic vocabulary ids DuckDB reproduces."""
     from pyspark.sql import Window as W
 
-    w = W.partitionBy(id_col).orderBy("pos")
+    w = W.partitionBy("doc_id").orderBy("pos")
     terms = []
-    for j in range(window):
+    for j in range(4):
         c = F.col("wid") if j == 0 else F.lead("wid", j).over(w)
-        terms.append(c.cast("long") * (base ** (window - 1 - j)))
-    hash_expr = F.pmod(sum(terms[1:], terms[0]), F.lit(prime))
+        terms.append(c.cast("long") * (31 ** (3 - j)))
+    hash_expr = F.pmod(sum(terms[1:], terms[0]), F.lit(2147483647))
     hashes = (
         wid_df.withColumn("whash", hash_expr)
         .filter(F.col("whash").isNotNull())  # tail positions lack a full gram
     )
     return (
-        hashes.groupBy(id_col)
-        .agg(F.slice(F.array_sort(F.collect_set("whash")), 1, n_keep)
+        hashes.groupBy("doc_id")
+        .agg(F.slice(F.array_sort(F.collect_set("whash")), 1, 8)
              .alias("fingerprint"),
              F.count("*").alias("n_windows"))
     )

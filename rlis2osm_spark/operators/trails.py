@@ -58,12 +58,12 @@ def keep_trail(df: DataFrame) -> DataFrame:
     return df.filter(~F.coalesce(drop, F.lit(False)))
 
 
-def est_width_expr(width: Column, resolution: float = 0.25) -> Column:
+def est_width_expr(width: Column) -> Column:
     """T15 width parser (translate.py:385-409) as native columns.
 
     '6-9' -> mean; '15+' -> x1.25; 'Unknown'/null/'' -> null; a plain number
     -> null (no branch sets temp_width — faithful quirk). Feet -> meters,
-    rounded to `resolution` half-away-from-zero (Py2 round), formatted with
+    rounded to 0.25 half-away-from-zero (Py2 round), formatted with
     trailing-zero strip ('g').
     """
     mean_w = (
@@ -79,7 +79,7 @@ def est_width_expr(width: Column, resolution: float = 0.25) -> Column:
     )
     # `if temp_width:` is also false for an (impossible for rlis) 0.0
     meters = F.when(temp.isNotNull() & (temp != 0.0), temp * 0.3048)
-    rounded = F.floor(meters / resolution + 0.5) * resolution
+    rounded = F.floor(meters / 0.25 + 0.5) * 0.25
     s = rounded.cast("string")
     return F.regexp_replace(s, r"\.0$", "")
 

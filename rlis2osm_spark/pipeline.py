@@ -20,14 +20,13 @@ from rlis2osm_spark.operators.dissolve import dissolve_ways
 from rlis2osm_spark.operators.osm_sink import merge_fragments, write_osm_xml
 from rlis2osm_spark.plans.checkpoint import Checkpointer, source_token
 from rlis2osm_spark.sources.documents import attach_geometry, span_signature
-from rlis2osm_spark.spatial.tiles import TileGrid, parent_cell, with_tile
+from rlis2osm_spark.spatial.tiles import parent_cell, with_tile
 
 
 def tile_assignment(
     docs: DataFrame,
     media: DataFrame,
     res: int = 12,
-    grid: TileGrid = TileGrid(),
 ) -> DataFrame:
     """Assign every interleaved document its Morton tile at ``res``.
 
@@ -35,18 +34,19 @@ def tile_assignment(
     the invariant is checkable downstream without re-reading the input.
     """
     with_geom = attach_geometry(docs, media)
-    tiled = with_tile(with_geom, res, grid=grid)
+    tiled = with_tile(with_geom, res)
     return tiled.withColumn("span_sig", span_signature(F.col("spans"))).select(
         "doc_id", "media_ref", "x", "y", "ix", "iy", "cell", "spans", "span_sig"
     )
 
 
-def tile_rollup(tiled: DataFrame, levels: int = 2) -> DataFrame:
-    """Hierarchical tile stats: doc counts per cell and per ancestor cell
-    (partial aggregation is map-side; cells are the shuffle key)."""
+def tile_rollup(tiled: DataFrame) -> DataFrame:
+    """Hierarchical tile stats: doc counts per cell and its ancestor two
+    levels up (partial aggregation is map-side; cells are the shuffle
+    key)."""
     per_cell = tiled.groupBy("cell").agg(F.count("*").alias("n_docs"))
     return per_cell.withColumn(
-        "parent_cell", parent_cell(F.col("cell"), levels)
+        "parent_cell", parent_cell(F.col("cell"), 2)
     )
 
 

@@ -66,7 +66,7 @@ class Checkpointer:
         return shim.get_manifest(self._location(name))
 
     def _fingerprint_inputs(self, inputs: list[str] | None,
-                            code_token: str | None = None) -> str:
+                            code_token: str | None) -> str:
         """Digest of everything a stage consumed: upstream stage manifests
         (by their own digest + row count) or external paths (via the shim's
         content fingerprint — an Iceberg snapshot_id on a real cluster),
@@ -87,21 +87,16 @@ class Checkpointer:
             json.dumps(parts, sort_keys=True).encode(), digest_size=8
         ).hexdigest()
 
-    def has_valid(self, name: str, input_fingerprint: str | None = None) -> bool:
+    def has_valid(self, name: str, input_fingerprint: str) -> bool:
         meta = self._read_manifest(name)
-        if meta is None or meta.get("status") != "committed":
-            return False
-        if input_fingerprint is not None and (
-                meta.get("input_fingerprint") != input_fingerprint):
-            return False
-        return True
+        return (meta is not None and meta.get("status") == "committed"
+                and meta.get("input_fingerprint") == input_fingerprint)
 
     def stage(
         self,
         name: str,
         build,
         inputs: list[str] | None = None,
-        partition_by: list[str] | None = None,
         code_token: str | None = None,
     ) -> DataFrame:
         """Materialize ``build()`` as snapshot ``name`` (or read the existing
@@ -119,7 +114,7 @@ class Checkpointer:
             return shim.read_table(self.spark, location)
 
         t0 = time.time()
-        shim.write_table(build(), location, partition_by=partition_by)
+        shim.write_table(build(), location)
 
         # WRITE-layout skew metrics straight from table metadata
         partition_rows = shim.partition_row_counts(location)

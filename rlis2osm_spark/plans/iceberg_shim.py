@@ -12,7 +12,7 @@ else:
 local stand-in              Iceberg call on a real cluster
 ==========================  ==================================================
 ``write_table``             ``df.writeTo(ident).using("iceberg")``
-                            ``  .createOrReplace()`` (or ``.overwritePartitions()``)
+                            ``  .createOrReplace()``
 ``read_table``              ``spark.table(ident)`` /
                             ``spark.read.option("snapshot-id", id).table(ident)``
 ``put_manifest``            snapshot summary properties set at commit
@@ -42,18 +42,14 @@ from pyspark.sql import DataFrame, SparkSession
 MANIFEST_NAME = "_manifest.json"
 
 
-def write_table(df: DataFrame, location: str,
-                partition_by: list[str] | None = None) -> None:
+def write_table(df: DataFrame, location: str) -> None:
     """Materialize ``df`` as the table at ``location`` (full replace).
 
     Iceberg: ``df.writeTo(ident).using("iceberg").createOrReplace()`` —
     the replace is an atomic snapshot commit there; locally it is a
     directory overwrite, which is why callers gate reads on the manifest
     (`get_manifest` returning a committed entry), not on file existence."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(location)
+    df.write.mode("overwrite").parquet(location)
 
 
 def read_table(spark: SparkSession, location: str) -> DataFrame:
@@ -120,8 +116,7 @@ def partition_row_counts(location: str) -> dict[str, int]:
 
     Iceberg: ``SELECT file_path, record_count FROM ident.files`` reads the
     same numbers from manifest metadata."""
-    part_files = sorted(
-        glob.glob(os.path.join(location, "**", "*.parquet"), recursive=True))
+    part_files = sorted(glob.glob(os.path.join(location, "*.parquet")))
     return dict(zip((os.path.relpath(p, location) for p in part_files),
                     file_row_counts(part_files)))
 

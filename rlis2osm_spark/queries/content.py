@@ -266,10 +266,7 @@ def d6_simhash_hamming_k(spark, sf_dir):
     hamming <= n_bands-1)."""
     from rlis2osm_spark.operators.dedup import simhash_hamming_pairs
 
-    sig = _d4_rank16(spark, sf_dir)
-    return simhash_hamming_pairs(
-        None, id_col="doc_id", bits=16, n_bands=4, max_hamming=2,
-        sig_df=sig)
+    return simhash_hamming_pairs(_d4_rank16(spark, sf_dir))
 
 
 _D6_SQL = f"""
@@ -512,7 +509,7 @@ def x7_rolling_fingerprint(spark, sf_dir):
 
     wid = _word_ids(_words(spark, sf_dir, limit=200)).select(
         "doc_id", "pos", F.col("wid").cast("long").alias("wid"))
-    out = rolling_fingerprint_from_ids(wid, window=4, n_keep=8)
+    out = rolling_fingerprint_from_ids(wid)
     return out.select(
         "doc_id",
         F.array_join(F.transform("fingerprint",

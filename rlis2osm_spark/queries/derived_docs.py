@@ -74,13 +74,13 @@ def derived_texts(spark, sf_dir: str) -> DataFrame:
 # pure-Python oracle engines (independent of Spark: CPython ints + xxh64.py)
 # ---------------------------------------------------------------------------
 
-def _shingles_py(text: str, n: int = 3) -> set[str]:
+def _shingles_py(text: str) -> set[str]:
+    """Distinct word 3-grams of ``text``."""
     toks = [t for t in text.split() if t]
-    return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+    return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
 
 
-def minhash_pairs_py(n_hashes: int, n_bands: int,
-                     shingle_n: int = 3) -> list[tuple[int, int]]:
+def minhash_pairs_py(n_hashes: int, n_bands: int) -> list[tuple[int, int]]:
     """Expected output of operators/dedup.minhash_lsh_pairs over the
     derived corpus: same math, pure-Python xxh64."""
     from rlis2osm_spark.functions.xxh64 import xxh64_str
@@ -88,7 +88,7 @@ def minhash_pairs_py(n_hashes: int, n_bands: int,
     rows_per_band = n_hashes // n_bands
     sigs: dict[int, list[int]] = {}
     for d in range(N_DOCS):
-        sids = [xxh64_str(s) % P31 for s in _shingles_py(text_py(d), shingle_n)]
+        sids = [xxh64_str(s) % P31 for s in _shingles_py(text_py(d))]
         sigs[d] = [
             min(((2 * i + 1) * sid + i * 40503 + 17) % P31 for sid in sids)
             for i in range(n_hashes)
@@ -107,7 +107,7 @@ def minhash_pairs_py(n_hashes: int, n_bands: int,
     return sorted(pairs)
 
 
-def simhash_py(bits: int = 64) -> list[tuple[int, int]]:
+def simhash_py() -> list[tuple[int, int]]:
     """Expected (doc_id, signed simhash) of operators/dedup.simhash_signatures
     over the derived corpus."""
     from rlis2osm_spark.functions.xxh64 import xxh64
@@ -118,7 +118,7 @@ def simhash_py(bits: int = 64) -> list[tuple[int, int]]:
         n = len(toks)
         hashes = [xxh64(t.encode()) for t in toks]  # unsigned view
         sig = 0
-        for k in range(bits):
+        for k in range(64):
             c = sum((h >> k) & 1 for h in hashes)
             if 2 * c > n:
                 sig |= 1 << k
@@ -128,10 +128,10 @@ def simhash_py(bits: int = 64) -> list[tuple[int, int]]:
     return out
 
 
-def sql_pair_values(pairs, cols=("doc_a", "doc_b")) -> str:
-    """[(a, b), ...] -> DuckDB VALUES relation string."""
+def sql_pair_values(pairs) -> str:
+    """[(a, b), ...] -> DuckDB VALUES relation string of (doc_a, doc_b)."""
     if not pairs:
-        return (f"(SELECT CAST(NULL AS BIGINT) AS {cols[0]}, "
-                f"CAST(NULL AS BIGINT) AS {cols[1]} WHERE FALSE)")
+        return ("(SELECT CAST(NULL AS BIGINT) AS doc_a, "
+                "CAST(NULL AS BIGINT) AS doc_b WHERE FALSE)")
     rows = ", ".join(f"({a}, {b})" for a, b in pairs)
-    return f"(SELECT * FROM (VALUES {rows}) AS _v({cols[0]}, {cols[1]}))"
+    return f"(SELECT * FROM (VALUES {rows}) AS _v(doc_a, doc_b))"

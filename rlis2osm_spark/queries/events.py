@@ -91,8 +91,7 @@ def w4_asof_enrichment(spark, sf_dir):
         "event_id", "user_id", "ts")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "value")
-    out = asof_join(errors, purchases, on="user_id",
-                    value_cols=["value"])
+    out = asof_join(errors, purchases, on="user_id")
     return out.select(
         "event_id", "user_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),

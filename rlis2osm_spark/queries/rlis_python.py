@@ -63,13 +63,11 @@ def s2_tile_assignment_wkb(spark, sf_dir):
     row, so the shared oracle pins WKB-path == arithmetic-path parity
     inside one result)."""
     ensure_package_on_workers(spark)
-    from rlis2osm_spark.spatial.tiles import (
-        grid_coords, morton_cell, point_wkb, with_tile)
+    from rlis2osm_spark.spatial.tiles import point_wkb, with_cell, with_tile
 
-    pts = spatial_sql._doc_points(spark, sf_dir)
-    ixn, iyn = grid_coords(F.col("x"), F.col("y"),
-                           spatial_sql.RES, spatial_sql.GRID)
-    geo = pts.select("doc_id", morton_cell(ixn, iyn).alias("cell_native"),
+    pts = with_cell(spatial_sql._doc_points(spark, sf_dir),
+                    spatial_sql.RES, spatial_sql.GRID)
+    geo = pts.select("doc_id", F.col("cell").alias("cell_native"),
                      point_wkb("x", "y").alias("geometry"))
     tiled = with_tile(geo, spatial_sql.RES, grid=spatial_sql.GRID)
     return tiled.select(
@@ -252,11 +250,10 @@ def _basename_sql() -> str:
     '-'-split parts expanded independently, separator RUNS (len > 1) count
     as words for position numbering, first/last dicts only when a part has
     more than two words."""
-    from rlis2osm_spark.functions.expand import (
-        RLIS_SPECIAL_CASES, build_positional_dicts)
+    from rlis2osm_spark.functions.expand import build_positional_dicts
     from rlis2osm_spark.queries.util import case_map
 
-    d = build_positional_dicts(RLIS_SPECIAL_CASES)
+    d = build_positional_dicts()
     first = case_map(d["first"], "UPPER(tok)", else_sql="tok")
     middle = case_map(d["middle"], "UPPER(tok)", else_sql="tok")
     last = case_map(d["last"], "UPPER(tok)", else_sql="tok")

@@ -3,7 +3,7 @@
 Coordinates are derived from integer keys with pure int arithmetic (exactly
 representable as doubles), so cells, distances, and ranks are
 bit-deterministic in both engines. The Spark side uses the *real* engine
-primitives (morton_cell / knn_join / within_distance_join /
+primitives (with_cell / knn_join / within_distance_join /
 point_in_polygon); the SQL side re-derives them independently
 (shift-mask interleave, BETWEEN candidate bands, range CASE containment).
 """
@@ -18,11 +18,7 @@ from rlis2osm_spark.spatial.joins import (
     point_in_polygon,
     within_distance_join,
 )
-from rlis2osm_spark.spatial.tiles import (
-    TileGrid,
-    grid_coords,
-    morton_cell,
-)
+from rlis2osm_spark.spatial.tiles import TileGrid, with_cell
 
 GRID = TileGrid(0.0, 0.0, 400_000.0)
 RES = 8  # 256x256 cells
@@ -69,14 +65,9 @@ def _sql_grid(c: str, res: int) -> str:
 
 def s2_tile_assignment(spark, sf_dir):
     """Flagship: point -> Morton tile at RES, plus one parent level."""
-    pts = _doc_points(spark, sf_dir)
-    ix, iy = grid_coords(F.col("x"), F.col("y"), RES, GRID)
-    cell = morton_cell(ix, iy)
-    return pts.select(
-        "doc_id",
-        ix.alias("ix"), iy.alias("iy"),
-        cell.alias("cell"),
-        F.shiftright(cell, 2).alias("parent_cell"),
+    return with_cell(_doc_points(spark, sf_dir), RES, GRID).select(
+        "doc_id", "ix", "iy", "cell",
+        F.shiftright("cell", 2).alias("parent_cell"),
     )
 
 
@@ -260,7 +251,8 @@ def s7_polygon_join(spark, sf_dir):
         ).alias("ring"),
     )
     out = polygon_cell_join(
-        pts.filter(F.col("doc_id") < 2000), polys, res=5, grid=GRID)
+        pts.filter(F.col("doc_id") < 2000), polys, res=5, grid=GRID,
+        point_uid="doc_id")
     return out.select("doc_id", "polygon_id")
 
 

@@ -79,13 +79,13 @@ def case_map(mapping: dict, col_sql: str, else_sql: str = "NULL") -> str:
     return f"CASE {whens} ELSE {else_sql} END"
 
 
-def case_int_map(mapping: dict, col_sql: str, else_sql: str = "NULL") -> str:
+def case_int_map(mapping: dict, col_sql: str) -> str:
     whens = " ".join(
         f"WHEN {col_sql} = {k} THEN "
         + ("NULL" if v is None else f"'{v}'")
         for k, v in mapping.items()
     )
-    return f"CASE {whens} ELSE {else_sql} END"
+    return f"CASE {whens} ELSE NULL END"
 
 
 def spark_int_map(mapping: dict) -> Column:
@@ -98,8 +98,7 @@ def spark_int_map(mapping: dict) -> Column:
 
 def cached_stage(spark: SparkSession, sf_dir: str, name: str, build,
                  inputs: list[str],
-                 code_modules: list[str] | None = None,
-                 partition_by: list[str] | None = None) -> DataFrame:
+                 code_modules: list[str] | None = None) -> DataFrame:
     """Checkpointed-and-memoized derived input (the production shape: a
     pipeline stage materializes once per corpus snapshot and downstream
     operators consume the snapshot, not the recomputed lineage — exactly
@@ -122,8 +121,7 @@ def cached_stage(spark: SparkSession, sf_dir: str, name: str, build,
             ".synth", "query_stage")
         ck = Checkpointer(spark, root, run_id=tag)
         token = source_token(*(code_modules or [build.__module__]))
-        df = ck.stage(name, build, inputs=inputs, code_token=token,
-                      partition_by=partition_by)
+        df = ck.stage(name, build, inputs=inputs, code_token=token)
         return df.localCheckpoint(eager=True)
 
     return session_memo(spark, ("stage", sf_dir, name), inputs, materialize)

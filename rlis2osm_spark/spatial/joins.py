@@ -27,6 +27,9 @@ from rlis2osm_spark.spatial.tiles import (
     grid_coords,
 )
 
+# covering cells one polygon may explode into before polygon_cell_join fails
+MAX_CELLS_PER_POLYGON = 100_000
+
 
 # ---------------------------------------------------------------------------
 # point-in-polygon
@@ -48,11 +51,10 @@ def _ray_cast(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
 def point_in_polygon(
     points: DataFrame,
     polygons: list[tuple[str, list[tuple[float, float]]]],
-    x_col: str = "x",
-    y_col: str = "y",
     out_col: str = "polygon_id",
 ) -> DataFrame:
-    """Tag each point with the first containing polygon's id (null if none).
+    """Tag each (x, y) point with the first containing polygon's id (null
+    if none).
 
     ``polygons`` is a small driver-side set (e.g. metro boundary districts) —
     it ships in the UDF closure (auto-broadcast). A native bbox prefilter
@@ -84,14 +86,9 @@ def point_in_polygon(
     xs_max = max(r[:, 0].max() for _, r in rings)
     ys_min = min(r[:, 1].min() for _, r in rings)
     ys_max = max(r[:, 1].max() for _, r in rings)
-    in_bbox = (
-        (F.col(x_col) >= xs_min) & (F.col(x_col) <= xs_max)
-        & (F.col(y_col) >= ys_min) & (F.col(y_col) <= ys_max)
-    )
-    return points.withColumn(
-        out_col,
-        F.when(in_bbox, pip_udf(F.col(x_col), F.col(y_col))),
-    )
+    x, y = F.col("x"), F.col("y")
+    in_bbox = (x >= xs_min) & (x <= xs_max) & (y >= ys_min) & (y <= ys_max)
+    return points.withColumn(out_col, F.when(in_bbox, pip_udf(x, y)))
 
 
 # ---------------------------------------------------------------------------
@@ -196,19 +193,16 @@ def knn_join(
 def polygon_cell_join(
     points: DataFrame,
     polygons: DataFrame,
-    res: int = 8,
-    grid: TileGrid = TileGrid(),
-    x_col: str = "x",
-    y_col: str = "y",
-    poly_id: str = "polygon_id",
-    ring_col: str = "ring",
-    max_cells_per_polygon: int = 100_000,
-    point_uid: str | None = None,
+    res: int,
+    grid: TileGrid,
+    point_uid: str,
 ) -> DataFrame:
     """Distributed point-in-polygon JOIN — the scale path when the polygon
     layer is itself a big DataFrame (``point_in_polygon`` takes a small
     driver-side list and broadcasts it in the UDF closure).
 
+    points: (x, y, ...) with ``point_uid`` a unique key column — the final
+    regroup is on it, so duplicate points with distinct keys stay distinct.
     polygons: (polygon_id, ring array<struct<x double, y double>>).
     Plan: native per-polygon bbox -> explode the covering cell rectangle at
     ``res`` -> cell equi-join against tiled points (the only shuffle) ->
@@ -220,14 +214,12 @@ def polygon_cell_join(
     from pyspark.sql.types import BooleanType
 
     size = grid.cell_size(res)
-    xs = F.transform(F.col(ring_col), lambda p: p["x"])
-    ys = F.transform(F.col(ring_col), lambda p: p["y"])
-    fmin = lambda arr: F.array_min(arr)  # noqa: E731
-    fmax = lambda arr: F.array_max(arr)  # noqa: E731
-    ix0 = F.floor((fmin(xs) - grid.x0) / size).cast("int")
-    ix1 = F.floor((fmax(xs) - grid.x0) / size).cast("int")
-    iy0 = F.floor((fmin(ys) - grid.y0) / size).cast("int")
-    iy1 = F.floor((fmax(ys) - grid.y0) / size).cast("int")
+    xs = F.transform(F.col("ring"), lambda p: p["x"])
+    ys = F.transform(F.col("ring"), lambda p: p["y"])
+    ix0 = F.floor((F.array_min(xs) - grid.x0) / size).cast("int")
+    ix1 = F.floor((F.array_max(xs) - grid.x0) / size).cast("int")
+    iy0 = F.floor((F.array_min(ys) - grid.y0) / size).cast("int")
+    iy1 = F.floor((F.array_max(ys) - grid.y0) / size).cast("int")
     # loud guard: a continent-sized polygon at fine res would explode into
     # millions of covering cells (the silent-blowup failure mode at 100 TB);
     # fail with the offending id instead — the fix is a coarser res for the
@@ -236,83 +228,30 @@ def polygon_cell_join(
     # caveat as the strict TYPE->highway lookup).
     n_cells = (ix1 - ix0 + 1).cast("long") * (iy1 - iy0 + 1).cast("long")
     ix0 = F.when(
-        n_cells > max_cells_per_polygon,
+        n_cells > MAX_CELLS_PER_POLYGON,
         F.raise_error(F.concat(
-            F.lit(f"polygon exceeds max_cells_per_polygon="
-                  f"{max_cells_per_polygon} at res={res}: "),
-            F.col(poly_id))).cast("int"),
+            F.lit(f"polygon exceeds MAX_CELLS_PER_POLYGON="
+                  f"{MAX_CELLS_PER_POLYGON} at res={res}: "),
+            F.col("polygon_id"))).cast("int"),
     ).otherwise(ix0)
     cells = (
-        polygons.select(poly_id, ring_col,
+        polygons.select("polygon_id", "ring",
                         F.explode(F.sequence(ix0, ix1)).alias("cx"),
                         iy0.alias("_iy0"), iy1.alias("_iy1"))
-        .select(poly_id, ring_col, "cx",
+        .select("polygon_id", "ring", "cx",
                 F.explode(F.sequence("_iy0", "_iy1")).alias("cy"))
     )
 
     pt_cols = list(points.columns)
-    reserved = {poly_id, ring_col, "cx", "cy", "_in", "_pt_uid"}
-    clash = reserved & set(pt_cols)
+    if point_uid not in pt_cols:
+        raise ValueError(f"point_uid column {point_uid!r} not in points")
+    clash = {"polygon_id", "ring", "cx", "cy", "_in"} & set(pt_cols)
     if clash:
         raise ValueError(
             f"points columns {sorted(clash)} collide with reserved names; "
             "rename them before polygon_cell_join")
-
-    pix, piy = grid_coords(F.col(x_col), F.col(y_col), res, grid)
-    # per-row uid: the final regroup must preserve duplicate input rows
-    # (ADVICE r2 — grouping by the raw point columns collapsed them).
-    # Prefer a caller-supplied unique key (point_uid) — zero extra cost.
-    # The surrogate fallback (ADVICE r3) is now DETERMINISTIC: a duplicate
-    # ordinal from a row-value-partitioned window, so the uid set is a pure
-    # function of the input values — stable under task retry / lineage
-    # recomputation, unlike the old monotonically_increasing_id (whose
-    # values could shift if the points lineage recomputed mid-job,
-    # duplicating or collapsing rows in the regroup). Identical rows are
-    # interchangeable, so which duplicate takes which ordinal is
-    # immaterial. Costs one extra exchange on the points side; pass
-    # point_uid to skip it. Unorderable column types (map) cannot key a
-    # window — require point_uid there, loudly.
-    if point_uid is not None:
-        if point_uid not in pt_cols:
-            raise ValueError(f"point_uid column {point_uid!r} not in points")
-        pts = points.withColumn("_pt_uid", F.struct(F.col(point_uid))) \
-            .withColumns({"cx": pix, "cy": piy})
-    else:
-        from pyspark.sql.types import ArrayType, MapType, StructType
-
-        def _contains_map(dt) -> bool:
-            if isinstance(dt, MapType):
-                return True
-            if isinstance(dt, StructType):
-                return any(_contains_map(f.dataType) for f in dt.fields)
-            if isinstance(dt, ArrayType):
-                return _contains_map(dt.elementType)
-            return False
-
-        # recurse: a map nested inside a struct/array is just as unhashable
-        # as a top-level one, and would otherwise surface as an opaque
-        # analysis error inside the window/hash below (ADVICE r4)
-        bad = [f.name for f in points.schema.fields
-               if _contains_map(f.dataType)]
-        if bad:
-            raise ValueError(
-                f"points columns {bad} contain map types (unorderable/"
-                "unhashable) — the deterministic surrogate uid cannot "
-                "window over them; pass point_uid=<unique key column> "
-                "instead")
-        # the window keys on a 64-bit row hash, NOT the full row payload:
-        # identical rows share a hash (so duplicates still get distinct
-        # ordinals) and the extra exchange ships 8 bytes per row instead of
-        # every column (ADVICE r4). A hash collision between two DIFFERENT
-        # rows (~2^-64/pair) would only interleave their ordinal numbering;
-        # uids stay unique per row, so the regroup still preserves both.
-        row_h = F.xxhash64(*[F.col(c) for c in pt_cols])
-        dup_w = Window.partitionBy(row_h).orderBy(F.lit(1))
-        pts = points.withColumn(
-            "_pt_uid",
-            F.struct(row_h.alias("_row_h"),
-                     F.row_number().over(dup_w).alias("_dup_idx"))) \
-            .withColumns({"cx": pix, "cy": piy})
+    pix, piy = grid_coords(F.col("x"), F.col("y"), res, grid)
+    pts = points.withColumns({"cx": pix, "cy": piy})
 
     @F.pandas_udf(BooleanType())
     def inside(xs_s: pd.Series, ys_s: pd.Series, rings: pd.Series) -> pd.Series:
@@ -329,12 +268,13 @@ def polygon_cell_join(
 
     cands = pts.join(cells, ["cx", "cy"], "left")
     hits = cands.withColumn(
-        "_in", inside(F.col(x_col), F.col(y_col), F.col(ring_col)))
+        "_in", inside(F.col("x"), F.col("y"), F.col("ring")))
     return (
-        hits.groupBy("_pt_uid")
-        .agg(*[F.first(c).alias(c) for c in pt_cols],
-             F.min(F.when(F.col("_in"), F.col(poly_id))).alias(poly_id))
-        .drop("_pt_uid")
+        hits.groupBy(point_uid)
+        .agg(*[F.first(c).alias(c) for c in pt_cols if c != point_uid],
+             F.min(F.when(F.col("_in"), F.col("polygon_id")))
+             .alias("polygon_id"))
+        .select(*pt_cols, "polygon_id")
     )
 
 
@@ -391,16 +331,14 @@ def _segment_cells(df: DataFrame, res: int, grid: TileGrid,
 def segment_intersection_join(
     left: DataFrame,
     right: DataFrame,
-    res: int = 8,
-    grid: TileGrid = TileGrid(),
-    left_id: str = "lid",
-    right_id: str = "rid",
+    res: int,
+    grid: TileGrid,
 ) -> DataFrame:
     """Line-segment intersection join (e.g. street x street crossing
     detection): bbox-cell candidates -> one equi-join on (cx, cy) ->
     native exact predicate -> pair dedup on a single left-keyed exchange.
 
-    left: (left_id, lx1, ly1, lx2, ly2); right: (right_id, rx1..ry2).
+    left: (lid, lx1, ly1, lx2, ly2); right: (rid, rx1..ry2).
     Choose ``res`` near the typical segment length so a segment covers
     O(1..4) cells."""
     lc = _segment_cells(left, res, grid, "l")
@@ -410,9 +348,9 @@ def segment_intersection_join(
         F.col("lx1"), F.col("ly1"), F.col("lx2"), F.col("ly2"),
         F.col("rx1"), F.col("ry1"), F.col("rx2"), F.col("ry2")))
     return (
-        hit.select(left_id, right_id)
-        .repartition(F.col(left_id))  # one exchange serves the dedup
-        .dropDuplicates([left_id, right_id])
+        hit.select("lid", "rid")
+        .repartition(F.col("lid"))  # one exchange serves the dedup
+        .dropDuplicates(["lid", "rid"])
     )
 
 

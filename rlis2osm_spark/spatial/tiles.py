@@ -127,22 +127,24 @@ def point_wkb(xs: pa.Array, ys: pa.Array) -> pa.Array:
                                    ys.to_numpy(zero_copy_only=False))
 
 
-def with_tile(
-    df: DataFrame,
-    res: int,
-    geom_col: str = "geometry",
-    grid: TileGrid = TileGrid(),
-) -> DataFrame:
-    """Assign each row its tile: geometry -> (x, y) via one Arrow UDF
-    pass, then native quantize + Morton interleave. ``ix``/``iy`` are
-    columns before ``cell`` reads them: the interleave reads its input 16
-    times, so built on the quantize expressions the plan would repeat each
-    clamp term 16 times."""
-    df = df.withColumn("_xy", geom_midpoint(F.col(geom_col)))
-    df = df.withColumn("x", F.col("_xy.x")).withColumn("y", F.col("_xy.y")).drop("_xy")
+def with_cell(df: DataFrame, res: int, grid: TileGrid) -> DataFrame:
+    """Add the tile of each row's ``x``/``y``: quantized ``ix``/``iy``
+    columns, then their Morton ``cell``. ``ix``/``iy`` are columns before
+    ``cell`` reads them: the interleave reads its input 16 times, so built
+    on the quantize expressions the plan would repeat each clamp term 16
+    times."""
     ix, iy = grid_coords(F.col("x"), F.col("y"), res, grid)
     return df.withColumns({"ix": ix, "iy": iy}).withColumn(
         "cell", morton_cell(F.col("ix"), F.col("iy")))
+
+
+def with_tile(df: DataFrame, res: int,
+              grid: TileGrid = TileGrid()) -> DataFrame:
+    """Assign each row its tile: ``geometry`` -> (x, y) via one Arrow UDF
+    pass, then native quantize + Morton interleave (``with_cell``)."""
+    df = df.withColumn("_xy", geom_midpoint(F.col("geometry")))
+    df = df.withColumn("x", F.col("_xy.x")).withColumn("y", F.col("_xy.y")).drop("_xy")
+    return with_cell(df, res, grid)
 
 
 def explode_ring_coords(df: DataFrame, ix: Column, iy: Column) -> DataFrame:

@@ -11,7 +11,7 @@ def test_asof_basic(spark):
         [(1, 8, 100.0), (1, 15, 200.0), (2, 15, 300.0), (3, 1, 999.0)],
         "k int, ts int, v double")
     out = {r.lid: r.v_asof for r in
-           asof_join(left, right, on="k", value_cols=["v"]).collect()}
+           asof_join(left, right, on="k").collect()}
     assert out == {
         "a": 100.0,   # latest right at ts<=10 is ts=8
         "b": 200.0,   # ts<=20 -> ts=15
@@ -23,5 +23,5 @@ def test_asof_basic(spark):
 def test_asof_does_not_cross_keys(spark):
     left = spark.createDataFrame([(1, 10, "a")], "k int, ts int, lid string")
     right = spark.createDataFrame([(2, 5, 7.0)], "k int, ts int, v double")
-    out = asof_join(left, right, on="k", value_cols=["v"]).collect()
+    out = asof_join(left, right, on="k").collect()
     assert out[0].v_asof is None

@@ -85,7 +85,7 @@ def test_multimodal_plumbing(spark):
     media = spark.createDataFrame(
         rows, "media_ref string, payload binary, media_kind string")
     feats = {r.media_ref: r for r in
-             multimodal.extract_image_features(media, feat_dim=8).collect()}
+             multimodal.extract_image_features(media).collect()}
     assert feats["m1"].format_guess == "png"
     assert feats["m2"].format_guess == "jpeg"
     assert len(feats["m1"].feature) == 8
@@ -95,7 +95,8 @@ def test_multimodal_plumbing(spark):
 
 def test_video_frames_from_animated_gif(spark):
     """r5: extract_video_frames treats animated GIFs as a video source —
-    composited full-canvas frames with exact gray sums."""
+    composited full-canvas frames (every second one) with exact gray
+    sums."""
     import numpy as np
 
     from rlis2osm_spark.functions.codecs import encode_gif_anim
@@ -103,21 +104,25 @@ def test_video_frames_from_animated_gif(spark):
     rng = np.random.default_rng(9)
     base = rng.integers(0, 256, 6 * 4, dtype=np.uint8)
     patch = rng.integers(0, 256, 4, dtype=np.uint8)
+    strip = rng.integers(0, 256, 2, dtype=np.uint8)
     blob = encode_gif_anim(6, 4, [
         dict(left=0, top=0, width=6, height=4, pixels=base.tobytes(),
              disposal=1),
         dict(left=2, top=1, width=2, height=2, pixels=patch.tobytes(),
              disposal=1),
+        dict(left=0, top=3, width=2, height=1, pixels=strip.tobytes(),
+             disposal=1),
     ])
     media = spark.createDataFrame([("g", blob)],
                                   "media_ref string, payload binary")
-    rows = sorted(multimodal.extract_video_frames(
-        media, every_n=1).collect(), key=lambda r: r.frame_idx)
-    assert [r.frame_idx for r in rows] == [0, 1]
-    assert all((r.width, r.height, r.n_frames) == (6, 4, 2) for r in rows)
+    rows = sorted(multimodal.extract_video_frames(media).collect(),
+                  key=lambda r: r.frame_idx)
+    assert [r.frame_idx for r in rows] == [0, 2]
+    assert all((r.width, r.height, r.n_frames) == (6, 4, 3) for r in rows)
     canvas = base.reshape(4, 6).copy()
     assert rows[0].px_sum == int(canvas.sum(dtype=np.int64))
     canvas[1:3, 2:4] = patch.reshape(2, 2)
+    canvas[3, 0:2] = strip
     assert rows[1].px_sum == int(canvas.sum(dtype=np.int64))
 
 
@@ -156,7 +161,7 @@ def test_multimodal_real_png_decode(spark):
     media = spark.createDataFrame(
         [(r[0], r[1]) for r in rows], "media_ref string, payload binary")
     out = {r.media_ref: r for r in multimodal.extract_image_features(
-        media, feat_dim=8, decode_stub=False).collect()}
+        media, decode_stub=False).collect()}
     for ref, _, w, h, s in rows:
         got = out[ref]
         assert (got.width, got.height, got.px_sum) == (w, h, s)
@@ -191,8 +196,8 @@ def test_simhash_no_bit_explode_in_plan(docs):
 
 
 def test_simhash_hamming_pairs(spark):
-    """Banded Hamming-k pairs == brute-force Hamming pairs (full recall for
-    max_hamming <= n_bands-1)."""
+    """Banded Hamming-k pairs of 16-bit signatures == brute-force Hamming
+    pairs (full recall for MAX_HAMMING <= SIMHASH_BANDS - 1)."""
     import itertools
 
     rows = [
@@ -204,18 +209,17 @@ def test_simhash_hamming_pairs(spark):
         (5, "more unrelated prose regarding query optimizers"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = {r.doc_id: r.simhash
-            for r in dedup.simhash_signatures(docs).collect()}
+    sig = dedup.simhash_signatures(docs).withColumn(
+        "simhash", F.col("simhash").bitwiseAND(0xFFFF))
+    sigs = {r.doc_id: r.simhash for r in sig.collect()}
     brute = set()
     for a, b in itertools.combinations(sorted(sigs), 2):
-        if bin((sigs[a] ^ sigs[b]) & ((1 << 64) - 1)).count("1") <= 3:
+        if bin(sigs[a] ^ sigs[b]).count("1") <= dedup.MAX_HAMMING:
             brute.add((a, b))
     banded = {(r.doc_a, r.doc_b)
-              for r in dedup.simhash_hamming_pairs(docs, max_hamming=3).collect()}
+              for r in dedup.simhash_hamming_pairs(sig).collect()}
     assert banded == brute
     assert (0, 1) in banded  # identical docs are Hamming-0
-    with pytest.raises(ValueError, match="pigeonhole"):
-        dedup.simhash_hamming_pairs(docs, n_bands=2, max_hamming=3)
 
 
 def test_ivf_ann_recall_vs_brute_force(vectors):
@@ -286,8 +290,7 @@ def test_cosine_neardup_recall(spark):
     # near-dup copies: tiny additive shift
     rows += [(1000 + i, [float(x + 0.01) for x in base[i]]) for i in range(30)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = similarity.cosine_neardup_pairs(
-        df, dim=16, threshold=0.95, n_tables=8, n_planes=5)
+    out = similarity.cosine_neardup_pairs(df, dim=16)
     pairs = {(r.doc_a, r.doc_b) for r in out.collect()}
     expected = {(i, 1000 + i) for i in range(30)}
     assert expected <= pairs  # full recall on the true near-dups
@@ -304,12 +307,12 @@ def test_lsh_bucket_udf_high_dim(spark):
     import numpy as np
 
     rng = np.random.RandomState(5)
-    dim, n_planes, n_tables, seed = 256, 6, 3, 1234567
+    dim, n_planes, n_tables = 256, 6, 3
     base = rng.randn(20, dim)
     rows = [(i, [float(x) for x in base[i]]) for i in range(20)]
     rows += [(100 + i, [float(x) for x in base[i]]) for i in range(20)]  # dups
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    bucket = similarity.lsh_table_buckets_udf(dim, n_planes, n_tables, seed)
+    bucket = similarity.lsh_table_buckets_udf(dim, n_planes, n_tables)
     out = {r.vec_id: list(r.b) for r in
            df.select("vec_id", bucket("embedding").alias("b")).collect()}
     for i in range(20):
@@ -317,13 +320,13 @@ def test_lsh_bucket_udf_high_dim(spark):
     assert len({tuple(b) for b in out.values()}) > 1  # and buckets do spread
 
     # reference: bit p of table t's bucket is the sign of the dot product
-    # with hyperplane p under seed + t * 99991 (projections of random
+    # with hyperplane p under LSH_SEED + t * 99991 (projections of random
     # gaussians are ~never within rounding of zero)
     for i in range(20):
         want = [
             sum(1 << p for p in range(n_planes)
                 if float(np.dot(base[i], similarity._lcg_weights(
-                    p, dim, seed + t * 99991))) > 0)
+                    p, dim, similarity.LSH_SEED + t * 99991))) > 0)
             for t in range(n_tables)]
         assert out[i] == want
 
@@ -342,8 +345,7 @@ def test_neardup_hot_bucket_cap(spark):
     rows += [(5000 + j, [float(x * (1 + j * 1e-6)) for x in hot])
              for j in range(200)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs, obs = similarity.cosine_neardup_pairs(
-        df, dim=16, threshold=0.95, n_tables=8, n_planes=5, max_bucket=50)
+    pairs, obs = similarity.cosine_neardup_pairs(df, dim=16, max_bucket=50)
     got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     m = obs.get
     assert m["hot_bucket_rows"] > 0
@@ -365,10 +367,11 @@ def test_rolling_fingerprint_stability(spark):
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "t")
     ).select("doc_id", "pos",
              F.pmod(F.xxhash64("t"), F.lit(2147483647)).alias("wid"))
-    out = {r.doc_id: set(r.fingerprint) for r in
-           textstats.rolling_fingerprint_from_ids(wid, n_keep=12).collect()}
-    assert len(out[0] & out[1]) >= 8   # local edit: most min-hashes survive
+    rows = {r.doc_id: r for r in
+            textstats.rolling_fingerprint_from_ids(wid).collect()}
+    out = {d: set(r.fingerprint) for d, r in rows.items()}
+    # local edit: of the 8 min-hashes, only the 4 windows covering the
+    # edited word can change
+    assert len(out[0] & out[1]) >= 4
     assert len(out[0] & out[2]) == 0   # disjoint vocab: no overlap
-    n_win = {r.doc_id: r.n_windows
-             for r in textstats.rolling_fingerprint_from_ids(wid).collect()}
-    assert n_win[0] == 57  # 60 tokens, window 4 -> 57 full grams
+    assert rows[0].n_windows == 57  # 60 tokens, window 4 -> 57 full grams

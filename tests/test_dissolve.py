@@ -15,7 +15,7 @@ from rlis2osm_spark.functions.wkb import (
     encode_linestring,
     linemerge,
 )
-from rlis2osm_spark.operators.dissolve import _define_filter_fields, dissolve_ways
+from rlis2osm_spark.operators.dissolve import dissolve_ways
 from rlis2osm_spark.schemas import COMBINED_FIELDS
 from rlis2osm_spark.spatial.tiles import TileGrid
 
@@ -103,13 +103,17 @@ def test_dissolve_null_vs_empty_tags_distinct(spark):
 
 
 def test_dissolve_fields_subset(spark):
-    """fields=['highway'] merges across differing names (A4)."""
+    """Projecting the tags to ['highway'] merges across differing names
+    (A4 field list): the groups are the COMBINED_FIELDS present."""
     df = _combined_df(spark, [
         (0, "residential", "Oak", _seg(0, 0, 1, 0)),
         (1, "residential", "Elm", _seg(1, 0, 2, 0)),
     ])
-    out = dissolve_ways(df, fields=["highway"]).collect()
+    out = dissolve_ways(df.select("src_table", "fid", "part_idx", "highway",
+                                  "geometry")).collect()
     assert len(out) == 1 and out[0].n_members == 2
+    assert out[0].asDict().keys() == {
+        "component_id", "highway", "n_members", "geometry"}
 
 
 def test_dissolve_exclude(spark):
@@ -117,22 +121,9 @@ def test_dissolve_exclude(spark):
         (0, "residential", "Oak", _seg(0, 0, 1, 0)),
         (1, "residential", "Elm", _seg(1, 0, 2, 0)),
     ])
-    # exclude name -> merge; excluding nothing -> no merge
-    assert len(dissolve_ways(df, fields=["name"], exclude=True).collect()) == 1
+    # dropping name (A4 exclude list) -> merge; dropping nothing -> no merge
+    assert len(dissolve_ways(df.drop("name")).collect()) == 1
     assert len(dissolve_ways(df).collect()) == 2
-
-
-def test_dissolve_unknown_field_raises(spark):
-    df = _combined_df(spark, [(0, "residential", "Oak", _seg(0, 0, 1, 0))])
-    with pytest.raises(ValueError, match="does not exist"):
-        dissolve_ways(df, fields=["nope"])
-
-
-def test_define_filter_fields_parity():
-    fields = ["a", "b", "c"]
-    assert _define_filter_fields(fields) == fields
-    assert _define_filter_fields(fields, ["b"]) == ["b"]
-    assert _define_filter_fields(fields, ["b"], exclude=True) == ["a", "c"]
 
 
 def test_dissolve_synth_end_to_end(spark, synth_dir):
@@ -460,7 +451,9 @@ def test_ordered_dissolve_byte_identical_sinks(spark, tmp_path):
     df = _combined_df(spark, rows)
 
     def run(out_tag):
-        d = dissolve_ways(df, fields=["highway", "name"], ordered=True)
+        d = dissolve_ways(df.select("src_table", "fid", "part_idx",
+                                    "highway", "name", "geometry"),
+                          ordered=True)
         pq_dir = str(tmp_path / f"pq_{out_tag}")
         d.write.mode("overwrite").parquet(pq_dir)
         osm_dir = str(tmp_path / f"osm_{out_tag}")

@@ -5,7 +5,6 @@ import pandas as pd
 import pytest
 
 from rlis2osm_spark.functions.expand import (
-    RLIS_SPECIAL_CASES,
     build_positional_dicts,
     expand_basename_py,
     expand_direction,
@@ -13,7 +12,7 @@ from rlis2osm_spark.functions.expand import (
     make_basename_udf,
 )
 
-DICTS = build_positional_dicts(RLIS_SPECIAL_CASES)
+DICTS = build_positional_dicts()
 
 
 @pytest.mark.parametrize(

@@ -209,6 +209,16 @@ def test_semi_anti_join_plan_forms(spark):
     assert "partial_count" in p04 or "HashAggregate" in p04
 
 
+def test_neardup_computes_lsh_buckets_once(spark):
+    """d7's LSH leg (``similarity.cosine_neardup_pairs``) runs its bucket
+    kernel once: one aggregate gathers each bucket's members, so no
+    self-join computes the buckets again for its second side."""
+    df = Q["d7_embedding_neardup"](spark, SF)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert final.count("ArrowEvalPython [buckets(") == 1, final
+
+
 def test_polygon_cell_join_is_cell_equijoin(spark):
     """The polygon JOIN's candidate stage is a (cx, cy) equi-join; the only
     Python is the per-candidate ray cast."""
@@ -226,7 +236,7 @@ def test_polygon_cell_join_is_cell_equijoin(spark):
                  {"x": g.x0 + 5000.0, "y": g.y0 + 5000.0},
                  {"x": g.x0 + 1000.0, "y": g.y0 + 5000.0}])],
         "polygon_id string, ring array<struct<x double, y double>>")
-    plan = _plan(polygon_cell_join(pts, polys, res=8))
+    plan = _plan(polygon_cell_join(pts, polys, res=8, grid=g, point_uid="pid"))
     assert "cx" in plan and "cy" in plan
     assert "Join" in plan
     assert plan.count("ArrowEvalPython") == 1  # ray cast only

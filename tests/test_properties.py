@@ -10,14 +10,13 @@ import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from rlis2osm_spark.functions.expand import (
-    RLIS_SPECIAL_CASES,
     build_positional_dicts,
     expand_basename_py,
 )
 from rlis2osm_spark.functions.titlecase_port import rlis_titlecase
 from rlis2osm_spark.functions import wkb
 
-DICTS = build_positional_dicts(RLIS_SPECIAL_CASES)
+DICTS = build_positional_dicts()
 
 name_alphabet = st.sampled_from(
     list("ABCDEFGHIJKLMNOPQRSTUVWXYZ") + list("abcdefgh0123456789") +

@@ -137,15 +137,17 @@ def test_polygon_cell_join_matches_broadcast_pip(spark):
     pdf = spark.createDataFrame(
         poly_rows, "polygon_id string, ring array<struct<x double, y double>>")
     got = {r.pid: r.polygon_id
-           for r in polygon_cell_join(pts, pdf, res=8).collect()}
+           for r in polygon_cell_join(pts, pdf, res=8, grid=grid,
+                                      point_uid="pid").collect()}
     assert got == want
     assert set(filter(None, got.values())) == {"p1", "p2"}
     assert any(v is None for v in got.values())  # some points in none
 
 
 def test_polygon_cell_join_cell_explosion_guard(spark):
-    """A polygon covering more cells than the cap must fail loudly (the
-    100 TB silent-blowup mode), with the offending polygon id."""
+    """A polygon covering more cells than MAX_CELLS_PER_POLYGON must fail
+    loudly (the 100 TB silent-blowup mode), with the offending polygon
+    id: the whole extent at res 10 covers 1025^2 cells."""
     import pytest
     from pyspark.errors import SparkRuntimeException
 
@@ -161,11 +163,13 @@ def test_polygon_cell_join_cell_explosion_guard(spark):
                  {"x": g.x0 + g.extent, "y": g.y0 + g.extent},
                  {"x": g.x0, "y": g.y0 + g.extent}])],
         "polygon_id string, ring array<struct<x double, y double>>")
-    with pytest.raises(SparkRuntimeException, match="max_cells_per_polygon"):
-        polygon_cell_join(pts, giant, res=10,
-                          max_cells_per_polygon=1000).collect()
-    # a generous cap passes
-    out = polygon_cell_join(pts, giant, res=4).collect()
+    with pytest.raises(SparkRuntimeException,
+                       match="MAX_CELLS_PER_POLYGON=100000 at res=10: pg"):
+        polygon_cell_join(pts, giant, res=10, grid=g,
+                          point_uid="pid").collect()
+    # a coarse res stays under the cap
+    out = polygon_cell_join(pts, giant, res=4, grid=g,
+                            point_uid="pid").collect()
     assert out[0].polygon_id == "pg"
 
 
@@ -236,9 +240,11 @@ def test_long_segment_ring_completeness(spark):
 
 
 def test_polygon_cell_join_preserves_duplicates_and_guards_names(spark):
-    """ADVICE r2: duplicate input points must survive the regroup (row count
-    preserved), and a reserved-name clash fails loudly."""
+    """ADVICE r2: duplicate input points with distinct ``point_uid`` keys
+    must survive the regroup (row count preserved), any column type rides
+    along, and a reserved-name clash or a missing key fails loudly."""
     import pytest
+    from pyspark.sql import functions as F
 
     from rlis2osm_spark.spatial.joins import polygon_cell_join
     from rlis2osm_spark.spatial.tiles import TileGrid
@@ -249,31 +255,25 @@ def test_polygon_cell_join_preserves_duplicates_and_guards_names(spark):
     polys = spark.createDataFrame(
         [(1, ring)], "polygon_id long, ring array<struct<x:double,y:double>>")
     pts = spark.createDataFrame(
-        [(7, 5_000.0, 5_000.0), (7, 5_000.0, 5_000.0),  # exact duplicates
-         (8, 50_000.0, 50_000.0)],
-        "pid long, x double, y double")
-    out = polygon_cell_join(pts, polys, res=6, grid=g).collect()
+        [(1, 7, 5_000.0, 5_000.0), (2, 7, 5_000.0, 5_000.0),  # duplicates
+         (3, 8, 50_000.0, 50_000.0)],
+        "uid long, pid long, x double, y double")
+    out = polygon_cell_join(pts, polys, res=6, grid=g,
+                            point_uid="uid").collect()
     assert len(out) == 3  # both duplicate rows kept
     assert sorted((r.pid, r.polygon_id) for r in out) == [
         (7, 1), (7, 1), (8, None)]
 
     clash = pts.withColumnRenamed("pid", "polygon_id")
     with pytest.raises(ValueError, match="reserved"):
-        polygon_cell_join(clash, polys, res=6, grid=g)
+        polygon_cell_join(clash, polys, res=6, grid=g, point_uid="uid")
+    with pytest.raises(ValueError, match="not in points"):
+        polygon_cell_join(pts, polys, res=6, grid=g, point_uid="id")
 
-    # map guard recurses into nested types (ADVICE r4): a map inside a
-    # struct must hit the actionable error, not an opaque analysis failure
-    from pyspark.sql import functions as F
-
-    nested = pts.withColumn(
+    # map-typed payload columns pass through untouched
+    meta = pts.withColumn(
         "meta", F.struct(F.create_map(F.lit("k"), F.lit("v")).alias("m")))
-    with pytest.raises(ValueError, match="map types"):
-        polygon_cell_join(nested, polys, res=6, grid=g)
-    # ...and a caller-supplied unique key sidesteps the guard entirely
-    uniq = spark.createDataFrame(
-        [(1, 5_000.0, 5_000.0), (2, 50_000.0, 50_000.0)],
-        "pid long, x double, y double").withColumn(
-        "meta", F.struct(F.create_map(F.lit("k"), F.lit("v")).alias("m")))
-    out2 = polygon_cell_join(uniq, polys, res=6, grid=g,
-                             point_uid="pid").collect()
-    assert sorted((r.pid, r.polygon_id) for r in out2) == [(1, 1), (2, None)]
+    out2 = polygon_cell_join(meta, polys, res=6, grid=g,
+                             point_uid="uid").collect()
+    assert sorted((r.uid, r.polygon_id, r.meta.m["k"]) for r in out2) == [
+        (1, 1, "v"), (2, 1, "v"), (3, None, "v")]

@@ -1,8 +1,11 @@
 """Z-order tile index tests: Morton parity with a reference implementation,
 hierarchy, clamping, native-plan checks."""
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from rlis2osm_spark.functions.wkb import encode_linestring, encode_points_batch
@@ -68,19 +71,52 @@ def test_with_tile_geometry(spark):
     assert out["p"].cell == out["l"].cell
 
 
-def test_with_tile_plan_computes_each_clamp_once(spark):
-    """``cell`` is built on the staged ``ix``/``iy`` columns, so the
-    executed plan holds each coordinate's FLOOR(...) clamp term once,
-    not once per read of the Morton interleave (16 reads each)."""
+def _floor_terms(plan: str) -> list[str]:
+    """Every ``FLOOR(...)`` term of a printed plan, parentheses balanced."""
+    terms, at = [], plan.find("FLOOR(")
+    while at != -1:
+        depth, end = 0, at + len("FLOOR")
+        for end in range(end, len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        terms.append(plan[at:end + 1])
+        at = plan.find("FLOOR(", at + 1)
+    return terms
+
+
+def _clamp_plan_frames(spark):
+    from rlis2osm_spark.queries import all_queries
+
+    q = all_queries()
     df = spark.createDataFrame(
         [("l", encode_linestring([(0.0, 0.0), (200.0, 200.0)]))],
         "id string, geometry binary")
-    tiled = with_tile(df, 10, grid=TileGrid(0.0, 0.0, 1024.0))
-    plan = tiled._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FLOOR(") == 2, plan
-    (row,) = tiled.collect()
-    assert (row.ix, row.iy) == (100, 100)
-    assert row.cell == _morton_py(100, 100)
+    sf = "/root/testdata/sf0.001"
+    return {
+        "with_tile": with_tile(df, 10, grid=TileGrid(0.0, 0.0, 1024.0)),
+        "s3_tile_rollup": q["s3_tile_rollup"](spark, sf),
+        "s2_tile_assignment_wkb": q["s2_tile_assignment_wkb"](spark, sf),
+    }
+
+
+@pytest.mark.parametrize(
+    "name", ["with_tile", "s3_tile_rollup", "s2_tile_assignment_wkb"])
+def test_with_tile_plan_computes_each_clamp_once(spark, name):
+    """``cell`` is built on staged ``ix``/``iy`` columns
+    (``tiles.with_cell``), so the executed plan holds each coordinate's
+    FLOOR(...) clamp term at most twice, not once per read of the Morton
+    interleave (16 reads each, and 16 more for a ``parent_cell`` built on
+    the interleave expression)."""
+    df = _clamp_plan_frames(spark)[name]
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    counts = Counter(_floor_terms(plan))
+    assert counts and max(counts.values()) <= 2, counts
+    if name == "with_tile":
+        (row,) = df.collect()
+        assert (row.ix, row.iy) == (100, 100)
+        assert row.cell == _morton_py(100, 100)
 
 
 def test_tile_expr_is_native(spark):
