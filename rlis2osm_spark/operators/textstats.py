@@ -124,22 +124,6 @@ def quality_features(df: DataFrame) -> DataFrame:
             "_n_chars", "_n_sub", *score_cols)
 
 
-def fingerprint(df: DataFrame) -> DataFrame:
-    """Order-sensitive 64-bit fingerprint of each (doc_id, text) row:
-    xxhash64 rolling fold over (position, token-hash) — the production
-    variant of the vocabulary-ranked oracle query (x2_fingerprint)."""
-    toks = df.select(
-        "doc_id",
-        F.posexplode(F.split(F.col("text"), r"\s+")).alias("pos", "t"),
-    ).filter(F.col("t") != "")
-    h = toks.withColumn("th", F.xxhash64("t", "pos"))
-    return h.groupBy("doc_id").agg(
-        F.bit_xor("th").alias("fp_xor"),
-        F.sum(F.pmod("th", F.lit(2147483647))).alias("fp_sum"),
-        F.count("*").alias("n_tokens"),
-    )
-
-
 def rolling_fingerprint_from_ids(wid_df: DataFrame) -> DataFrame:
     """Winnowing-style document fingerprint over a (doc_id, pos, wid)
     frame of word ids, via polynomial rolling hashes.

@@ -11,7 +11,8 @@
 
 A reference is a name, an attribute, an imported name (or its alias) or a
 string constant that is exactly the identifier (``getattr``/registry
-lookups), found in the package, the tests, the scripts, the benchmark or
+lookups) and is not the argument of ``.alias(...)`` (a column name is not
+a lookup), found in the package, the tests, the scripts, the benchmark or
 the Spark entry point. A call passes a parameter when it names it as a
 keyword, reaches its position, or spreads ``*args``/``**kwargs``; calls
 match functions by name only (a class name calls its ``__init__``).
@@ -73,6 +74,9 @@ def _py_files(path: str) -> list[str]:
 
 
 def _names(node: ast.AST):
+    aliases = {id(a) for n in ast.walk(node)
+               if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+               and n.func.attr == "alias" for a in n.args}
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
             yield n.id
@@ -83,7 +87,7 @@ def _names(node: ast.AST):
             if n.asname:
                 yield n.asname
         elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
-              and n.value.isidentifier()):
+              and n.value.isidentifier() and id(n) not in aliases):
             yield n.value
 
 

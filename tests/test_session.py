@@ -1,5 +1,6 @@
 """Session defaults that keep repeated plans cheap: generated classes stay
-cached across passes, and building a plan makes no call-site round trips."""
+cached across passes, building a plan makes no call-site round trips, and
+the driver JVM runs the throughput collector."""
 
 import os
 from functools import reduce
@@ -60,3 +61,56 @@ def test_building_combine_makes_few_py4j_round_trips(spark, synth_dir,
     combine(streets, trails, bikes)
     monkeypatch.undo()
     assert 0 < calls <= 4500, calls
+
+
+JVM_FLAGS = "-XX:+UseParallelGC -XX:MetaspaceSize=256m"
+
+
+def test_driver_jvm_runs_parallel_collector_with_large_metaspace(spark):
+    """The JVM ``build_session`` launched runs the Parallel collector and
+    starts Metaspace at 256 MB. The flags come from
+    ``spark.driver.defaultJavaOptions``, not from
+    ``spark.driver.extraJavaOptions``, which holds only what Spark itself
+    adds (its ``--add-opens`` module flags) and a caller's own flags."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    collectors = sorted(b.getName() for b in mf.getGarbageCollectorMXBeans())
+    assert collectors == ["PS MarkSweep", "PS Scavenge"], collectors
+    args = list(mf.getRuntimeMXBean().getInputArguments())
+    assert set(JVM_FLAGS.split()) <= set(args), args
+    conf = spark.sparkContext._jsc.sc().conf()
+    assert conf.get("spark.driver.defaultJavaOptions") == JVM_FLAGS
+    extra = conf.get("spark.driver.extraJavaOptions", "")
+    assert not set(JVM_FLAGS.split()) & set(extra.split()), extra
+
+
+def test_build_session_leaves_extra_java_options_to_the_caller(monkeypatch):
+    """``build_session`` sets ``spark.driver.defaultJavaOptions`` and never
+    ``spark.driver.extraJavaOptions``, so a caller's JVM flags pass through
+    unchanged and Spark appends them after the collector flags."""
+    from pyspark.sql import SparkSession
+
+    from rlis2osm_spark.session import build_session
+
+    class Recorder:
+        def __init__(self):
+            self.conf = []
+
+        def appName(self, _name):
+            return self
+
+        def master(self, _master):
+            return self
+
+        def config(self, key, value):
+            self.conf.append((key, value))
+            return self
+
+        def getOrCreate(self):
+            return self.conf
+
+    monkeypatch.setattr(SparkSession, "builder", Recorder())
+    caller = "-Xms1g -Xlog:gc"
+    conf = build_session(extra_conf={"spark.driver.extraJavaOptions": caller})
+    assert dict(conf)["spark.driver.defaultJavaOptions"] == JVM_FLAGS
+    assert [v for k, v in conf
+            if k == "spark.driver.extraJavaOptions"] == [caller]
