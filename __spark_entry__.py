@@ -23,7 +23,7 @@ if _REPO not in sys.path:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: tile assignment + raster<->vector cell join + hierarchical
     rollup over documents at sf0.001 (cells via native Morton interleave,
-    the WKB path exercised through the pandas-UDF coordinate extraction)."""
+    the WKB path exercised through the Arrow UDF coordinate extraction)."""
     from rlis2osm_spark.driver_support import ensure_package_on_workers
     from rlis2osm_spark.queries import rlis_python, spatial_sql
 

@@ -1,6 +1,7 @@
 """Support for running under an external driver (spark-submit contract).
 
-Python workers deserialize pandas UDFs by importing this package; when the
+Python workers deserialize the package's Arrow UDFs and map kernels by
+importing this package; when the
 driver's SparkSession was created without ``--py-files rlis2osm_spark.zip``
 (e.g. the verification harness), we ship the package at runtime via
 ``SparkContext.addPyFile`` — the local-mode equivalent of the north rule's

@@ -8,19 +8,22 @@ Semantics reproduced from the reference's ``StreetNameExpander``
   expression** (literal ``create_map`` + null-safe upper lookup) — JVM-side,
   whole-stage codegen, no Python;
 - positional ``basename`` expansion (P4-P6, P8) keeps separator runs intact
-  (``re.split('([ /]+)')``), so it runs as an **Arrow-batched pandas UDF**
-  closing over the three plan-time-constant positional dicts (P5) —
-  the dicts are tiny and ship in the task closure (auto-broadcast).
+  (``re.split('([ /]+)')``), so it runs as an **Arrow UDF** over the
+  three constant positional dicts (P5), once per distinct name in each
+  Arrow batch.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import StringType
+
+from rlis2osm_spark.functions.titlecase_port import rlis_titlecase
 
 # ---------------------------------------------------------------------------
 # Abbreviation tables (data, not code — domains from expand.py:5-88 and
@@ -163,7 +166,7 @@ def expand_type(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# P4/P8: positional basename expansion (pandas UDF)
+# P4/P8: positional basename expansion (Arrow UDF)
 # ---------------------------------------------------------------------------
 
 _SEPARATORS = (" ", "/")
@@ -206,52 +209,31 @@ def expand_basename_py(name: str | None,
     return "-".join(out_parts)
 
 
-def make_basename_udf():
-    """Arrow-batched pandas UDF for P4 with dicts folded at plan time (P5/P6).
-
-    Per-batch memoization (r5): street names repeat heavily in real RLIS
-    data (one name per SEGMENT), and the expansion is a pure function of
-    the string — computing each distinct name once per Arrow batch cuts
-    the Python work by the batch's duplication factor at zero cost to
-    all-distinct inputs."""
-    dicts = build_positional_dicts()
-
-    @F.pandas_udf(StringType())
-    def basename_expand(names: pd.Series) -> pd.Series:
-        memo: dict = {}
-
-        def one(n):
-            r = memo.get(n)
-            if r is None:
-                r = expand_basename_py(n, dicts)
-                memo[n] = r
-            return r
-
-        return names.map(one, na_action="ignore")
-
-    return basename_expand
+def _each_distinct(fn, names: pa.Array) -> pa.Array:
+    """``fn`` over an Arrow batch of strings, run once per distinct value
+    and taken back to the rows: RLIS repeats a name on every segment of a
+    street, so a batch holds far fewer names than rows. A null row gets
+    ``fn(None)`` when that is not None, else stays null."""
+    enc = names.dictionary_encode()
+    out = pa.array([fn(s) for s in enc.dictionary.to_pylist()],
+                   pa.string()).take(enc.indices)
+    blank = fn(None)
+    return out if blank is None else out.fill_null(blank)
 
 
-def make_titlecase_udf():
-    """P7: streets-only OSM-name titlecasing as an Arrow-batched pandas UDF.
+_POSITIONAL = build_positional_dicts()
 
-    Wraps the ported titlecase rules (functions/titlecase_port.py);
-    note null -> '' (not null) per main.py:90. Memoized per batch like
-    :func:`make_basename_udf` — titlecasing is regex-heavy and a pure
-    function of the name."""
-    from rlis2osm_spark.functions.titlecase_port import rlis_titlecase
 
-    @F.pandas_udf(StringType())
-    def titlecase_name(names: pd.Series) -> pd.Series:
-        memo: dict = {}
+@arrow_udf(StringType())
+def basename_expand(names: pa.Array) -> pa.Array:
+    """P4 over an Arrow batch, with the positional dicts folded once (P5/P6);
+    a null name stays null."""
+    return _each_distinct(lambda n: expand_basename_py(n, _POSITIONAL), names)
 
-        def one(n):
-            r = memo.get(n)
-            if r is None:
-                r = rlis_titlecase(n)
-                memo[n] = r
-            return r
 
-        return names.map(one)  # rlis_titlecase handles None itself -> ''
-
-    return titlecase_name
+@arrow_udf(StringType())
+def titlecase_name(names: pa.Array) -> pa.Array:
+    """P7: streets-only OSM-name titlecasing over an Arrow batch (the
+    ported rules of functions/titlecase_port.py); a null name gives ''
+    (not null), as main.py:90 does."""
+    return _each_distinct(rlis_titlecase, names)

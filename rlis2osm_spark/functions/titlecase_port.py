@@ -15,7 +15,8 @@ customizations:
    ``.upper()`` results at main.py:159,162 are discarded — a documented parity
    quirk, FIXTURES.md §6.1).
 
-Used Arrow-batched from a pandas UDF (functions/expand.py) — never per-row
+Run by the Arrow UDF ``expand.titlecase_name``, once per distinct name in
+a batch — never per-row
 Python at the Spark layer.
 """
 

@@ -11,9 +11,10 @@ part-splitter.
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, BinaryType
 
 from rlis2osm_spark.functions import wkb
@@ -31,9 +32,10 @@ _LINESTRING_TYPE = bytes([1, 2, 0, 0, 0])
 _INT_FIELDS = {"layer"}
 
 
-@F.pandas_udf(ArrayType(BinaryType()))
-def _explode_parts_udf(geoms: pd.Series) -> pd.Series:
-    return geoms.map(lambda g: None if g is None else wkb.explode_parts(bytes(g)))
+@arrow_udf(ArrayType(BinaryType()))
+def _explode_parts_udf(geoms: pa.Array) -> pa.Array:
+    return pa.array([None if g is None else wkb.explode_parts(g)
+                     for g in geoms.to_pylist()], pa.list_(pa.binary()))
 
 
 def explode_multipart(df: DataFrame) -> DataFrame:

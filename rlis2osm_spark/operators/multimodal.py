@@ -1,5 +1,5 @@
 """Multimodal column operators: image/audio/video as opaque ``binary``
-payloads with typed metadata, processed via Arrow-batched ``mapInPandas``.
+payloads with typed metadata, processed by one ``mapInArrow`` pass each.
 
 The Spark-side plumbing is real and tested — schemas, the media join, batch
 shapes, partitioning, the UDF signatures — and so is the codec step.
@@ -20,11 +20,9 @@ compressed WAV and compressed video codecs (MS-RLE/MSVC/Cinepak/H.26x/...)
 raise ``NotImplementedError`` — the exact seam where PIL / pyav /
 soundfile plug in.
 
-Scale notes: payloads never pass through Python row-at-a-time — each
-``mapInPandas`` batch is one Arrow RecordBatch of binary blobs; cap batch
-bytes with ``spark.sql.execution.arrow.maxRecordsPerBatch`` against blob
-size, and partition the media table by ``bucket(media_ref)`` so the
-doc<->media join is co-located.
+Scale notes: each ``mapInArrow`` batch is one Arrow RecordBatch of binary
+blobs, read and written as Arrow with no pandas step; cap batch bytes with
+``spark.sql.execution.arrow.maxRecordsPerBatch`` against blob size.
 """
 
 from __future__ import annotations
@@ -32,8 +30,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType, FloatType, IntegerType, LongType, StringType,
     StructField, StructType,
@@ -69,78 +68,89 @@ AUDIO_WINDOW = 1024  # samples per RMS window
 MAX_WINDOWS = 64     # RMS windows kept per clip
 
 
-def _fake_decode(payload: bytes) -> tuple[int, int, np.ndarray]:
+def _histogram(px: np.ndarray) -> list[float]:
+    """The FEAT_DIM-bin byte histogram feature, normalised to sum 1."""
+    hist = np.bincount(px % FEAT_DIM, minlength=FEAT_DIM).astype("float32")
+    total = hist.sum()
+    if total > 0:
+        hist /= total
+    return hist.tolist()
+
+
+def _fake_decode(payload: bytes) -> tuple[int, int, list[float]]:
     """Deterministic stand-in for a real image decode: derives a stable
     pseudo raster shape + a byte-histogram feature from the payload."""
     n = len(payload)
     width = 16 + (n * 31) % 240
     height = 16 + (n * 17) % 240
-    hist = np.bincount(
-        np.frombuffer(payload, dtype=np.uint8) % FEAT_DIM, minlength=FEAT_DIM
-    ).astype("float32")
-    total = hist.sum()
-    if total > 0:
-        hist /= total
-    return int(width), int(height), hist
+    return width, height, _histogram(np.frombuffer(payload, dtype=np.uint8))
+
+
+def _map_blobs(media: DataFrame, blob_rows, schema: StructType) -> DataFrame:
+    """The one Python pass of every extractor: ``mapInArrow`` over
+    ``media``'s (media_ref, payload) batches. ``blob_rows(payload)`` gives
+    a blob's output rows, each without the media_ref that leads it. A null
+    payload keeps one row: its media_ref, ``n_bytes`` 0 where the schema
+    has it, every other field null."""
+    arrow_schema = to_arrow_schema(schema)
+    null_row = tuple(0 if f.name == "n_bytes" else None
+                     for f in schema.fields[1:])
+
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            rows = []
+            for ref, payload in zip(batch.column("media_ref").to_pylist(),
+                                    batch.column("payload").to_pylist()):
+                rows += [(ref, *r) for r in
+                         ([null_row] if payload is None
+                          else blob_rows(payload))]
+            cols = list(zip(*rows)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema)
+
+    return media.select("media_ref", "payload").mapInArrow(batches, schema)
 
 
 def extract_image_features(
     media: DataFrame,
     decode_stub: bool = True,
 ) -> DataFrame:
-    """media(media_ref, payload, ...) -> per-blob features via mapInPandas."""
+    """media(media_ref, payload, ...) -> per-blob features, one Arrow pass."""
 
-    def batches(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in frames:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                if payload is None:
-                    rows.append((ref, 0, None, None, None, None, None, None))
-                    continue
-                b = bytes(payload)
-                fmt = _sniff(b)
-                if decode_stub:
-                    w, h, feat = _fake_decode(b)
-                    rows.append((ref, len(b), fmt, w, h, None,
-                                 feat.tolist(), None))
-                    continue
-                if fmt not in ("png", "gif", "jpeg", "bmp"):
-                    raise NotImplementedError(
-                        f"real image decoding for {fmt!r} requires an image "
-                        "codec library; plug PIL/pyav in here (png, gif, "
-                        "bmp and baseline/progressive jpeg — grayscale or "
-                        "full-RGB color — decode natively via "
-                        "functions/codecs.py)")
-                from rlis2osm_spark.functions.codecs import (
-                    decode_bmp, decode_gif, decode_jpeg, decode_png_ex)
+    def blob_rows(b: bytes) -> list[tuple]:
+        fmt = _sniff(b)
+        if decode_stub:
+            w, h, feat = _fake_decode(b)
+            return [(len(b), fmt, w, h, None, feat, None)]
+        if fmt not in ("png", "gif", "jpeg", "bmp"):
+            raise NotImplementedError(
+                f"real image decoding for {fmt!r} requires an image "
+                "codec library; plug PIL/pyav in here (png, gif, "
+                "bmp and baseline/progressive jpeg — grayscale or "
+                "full-RGB color — decode natively via "
+                "functions/codecs.py)")
+        from rlis2osm_spark.functions.codecs import (
+            decode_bmp, decode_gif, decode_jpeg, decode_png_ex)
 
-                if fmt == "jpeg":
-                    # 8-bit sequential/progressive huffman, gray or
-                    # full-RGB color (r5, nearest chroma upsample); every
-                    # other frame type raises NotImplementedError
-                    w, h, nch, px = decode_jpeg(b)
-                elif fmt == "png":
-                    # gray/RGB/palette/alpha at depths 1-8, Adam7 (r5);
-                    # 16-bit raises NotImplementedError
-                    w, h, nch, px = decode_png_ex(b)
-                elif fmt == "bmp":
-                    w, h, nch, px = decode_bmp(b)
-                else:
-                    w, h, px = decode_gif(b)
-                    nch = 1
-                arr = np.frombuffer(px, dtype=np.uint8)
-                hist = np.bincount(arr % FEAT_DIM,
-                                   minlength=FEAT_DIM).astype("float32")
-                total = hist.sum()
-                if total > 0:
-                    hist /= total
-                rows.append((ref, len(b), fmt, w, h, nch, hist.tolist(),
-                             int(arr.sum())))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_FEATURE_SCHEMA.fields])
+        if fmt == "jpeg":
+            # 8-bit sequential/progressive huffman, gray or
+            # full-RGB color (r5, nearest chroma upsample); every
+            # other frame type raises NotImplementedError
+            w, h, nch, px = decode_jpeg(b)
+        elif fmt == "png":
+            # gray/RGB/palette/alpha at depths 1-8, Adam7 (r5);
+            # 16-bit raises NotImplementedError
+            w, h, nch, px = decode_png_ex(b)
+        elif fmt == "bmp":
+            w, h, nch, px = decode_bmp(b)
+        else:
+            w, h, px = decode_gif(b)
+            nch = 1
+        arr = np.frombuffer(px, dtype=np.uint8)
+        return [(len(b), fmt, w, h, nch, _histogram(arr), int(arr.sum()))]
 
-    return media.select("media_ref", "payload").mapInPandas(
-        batches, IMAGE_FEATURE_SCHEMA)
+    return _map_blobs(media, blob_rows, IMAGE_FEATURE_SCHEMA)
 
 
 VIDEO_FRAME_SCHEMA = StructType([
@@ -165,39 +175,30 @@ def extract_video_frames(media: DataFrame) -> DataFrame:
     codecs raise NotImplementedError from the codec layer — the pyav
     seam."""
 
-    def batches(frames_it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def blob_rows(b: bytes) -> list[tuple]:
         from rlis2osm_spark.functions.codecs import (
             decode_avi_frames, decode_dib_frame, decode_gif_frames,
             decode_jpeg_gray)
 
-        for pdf in frames_it:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                if payload is None:
-                    rows.append((ref, None, None, None, None, None))
-                    continue
-                b = bytes(payload)
-                if b[:4] == b"GIF8":
-                    w, h, frames = decode_gif_frames(b)
-                    codec = "gif"
-                else:
-                    w, h, codec, frames = decode_avi_frames(b)
-                for idx in range(0, len(frames), FRAME_STRIDE):
-                    if codec == "gif":
-                        fw, fh, px = w, h, frames[idx]
-                    elif codec == "dib":
-                        fw, fh, _nch, px = decode_dib_frame(
-                            frames[idx], w, h)
-                    else:
-                        fw, fh, px = decode_jpeg_gray(frames[idx])
-                    arr = np.frombuffer(px, dtype=np.uint8)
-                    rows.append((ref, len(frames), idx, fw, fh,
-                                 int(arr.sum(dtype=np.int64))))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_FRAME_SCHEMA.fields])
+        if b[:4] == b"GIF8":
+            w, h, frames = decode_gif_frames(b)
+            codec = "gif"
+        else:
+            w, h, codec, frames = decode_avi_frames(b)
+        rows = []
+        for idx in range(0, len(frames), FRAME_STRIDE):
+            if codec == "gif":
+                fw, fh, px = w, h, frames[idx]
+            elif codec == "dib":
+                fw, fh, _nch, px = decode_dib_frame(frames[idx], w, h)
+            else:
+                fw, fh, px = decode_jpeg_gray(frames[idx])
+            arr = np.frombuffer(px, dtype=np.uint8)
+            rows.append((len(frames), idx, fw, fh,
+                         int(arr.sum(dtype=np.int64))))
+        return rows
 
-    return media.select("media_ref", "payload").mapInPandas(
-        batches, VIDEO_FRAME_SCHEMA)
+    return _map_blobs(media, blob_rows, VIDEO_FRAME_SCHEMA)
 
 
 AUDIO_FEATURE_SCHEMA = StructType([
@@ -220,54 +221,41 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     (soundfile/torchaudio) plugs in. Vectorized numpy per batch — no
     per-sample Python."""
 
-    def batches(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def blob_rows(b: bytes) -> list[tuple]:
         from rlis2osm_spark.functions.codecs import decode_wav
 
-        for pdf in frames:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                if payload is None:
-                    rows.append((ref, 0, None, None, None, None, None, None))
-                    continue
-                b = bytes(payload)
-                # check the full RIFF/WAVE signature: a RIFF container
-                # that is not WAVE (e.g. RIFF/AVI) must hit this seam,
-                # not a mid-job ValueError from decode_wav (ADVICE r3)
-                if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                    raise NotImplementedError(
-                        "real audio decoding for non-WAV payloads "
-                        "requires a codec library; plug soundfile/"
-                        "torchaudio in here (PCM and float32 WAV "
-                        "decode natively via functions/codecs.py)")
-                _, samples = decode_wav(b)
-                s = np.asarray(samples)
-                if s.dtype.kind != "f":  # integer PCM: exact features
-                    s = s.astype(np.int64)
-                    extra = (len(s),
-                             int(np.abs(s).sum()) if len(s) else 0,
-                             int(np.abs(s).max()) if len(s) else 0)
-                else:  # float32 WAV: round to the int feature contract
-                    extra = (len(s),
-                             int(round(float(np.abs(s).sum())))
-                             if len(s) else 0,
-                             int(round(float(np.abs(s).max())))
-                             if len(s) else 0)
-                sig = s.astype("float32")
-                n_win = min(max(len(sig) // AUDIO_WINDOW, 1), MAX_WINDOWS)
-                used = (sig[: n_win * AUDIO_WINDOW]
-                        if len(sig) >= AUDIO_WINDOW else sig)
-                if len(used) >= AUDIO_WINDOW:
-                    w = used.reshape(n_win, AUDIO_WINDOW)
-                    rms = np.sqrt((w * w).mean(axis=1))
-                else:
-                    rms = np.array([np.sqrt((used * used).mean())
-                                    if len(used) else 0.0], dtype="float32")
-                    n_win = 1
-                zc = int(np.count_nonzero(np.diff(np.signbit(sig))))
-                rows.append((ref, len(b), n_win,
-                             [float(x) for x in rms], zc, *extra))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FEATURE_SCHEMA.fields])
+        # check the full RIFF/WAVE signature: a RIFF container
+        # that is not WAVE (e.g. RIFF/AVI) must hit this seam,
+        # not a mid-job ValueError from decode_wav (ADVICE r3)
+        if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+            raise NotImplementedError(
+                "real audio decoding for non-WAV payloads "
+                "requires a codec library; plug soundfile/"
+                "torchaudio in here (PCM and float32 WAV "
+                "decode natively via functions/codecs.py)")
+        _, samples = decode_wav(b)
+        s = np.asarray(samples)
+        if s.dtype.kind != "f":  # integer PCM: exact features
+            s = s.astype(np.int64)
+            extra = (len(s),
+                     int(np.abs(s).sum()) if len(s) else 0,
+                     int(np.abs(s).max()) if len(s) else 0)
+        else:  # float32 WAV: round to the int feature contract
+            extra = (len(s),
+                     int(round(float(np.abs(s).sum()))) if len(s) else 0,
+                     int(round(float(np.abs(s).max()))) if len(s) else 0)
+        sig = s.astype("float32")
+        n_win = min(max(len(sig) // AUDIO_WINDOW, 1), MAX_WINDOWS)
+        used = (sig[: n_win * AUDIO_WINDOW]
+                if len(sig) >= AUDIO_WINDOW else sig)
+        if len(used) >= AUDIO_WINDOW:
+            w = used.reshape(n_win, AUDIO_WINDOW)
+            rms = np.sqrt((w * w).mean(axis=1))
+        else:
+            rms = np.array([np.sqrt((used * used).mean())
+                            if len(used) else 0.0], dtype="float32")
+            n_win = 1
+        zc = int(np.count_nonzero(np.diff(np.signbit(sig))))
+        return [(len(b), n_win, [float(x) for x in rms], zc, *extra)]
 
-    return media.select("media_ref", "payload").mapInPandas(
-        batches, AUDIO_FEATURE_SCHEMA)
+    return _map_blobs(media, blob_rows, AUDIO_FEATURE_SCHEMA)

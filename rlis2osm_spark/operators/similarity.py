@@ -88,6 +88,8 @@ def lsh_table_buckets_udf(dim: int, n_planes: int, n_tables: int):
     plane p is positive. Weights live in the closure, not the plan, so the
     plan stays the same size at any ``dim``."""
     import numpy as np
+    import pyarrow.compute as pc
+    from pyspark.sql.functions import arrow_udf
     from pyspark.sql.types import ArrayType, LongType
 
     W = np.array(
@@ -96,28 +98,19 @@ def lsh_table_buckets_udf(dim: int, n_planes: int, n_tables: int):
         dtype=np.float64).T  # (dim, n_tables*n_planes)
     powers = (1 << np.arange(n_planes)).astype(np.int64)
 
-    zeros = np.zeros(n_tables, dtype=np.int64)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def buckets(vecs):
-        import pandas as pd
-
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
+    @arrow_udf(ArrayType(LongType()))
+    def buckets(vecs: pa.Array) -> pa.Array:
         # null / wrong-length vectors get all-zero buckets instead of a
         # ragged-ndarray ValueError (review r3)
-        rows, good_idx = [], []
-        for i, v in enumerate(vecs):
-            if v is not None and len(v) == dim:
-                rows.append(np.asarray(v, dtype=np.float64))
-                good_idx.append(i)
-        out = [zeros] * len(vecs)
-        if rows:
-            proj = (np.array(rows) @ W) > 0    # (n_good, n_tables*n_planes)
-            per_tbl = proj.reshape(len(rows), n_tables, n_planes) @ powers
-            for i, b in zip(good_idx, per_tbl):
-                out[i] = b
-        return pd.Series(out)
+        good = pc.fill_null(pc.equal(pc.list_value_length(vecs), dim), False)
+        out = np.zeros((len(vecs), n_tables), dtype=np.int64)
+        if pc.any(good).as_py():
+            x = vecs.filter(good).flatten().to_numpy(zero_copy_only=False)
+            proj = (x.astype(np.float64).reshape(-1, dim) @ W) > 0
+            out[good.to_numpy(zero_copy_only=False)] = (
+                proj.reshape(-1, n_tables, n_planes) @ powers)
+        offsets = np.arange(0, out.size + 1, n_tables, dtype=np.int32)
+        return pa.ListArray.from_arrays(offsets, out.ravel())
 
     return buckets
 

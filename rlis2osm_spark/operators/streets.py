@@ -12,11 +12,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rlis2osm_spark.functions.expand import (
+    basename_expand,
     expand_direction,
     expand_type,
     literal_map,
-    make_basename_udf,
-    make_titlecase_udf,
+    titlecase_name,
 )
 
 # TYPE -> tag literal maps (translate.py:12-41; stored inverted there, flat here)
@@ -47,11 +47,10 @@ SURFACE_BY_TYPE = {2000: "unpaved"}
 
 def expand_street_names(df: DataFrame) -> DataFrame:
     """P1/P2/P4 over the four street name parts (main.py:81-84)."""
-    basename = make_basename_udf()
     return df.withColumns(
         {
             "PREFIX": expand_direction(F.col("PREFIX")),
-            "STREETNAME": basename(F.col("STREETNAME")),
+            "STREETNAME": basename_expand(F.col("STREETNAME")),
             "FTYPE": expand_type(F.col("FTYPE")),
             "DIRECTION": expand_direction(F.col("DIRECTION")),
         }
@@ -128,7 +127,6 @@ def translate_streets(df: DataFrame) -> DataFrame:
     description = F.when(is_link, F.col("_name0"))
 
     layer = layer_expr(F.col("F_ZLEV"), F.col("T_ZLEV"))
-    titlecase_udf = make_titlecase_udf()
 
     out = df.withColumns(
         {
@@ -137,7 +135,7 @@ def translate_streets(df: DataFrame) -> DataFrame:
             "description": description,
             "highway": hw,
             "layer": layer.cast("int"),
-            "name": titlecase_udf(name_after),  # None -> '' (main.py:90)
+            "name": titlecase_name(name_after),  # None -> '' (main.py:90)
             "service": F.element_at(literal_map(SERVICE_BY_TYPE),
                                     F.col("TYPE")),
             "surface": F.element_at(literal_map(SURFACE_BY_TYPE),

@@ -39,30 +39,6 @@ def subword_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(TOKEN_RX))
 
 
-def _lang_score_cols(text: Column) -> dict[str, Column]:
-    # lowercase per already-split token (whitespace is case-stable), so the
-    # expensive split is ONE shared subexpression instead of 4 re-splits
-    lo = F.transform(tokens(text), lambda w: F.lower(w))
-    return {
-        lang: F.size(F.filter(lo, lambda w: w.isin(*markers)))
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
-def lang_guess(text: Column) -> Column:
-    """argmax language (deterministic tie-break by ascending language
-    code) — a greatest + when-chain, not a per-row map sort (the array_sort
-    comparator lambda measured ~4x the cost of the rest of the feature
-    set combined)."""
-    scores = _lang_score_cols(text)
-    gmax = F.greatest(*scores.values())
-    expr = None
-    for lang in sorted(scores):
-        cond = scores[lang] == gmax
-        expr = F.when(cond, lang) if expr is None else expr.when(cond, lang)
-    return F.when(gmax > 0, expr)
-
-
 def quality_features(df: DataFrame) -> DataFrame:
     """Length / punctuation / stopword / repetition features of the
     ``text`` column + a composite quality score in [0, 1].
@@ -107,6 +83,9 @@ def quality_features(df: DataFrame) -> DataFrame:
         + (1.0 - F.least(F.lit(1.0), n_punct / F.greatest(n_chars, F.lit(1)) * 5)) * 0.2
         + (1.0 - rep_ratio) * 0.2
         + F.least(F.lit(1.0), n_stop / safe_n * 5) * 0.2, 6)
+    # argmax language, ties to the lowest code: a greatest + when-chain,
+    # not a per-row map sort (its array_sort comparator lambda measured
+    # ~4x the cost of the rest of the feature set)
     gmax = F.greatest(*[F.col(c) for c in sorted(score_cols)])
     guess = None
     for lang in sorted(LANG_MARKERS):

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rlis2osm_spark.functions.expand import literal_map, make_basename_udf
+from rlis2osm_spark.functions.expand import basename_expand, literal_map
 
 # simple value maps (translate.py:170-196)
 TRAIL_ACCESS_MAP = {"Restricted_Private": "private", "Unknown": "unknown"}
@@ -39,9 +39,8 @@ def expand_trail_names(df: DataFrame) -> DataFrame:
     """P4 over the four trail name fields (main.py:120-122). No titlecase —
     the reference only titlecases street names (parity quirk, SURVEY §2.2 P7).
     """
-    basename = make_basename_udf()
     return df.withColumns(
-        {c: basename(F.col(c))
+        {c: basename_expand(F.col(c))
          for c in ("AGENCYNAME", "SHAREDNAME", "SYSTEMNAME", "TRAILNAME")}
     )
 

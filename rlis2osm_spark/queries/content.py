@@ -309,17 +309,13 @@ def n1_cosine_topk(spark, sf_dir):
 
 
 _N1_SQL = """
-WITH e AS (SELECT vec_id, embedding FROM embeddings),
+WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 pairs AS (
-  SELECT p.vec_id AS probe_id, v.vec_id AS neighbor_id,
-         (SELECT SUM(pe * ve) FROM (
-            SELECT CAST(pu.u AS DOUBLE) AS pe, CAST(vu.u AS DOUBLE) AS ve
-            FROM (SELECT unnest(p.embedding) AS u, generate_subscripts(p.embedding, 1) AS i) pu
-            JOIN (SELECT unnest(v.embedding) AS u, generate_subscripts(v.embedding, 1) AS i) vu
-              USING (i))) /
-         (sqrt((SELECT SUM(CAST(u AS DOUBLE) * CAST(u AS DOUBLE)) FROM unnest(p.embedding) AS t(u)))
-          * sqrt((SELECT SUM(CAST(u AS DOUBLE) * CAST(u AS DOUBLE)) FROM unnest(v.embedding) AS t(u)))) AS cos
-  FROM e p JOIN e v ON p.vec_id < 15 AND v.vec_id >= 15
+  SELECT p.vec_id AS probe_id, n.vec_id AS neighbor_id,
+         list_dot_product(p.v, n.v)
+         / (sqrt(list_dot_product(p.v, p.v))
+            * sqrt(list_dot_product(n.v, n.v))) AS cos
+  FROM e p JOIN e n ON p.vec_id < 15 AND n.vec_id >= 15
 )
 SELECT probe_id, neighbor_id, rank FROM (
   SELECT probe_id, neighbor_id,

@@ -17,14 +17,12 @@ from __future__ import annotations
 import math
 import os
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType
 
 from rlis2osm_spark.driver_support import ensure_package_on_workers
 from rlis2osm_spark.queries.util import (
-    cached_stage, case_int_map, load, pick, session_memo, sql_int_list,
-    sql_str_list)
+    binary_rows_udf, cached_stage, case_int_map, load, pick, session_memo,
+    sql_int_list, sql_str_list)
 from rlis2osm_spark.queries.rlis_cols import (
     BIKETHERES, BIKETYPS, _derived_trails, _T1320_SQL,
 )
@@ -346,7 +344,7 @@ def media_feature_legs(spark, sf_dir) -> dict:
         # the snapshot has enough, the 7 unioned decode legs launch
         # ~1.75x shuffle-parallelism tasks in total — enough to fill every
         # core, without paying 7 x n python-worker roundtrips for the
-        # many cheap-to-decode slices (per-task mapInPandas overhead
+        # many cheap-to-decode slices (per-task Python map overhead
         # dominated the 7 x 64-task shape)
         n = max(1, int(spark.conf.get("spark.sql.shuffle.partitions")) // 4)
         return {
@@ -395,6 +393,121 @@ def media_feature_legs(spark, sf_dir) -> dict:
             "avi": avi, "wav": wav, "stub": stub}
 
 
+def _png_blob(d: int) -> bytes:
+    from rlis2osm_spark.functions.codecs import encode_png
+
+    w, h = 4 + d % 5, 4 + (d // 5) % 5
+    px = bytes((d * 31 + k) % 256 for k in range(w * h))
+    return encode_png(w, h, px, filter_type=d % 3)
+
+
+def _gif_blob(d: int) -> bytes:
+    from rlis2osm_spark.functions.codecs import encode_gif
+
+    w, h = 4 + d % 6, 4 + (d // 6) % 6
+    px = bytes((d * 37 + k) % 256 for k in range(w * h))
+    return encode_gif(w, h, px, interlace=bool(d % 2))
+
+
+def _bmp_blob(d: int) -> bytes:
+    from rlis2osm_spark.functions.codecs import encode_bmp
+
+    # cycle all four BMP layouts (r6): 24-bit BGR / 8-bit palettized
+    # / BI_RLE8 / BI_BITFIELDS-32 — every mode decodes to B=G=R
+    # replication, so the oracle is 3x the gray sum regardless
+    modes = ("bgr24", "pal8", "rle8", "bf32")
+    w, h = 4 + d % 7, 4 + (d // 7) % 5
+    px = bytes((d * 23 + k * 7) % 256 for k in range(w * h))
+    return encode_bmp(w, h, px, mode=modes[(d // 4) % 4])
+
+
+def _jpeg_blob(d: int) -> bytes:
+    import numpy as np
+
+    from rlis2osm_spark.functions.codecs import (
+        encode_jpeg_color, encode_jpeg_gray, encode_jpeg_progressive)
+
+    bw, bh = 1 + d % 3, 1 + (d // 3) % 3
+    img = np.zeros((bh * 8, bw * 8), dtype=np.uint8)
+    for k in range(bw * bh):
+        by, bx = divmod(k, bw)
+        img[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = \
+            2 * ((d * 13 + k * 29) % 128)
+    # alternate grayscale / 4:4:4 color / 4:2:0 color / PROGRESSIVE
+    # grayscale encoders. Color modes carry REAL chroma (r5):
+    # constant-per-image Cb/Cr = 128 + 17k — 17 is the chroma DC
+    # quant step, so the DC-only chroma blocks round-trip exactly
+    # and the decoded RGB (nearest-upsampled, floor(x+0.5) JFIF
+    # conversion) is analytically predictable per block. Mode 3
+    # (r5) encodes the same DCT-exact blocks with the SOF2
+    # spectral-selection + successive-approximation script, so its
+    # oracle is the plain luma sum — proving the progressive
+    # decoder end-to-end in the oracle gate. (doc_ids here are
+    # multiples of 4, so the mode selector is d//4.)
+    mode = (d // 4) % 4
+    if mode == 0:
+        # every mode-0 doc has d//4 % 4 == 0, so the restart
+        # interval varies with d//16 to keep the DRI/RSTn path
+        # in the gate
+        return encode_jpeg_gray(bw * 8, bh * 8, img.tobytes(),
+                                restart_every=(d // 16) % 4)
+    if mode == 3:
+        return encode_jpeg_progressive(bw * 8, bh * 8, img.tobytes())
+    cb = 128 + 17 * (d % 5 - 2)
+    cr = 128 + 17 * ((d // 5) % 5 - 2)
+    hy = 1 if mode == 1 else 2
+    cw, ch = -(-bw * 8 // hy), -(-bh * 8 // hy)
+    return encode_jpeg_color(
+        bw * 8, bh * 8, img.tobytes(),
+        subsampling="4:4:4" if mode == 1 else "4:2:0",
+        cb_pixels=bytes([cb]) * (cw * ch),
+        cr_pixels=bytes([cr]) * (cw * ch))
+
+
+def _avi_blob(d: int) -> bytes:
+    import numpy as np
+
+    from rlis2osm_spark.functions.codecs import (
+        encode_avi_mjpeg, encode_avi_raw, encode_gif_anim,
+        encode_jpeg_gray)
+
+    n = 2 + d % 3
+    # alternate MJPEG-AVI / uncompressed-DIB AVI / ANIMATED GIF —
+    # the GIF frames are full-canvas draws (disposal=keep), so the
+    # composited canvas after frame f IS frame f and the decoded
+    # sums share the MJPEG oracle (r5)
+    mode = (d // 4) % 3
+    frames = []
+    for f in range(n):
+        img = np.zeros((8, 16), dtype=np.uint8)
+        for k in range(2):
+            img[:, k * 8:(k + 1) * 8] = \
+                2 * ((d * 11 + f * 17 + k * 23) % 128)
+        frames.append(
+            encode_jpeg_gray(16, 8, img.tobytes()) if mode == 0
+            else img.tobytes())
+    if mode == 0:
+        return encode_avi_mjpeg(frames, 16, 8)
+    if mode == 1:
+        return encode_avi_raw(frames, 16, 8)
+    return encode_gif_anim(16, 8, [
+        dict(left=0, top=0, width=16, height=8, pixels=p,
+             disposal=1, interlace=bool((d + i) % 2))
+        for i, p in enumerate(frames)])
+
+
+def _wav_blob(d: int) -> bytes:
+    from rlis2osm_spark.functions.codecs import encode_wav, encode_wav_pcm24
+
+    n = 32 + d % 32
+    # alternate 16-bit and 24-bit PCM, both exact by construction
+    if d % 2 == 0:
+        return encode_wav(
+            [((d * 7 + t * 13) % 2048) - 1024 for t in range(n)])
+    return encode_wav_pcm24(
+        [((d * 11 + t * 17) % (1 << 24)) - (1 << 23) for t in range(n)])
+
+
 def _m1_payload_frames(spark, sf_dir):
     """Synthetic media corpus, (kind, media_ref, payload): one real encoded
     blob per document per format — png/wav/stub over every doc,
@@ -403,169 +516,19 @@ def _m1_payload_frames(spark, sf_dir):
     hundreds of real decode round trips per leg)."""
     docs = load(spark, sf_dir, "documents")
 
-    @F.pandas_udf(BinaryType())
-    def png_payload(doc_ids: pd.Series) -> pd.Series:
-        from rlis2osm_spark.functions.codecs import encode_png
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            w, h = 4 + d % 5, 4 + (d // 5) % 5
-            px = bytes((d * 31 + k) % 256 for k in range(w * h))
-            out.append(encode_png(w, h, px, filter_type=d % 3))
-        return pd.Series(out, dtype=object)
-
-    @F.pandas_udf(BinaryType())
-    def gif_payload(doc_ids: pd.Series) -> pd.Series:
-        from rlis2osm_spark.functions.codecs import encode_gif
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            w, h = 4 + d % 6, 4 + (d // 6) % 6
-            px = bytes((d * 37 + k) % 256 for k in range(w * h))
-            out.append(encode_gif(w, h, px, interlace=bool(d % 2)))
-        return pd.Series(out, dtype=object)
-
-    @F.pandas_udf(BinaryType())
-    def bmp_payload(doc_ids: pd.Series) -> pd.Series:
-        from rlis2osm_spark.functions.codecs import encode_bmp
-
-        # cycle all four BMP layouts (r6): 24-bit BGR / 8-bit palettized
-        # / BI_RLE8 / BI_BITFIELDS-32 — every mode decodes to B=G=R
-        # replication, so the oracle is 3x the gray sum regardless
-        modes = ("bgr24", "pal8", "rle8", "bf32")
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            w, h = 4 + d % 7, 4 + (d // 7) % 5
-            px = bytes((d * 23 + k * 7) % 256 for k in range(w * h))
-            out.append(encode_bmp(w, h, px, mode=modes[(d // 4) % 4]))
-        return pd.Series(out, dtype=object)
-
-    @F.pandas_udf(BinaryType())
-    def jpeg_payload(doc_ids: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from rlis2osm_spark.functions.codecs import (
-            encode_jpeg_color, encode_jpeg_gray, encode_jpeg_progressive)
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            bw, bh = 1 + d % 3, 1 + (d // 3) % 3
-            img = np.zeros((bh * 8, bw * 8), dtype=np.uint8)
-            for k in range(bw * bh):
-                by, bx = divmod(k, bw)
-                img[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = \
-                    2 * ((d * 13 + k * 29) % 128)
-            # alternate grayscale / 4:4:4 color / 4:2:0 color / PROGRESSIVE
-            # grayscale encoders. Color modes carry REAL chroma (r5):
-            # constant-per-image Cb/Cr = 128 + 17k — 17 is the chroma DC
-            # quant step, so the DC-only chroma blocks round-trip exactly
-            # and the decoded RGB (nearest-upsampled, floor(x+0.5) JFIF
-            # conversion) is analytically predictable per block. Mode 3
-            # (r5) encodes the same DCT-exact blocks with the SOF2
-            # spectral-selection + successive-approximation script, so its
-            # oracle is the plain luma sum — proving the progressive
-            # decoder end-to-end in the oracle gate. (doc_ids here are
-            # multiples of 4, so the mode selector is d//4.)
-            mode = (d // 4) % 4
-            if mode == 0:
-                # every mode-0 doc has d//4 % 4 == 0, so the restart
-                # interval varies with d//16 to keep the DRI/RSTn path
-                # in the gate
-                blob = encode_jpeg_gray(bw * 8, bh * 8, img.tobytes(),
-                                        restart_every=(d // 16) % 4)
-            elif mode == 3:
-                blob = encode_jpeg_progressive(bw * 8, bh * 8,
-                                               img.tobytes())
-            else:
-                cb = 128 + 17 * (d % 5 - 2)
-                cr = 128 + 17 * ((d // 5) % 5 - 2)
-                hy = 1 if mode == 1 else 2
-                cw, ch = -(-bw * 8 // hy), -(-bh * 8 // hy)
-                blob = encode_jpeg_color(
-                    bw * 8, bh * 8, img.tobytes(),
-                    subsampling="4:4:4" if mode == 1 else "4:2:0",
-                    cb_pixels=bytes([cb]) * (cw * ch),
-                    cr_pixels=bytes([cr]) * (cw * ch))
-            out.append(blob)
-        return pd.Series(out, dtype=object)
-
-    @F.pandas_udf(BinaryType())
-    def avi_payload(doc_ids: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from rlis2osm_spark.functions.codecs import (
-            encode_avi_mjpeg, encode_avi_raw, encode_gif_anim,
-            encode_jpeg_gray)
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            n = 2 + d % 3
-            # alternate MJPEG-AVI / uncompressed-DIB AVI / ANIMATED GIF —
-            # the GIF frames are full-canvas draws (disposal=keep), so the
-            # composited canvas after frame f IS frame f and the decoded
-            # sums share the MJPEG oracle (r5)
-            mode = (d // 4) % 3
-            frames = []
-            for f in range(n):
-                img = np.zeros((8, 16), dtype=np.uint8)
-                for k in range(2):
-                    img[:, k * 8:(k + 1) * 8] = \
-                        2 * ((d * 11 + f * 17 + k * 23) % 128)
-                frames.append(
-                    encode_jpeg_gray(16, 8, img.tobytes()) if mode == 0
-                    else img.tobytes())
-            if mode == 0:
-                blob = encode_avi_mjpeg(frames, 16, 8)
-            elif mode == 1:
-                blob = encode_avi_raw(frames, 16, 8)
-            else:
-                blob = encode_gif_anim(16, 8, [
-                    dict(left=0, top=0, width=16, height=8, pixels=p,
-                         disposal=1, interlace=bool((d + i) % 2))
-                    for i, p in enumerate(frames)])
-            out.append(blob)
-        return pd.Series(out, dtype=object)
-
-    @F.pandas_udf(BinaryType())
-    def wav_payload(doc_ids: pd.Series) -> pd.Series:
-        from rlis2osm_spark.functions.codecs import (
-            encode_wav, encode_wav_pcm24)
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            n = 32 + d % 32
-            # alternate 16-bit and 24-bit PCM, both exact by construction
-            if d % 2 == 0:
-                blob = encode_wav(
-                    [((d * 7 + t * 13) % 2048) - 1024 for t in range(n)])
-            else:
-                blob = encode_wav_pcm24(
-                    [((d * 11 + t * 17) % (1 << 24)) - (1 << 23)
-                     for t in range(n)])
-            out.append(blob)
-        return pd.Series(out, dtype=object)
+    def payload(encode):
+        return binary_rows_udf(encode)("doc_id").alias("payload")
 
     ref = F.concat(F.lit("doc:"), F.col("doc_id")).alias("media_ref")
     sampled = docs.filter(F.col("doc_id") % 4 == 0)
     legs = [
-        docs.select(F.lit("png").alias("kind"), ref,
-                    png_payload("doc_id").alias("payload")),
-        sampled.select(F.lit("gif").alias("kind"), ref,
-                       gif_payload("doc_id").alias("payload")),
-        sampled.select(F.lit("bmp").alias("kind"), ref,
-                       bmp_payload("doc_id").alias("payload")),
+        docs.select(F.lit("png").alias("kind"), ref, payload(_png_blob)),
+        sampled.select(F.lit("gif").alias("kind"), ref, payload(_gif_blob)),
+        sampled.select(F.lit("bmp").alias("kind"), ref, payload(_bmp_blob)),
         sampled.select(F.lit("jpeg").alias("kind"), ref,
-                       jpeg_payload("doc_id").alias("payload")),
-        sampled.select(F.lit("avi").alias("kind"), ref,
-                       avi_payload("doc_id").alias("payload")),
-        docs.select(F.lit("wav").alias("kind"), ref,
-                    wav_payload("doc_id").alias("payload")),
+                       payload(_jpeg_blob)),
+        sampled.select(F.lit("avi").alias("kind"), ref, payload(_avi_blob)),
+        docs.select(F.lit("wav").alias("kind"), ref, payload(_wav_blob)),
         docs.select(F.lit("stub").alias("kind"), ref,
                     F.col("text").cast("binary").alias("payload")),
     ]
@@ -575,7 +538,7 @@ def _m1_payload_frames(spark, sf_dir):
     # r7 (guide §6 write layout / §2.5 input skew): unioned as-is, each
     # kind lands in its own task-file of the checkpointed snapshot, so a
     # per-kind decode leg reads ALL its payloads from one split and the
-    # mapInPandas decode runs on one core (measured at sf1.0: jpeg leg
+    # mapInArrow decode runs on one core (measured at sf1.0: jpeg leg
     # 7.2s wall == its single-thread decode CPU). Hash-distributing by
     # media_ref interleaves every kind across all shuffle partitions, so
     # every leg's decode parallelizes across the full core count.
@@ -712,6 +675,21 @@ UNION ALL SELECT * FROM stub_leg
 """
 
 
+def _trail_wkb(fid: int) -> bytes:
+    """A derived trail's geometry; every 7th is a two-part
+    MultiLineString, so combine's part explode runs."""
+    from rlis2osm_spark.functions.wkb import (
+        encode_linestring, encode_multilinestring)
+
+    x = float(fid % 1000) * 400.0
+    y = float(fid // 1000 % 100) * 400.0
+    if fid % 7 == 0:
+        return encode_multilinestring(
+            [[(x, y), (x + 100.0, y)],
+             [(x + 100.0, y), (x + 200.0, y + 30.0)]])
+    return encode_linestring([(x, y), (x + 150.0, y + 10.0)])
+
+
 def rlis_combine_full(spark, sf_dir):
     """The full EP2 combine pipeline (streets expand/translate/titlecase +
     bike overlay + trails branch + unionByName) over derived RLIS-shaped
@@ -725,24 +703,8 @@ def rlis_combine_full(spark, sf_dir):
     trails = _derived_trails(spark, sf_dir).withColumnsRenamed(
         {"tkey": "fid"})
 
-    @F.pandas_udf(BinaryType())
-    def tgeom(fids: pd.Series) -> pd.Series:
-        from rlis2osm_spark.functions.wkb import (
-            encode_linestring, encode_multilinestring)
-
-        out = []
-        for fid in fids:
-            x = float(int(fid) % 1000) * 400.0
-            y = float(int(fid) // 1000 % 100) * 400.0
-            if int(fid) % 7 == 0:
-                out.append(encode_multilinestring(
-                    [[(x, y), (x + 100.0, y)],
-                     [(x + 100.0, y), (x + 200.0, y + 30.0)]]))
-            else:
-                out.append(encode_linestring([(x, y), (x + 150.0, y + 10.0)]))
-        return pd.Series(out, dtype=object)
-
-    trails = trails.withColumn("geometry", tgeom("fid"))
+    trails = trails.withColumn("geometry",
+                               binary_rows_udf(_trail_wkb)("fid"))
 
     supp = load(spark, sf_dir, "supplier")
     bikes = supp.select(

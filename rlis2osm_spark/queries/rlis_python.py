@@ -1,4 +1,4 @@
-"""Pandas-UDF / iterative-path queries. Every entry carries an exact
+"""Arrow-UDF / iterative-path queries. Every entry carries an exact
 oracle since r2/r3: the Arrow or iterative hot path itself is not
 ANSI-SQL-expressible, but each query's RESULT is pinned either by an
 independent SQL transcription of the semantics (basename expansion,
@@ -11,22 +11,20 @@ oracle).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType
 
 from rlis2osm_spark.driver_support import ensure_package_on_workers
 from rlis2osm_spark.queries.util import (
-    case_int_map, load, pick, pick_int, sql_int_list)
+    binary_rows_udf, case_int_map, load, pick, pick_int, sql_int_list)
 from rlis2osm_spark.queries import spatial_sql
 from rlis2osm_spark.queries.rlis_cols import DIRS, FTYPES, TYPES, ZLEVS
 
 
 def rlis_basename_expand(spark, sf_dir):
     """P4-P6: positional basename expansion over derived ALL-CAPS names
-    (pandas UDF; goldens in tests/test_expand.py)."""
+    (Arrow UDF; goldens in tests/test_expand.py)."""
     ensure_package_on_workers(spark)
-    from rlis2osm_spark.functions.expand import make_basename_udf
+    from rlis2osm_spark.functions.expand import basename_expand
 
     part = load(spark, sf_dir, "part")
     name = F.upper(
@@ -37,22 +35,22 @@ def rlis_basename_expand(spark, sf_dir):
                     pick(FTYPES, 1 + F.col("p_partkey") % 11)))
     return part.select(
         "p_partkey", name.alias("raw"),
-        make_basename_udf()(name).alias("expanded"))
+        basename_expand(name).alias("expanded"))
 
 
 def rlis_titlecase_names(spark, sf_dir):
-    """P7: titlecase port (pandas UDF). Oracle-checked since r2 as an
+    """P7: titlecase port (Arrow UDF). Oracle-checked since r2 as an
     expected-output oracle: the derived input domain (TPC-H part-name
     words + 'ST') contains no titlecase special cases — no small words,
     apostrophes, Mc-prefixes or mixed-case protections — so the ground
     truth is per-word initcap; the titlecase quirks themselves are
     pinned by tests/test_titlecase.py goldens."""
     ensure_package_on_workers(spark)
-    from rlis2osm_spark.functions.expand import make_titlecase_udf
+    from rlis2osm_spark.functions.expand import titlecase_name
 
     part = load(spark, sf_dir, "part")
     name = F.upper(F.concat_ws(" ", F.col("p_name"), F.lit("ST")))
-    return part.select("p_partkey", make_titlecase_udf()(name).alias("name"))
+    return part.select("p_partkey", titlecase_name(name).alias("name"))
 
 
 def s2_tile_assignment_wkb(spark, sf_dir):
@@ -104,17 +102,15 @@ def _derived_streets(spark, sf_dir):
         y0.alias("_y2"),
     )
 
-    @F.pandas_udf(BinaryType())
-    def seg_wkb(x1: pd.Series, y1: pd.Series, x2: pd.Series, y2: pd.Series) -> pd.Series:
-        from rlis2osm_spark.functions.wkb import encode_linestring
-
-        return pd.Series(
-            [encode_linestring([(a, b), (c, d)])
-             for a, b, c, d in zip(x1, y1, x2, y2)], dtype=object)
-
     return df.withColumn(
-        "geometry", seg_wkb("_x1", "_y1", "_x2", "_y2")
+        "geometry", binary_rows_udf(_seg_wkb)("_x1", "_y1", "_x2", "_y2")
     ).drop("_x1", "_y1", "_x2", "_y2")
+
+
+def _seg_wkb(x1: float, y1: float, x2: float, y2: float) -> bytes:
+    from rlis2osm_spark.functions.wkb import encode_linestring
+
+    return encode_linestring([(x1, y1), (x2, y2)])
 
 
 def rlis_street_pipeline(spark, sf_dir):
@@ -122,7 +118,7 @@ def rlis_street_pipeline(spark, sf_dir):
     streets; per-highway tag counts. Oracle-checked since r2: the histogram
     depends only on TYPE / z-levels (derived names are never null/'unnamed',
     so the residential downgrade can't fire), which SQL transcribes exactly;
-    the pandas-UDF name path stays covered by pytest goldens."""
+    the Arrow-UDF name path stays covered by pytest goldens."""
     from rlis2osm_spark.operators.streets import (
         expand_street_names, translate_streets)
 
@@ -182,7 +178,7 @@ def rlis_dissolve_cc(spark, sf_dir):
     # the translated frame is a CHECKPOINTED stage (r4), as dissolve's
     # input is in the production pipeline (pipeline.convert checkpoints
     # combine before dissolve) — without it the expand/translate
-    # pandas-UDF chain would recompute for every read of it
+    # Arrow-UDF chain would recompute for every read of it
     osm = cached_stage(
         spark, sf_dir, "dissolve_input",
         lambda: translate_streets(

@@ -5,8 +5,11 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import BinaryType
 
 from rlis2osm_spark.plans.iceberg_shim import fingerprint_path
 
@@ -67,6 +70,19 @@ def pick(values, idx_col: Column) -> Column:
 
 def pick_int(values, idx_col: Column) -> Column:
     return F.element_at(spark_int_array(values), idx_col.cast("int"))
+
+
+def binary_rows_udf(encode):
+    """A binary Arrow UDF that calls ``encode`` once per row, with that
+    row's Python values (one per column argument), and returns its bytes:
+    how derived tables get their encoded payloads and geometries."""
+    def rows(*cols: pa.Array) -> pa.Array:
+        return pa.array([encode(*vals)
+                         for vals in zip(*(c.to_pylist() for c in cols))],
+                        pa.binary())
+
+    rows.__name__ = encode.__name__
+    return arrow_udf(rows, BinaryType())
 
 
 def case_map(mapping: dict, col_sql: str, else_sql: str = "NULL") -> str:

@@ -2,7 +2,7 @@
 
 Test/bench runs are single-JVM ``local[N]``; the configs below are the ones
 that matter identically on a 1000-executor cluster: AQE (runtime re-plan +
-skew-join splitting), Arrow for every pandas UDF exchange, explicit shuffle
+skew-join splitting), Arrow for every Python UDF exchange, explicit shuffle
 parallelism, and broadcast threshold tuned so dimension tables broadcast.
 
 PySpark's DataFrame call-site capture is off

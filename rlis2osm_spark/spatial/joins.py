@@ -16,9 +16,10 @@ Design rules:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import StringType
 
 from rlis2osm_spark.spatial.tiles import (
@@ -67,10 +68,10 @@ def point_in_polygon(
         for pid, r in rings
     ]
 
-    @F.pandas_udf(StringType())
-    def pip_udf(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        px = xs.to_numpy(dtype=float)
-        py = ys.to_numpy(dtype=float)
+    @arrow_udf(StringType())
+    def pip_udf(xs: pa.Array, ys: pa.Array) -> pa.Array:
+        px = xs.to_numpy(zero_copy_only=False)
+        py = ys.to_numpy(zero_copy_only=False)
         out = np.full(len(px), None, dtype=object)
         unassigned = np.ones(len(px), dtype=bool)
         for pid, ring in rings:
@@ -79,7 +80,7 @@ def point_in_polygon(
             hit = unassigned & _ray_cast(px, py, ring)
             out[hit] = pid
             unassigned &= ~hit
-        return pd.Series(out)
+        return pa.array(out, pa.string())
 
     # native bbox prefilter over the union of polygon bboxes
     xs_min = min(r[:, 0].min() for _, r in rings)
@@ -253,10 +254,12 @@ def polygon_cell_join(
     pix, piy = grid_coords(F.col("x"), F.col("y"), res, grid)
     pts = points.withColumns({"cx": pix, "cy": piy})
 
-    @F.pandas_udf(BooleanType())
-    def inside(xs_s: pd.Series, ys_s: pd.Series, rings: pd.Series) -> pd.Series:
+    @arrow_udf(BooleanType())
+    def inside(xs_s: pa.Array, ys_s: pa.Array, rings: pa.Array) -> pa.Array:
         out = []
-        for x, y, ring in zip(xs_s, ys_s, rings):
+        for x, y, ring in zip(xs_s.to_numpy(zero_copy_only=False),
+                              ys_s.to_numpy(zero_copy_only=False),
+                              rings.to_pylist()):
             if ring is None:  # unmatched left-join row (no candidate cell)
                 out.append(False)
                 continue
@@ -264,7 +267,7 @@ def polygon_cell_join(
             if not (r[0] == r[-1]).all():
                 r = np.vstack([r, r[:1]])
             out.append(bool(_ray_cast(np.array([x]), np.array([y]), r)[0]))
-        return pd.Series(out)
+        return pa.array(out, pa.bool_())
 
     cands = pts.join(cells, ["cx", "cy"], "left")
     hits = cands.withColumn(

@@ -1,5 +1,6 @@
 """Tests for dedup / similarity / textstats / multimodal operators."""
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -308,10 +309,16 @@ def test_lsh_bucket_udf_high_dim(spark):
     base = rng.randn(20, dim)
     rows = [(i, [float(x) for x in base[i]]) for i in range(20)]
     rows += [(100 + i, [float(x) for x in base[i]]) for i in range(20)]  # dups
+    # a null vector and a wrong-length one get all-zero buckets
+    rows += [(200, None), (201, [1.0] * (dim - 1))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     bucket = similarity.lsh_table_buckets_udf(dim, n_planes, n_tables)
     out = {r.vec_id: list(r.b) for r in
            df.select("vec_id", bucket("embedding").alias("b")).collect()}
+    assert out[200] == out[201] == [0] * n_tables
+    # an empty frame, and an empty batch given to the kernel, give no rows
+    assert df.filter("vec_id < 0").select(bucket("embedding")).collect() == []
+    assert len(bucket.func(pa.array([], pa.list_(pa.float64())))) == 0
     for i in range(20):
         assert out[i] == out[100 + i]  # identical vector -> identical bucket
     assert len({tuple(b) for b in out.values()}) > 1  # and buckets do spread

@@ -7,13 +7,17 @@
 3. every defaulted parameter of a package function must be passed by some
    call outside ``tests/``, unless it is on the commented
    ``TEST_ONLY_PARAMS`` allowlist below: an option only tests set is a
-   second configuration nothing else runs.
+   second configuration nothing else runs;
+4. no package file references ``pandas_udf``, ``mapInPandas`` or
+   ``applyInPandas``: every Python UDF and map kernel takes and returns
+   Arrow, so there is one Python boundary.
 
 A reference is a name, an attribute, an imported name (or its alias) or a
-string constant that is exactly the identifier (``getattr``/registry
-lookups) and is not the argument of ``.alias(...)`` (a column name is not
-a lookup), found in the package, the tests, the scripts, the benchmark or
-the Spark entry point. A call passes a parameter when it names it as a
+string constant that is looked up by name: the name argument of
+``getattr``/``hasattr``. Any other string, such as a column name read by
+``F.col``, ``select`` or ``.alias``, is not a reference. References are
+found in the package, the tests, the scripts, the benchmark or the Spark
+entry point. A call passes a parameter when it names it as a
 keyword, reaches its position, or spreads ``*args``/``**kwargs``; calls
 match functions by name only (a class name calls its ``__init__``).
 Name matching is by identifier only, so a guard pass means "possibly
@@ -74,9 +78,9 @@ def _py_files(path: str) -> list[str]:
 
 
 def _names(node: ast.AST):
-    aliases = {id(a) for n in ast.walk(node)
-               if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
-               and n.func.attr == "alias" for a in n.args}
+    looked_up = {id(n.args[1]) for n in ast.walk(node)
+                 if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+                 and n.func.id in ("getattr", "hasattr") and len(n.args) > 1}
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
             yield n.id
@@ -86,8 +90,7 @@ def _names(node: ast.AST):
             yield n.name.rsplit(".", 1)[-1]
             if n.asname:
                 yield n.asname
-        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
-              and n.value.isidentifier() and id(n) not in aliases):
+        elif isinstance(n, ast.Constant) and id(n) in looked_up:
             yield n.value
 
 
@@ -124,7 +127,7 @@ def _scan():
     as (file, name), every reference as name -> {(file, enclosing
     top-level definition or None)}, the package's defaulted parameters as
     (file, callable, param, positional index), and every call as
-    name -> [(file, positional count, keyword names, spreads)]."""
+    name -> [(file, line, positional count, keyword names, spreads)]."""
     defs, refs, params, calls = [], {}, [], {}
     for path in SEARCH:
         for f in _py_files(path):
@@ -147,7 +150,8 @@ def _scan():
                 elif isinstance(n, ast.Call):
                     name, *rest = _call(n)
                     if name:
-                        calls.setdefault(name, []).append((f, *rest))
+                        calls.setdefault(name, []).append(
+                            (f, n.lineno, *rest))
     return defs, refs, params, calls
 
 
@@ -179,7 +183,7 @@ def test_no_parameter_only_tests_set():
         passed = any(
             not g.startswith(TESTS + os.sep)
             and (spreads or param in kws or (idx is not None and n_pos > idx))
-            for g, n_pos, kws, spreads in calls.get(fn, []))
+            for g, _line, n_pos, kws, spreads in calls.get(fn, []))
         if not passed:
             test_only.add(f"{os.path.relpath(f, PKG)}:{fn}({param})")
     new = sorted(test_only - TEST_ONLY_PARAMS)
@@ -188,3 +192,17 @@ def test_no_parameter_only_tests_set():
     stale = sorted(TEST_ONLY_PARAMS - test_only)
     assert not stale, (
         f"no longer test-only, drop from TEST_ONLY_PARAMS: {stale}")
+
+
+def test_one_python_boundary():
+    _defs, refs, _params, calls = _scan()
+    forms = ("pandas_udf", "mapInPandas", "applyInPandas")
+    in_pkg = PKG + os.sep
+    found = sorted(f"{os.path.relpath(f, ROOT)}:{owner}" for name in forms
+                   for f, owner in refs.get(name, ()) if f.startswith(in_pkg))
+    sites = sorted(f"{os.path.relpath(f, ROOT)}:{line} {name}"
+                   for name in forms for f, line, *_ in calls.get(name, [])
+                   if f.startswith(in_pkg))
+    assert not found, (
+        f"pandas UDF forms referenced in {found}; call sites ({len(sites)}): "
+        f"{sites}; take and return Arrow (arrow_udf, mapInArrow) instead")

@@ -5,12 +5,14 @@ import pandas as pd
 import pytest
 
 from rlis2osm_spark.functions.expand import (
+    basename_expand,
     build_positional_dicts,
     expand_basename_py,
     expand_direction,
     expand_type,
-    make_basename_udf,
+    titlecase_name,
 )
+from rlis2osm_spark.functions.titlecase_port import rlis_titlecase
 
 DICTS = build_positional_dicts()
 
@@ -63,7 +65,13 @@ def test_direction_and_type_column(spark):
 
 
 def test_basename_udf_matches_py(spark):
-    names = ["MT HOOD ST", "ST JOHNS", None, "GOING/GREELEY CT", "UNNAMED"]
-    df = spark.createDataFrame(pd.DataFrame({"n": names}))
-    out = [r.e for r in df.select(make_basename_udf()(df.n).alias("e")).collect()]
-    assert out == [expand_basename_py(n, DICTS) for n in names]
+    # repeated names and nulls in one Arrow batch: each distinct name runs
+    # once and is taken back to every row that holds it
+    names = ["MT HOOD ST", "ST JOHNS", None, "GOING/GREELEY CT", "UNNAMED",
+             "MT HOOD ST", None, "ST JOHNS", "MT HOOD ST", ""]
+    df = spark.createDataFrame(pd.DataFrame({"n": names})).coalesce(1)
+    out = df.select(basename_expand(df.n).alias("e"),
+                    titlecase_name(df.n).alias("t")).collect()
+    assert [r.e for r in out] == [expand_basename_py(n, DICTS) for n in names]
+    assert [r.t for r in out] == [rlis_titlecase(n) for n in names]
+    assert out[2].e is None and out[2].t == ""  # null -> null, null -> ''
