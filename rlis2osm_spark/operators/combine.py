@@ -3,10 +3,9 @@
 
 Spark shape (SURVEY §3 EP2): two declarative branches unioned by name —
 Catalyst prunes columns into both scans and the union is a zero-shuffle
-narrow op. The multipart explode (E1, main.py:131-138) checks the WKB
-geometry-type word *natively* so single-part rows (the vast majority) never
-leave the JVM; only genuine MultiLineStrings pass through the Arrow-batched
-part-splitter.
+narrow op. The multipart explode (E1, main.py:131-138) sends every kept
+trail's geometry through one Arrow-batched part-splitter, which passes a
+single-part LineString through unchanged.
 """
 
 from __future__ import annotations
@@ -27,8 +26,6 @@ from rlis2osm_spark.operators.trails import (
 )
 from rlis2osm_spark.schemas import COMBINED_FIELDS
 
-# WKB little-endian type words
-_LINESTRING_TYPE = bytes([1, 2, 0, 0, 0])
 _INT_FIELDS = {"layer"}
 
 
@@ -41,17 +38,15 @@ def _explode_parts_udf(geoms: pa.Array) -> pa.Array:
 def explode_multipart(df: DataFrame) -> DataFrame:
     """E1: one row per LineString part, order-stable via posexplode.
 
-    Emits ``part_idx`` so downstream ids stay deterministic. Single-part rows
-    short-circuit on a native prefix compare of the WKB header. Null-geometry
-    rows are KEPT (posexplode_outer) rather than silently dropped — the
-    dissolve stage raises on them and the sink counts them, so row loss is
-    always loud (ADVICE r1).
+    Emits ``part_idx`` so downstream ids stay deterministic. Every row goes
+    through the part splitter: Spark evaluates a Python UDF on every row of
+    its input even inside a ``when`` branch, so a native single-part
+    short-circuit would save nothing. Null-geometry rows are KEPT
+    (posexplode_outer) rather than silently dropped — the dissolve stage
+    raises on them and the sink counts them, so row loss is always loud.
     """
-    g = F.col("geometry")
-    is_single = F.substring(g, 1, 5) == F.lit(_LINESTRING_TYPE)
-    parts = F.when(is_single, F.array(g)).otherwise(_explode_parts_udf(g))
     return (
-        df.withColumn("_parts", parts)
+        df.withColumn("_parts", _explode_parts_udf(F.col("geometry")))
         .select("*", F.posexplode_outer("_parts").alias("part_idx", "_part_geom"))
         .drop("_parts", "geometry")
         .withColumnRenamed("_part_geom", "geometry")

@@ -8,17 +8,20 @@ Video and audio always decode for real; images decode for real with
 deterministic fake decoder over the raw bytes (no codec needed; m1's
 ``stub`` leg measures that plumbing alone).
 
-Real decoding covers PNG (stdlib zlib/struct — gray/RGB/palette/alpha),
-GIF (pure-Python LZW, r4), BMP, JPEG — baseline/extended sequential and
-progressive huffman (SOF0/1/2, 8-bit; pure Python + numpy huffman/DCT,
-r4; chroma + progressive r5), grayscale AND interleaved color, any
-sampling layout, full-RGB output with nearest chroma upsampling — video
-(MJPEG-AVI, uncompressed DIB AVI, animated GIF) and PCM/float WAV (struct
-over RIFF) via functions/codecs.py. Every other JPEG frame type
-(lossless, arithmetic, hierarchical, 12-bit, CMYK), non-WAV audio,
-compressed WAV and compressed video codecs (MS-RLE/MSVC/Cinepak/H.26x/...)
-raise ``NotImplementedError`` — the exact seam where PIL / pyav /
-soundfile plug in.
+Real decoding (functions/codecs.py) covers the modes the synthetic media
+query m1 writes: 8-bit grayscale PNG (all five filters), 8-bit GIF
+(interlaced or not; animations whose frames keep the canvas), BMP
+(24-bit, 8-bit plain or BI_RLE8, 32-bit plain or BI_BITFIELDS), 8-bit
+huffman JPEG (sequential gray or 3-component color at any sampling layout
+with full-RGB output by nearest chroma upsampling, single-component
+progressive), video (MJPEG-AVI, uncompressed DIB AVI, animated GIF) and
+mono PCM16/PCM24 WAV. Everything else — other PNG depths and color types
+and Adam7, GIF transparency/local palettes/restore disposals, 1/4/16-bit
+BMP, RLE4 and embedded JPEG/PNG, lossless/arithmetic/hierarchical/12-bit/
+CMYK JPEG and interleaved progressive DC scans, float, 8-bit, multichannel
+and compressed WAV, non-WAV audio and compressed video codecs
+(MS-RLE/MSVC/Cinepak/H.26x/...) — raises ``NotImplementedError``: the
+exact seam where PIL / pyav / soundfile plug in.
 
 Scale notes: each ``mapInArrow`` batch is one Arrow RecordBatch of binary
 blobs, read and written as Arrow with no pandas step; cap batch bytes with
@@ -112,45 +115,42 @@ def _map_blobs(media: DataFrame, blob_rows, schema: StructType) -> DataFrame:
     return media.select("media_ref", "payload").mapInArrow(batches, schema)
 
 
+def _image_rows(b: bytes, decode_stub: bool) -> list[tuple]:
+    """One image blob's feature row: the fake decoder when ``decode_stub``,
+    else the real codec for the sniffed format."""
+    fmt = _sniff(b)
+    if decode_stub:
+        w, h, feat = _fake_decode(b)
+        return [(len(b), fmt, w, h, None, feat, None)]
+    from rlis2osm_spark.functions.codecs import (
+        decode_bmp, decode_gif_frames, decode_jpeg, decode_png_ex)
+
+    if fmt == "jpeg":
+        w, h, nch, px = decode_jpeg(b)
+    elif fmt == "png":
+        w, h, nch, px = decode_png_ex(b)
+    elif fmt == "bmp":
+        w, h, nch, px = decode_bmp(b)
+    elif fmt == "gif":  # a still image is an animation's first frame
+        w, h, frames = decode_gif_frames(b)
+        nch, px = 1, frames[0]
+    else:
+        raise NotImplementedError(
+            f"real image decoding for {fmt!r} requires an image codec "
+            "library; plug PIL/pyav in here (8-bit gray png, gif, bmp "
+            "and 8-bit huffman jpeg decode natively via "
+            "functions/codecs.py)")
+    arr = np.frombuffer(px, dtype=np.uint8)
+    return [(len(b), fmt, w, h, nch, _histogram(arr), int(arr.sum()))]
+
+
 def extract_image_features(
     media: DataFrame,
     decode_stub: bool = True,
 ) -> DataFrame:
     """media(media_ref, payload, ...) -> per-blob features, one Arrow pass."""
-
-    def blob_rows(b: bytes) -> list[tuple]:
-        fmt = _sniff(b)
-        if decode_stub:
-            w, h, feat = _fake_decode(b)
-            return [(len(b), fmt, w, h, None, feat, None)]
-        if fmt not in ("png", "gif", "jpeg", "bmp"):
-            raise NotImplementedError(
-                f"real image decoding for {fmt!r} requires an image "
-                "codec library; plug PIL/pyav in here (png, gif, "
-                "bmp and baseline/progressive jpeg — grayscale or "
-                "full-RGB color — decode natively via "
-                "functions/codecs.py)")
-        from rlis2osm_spark.functions.codecs import (
-            decode_bmp, decode_gif, decode_jpeg, decode_png_ex)
-
-        if fmt == "jpeg":
-            # 8-bit sequential/progressive huffman, gray or
-            # full-RGB color (r5, nearest chroma upsample); every
-            # other frame type raises NotImplementedError
-            w, h, nch, px = decode_jpeg(b)
-        elif fmt == "png":
-            # gray/RGB/palette/alpha at depths 1-8, Adam7 (r5);
-            # 16-bit raises NotImplementedError
-            w, h, nch, px = decode_png_ex(b)
-        elif fmt == "bmp":
-            w, h, nch, px = decode_bmp(b)
-        else:
-            w, h, px = decode_gif(b)
-            nch = 1
-        arr = np.frombuffer(px, dtype=np.uint8)
-        return [(len(b), fmt, w, h, nch, _histogram(arr), int(arr.sum()))]
-
-    return _map_blobs(media, blob_rows, IMAGE_FEATURE_SCHEMA)
+    return _map_blobs(media, lambda b: _image_rows(b, decode_stub),
+                      IMAGE_FEATURE_SCHEMA)
 
 
 VIDEO_FRAME_SCHEMA = StructType([
@@ -163,42 +163,39 @@ VIDEO_FRAME_SCHEMA = StructType([
 ])
 
 
-def extract_video_frames(media: DataFrame) -> DataFrame:
-    """REAL video frame sampling + decode (r4; DIB + animated GIF r5):
-    parse the container, take every ``FRAME_STRIDE``-th frame, decode each —
-    AVI/MJPEG through the baseline JPEG decoder (px_sum = luma sum),
-    AVI uncompressed 'DIB ' as bottom-up 24-bit BGR (px_sum over all RGB
-    samples), and animated GIF as fully-composited canvas frames
-    (transparency + disposal methods honored, px_sum = gray canvas sum)
-    -> one row per sampled frame with exact decoded pixel sums. One
-    Arrow pass; no per-pixel Python (numpy inside the batch). Other
-    codecs raise NotImplementedError from the codec layer — the pyav
-    seam."""
+def _video_rows(b: bytes) -> list[tuple]:
+    """Every ``FRAME_STRIDE``-th frame of one video blob, decoded."""
+    from rlis2osm_spark.functions.codecs import (
+        decode_avi_frames, decode_dib_frame, decode_gif_frames, decode_jpeg)
 
-    def blob_rows(b: bytes) -> list[tuple]:
-        from rlis2osm_spark.functions.codecs import (
-            decode_avi_frames, decode_dib_frame, decode_gif_frames,
-            decode_jpeg_gray)
-
-        if b[:4] == b"GIF8":
-            w, h, frames = decode_gif_frames(b)
-            codec = "gif"
+    if b[:4] == b"GIF8":
+        w, h, frames = decode_gif_frames(b)
+        codec = "gif"
+    else:
+        w, h, codec, frames = decode_avi_frames(b)
+    rows = []
+    for idx in range(0, len(frames), FRAME_STRIDE):
+        if codec == "gif":
+            fw, fh, px = w, h, frames[idx]
+        elif codec == "dib":
+            fw, fh, _nch, px = decode_dib_frame(frames[idx], w, h)
         else:
-            w, h, codec, frames = decode_avi_frames(b)
-        rows = []
-        for idx in range(0, len(frames), FRAME_STRIDE):
-            if codec == "gif":
-                fw, fh, px = w, h, frames[idx]
-            elif codec == "dib":
-                fw, fh, _nch, px = decode_dib_frame(frames[idx], w, h)
-            else:
-                fw, fh, px = decode_jpeg_gray(frames[idx])
-            arr = np.frombuffer(px, dtype=np.uint8)
-            rows.append((len(frames), idx, fw, fh,
-                         int(arr.sum(dtype=np.int64))))
-        return rows
+            fw, fh, _nch, px = decode_jpeg(frames[idx])
+        arr = np.frombuffer(px, dtype=np.uint8)
+        rows.append((len(frames), idx, fw, fh, int(arr.sum(dtype=np.int64))))
+    return rows
 
-    return _map_blobs(media, blob_rows, VIDEO_FRAME_SCHEMA)
+
+def extract_video_frames(media: DataFrame) -> DataFrame:
+    """REAL video frame sampling + decode: parse the container, take every
+    ``FRAME_STRIDE``-th frame, decode each — AVI/MJPEG through the JPEG
+    decoder (px_sum = gray sum), AVI uncompressed 'DIB ' as bottom-up
+    24-bit BGR (px_sum over all RGB samples), and animated GIF as
+    composited canvas frames (px_sum = gray canvas sum) -> one row per
+    sampled frame with exact decoded pixel sums. One Arrow pass; no
+    per-pixel Python (numpy inside the batch). Other codecs raise
+    NotImplementedError from the codec layer — the pyav seam."""
+    return _map_blobs(media, _video_rows, VIDEO_FRAME_SCHEMA)
 
 
 AUDIO_FEATURE_SCHEMA = StructType([
@@ -214,48 +211,40 @@ AUDIO_FEATURE_SCHEMA = StructType([
 ])
 
 
+def _audio_rows(b: bytes) -> list[tuple]:
+    """One RIFF/WAVE blob's windowed energy features and exact sample
+    stats."""
+    from rlis2osm_spark.functions.codecs import decode_wav
+
+    # check the full RIFF/WAVE signature: a RIFF container that is not
+    # WAVE (e.g. RIFF/AVI) must hit this seam, not a mid-job ValueError
+    # from decode_wav
+    if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+        raise NotImplementedError(
+            "real audio decoding for non-WAV payloads requires a codec "
+            "library; plug soundfile/torchaudio in here (mono PCM16 and "
+            "PCM24 WAV decode natively via functions/codecs.py)")
+    s = np.asarray(decode_wav(b)[1], dtype=np.int64)
+    sig = s.astype("float32")
+    n_win = min(max(len(sig) // AUDIO_WINDOW, 1), MAX_WINDOWS)
+    used = (sig[: n_win * AUDIO_WINDOW]
+            if len(sig) >= AUDIO_WINDOW else sig)
+    if len(used) >= AUDIO_WINDOW:
+        w = used.reshape(n_win, AUDIO_WINDOW)
+        rms = np.sqrt((w * w).mean(axis=1))
+    else:
+        rms = np.array([np.sqrt((used * used).mean())
+                        if len(used) else 0.0], dtype="float32")
+        n_win = 1
+    zc = int(np.count_nonzero(np.diff(np.signbit(sig))))
+    return [(len(b), n_win, [float(x) for x in rms], zc, len(s),
+             int(np.abs(s).sum()), int(np.abs(s).max()) if len(s) else 0)]
+
+
 def extract_audio_features(media: DataFrame) -> DataFrame:
     """Audio: RIFF/WAVE payload -> decoded samples -> windowed energy
     features plus exact sample stats, one Arrow pass. Non-WAV payloads
     raise NotImplementedError — the seam where a codec library
     (soundfile/torchaudio) plugs in. Vectorized numpy per batch — no
     per-sample Python."""
-
-    def blob_rows(b: bytes) -> list[tuple]:
-        from rlis2osm_spark.functions.codecs import decode_wav
-
-        # check the full RIFF/WAVE signature: a RIFF container
-        # that is not WAVE (e.g. RIFF/AVI) must hit this seam,
-        # not a mid-job ValueError from decode_wav (ADVICE r3)
-        if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-            raise NotImplementedError(
-                "real audio decoding for non-WAV payloads "
-                "requires a codec library; plug soundfile/"
-                "torchaudio in here (PCM and float32 WAV "
-                "decode natively via functions/codecs.py)")
-        _, samples = decode_wav(b)
-        s = np.asarray(samples)
-        if s.dtype.kind != "f":  # integer PCM: exact features
-            s = s.astype(np.int64)
-            extra = (len(s),
-                     int(np.abs(s).sum()) if len(s) else 0,
-                     int(np.abs(s).max()) if len(s) else 0)
-        else:  # float32 WAV: round to the int feature contract
-            extra = (len(s),
-                     int(round(float(np.abs(s).sum()))) if len(s) else 0,
-                     int(round(float(np.abs(s).max()))) if len(s) else 0)
-        sig = s.astype("float32")
-        n_win = min(max(len(sig) // AUDIO_WINDOW, 1), MAX_WINDOWS)
-        used = (sig[: n_win * AUDIO_WINDOW]
-                if len(sig) >= AUDIO_WINDOW else sig)
-        if len(used) >= AUDIO_WINDOW:
-            w = used.reshape(n_win, AUDIO_WINDOW)
-            rms = np.sqrt((w * w).mean(axis=1))
-        else:
-            rms = np.array([np.sqrt((used * used).mean())
-                            if len(used) else 0.0], dtype="float32")
-            n_win = 1
-        zc = int(np.count_nonzero(np.diff(np.signbit(sig))))
-        return [(len(b), n_win, [float(x) for x in rms], zc, *extra)]
-
-    return _map_blobs(media, blob_rows, AUDIO_FEATURE_SCHEMA)
+    return _map_blobs(media, _audio_rows, AUDIO_FEATURE_SCHEMA)

@@ -473,7 +473,7 @@ def _avi_blob(d: int) -> bytes:
 
     n = 2 + d % 3
     # alternate MJPEG-AVI / uncompressed-DIB AVI / ANIMATED GIF —
-    # the GIF frames are full-canvas draws (disposal=keep), so the
+    # the GIF frames are full-canvas draws (disposal "keep"), so the
     # composited canvas after frame f IS frame f and the decoded
     # sums share the MJPEG oracle (r5)
     mode = (d // 4) % 3
@@ -492,7 +492,7 @@ def _avi_blob(d: int) -> bytes:
         return encode_avi_raw(frames, 16, 8)
     return encode_gif_anim(16, 8, [
         dict(left=0, top=0, width=16, height=8, pixels=p,
-             disposal=1, interlace=bool((d + i) % 2))
+             interlace=bool((d + i) % 2))
         for i, p in enumerate(frames)])
 
 

@@ -1,5 +1,6 @@
-"""Round-trip + spec-conformance tests for the stdlib PNG/WAV codecs
-(functions/codecs.py) — no Spark session needed."""
+"""Round-trip + spec-conformance tests for the media codecs
+(functions/codecs.py), the rejection of every mode they do not decode,
+and the guard that m1's own payloads reach every line they keep."""
 
 import struct
 import zlib
@@ -7,7 +8,8 @@ import zlib
 import pytest
 
 from rlis2osm_spark.functions.codecs import (
-    PNG_SIG, _chunk, decode_png_ex, decode_wav, encode_png, encode_wav)
+    PNG_SIG, _chunk, decode_png_ex, decode_wav, encode_jpeg_gray, encode_png,
+    encode_wav)
 
 
 def _pixels(w, h, seed=7):
@@ -68,22 +70,17 @@ def test_png_rejects_unsupported():
         data = (PNG_SIG + _chunk(b"IHDR", deep_ihdr) + _chunk(b"IEND", b""))
         with pytest.raises(NotImplementedError, match="16-bit PNG"):
             decode_png_ex(data)
-    # a palette image without PLTE is malformed, loudly
-    pal_ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0)
-    data = (PNG_SIG + _chunk(b"IHDR", pal_ihdr) + _chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="PLTE"):
-        decode_png_ex(data)
     # a supported header with NO IDAT is malformed input, not a zlib crash
-    rgb_ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
-    data = (PNG_SIG + _chunk(b"IHDR", rgb_ihdr) + _chunk(b"IEND", b""))
+    gray_ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 0, 0, 0, 0)
+    data = (PNG_SIG + _chunk(b"IHDR", gray_ihdr) + _chunk(b"IEND", b""))
     with pytest.raises(ValueError, match="IDAT"):
         decode_png_ex(data)
 
 
 def test_wav_roundtrip_and_clamp():
     samples = [0, 1, -1, 32767, -32768, 12345, -20000]
-    rate, out = decode_wav(encode_wav(samples, 44100))
-    assert rate == 44100 and out == samples
+    rate, out = decode_wav(encode_wav(samples))
+    assert rate == 8000 and out == samples
     # out-of-range inputs clamp rather than wrap
     _, clamped = decode_wav(encode_wav([99999, -99999]))
     assert clamped == [32767, -32768]
@@ -92,9 +89,9 @@ def test_wav_roundtrip_and_clamp():
 def test_wav_rejects_unsupported():
     with pytest.raises(ValueError):
         decode_wav(b"RIFX....nope")
-    # 6-channel PCM decodes since r6 — the seam is every compressed
-    # format tag (MS-ADPCM = 2, A-law = 6, mu-law = 7, IMA-ADPCM = 0x11,
-    # GSM = 0x31) and absurd channel counts
+    # every compressed format tag (MS-ADPCM = 2, A-law = 6, mu-law = 7,
+    # IMA-ADPCM = 0x11, GSM = 0x31) and absurd channel counts hit the
+    # seam
     for tag, bits in ((2, 4), (6, 8), (7, 8), (0x11, 4), (0x31, 0)):
         fmt = struct.pack("<HHIIHH", tag, 1, 8000, 4000, 1, bits)
         body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
@@ -130,14 +127,10 @@ def test_png_roundtrip_property(w, h, ft, seed):
 
 
 @settings(max_examples=150, deadline=None, derandomize=True)
-@given(
-    samples=st.lists(st.integers(min_value=-32768, max_value=32767),
-                     min_size=0, max_size=400),
-    rate=st.sampled_from([8000, 16000, 44100]),
-)
-def test_wav_roundtrip_property(samples, rate):
-    got_rate, got = decode_wav(encode_wav(samples, rate))
-    assert got_rate == rate and got == samples
+@given(samples=st.lists(st.integers(min_value=-32768, max_value=32767),
+                        min_size=0, max_size=400))
+def test_wav_roundtrip_property(samples):
+    assert decode_wav(encode_wav(samples)) == (8000, samples)
 
 
 @settings(max_examples=100, deadline=None, derandomize=True)
@@ -163,10 +156,11 @@ def test_xxh64_matches_streamed_identity(data, seed):
 @pytest.mark.parametrize("w,h", [(1, 1), (3, 7), (16, 16), (40, 13)])
 @pytest.mark.parametrize("interlace", [False, True])
 def test_gif_roundtrip(w, h, interlace):
-    from rlis2osm_spark.functions.codecs import decode_gif, encode_gif
+    from rlis2osm_spark.functions.codecs import decode_gif_frames, encode_gif
 
     px = _pixels(w, h)
-    assert decode_gif(encode_gif(w, h, px, interlace=interlace)) == (w, h, px)
+    assert decode_gif_frames(encode_gif(w, h, px, interlace=interlace)) == \
+        (w, h, [px])
 
 
 def test_gif_decodes_real_compressed_stream():
@@ -176,7 +170,7 @@ def test_gif_decodes_real_compressed_stream():
     import struct
 
     from rlis2osm_spark.functions.codecs import (
-        _GIF_GRAY_PALETTE, decode_gif)
+        _GIF_GRAY_PALETTE, decode_gif_frames)
 
     def compress(min_code, data):
         clear, eoi = 1 << min_code, (1 << min_code) + 1
@@ -222,7 +216,8 @@ def test_gif_decodes_real_compressed_stream():
         body.append(len(c))
         body += c
     body.append(0)
-    assert decode_gif(head + bytes(body) + b"\x3B") == (100, 50, data)
+    assert decode_gif_frames(head + bytes(body) + b"\x3B") == \
+        (100, 50, [data])
 
 
 def test_gif_skips_extensions_and_maps_palette():
@@ -230,15 +225,16 @@ def test_gif_skips_extensions_and_maps_palette():
     palettes map through the exact integer luma."""
     import struct
 
-    from rlis2osm_spark.functions.codecs import decode_gif, encode_gif
+    from rlis2osm_spark.functions.codecs import decode_gif_frames, encode_gif
 
     g = encode_gif(4, 4, _pixels(4, 4))
     # splice a graphic-control extension between the palette and the image
     split = 13 + 768
     ext = b"\x21\xf9\x04\x00\x00\x00\x00\x00"
-    assert decode_gif(g[:split] + ext + g[split:]) == decode_gif(g)
+    assert decode_gif_frames(g[:split] + ext + g[split:]) == \
+        decode_gif_frames(g)
 
-    # 2-entry local palette: red (luma 76) and white (luma 255).
+    # 2-entry global palette: red (luma 76) and white (luma 255).
     # Spec-minimum LZW code size is 2 (clear=4, eoi=5, initial width 3);
     # the width grows to 4 bits exactly when next_code reaches 8.
     pal = bytes((255, 0, 0)) + bytes((255, 255, 255))
@@ -254,22 +250,22 @@ def test_gif_skips_extensions_and_maps_palette():
             bitlen -= 8
     if bitlen:
         packed.append(bitbuf & 0xFF)
-    raw = (b"GIF87a" + struct.pack("<HHBBB", 2, 2, 0x00, 0, 0)
-           + b"\x2C" + struct.pack("<HHHHB", 0, 0, 2, 2, 0x80) + pal
+    raw = (b"GIF87a" + struct.pack("<HHBBB", 2, 2, 0x80, 0, 0) + pal
+           + b"\x2C" + struct.pack("<HHHHB", 0, 0, 2, 2, 0)
            + b"\x02" + bytes([len(packed)]) + bytes(packed) + b"\x00\x3B")
-    assert decode_gif(raw) == (2, 2, bytes((76, 255, 76, 255)))
+    assert decode_gif_frames(raw) == (2, 2, [bytes((76, 255, 76, 255))])
 
 
 def test_gif_rejects_unsupported():
-    from rlis2osm_spark.functions.codecs import decode_gif, encode_gif
+    from rlis2osm_spark.functions.codecs import decode_gif_frames, encode_gif
 
     with pytest.raises(ValueError):
-        decode_gif(b"NOTAGIF")
+        decode_gif_frames(b"NOTAGIF")
     with pytest.raises(ValueError):
         encode_gif(2, 2, b"abc")  # wrong pixel count
     truncated = encode_gif(4, 4, _pixels(4, 4))[:20]
     with pytest.raises((ValueError, struct.error)):
-        decode_gif(truncated)
+        decode_gif_frames(truncated)
 
 
 def test_image_seam_routes_gif_and_audio_seam_rejects_avi(spark):
@@ -319,12 +315,12 @@ def test_jpeg_exact_on_even_constant_blocks(bw, bh, restart_every):
     import numpy as np
 
     from rlis2osm_spark.functions.codecs import (
-        decode_jpeg_gray, encode_jpeg_gray)
+        decode_jpeg, encode_jpeg_gray)
 
     img = _const_block_image(bw, bh, seed=11)
     data = encode_jpeg_gray(bw * 8, bh * 8, img.tobytes(),
                             restart_every=restart_every)
-    w, h, px = decode_jpeg_gray(data)
+    w, h, _, px = decode_jpeg(data)
     assert (w, h) == (bw * 8, bh * 8)
     assert np.array_equal(np.frombuffer(px, np.uint8).reshape(h, w), img)
 
@@ -336,12 +332,12 @@ def test_jpeg_lossy_bound_on_smooth_image():
     import numpy as np
 
     from rlis2osm_spark.functions.codecs import (
-        decode_jpeg_gray, encode_jpeg_gray)
+        decode_jpeg, encode_jpeg_gray)
 
     xx, yy = np.meshgrid(np.arange(64), np.arange(48))
     img = (128 + 60 * np.sin(xx / 10) + 50 * np.cos(yy / 9)
            ).clip(0, 255).astype(np.uint8)
-    _, _, px = decode_jpeg_gray(encode_jpeg_gray(64, 48, img.tobytes()))
+    _, _, _, px = decode_jpeg(encode_jpeg_gray(64, 48, img.tobytes()))
     err = np.abs(np.frombuffer(px, np.uint8).reshape(48, 64).astype(int)
                  - img.astype(int))
     assert err.max() <= 12 and err.mean() < 3
@@ -351,14 +347,14 @@ def test_jpeg_odd_dims_and_rejects():
     import numpy as np
 
     from rlis2osm_spark.functions.codecs import (
-        decode_jpeg_gray, encode_jpeg_gray)
+        decode_jpeg, encode_jpeg_gray)
 
     img = (np.arange(13 * 9) % 250).astype(np.uint8)
-    w, h, px = decode_jpeg_gray(encode_jpeg_gray(13, 9, img.tobytes()))
+    w, h, _, px = decode_jpeg(encode_jpeg_gray(13, 9, img.tobytes()))
     assert (w, h) == (13, 9) and len(px) == 117
 
     with pytest.raises(ValueError):
-        decode_jpeg_gray(b"not a jpeg")
+        decode_jpeg(b"not a jpeg")
     with pytest.raises(ValueError):
         encode_jpeg_gray(4, 4, b"wrong size")
     # every frame type other than SOF0/1/2 hits the seam: differential
@@ -370,22 +366,22 @@ def test_jpeg_odd_dims_and_rejects():
     for marker in (0xC5, 0xC3, 0xC9, 0xCA, 0xCB):
         relabeled = base[:sof0] + bytes([0xFF, marker]) + base[sof0 + 2:]
         with pytest.raises(NotImplementedError, match="hierarchical"):
-            decode_jpeg_gray(relabeled)
+            decode_jpeg(relabeled)
     dhp = b"\xff\xde\x00\x0b" + base[sof0 + 4:sof0 + 13]
     with pytest.raises(NotImplementedError):
-        decode_jpeg_gray(base[:sof0] + dhp + base[sof0:])
+        decode_jpeg(base[:sof0] + dhp + base[sof0:])
     ext12 = bytearray(base)
     ext12[sof0 + 1], ext12[sof0 + 4] = 0xC1, 12
     ncomp4 = bytearray(base)
     ncomp4[sof0 + 9] = 4
     for bad in (ext12, ncomp4):
         with pytest.raises(NotImplementedError, match="8-bit"):
-            decode_jpeg_gray(bytes(bad))
+            decode_jpeg(bytes(bad))
     # a baseline scan header mislabeled SOF2 is malformed (a progressive
     # DC scan cannot span Se=63) — ValueError, not silent nonsense
     mislabeled = base[:sof0] + b"\xff\xc2" + base[sof0 + 2:]
     with pytest.raises(ValueError):
-        decode_jpeg_gray(mislabeled)
+        decode_jpeg(mislabeled)
 
 
 def test_progressive_jpeg_missing_dht_is_valueerror():
@@ -394,7 +390,7 @@ def test_progressive_jpeg_missing_dht_is_valueerror():
     TypeError from iterating None (ADVICE r5)."""
     import numpy as np
 
-    from rlis2osm_spark.functions.codecs import (decode_jpeg_gray,
+    from rlis2osm_spark.functions.codecs import (decode_jpeg,
                                                  encode_jpeg_progressive)
 
     img = (np.arange(16 * 16) % 251).astype(np.uint8)
@@ -410,7 +406,7 @@ def test_progressive_jpeg_missing_dht_is_valueerror():
             pos += 1
     out.extend(data[pos:])
     with pytest.raises(ValueError):
-        decode_jpeg_gray(bytes(out))
+        decode_jpeg(bytes(out))
 
 
 # ---------------------------------------------------------------------------
@@ -421,7 +417,7 @@ def test_avi_mjpeg_roundtrip_and_frame_decode():
     import numpy as np
 
     from rlis2osm_spark.functions.codecs import (
-        decode_avi_frames, decode_jpeg_gray, encode_avi_mjpeg,
+        decode_avi_frames, decode_jpeg, encode_avi_mjpeg,
         encode_jpeg_gray)
 
     w, h = 24, 16
@@ -431,7 +427,7 @@ def test_avi_mjpeg_roundtrip_and_frame_decode():
     w2, h2, codec, out = decode_avi_frames(avi)
     assert (w2, h2, codec) == (w, h, "mjpg") and out == frames
     for f, im in zip(out, imgs):
-        _, _, px = decode_jpeg_gray(f)
+        _, _, _, px = decode_jpeg(f)
         assert np.array_equal(np.frombuffer(px, np.uint8).reshape(h, w), im)
 
 
@@ -486,12 +482,12 @@ def test_jpeg_tolerates_fill_bytes():
     import numpy as np
 
     from rlis2osm_spark.functions.codecs import (
-        decode_jpeg_gray, encode_jpeg_gray)
+        decode_jpeg, encode_jpeg_gray)
 
     img = _const_block_image(2, 2, seed=5)
     data = encode_jpeg_gray(16, 16, img.tobytes())
     padded = data[:2] + b"\xff\xff\xff" + data[2:]
-    w, h, px = decode_jpeg_gray(padded)
+    w, h, _, px = decode_jpeg(padded)
     assert (w, h) == (16, 16)
     assert np.array_equal(np.frombuffer(px, np.uint8).reshape(16, 16), img)
 
@@ -500,17 +496,17 @@ def test_gif_and_jpeg_truncation_raises_valueerror():
     """The codec error contract at the operator seam: malformed/truncated
     input raises ValueError, never a bare IndexError/KeyError (review r4)."""
     from rlis2osm_spark.functions.codecs import (
-        decode_gif, decode_jpeg_gray, encode_gif, encode_jpeg_gray)
+        decode_gif_frames, decode_jpeg, encode_gif, encode_jpeg_gray)
 
     g = encode_gif(16, 16, _pixels(16, 16))
     j = encode_jpeg_gray(16, 16, _pixels(16, 16))
     for cut in (13, 20, len(g) - 5, 796 if len(g) > 796 else len(g) - 1):
         with pytest.raises(ValueError):
-            decode_gif(g[:cut])
+            decode_gif_frames(g[:cut])
     # mid-extension truncation
     ext = g[:13 + 768] + b"\x21\xf9\x04"
     with pytest.raises(ValueError):
-        decode_gif(ext)
+        decode_gif_frames(ext)
     # truncated entropy data must raise — including shave-the-tail cuts:
     # consuming even one zero-fill bit past end-of-stream means the final
     # MCU(s) decoded fabricated coefficients (ADVICE r4 — the old slack
@@ -518,49 +514,45 @@ def test_gif_and_jpeg_truncation_raises_valueerror():
     big = encode_jpeg_gray(64, 64, _pixels(64, 64))
     for cut in (4, 30, int(len(big) * 0.6), len(big) - 5, len(big) - 3):
         with pytest.raises(ValueError):
-            decode_jpeg_gray(big[:cut])
+            decode_jpeg(big[:cut])
     # losing ONLY the EOI marker leaves the entropy data intact: decode
     # succeeds and the pixels are still exact (nothing fabricated)
-    w, h, px = decode_jpeg_gray(big)
-    w2, h2, px2 = decode_jpeg_gray(big[:-2])
-    assert (w, h, px) == (w2, h2, px2)
+    assert decode_jpeg(big) == decode_jpeg(big[:-2])
 
 
-@pytest.mark.parametrize("subsampling", ["4:4:4", "4:2:2", "4:2:0"])
+@pytest.mark.parametrize("subsampling", ["4:4:4", "4:2:0"])
 def test_jpeg_color_decode_luma(subsampling):
-    """r4.1: the decoder handles interleaved multi-component baseline color
-    (per-component sampling factors, quant and huffman table ids, chroma
-    blocks sync-decoded) and returns the full-resolution LUMA plane —
-    exact on even-constant blocks, quantization-bounded on smooth
-    content."""
+    """Interleaved 3-component baseline color (per-component sampling
+    factors, quant and huffman table ids) with neutral chroma decodes to
+    R=G=B=luma — exact on even-constant blocks, quantization-bounded on
+    smooth content."""
     import numpy as np
 
-    from rlis2osm_spark.functions.codecs import (
-        decode_jpeg_gray, encode_jpeg_color)
+    from rlis2osm_spark.functions.codecs import decode_jpeg, encode_jpeg_color
+
+    def luma(blob, w, h):
+        dw, dh, nch, px = decode_jpeg(blob)
+        assert (dw, dh, nch) == (w, h, 3)
+        rgb = np.frombuffer(px, np.uint8).reshape(h, w, 3)
+        assert (rgb == rgb[:, :, :1]).all()  # neutral chroma: gray
+        return rgb[:, :, 0]
 
     img = _const_block_image(4, 4, seed=21)  # 32x32: 2x2 MCUs at 4:2:0
     j = encode_jpeg_color(32, 32, img.tobytes(), subsampling=subsampling)
-    w, h, px = decode_jpeg_gray(j)
-    assert (w, h) == (32, 32)
-    assert np.array_equal(np.frombuffer(px, np.uint8).reshape(32, 32), img)
+    assert np.array_equal(luma(j, 32, 32), img)
 
     xx, yy = np.meshgrid(np.arange(64), np.arange(48))
     smooth = (128 + 60 * np.sin(xx / 10) + 50 * np.cos(yy / 9)
               ).clip(0, 255).astype(np.uint8)
     js = encode_jpeg_color(64, 48, smooth.tobytes(), subsampling=subsampling)
-    _, _, pxs = decode_jpeg_gray(js)
-    err = np.abs(np.frombuffer(pxs, np.uint8).reshape(48, 64).astype(int)
-                 - smooth.astype(int))
+    err = np.abs(luma(js, 64, 48).astype(int) - smooth.astype(int))
     assert err.max() <= 12 and err.mean() < 3
 
     # odd dims crossing the 16-px MCU tile at 4:2:0
     odd = _const_block_image(3, 2, seed=5)[:13, :21]
     jo = encode_jpeg_color(21, 13, np.ascontiguousarray(odd).tobytes(),
                            subsampling=subsampling)
-    wo, ho, pxo = decode_jpeg_gray(jo)
-    assert (wo, ho) == (21, 13)
-    assert np.array_equal(
-        np.frombuffer(pxo, np.uint8).reshape(13, 21), odd)
+    assert np.array_equal(luma(jo, 21, 13), odd)
 
 
 def _expected_rgb(y, cb, cr):
@@ -626,8 +618,7 @@ def test_jpeg_progressive_matches_baseline_decode():
     import numpy as np
 
     from rlis2osm_spark.functions.codecs import (
-        decode_jpeg, decode_jpeg_gray, encode_jpeg_gray,
-        encode_jpeg_progressive)
+        decode_jpeg, encode_jpeg_gray, encode_jpeg_progressive)
 
     rng = np.random.default_rng(7)
     cases = []
@@ -640,44 +631,17 @@ def test_jpeg_progressive_matches_baseline_decode():
             np.ones((8, 8), int))[:h, :w]).astype(np.uint8))
     for img in cases:
         h, w = img.shape
-        base = decode_jpeg_gray(encode_jpeg_gray(w, h, img.tobytes()))
+        base = decode_jpeg(encode_jpeg_gray(w, h, img.tobytes()))
         blob = encode_jpeg_progressive(w, h, img.tobytes())
         assert blob[2:4] != b"\xff\xc0"  # really SOF2, not baseline
-        assert decode_jpeg_gray(blob) == base
-        # and through the RGB-capable API
-        wj, hj, nch, px = decode_jpeg(blob)
-        assert (wj, hj, nch) == (w, h, 1) and px == base[2]
+        assert decode_jpeg(blob) == base
+        assert base[:3] == (w, h, 1)
 
     # DCT-exact subclass: constant even blocks round-trip bit-for-bit
     img = cases[2]
     h, w = img.shape
-    _, _, px = decode_jpeg_gray(encode_jpeg_progressive(w, h, img.tobytes()))
+    _, _, _, px = decode_jpeg(encode_jpeg_progressive(w, h, img.tobytes()))
     assert np.array_equal(np.frombuffer(px, np.uint8).reshape(h, w), img)
-
-
-@pytest.mark.parametrize("subsampling", ["4:4:4", "4:2:2", "4:2:0"])
-def test_jpeg_progressive_color_matches_baseline(subsampling):
-    """Color progressive: MCU-interleaved DC scans across three
-    components + per-component AC band/refinement scans must decode to
-    the same RGB as the baseline color encoding of the same planes."""
-    import numpy as np
-
-    from rlis2osm_spark.functions import codecs as C
-
-    rng = np.random.default_rng(19)
-    for w, h in [(16, 16), (24, 16), (21, 13)]:
-        hy, vy = {"4:4:4": (1, 1), "4:2:2": (2, 1),
-                  "4:2:0": (2, 2)}[subsampling]
-        cw, ch = -(-w // hy), -(-h // vy)
-        img = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        cb = rng.integers(0, 256, (ch, cw), dtype=np.uint8)
-        cr = rng.integers(0, 256, (ch, cw), dtype=np.uint8)
-        base = C.decode_jpeg(C.encode_jpeg_color(
-            w, h, img.tobytes(), subsampling, cb.tobytes(), cr.tobytes()))
-        prog = C.decode_jpeg(C.encode_jpeg_progressive(
-            w, h, img.tobytes(), subsampling, cb.tobytes(), cr.tobytes()))
-        assert base == prog
-        assert base[2] == 3
 
 
 def test_jpeg_progressive_truncation_raises():
@@ -686,382 +650,60 @@ def test_jpeg_progressive_truncation_raises():
     import numpy as np
 
     from rlis2osm_spark.functions.codecs import (
-        decode_jpeg_gray, encode_jpeg_progressive)
+        decode_jpeg, encode_jpeg_progressive)
 
     rng = np.random.default_rng(3)
     img = rng.integers(0, 256, (32, 32), dtype=np.uint8)
     blob = encode_jpeg_progressive(32, 32, img.tobytes())
     for cut in (int(len(blob) * 0.4), int(len(blob) * 0.7), len(blob) - 6):
         with pytest.raises(ValueError):
-            decode_jpeg_gray(blob[:cut])
+            decode_jpeg(blob[:cut])
 
 
-def _build_png(img, ctype, filters):
-    """Independent PNG writer (filters applied with plain numpy, not the
-    codec's logic): img is (h, w, ch) uint8."""
-    import struct as _st
-    import zlib as _zl
-
-    import numpy as np
-
-    h, w, ch = img.shape
-    bpp = ch
-    raw = bytearray()
-    prior = np.zeros(w * bpp, dtype=np.int64)
-    for r in range(h):
-        row = img[r].reshape(-1).astype(np.int64)
-        ft = filters[r % len(filters)]
-        left = np.concatenate([np.zeros(bpp, np.int64), row[:-bpp]])
-        pleft = np.concatenate([np.zeros(bpp, np.int64), prior[:-bpp]])
-        if ft == 0:
-            enc = row
-        elif ft == 1:
-            enc = row - left
-        elif ft == 2:
-            enc = row - prior
-        elif ft == 3:
-            enc = row - (left + prior) // 2
-        else:  # Paeth
-            p = left + prior - pleft
-            pa, pb, pc = (np.abs(p - left), np.abs(p - prior),
-                          np.abs(p - pleft))
-            pred = np.where((pa <= pb) & (pa <= pc), left,
-                            np.where(pb <= pc, prior, pleft))
-            enc = row - pred
-        raw.append(ft)
-        raw.extend((enc & 0xFF).astype(np.uint8).tobytes())
-        prior = row
-
-    def chunk(tag, body):
-        return (_st.pack(">I", len(body)) + tag + body
-                + _st.pack(">I", _zl.crc32(tag + body) & 0xFFFFFFFF))
-
-    ihdr = _st.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", _zl.compress(bytes(raw)))
-            + chunk(b"IEND", b""))
-
-
-@pytest.mark.parametrize("ctype,ch", [(0, 1), (2, 3), (4, 2), (6, 4)])
-def test_png_color_types_decode_all_filters(ctype, ch):
-    """r5: color-type 0/2/4/6 PNG decode against an INDEPENDENT writer —
-    every standard filter, with the left-neighbor at bpp distance."""
+def test_png_decode_all_filters_independent_writer():
+    """8-bit grayscale PNG decode against an INDEPENDENT writer (filters
+    applied with plain numpy, not the codec's logic), every standard
+    filter cycling per row."""
     import numpy as np
 
     rng = np.random.default_rng(31)
     for w, h in [(1, 1), (5, 4), (16, 11)]:
-        img = rng.integers(0, 256, (h, w, ch), dtype=np.uint8)
-        blob = _build_png(img, ctype, filters=[0, 1, 2, 3, 4])
-        dw, dh, nch, px = decode_png_ex(blob)
-        assert (dw, dh, nch) == (w, h, ch)
-        assert np.array_equal(
-            np.frombuffer(px, np.uint8).reshape(h, w, ch), img)
-
-
-def test_png_adam7_interlace_decode():
-    """r5: Adam7 PNG — seven independently-filtered passes reassemble to
-    the original image; verified against an independent pass-splitting
-    writer for gray and RGB, with all five filters cycling per row."""
-    import struct as _st
-    import zlib as _zl
-
-    import numpy as np
-
-    from rlis2osm_spark.functions.codecs import decode_png_ex
-
-    passes = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-              (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-
-    def chunk(tag, body):
-        return (_st.pack(">I", len(body)) + tag + body
-                + _st.pack(">I", _zl.crc32(tag + body) & 0xFFFFFFFF))
-
-    def build_adam7(img, ctype):
-        h, w, ch = img.shape
+        img = rng.integers(0, 256, (h, w), dtype=np.uint8)
         raw = bytearray()
-        for x0, y0, dx, dy in passes:
-            sub = img[y0::dy, x0::dx]
-            if sub.size == 0:
-                continue
-            ph, pw = sub.shape[:2]
-            prior = np.zeros(pw * ch, dtype=np.int64)
-            for r in range(ph):
-                row = sub[r].reshape(-1).astype(np.int64)
-                ft = r % 5
-                left = np.concatenate([np.zeros(ch, np.int64), row[:-ch]])
-                pleft = np.concatenate([np.zeros(ch, np.int64),
-                                        prior[:-ch]])
-                if ft == 0:
-                    enc = row
-                elif ft == 1:
-                    enc = row - left
-                elif ft == 2:
-                    enc = row - prior
-                elif ft == 3:
-                    enc = row - (left + prior) // 2
-                else:
-                    p = left + prior - pleft
-                    pa, pb, pc = (np.abs(p - left), np.abs(p - prior),
-                                  np.abs(p - pleft))
-                    pred = np.where((pa <= pb) & (pa <= pc), left,
-                                    np.where(pb <= pc, prior, pleft))
-                    enc = row - pred
-                raw.append(ft)
-                raw.extend((enc & 0xFF).astype(np.uint8).tobytes())
-                prior = row
-        ihdr = _st.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 1)  # interlaced
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", _zl.compress(bytes(raw)))
-                + chunk(b"IEND", b""))
-
-    rng = np.random.default_rng(17)
-    for (w, h), (ctype, ch) in [((16, 16), (0, 1)), ((13, 9), (2, 3)),
-                                ((7, 5), (6, 4)), ((1, 1), (0, 1)),
-                                ((3, 11), (0, 1))]:
-        img = rng.integers(0, 256, (h, w, ch), dtype=np.uint8)
-        dw, dh, nch, px = decode_png_ex(build_adam7(img, ctype))
-        assert (dw, dh, nch) == (w, h, ch)
-        assert np.array_equal(
-            np.frombuffer(px, np.uint8).reshape(h, w, ch), img)
-
-
-def test_png_sub_byte_depths_decode():
-    """r5: depth 1/2/4 gray and palette PNG — bits unpack MSB-first with
-    row padding dropped, filters run on the packed bytes (bpp=1), gray
-    scales exactly to 8-bit."""
-    import struct as _st
-    import zlib as _zl
-
-    import numpy as np
-
-    from rlis2osm_spark.functions.codecs import decode_png_ex
-
-    def chunk(tag, body):
-        return (_st.pack(">I", len(body)) + tag + body
-                + _st.pack(">I", _zl.crc32(tag + body) & 0xFFFFFFFF))
-
-    def pack_bits(vals, depth):
-        per = 8 // depth
-        out = bytearray()
-        for i in range(0, len(vals), per):
-            b = 0
-            for j, v in enumerate(vals[i:i + per]):
-                b |= int(v) << (8 - depth * (j + 1))
-            out.append(b)
-        return bytes(out)
-
-    rng = np.random.default_rng(3)
-    for depth in (1, 2, 4):
-        for w, h in [(5, 3), (8, 4), (13, 2)]:
-            vals = rng.integers(0, 1 << depth, (h, w), dtype=np.uint8)
-            raw = bytearray()
-            prior = None
-            for r in range(h):
-                packed = pack_bits(vals[r], depth)
-                if r % 2 == 0 or prior is None:
-                    raw.append(0)
-                    raw.extend(packed)
-                else:  # Up filter on the packed bytes
-                    raw.append(2)
-                    raw.extend((np.frombuffer(packed, np.uint8)
-                                - np.frombuffer(prior, np.uint8)).tobytes())
-                prior = packed
-            ihdr = _st.pack(">IIBBBBB", w, h, depth, 0, 0, 0, 0)
-            blob = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", _zl.compress(bytes(raw)))
-                    + chunk(b"IEND", b""))
-            dw, dh, nch, px = decode_png_ex(blob)
-            assert (dw, dh, nch) == (w, h, 1)
-            scale = 255 // ((1 << depth) - 1)
-            assert np.array_equal(
-                np.frombuffer(px, np.uint8).reshape(h, w), vals * scale)
-
-    # sub-byte palette: indices resolve through PLTE
-    pal = rng.integers(0, 256, (4, 3), dtype=np.uint8)
-    vals = rng.integers(0, 4, (3, 6), dtype=np.uint8)
-    raw = bytearray()
-    for r in range(3):
-        raw.append(0)
-        raw.extend(pack_bits(vals[r], 2))
-    ihdr = _st.pack(">IIBBBBB", 6, 3, 2, 3, 0, 0, 0)
-    blob = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"PLTE", pal.tobytes())
-            + chunk(b"IDAT", _zl.compress(bytes(raw)))
-            + chunk(b"IEND", b""))
-    dw, dh, nch, px = decode_png_ex(blob)
-    assert (dw, dh, nch) == (6, 3, 3)
-    assert np.array_equal(np.frombuffer(px, np.uint8).reshape(3, 6, 3),
-                          pal[vals])
-
-
-def test_png_adam7_sub_byte_and_16bit():
-    """r5: Adam7 at sub-byte depths (per-pass bit packing) decodes —
-    independent writers again; Adam7 16-bit hits the codec seam."""
-    import struct as _st
-    import zlib as _zl
-
-    import numpy as np
-
-    passes = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-              (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-
-    def chunk(tag, body):
-        return (_st.pack(">I", len(body)) + tag + body
-                + _st.pack(">I", _zl.crc32(tag + body) & 0xFFFFFFFF))
-
-    def pack_bits(vals, depth):
-        per = 8 // depth
-        out = bytearray()
-        for i in range(0, len(vals), per):
-            b = 0
-            for j, v in enumerate(vals[i:i + per]):
-                b |= int(v) << (8 - depth * (j + 1))
-            out.append(b)
-        return bytes(out)
-
-    rng = np.random.default_rng(29)
-
-    # Adam7 depth-2 gray, filter 0 rows (bit packing is the new surface)
-    w, h, depth = 11, 9, 2
-    vals = rng.integers(0, 4, (h, w), dtype=np.uint8)
-    raw = bytearray()
-    for x0, y0, dx, dy in passes:
-        sub = vals[y0::dy, x0::dx]
-        if sub.size == 0:
-            continue
-        for r in range(sub.shape[0]):
-            raw.append(0)
-            raw.extend(pack_bits(sub[r], depth))
-    ihdr = _st.pack(">IIBBBBB", w, h, depth, 0, 0, 0, 1)
-    blob = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", _zl.compress(bytes(raw)))
-            + chunk(b"IEND", b""))
-    dw, dh, nch, px = decode_png_ex(blob)
-    assert (dw, dh, nch) == (w, h, 1)
-    assert np.array_equal(np.frombuffer(px, np.uint8).reshape(h, w),
-                          vals * 85)
-
-    # Adam7 16-bit gray, Up filter within passes
-    w, h = 10, 6
-    img = rng.integers(0, 1 << 16, (h, w), dtype=np.uint16)
-    raw = bytearray()
-    for x0, y0, dx, dy in passes:
-        sub = img[y0::dy, x0::dx]
-        if sub.size == 0:
-            continue
-        rows = np.frombuffer(sub.astype(">u2").tobytes(),
-                             np.uint8).reshape(sub.shape[0], -1)
-        prior = np.zeros(rows.shape[1], dtype=np.int64)
-        for r in range(rows.shape[0]):
-            row = rows[r].astype(np.int64)
-            raw.append(2)  # Up
-            raw.extend(((row - prior) & 0xFF).astype(np.uint8).tobytes())
+        prior = np.zeros(w, dtype=np.int64)
+        for r in range(h):
+            row = img[r].astype(np.int64)
+            ft = r % 5
+            left = np.concatenate([[0], row[:-1]])
+            pleft = np.concatenate([[0], prior[:-1]])
+            if ft == 0:
+                enc = row
+            elif ft == 1:
+                enc = row - left
+            elif ft == 2:
+                enc = row - prior
+            elif ft == 3:
+                enc = row - (left + prior) // 2
+            else:  # Paeth
+                p = left + prior - pleft
+                pa, pb, pc = (np.abs(p - left), np.abs(p - prior),
+                              np.abs(p - pleft))
+                enc = row - np.where((pa <= pb) & (pa <= pc), left,
+                                     np.where(pb <= pc, prior, pleft))
+            raw.append(ft)
+            raw.extend((enc & 0xFF).astype(np.uint8).tobytes())
             prior = row
-    ihdr = _st.pack(">IIBBBBB", w, h, 16, 0, 0, 0, 1)
-    blob = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", _zl.compress(bytes(raw)))
-            + chunk(b"IEND", b""))
-    with pytest.raises(NotImplementedError, match="16-bit PNG"):
-        decode_png_ex(blob)
-
-
-def test_png_palette_decode():
-    """r5: palette (type 3) PNG resolves indices through PLTE to RGB."""
-    import struct as _st
-    import zlib as _zl
-
-    import numpy as np
-
-    from rlis2osm_spark.functions.codecs import decode_png_ex
-
-    rng = np.random.default_rng(5)
-    pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
-    idx = rng.integers(0, 16, (6, 5), dtype=np.uint8)
-    raw = b"".join(b"\x00" + idx[r].tobytes() for r in range(6))
-
-    def chunk(tag, body):
-        return (_st.pack(">I", len(body)) + tag + body
-                + _st.pack(">I", _zl.crc32(tag + body) & 0xFFFFFFFF))
-
-    blob = (b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", _st.pack(">IIBBBBB", 5, 6, 8, 3, 0, 0, 0))
-            + chunk(b"PLTE", pal.tobytes())
-            + chunk(b"IDAT", _zl.compress(raw))
-            + chunk(b"IEND", b""))
-    w, h, nch, px = decode_png_ex(blob)
-    assert (w, h, nch) == (5, 6, 3)
-    assert np.array_equal(np.frombuffer(px, np.uint8).reshape(6, 5, 3),
-                          pal[idx])
-    # out-of-range palette index fails loudly
-    bad_pal = pal[:8]
-    blob_bad = (b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", _st.pack(">IIBBBBB", 5, 6, 8, 3, 0, 0, 0))
-                + chunk(b"PLTE", bad_pal.tobytes())
-                + chunk(b"IDAT", _zl.compress(raw))
-                + chunk(b"IEND", b""))
-    import pytest as _pt
-    with _pt.raises(ValueError, match="palette index"):
-        decode_png_ex(blob_bad)
-
-
-def test_png_color_encode_roundtrip():
-    """r5: encode_png channels=2/3/4 round-trips through decode_png_ex
-    for every supported encode filter."""
-    import numpy as np
-
-    from rlis2osm_spark.functions.codecs import decode_png_ex, encode_png
-
-    rng = np.random.default_rng(13)
-    for ch in (1, 2, 3, 4):
-        for ft in (0, 1, 2):
-            img = rng.integers(0, 256, (7, 9, ch), dtype=np.uint8)
-            blob = encode_png(9, 7, img.tobytes(), filter_type=ft,
-                              channels=ch)
-            w, h, nch, px = decode_png_ex(blob)
-            assert (w, h, nch) == (9, 7, ch)
-            assert np.array_equal(
-                np.frombuffer(px, np.uint8).reshape(7, 9, ch), img)
-    with pytest.raises(ValueError):
-        encode_png(2, 2, bytes(20), channels=5)
-
-
-def test_wav_formats_decode():
-    """r5: 8-bit unsigned PCM, stereo 16-bit PCM and IEEE float32 WAVs
-    decode; GSM stays behind the seam."""
-    import struct as _st
-
-    import numpy as np
-
-    from rlis2osm_spark.functions.codecs import decode_wav
-
-    def wav(afmt, channels, bits, body):
-        fmt = _st.pack("<HHIIHH", afmt, channels, 8000,
-                       8000 * channels * bits // 8,
-                       channels * bits // 8, bits)
-        riff = (b"WAVE" + b"fmt " + _st.pack("<I", len(fmt)) + fmt
-                + b"data" + _st.pack("<I", len(body)) + body)
-        return b"RIFF" + _st.pack("<I", len(riff)) + riff
-
-    # 8-bit unsigned -> re-centred signed
-    rate, s = decode_wav(wav(1, 1, 8, bytes([0, 128, 255, 200])))
-    assert rate == 8000 and s == [-128, 0, 127, 72]
-    # stereo 16-bit: interleaved
-    body = np.array([100, -100, 32767, -32768], dtype="<i2").tobytes()
-    _, s = decode_wav(wav(1, 2, 16, body))
-    assert s == [100, -100, 32767, -32768]
-    # float32
-    body = np.array([0.5, -0.25], dtype="<f4").tobytes()
-    _, s = decode_wav(wav(3, 1, 32, body))
-    assert s == [0.5, -0.25]
-    # GSM (fmt 49) is the seam
-    with pytest.raises(NotImplementedError):
-        decode_wav(wav(49, 1, 0, b"\x00\x00"))
+        blob = (PNG_SIG
+                + _chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
+                + _chunk(b"IDAT", zlib.compress(bytes(raw)))
+                + _chunk(b"IEND", b""))
+        assert decode_png_ex(blob) == (w, h, 1, img.tobytes())
 
 
 def test_bmp_decode_24_8_32bit():
-    """r5: BMP decode — 24-bit BGR (bottom-up AND top-down), 8-bit
+    """BMP decode — 24-bit BGR (bottom-up AND top-down), 8-bit
     palettized through the BGRX table, 32-bit BGRX; 4-byte row
-    alignment; RLE stays behind the seam. Files built independently."""
+    alignment. Files built independently."""
     import struct as _st
 
     import numpy as np
@@ -1114,10 +756,7 @@ def test_bmp_decode_24_8_32bit():
     assert (w, h, nch) == (2, 1, 3)
     assert px == bytes([7, 8, 9, 7, 8, 9])
 
-    # comp=4 is BI_JPEG since r6 — garbage embedded bytes are malformed
-    # input, unknown compressions stay a loud seam
-    with pytest.raises(ValueError, match="not a JPEG"):
-        decode_bmp(bmp(2, 1, 8, b"\x00" * 8, b"\x00" * 64, comp=4))
+    # unknown compressions stay a loud seam
     with pytest.raises(NotImplementedError, match="compression"):
         decode_bmp(bmp(2, 1, 8, b"\x00" * 8, b"\x00" * 64, comp=6))
     with pytest.raises(ValueError):
@@ -1127,68 +766,39 @@ def test_bmp_decode_24_8_32bit():
 
 
 def test_gif_animation_compositing():
-    """r5: animated GIF decode — rect placement, transparent index,
-    and all three disposal methods, verified against an independent
+    """Animated GIF decode: each frame rect (interlaced or not) draws over
+    the canvas the frames before it left, verified against an independent
     numpy compositor over the same frame plan."""
     import numpy as np
 
     from rlis2osm_spark.functions.codecs import (
-        decode_gif_frames, encode_gif_anim)
+        decode_gif_frames, encode_gif, encode_gif_anim)
 
     rng = np.random.default_rng(41)
     sw, sh = 20, 12
     plan = [
-        # full-canvas base frame
-        dict(left=0, top=0, width=sw, height=sh,
-             pixels=rng.integers(0, 256, sw * sh, dtype=np.uint8).tobytes(),
-             disposal=1),
-        # small overlay with transparency, keep after
-        dict(left=3, top=2, width=6, height=5,
-             pixels=rng.integers(0, 256, 30, dtype=np.uint8).tobytes(),
-             transparent=7, disposal=1, interlace=True),
-        # overlay restored to background after display
+        dict(left=0, top=0, width=sw, height=sh,  # full-canvas base frame
+             pixels=rng.integers(0, 256, sw * sh, dtype=np.uint8).tobytes()),
+        dict(left=3, top=2, width=6, height=5, interlace=True,
+             pixels=rng.integers(0, 256, 30, dtype=np.uint8).tobytes()),
         dict(left=10, top=4, width=8, height=6,
-             pixels=rng.integers(0, 256, 48, dtype=np.uint8).tobytes(),
-             disposal=2),
-        # overlay restored to PREVIOUS canvas after display
-        dict(left=1, top=1, width=4, height=4,
-             pixels=rng.integers(0, 256, 16, dtype=np.uint8).tobytes(),
-             disposal=3),
-        # final frame shows the restored state plus this rect
+             pixels=rng.integers(0, 256, 48, dtype=np.uint8).tobytes()),
         dict(left=0, top=6, width=5, height=3,
              pixels=rng.integers(0, 256, 15, dtype=np.uint8).tobytes()),
     ]
-    blob = encode_gif_anim(sw, sh, plan)
-    dw, dh, frames = decode_gif_frames(blob)
+    dw, dh, frames = decode_gif_frames(encode_gif_anim(sw, sh, plan))
     assert (dw, dh, len(frames)) == (sw, sh, len(plan))
-
-    # independent compositor (gray palette -> index == gray value)
     canvas = np.zeros((sh, sw), dtype=np.uint8)
-    expected = []
-    for f in plan:
+    for i, (got, f) in enumerate(zip(frames, plan)):
         l, t, w, h = f["left"], f["top"], f["width"], f["height"]
-        px = np.frombuffer(f["pixels"], np.uint8).reshape(h, w)
-        prev = canvas.copy()
-        tr = f.get("transparent")
-        region = canvas[t:t + h, l:l + w]
-        if tr is None:
-            region[:, :] = px
-        else:
-            region[px != tr] = px[px != tr]
-        expected.append(canvas.copy())
-        d = f.get("disposal", 0)
-        if d == 2:
-            canvas[t:t + h, l:l + w] = 0
-        elif d == 3:
-            canvas = prev
-    for i, (got, exp) in enumerate(zip(frames, expected)):
+        canvas[t:t + h, l:l + w] = np.frombuffer(
+            f["pixels"], np.uint8).reshape(h, w)
         assert np.array_equal(
-            np.frombuffer(got, np.uint8).reshape(sh, sw), exp), f"frame {i}"
+            np.frombuffer(got, np.uint8).reshape(sh, sw), canvas), f"frame {i}"
 
-    # single-frame path agrees with decode_gif (frame rect == screen)
-    from rlis2osm_spark.functions.codecs import decode_gif, encode_gif
+    # a still GIF is a one-frame animation
     g = encode_gif(8, 6, bytes(range(48)))
-    assert decode_gif_frames(g)[2][0] == decode_gif(g)[2]
+    assert decode_gif_frames(g) == (8, 6, [bytes(range(48))])
     with pytest.raises(ValueError):
         encode_gif_anim(4, 4, [dict(left=2, top=2, width=4, height=4,
                                     pixels=bytes(16))])  # rect overflow
@@ -1238,7 +848,7 @@ def test_avi_raw_dib_roundtrip_and_codec_routing():
 
 
 # ---------------------------------------------------------------------------
-# r6 seam retirement: sub-byte + RLE BMP, 24-bit WAV
+# BMP RLE8 and bitfields, 24-bit WAV
 # ---------------------------------------------------------------------------
 
 def _bmp_file(width, height_signed, bits, pixel_rows, table=b"", comp=0,
@@ -1252,47 +862,10 @@ def _bmp_file(width, height_signed, bits, pixel_rows, table=b"", comp=0,
     return head + info + table + pixel_rows
 
 
-def test_bmp_subbyte_depths():
-    """1-bit and 4-bit palettized BMP: MSB-first bit packing, 4-byte row
-    alignment, bottom-up and top-down orders. Files built independently
-    with numpy packbits / manual nibble packing."""
-    import numpy as np
-
-    from rlis2osm_spark.functions.codecs import decode_bmp
-
-    rng = np.random.default_rng(6)
-    pal = np.array([[10, 20, 30], [200, 210, 220]], np.uint8)
-    table = b"".join(bytes([p[2], p[1], p[0], 0]) for p in pal)
-    idx = rng.integers(0, 2, (3, 10), dtype=np.uint8)
-    rows = b""
-    for r in (2, 1, 0):
-        packed = np.packbits(idx[r])
-        rows += packed.tobytes() + b"\x00" * (4 - len(packed))
-    w, h, nch, px = decode_bmp(_bmp_file(10, 3, 1, rows, table, clr_used=2))
-    assert (w, h, nch) == (10, 3, 3)
-    assert np.array_equal(np.frombuffer(px, np.uint8).reshape(3, 10, 3),
-                          pal[idx])
-
-    pal4 = rng.integers(0, 256, (16, 3), dtype=np.uint8)
-    table4 = b"".join(bytes([p[2], p[1], p[0], 0]) for p in pal4)
-    idx4 = rng.integers(0, 16, (2, 5), dtype=np.uint8)
-    rows = b""
-    for r in (1, 0):
-        rb = bytearray()
-        for k in range(0, 5, 2):
-            hi = idx4[r, k]
-            lo = idx4[r, k + 1] if k + 1 < 5 else 0
-            rb.append((hi << 4) | lo)
-        rows += bytes(rb) + b"\x00" * (4 - len(rb) % 4)
-    w, h, nch, px = decode_bmp(_bmp_file(5, 2, 4, rows, table4, clr_used=16))
-    assert np.array_equal(np.frombuffer(px, np.uint8).reshape(2, 5, 3),
-                          pal4[idx4])
-
-
 def test_bmp_rle_decode():
-    """BI_RLE8/BI_RLE4: encoded runs (RLE4 alternating nibbles), absolute
-    mode with word alignment, EOL / EOB / delta escapes (skipped pixels
-    read as palette index 0); top-down RLE is invalid per the format."""
+    """BI_RLE8: encoded runs, absolute mode with word alignment, EOL /
+    EOB / delta escapes (skipped pixels read as palette index 0);
+    top-down RLE is invalid per the format."""
     import numpy as np
 
     from rlis2osm_spark.functions.codecs import decode_bmp
@@ -1313,47 +886,26 @@ def test_bmp_rle_decode():
     assert np.array_equal(np.frombuffer(px, np.uint8).reshape(3, 7, 3),
                           pal8[tgt[::-1]])
 
-    pal4 = rng.integers(0, 256, (16, 3), dtype=np.uint8)
-    table4 = b"".join(bytes([p[2], p[1], p[0], 0]) for p in pal4)
-    tgt4 = np.zeros((2, 6), np.uint8)
-    s = bytearray()
-    tgt4[0, :5] = [3, 12, 3, 12, 3]  # run of 0x3C alternates nibbles
-    s += bytes([5, 0x3C])
-    tgt4[0, 5] = 7
-    s += bytes([0, 3, 0x70, 0x00]) + bytes([0, 0])
-    tgt4[1, :4] = 9
-    s += bytes([4, 0x99]) + bytes([0, 1])
-    w, h, nch, px = decode_bmp(_bmp_file(6, 2, 4, bytes(s), table4, comp=2))
-    assert np.array_equal(np.frombuffer(px, np.uint8).reshape(2, 6, 3),
-                          pal4[tgt4[::-1]])
-
     with pytest.raises(ValueError, match="top-down"):
-        decode_bmp(_bmp_file(6, -2, 4, bytes(s), table4, comp=2))
+        decode_bmp(_bmp_file(7, -3, 8, bytes(s), table8, comp=1))
     with pytest.raises(ValueError, match="end-of-bitmap"):
-        decode_bmp(_bmp_file(6, 2, 4, bytes(s[:-2]), table4, comp=2))
-    # RLE8 must be 8-bit, RLE4 4-bit
-    with pytest.raises(ValueError, match="RLE8"):
-        decode_bmp(_bmp_file(6, 2, 4, bytes(s), table4, comp=1))
+        decode_bmp(_bmp_file(7, 3, 8, bytes(s[:-2]), table8, comp=1))
 
 
 def test_wav_pcm24_roundtrip():
-    """24-bit packed PCM roundtrips exactly, mono and stereo."""
+    """24-bit packed PCM roundtrips exactly."""
     import numpy as np
 
     from rlis2osm_spark.functions import codecs as C
 
-    rng = np.random.default_rng(3)
-    s = rng.integers(-(1 << 23), 1 << 23, 999).tolist()
-    rate, out = C.decode_wav(C.encode_wav_pcm24(s))
-    assert rate == 8000 and out == s
-    s2 = rng.integers(-(1 << 23), 1 << 23, 1000).tolist()
-    assert C.decode_wav(C.encode_wav_pcm24(s2, channels=2))[1] == s2
+    s = np.random.default_rng(3).integers(-(1 << 23), 1 << 23, 999).tolist()
+    assert C.decode_wav(C.encode_wav_pcm24(s)) == (8000, s)
 
 
 def test_bmp_bitfields():
-    """BI_BITFIELDS: arbitrary contiguous channel masks at 16/32-bit
-    (565 and BGRX-8888 exercised), n-bit channels scaled to 8 bits by
-    255*x/max; zero masks and non-16/32 depths rejected."""
+    """BI_BITFIELDS at 32 bits: arbitrary contiguous channel masks
+    (BGRX-8888 and a 10-bit channel exercised), n-bit channels scaled to
+    8 bits by 255*x/max; zero masks rejected."""
     import struct as _st
 
     import numpy as np
@@ -1361,33 +913,26 @@ def test_bmp_bitfields():
     from rlis2osm_spark.functions.codecs import decode_bmp
 
     rng = np.random.default_rng(2)
-    masks = _st.pack("<III", 0xF800, 0x07E0, 0x001F)
-    img = rng.integers(0, 65536, (2, 3), dtype=np.uint32)
-    rows = b""
-    for r in (1, 0):
-        rb = b"".join(_st.pack("<H", int(img[r, c])) for c in range(3))
-        rows += rb + b"\x00" * ((4 - len(rb) % 4) % 4)
-    w, h, nch, px = decode_bmp(_bmp_file(3, 2, 16, rows, masks, comp=3))
-    got = np.frombuffer(px, np.uint8).reshape(2, 3, 3)
-    exp = np.stack([((img >> 11) & 31) * 255 // 31,
-                    ((img >> 5) & 63) * 255 // 63,
-                    (img & 31) * 255 // 31], axis=-1).astype(np.uint8)
-    assert np.array_equal(got, exp)
-
-    masks32 = _st.pack("<III", 0x00FF0000, 0x0000FF00, 0x000000FF)
     pix = rng.integers(0, 2 ** 32, (1, 2), dtype=np.uint32)
     rows32 = b"".join(_st.pack("<I", int(pix[0, c])) for c in range(2))
+    masks32 = _st.pack("<III", 0x00FF0000, 0x0000FF00, 0x000000FF)
     w, h, nch, px = decode_bmp(_bmp_file(2, 1, 32, rows32, masks32, comp=3))
     exp = np.stack([(pix >> 16) & 255, (pix >> 8) & 255,
                     pix & 255], axis=-1).astype(np.uint8)
     assert np.frombuffer(px, np.uint8).reshape(1, 2, 3).tolist() \
         == exp.tolist()
 
-    with pytest.raises(ValueError, match="BITFIELDS"):
-        decode_bmp(_bmp_file(2, 1, 8, b"\0" * 8, b"\0" * 64, comp=3))
+    masks10 = _st.pack("<III", 0x3FF00000, 0x000FFC00, 0x000003FF)
+    w, h, nch, px = decode_bmp(_bmp_file(2, 1, 32, rows32, masks10, comp=3))
+    exp = np.stack([((pix >> 20) & 1023) * 255 // 1023,
+                    ((pix >> 10) & 1023) * 255 // 1023,
+                    (pix & 1023) * 255 // 1023], axis=-1).astype(np.uint8)
+    assert np.frombuffer(px, np.uint8).reshape(1, 2, 3).tolist() \
+        == exp.tolist()
+
     with pytest.raises(ValueError, match="mask"):
-        decode_bmp(_bmp_file(3, 2, 16, rows,
-                             _st.pack("<III", 0, 0x07E0, 0x001F), comp=3))
+        decode_bmp(_bmp_file(2, 1, 32, rows32,
+                             _st.pack("<III", 0, 0xFF00, 0xFF), comp=3))
 
 
 def test_jpeg_extended_sequential_sof1():
@@ -1410,13 +955,13 @@ def test_jpeg_extended_sequential_sof1():
     for restart_every in (0, 1, 5):
         blob = as_sof1(C.encode_jpeg_gray(w, h, img.tobytes(),
                                           restart_every=restart_every))
-        assert C.decode_jpeg_gray(blob) == (w, h, img.tobytes())
+        assert C.decode_jpeg(blob) == (w, h, 1, img.tobytes())
     nat = rng.integers(0, 256, (24, 17), dtype=np.uint8)
     b0 = C.encode_jpeg_gray(17, 24, nat.tobytes(), restart_every=2)
-    assert C.decode_jpeg_gray(as_sof1(b0)) == C.decode_jpeg_gray(b0)
+    assert C.decode_jpeg(as_sof1(b0)) == C.decode_jpeg(b0)
     # truncation fails loudly, not with fabricated tail blocks
     with pytest.raises(ValueError):
-        C.decode_jpeg_gray(as_sof1(b0)[:len(b0) - 10])
+        C.decode_jpeg(as_sof1(b0)[:len(b0) - 10])
 
 
 def test_jpeg_16bit_quant_tables():
@@ -1439,19 +984,19 @@ def test_jpeg_16bit_quant_tables():
     blob16 = (blob[:dqt_at] + b"\xff\xdb"
               + _st.pack(">H", len(body16) + 2) + body16
               + blob[dqt_at + 69:])
-    assert C.decode_jpeg_gray(blob16) == C.decode_jpeg_gray(blob)
+    assert C.decode_jpeg(blob16) == C.decode_jpeg(blob)
 
     bad = bytearray(blob)
     bad[dqt_at + 4] = 0x20
     with pytest.raises(ValueError):
-        C.decode_jpeg_gray(bytes(bad))
+        C.decode_jpeg(bytes(bad))
 
 
 def test_jpeg_subsampled_luma():
     """Subsampled-LUMA layouts (r6): nothing in T.81 requires component
     1 to carry the max sampling factors. Hand-built 3-component stream
     with Y at 1x1 and Cb/Cr at 2x2 (so luma is quarter resolution):
-    every decoder upsamples the luma plane like any other component.
+    the decoder upsamples the luma plane like any other component.
     Constant blocks keep the whole chain analytic."""
     import struct as _st
 
@@ -1494,12 +1039,8 @@ def test_jpeg_subsampled_luma():
             + seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
             + bytes(wtr.out) + b"\xff\xd9")
 
-    # gray surface: the quarter-res constant luma upsamples to constant
-    gw, gh, gpx = C.decode_jpeg_gray(blob)
-    assert (gw, gh) == (w, h)
-    assert gpx == bytes([y0]) * (w * h)
-
-    # color surface: JFIF conversion of the constant planes
+    # the quarter-res constant luma upsamples like the chroma: the
+    # output is the JFIF conversion of the constant planes
     cw_, ch_, nch, px = C.decode_jpeg(blob)
     assert (cw_, ch_, nch) == (w, h, 3)
     r = min(255, max(0, int(np.floor(y0 + 1.402 * (cr0 - 128) + 0.5))))
@@ -1510,100 +1051,55 @@ def test_jpeg_subsampled_luma():
 
 
 def test_jpeg_multiscan_noninterleaved():
-    """Non-interleaved multi-scan sequential JPEG (r6, T.81 B.2.3):
-    three single-component scans — each component's blocks in raster
-    order over its OWN grid (not the MCU-padded grid), DC predictor
-    fresh per scan — must decode bit-for-bit like the interleaved scan
-    of the same planes, at every subsampling and at odd dimensions."""
+    """Non-interleaved multi-scan sequential JPEG (T.81 B.2.3): three
+    single-component scans — each component's blocks in raster order
+    over its OWN grid (not the MCU-padded grid), DC predictor fresh per
+    scan — must decode bit-for-bit like the interleaved scan of the same
+    planes, at both subsamplings and at odd dimensions. The three scans
+    are hand-built with the encoder's block coder."""
     import numpy as np
 
     from rlis2osm_spark.functions import codecs as C
 
+    dc_tab = C._huff_codes(C._JPEG_DC_BITS, C._JPEG_DC_VALS)
+    ac_tab = C._huff_codes(C._JPEG_AC_BITS, C._JPEG_AC_VALS)
     rng = np.random.default_rng(59)
-    for w, h, sub in [(24, 16, "4:2:0"), (17, 13, "4:2:0"),
-                      (16, 16, "4:4:4"), (19, 11, "4:2:2")]:
-        y = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        hy, vy = {"4:4:4": (1, 1), "4:2:2": (2, 1), "4:2:0": (2, 2)}[sub]
-        cw, ch = -(-w // hy), -(-h // vy)
-        cb = rng.integers(0, 256, (ch, cw), dtype=np.uint8)
-        cr = rng.integers(0, 256, (ch, cw), dtype=np.uint8)
-        kw = dict(subsampling=sub, cb_pixels=cb.tobytes(),
-                  cr_pixels=cr.tobytes())
-        b_int = C.encode_jpeg_color(w, h, y.tobytes(), **kw)
-        b_non = C.encode_jpeg_color(w, h, y.tobytes(), interleave=False,
-                                    **kw)
-        assert b_non != b_int
-        assert b_non.count(b"\xff\xda") == 3  # three scans on the wire
-        assert C.decode_jpeg(b_non) == C.decode_jpeg(b_int), (w, h, sub)
-        assert C.decode_jpeg_gray(b_non) == C.decode_jpeg_gray(b_int)
+    for w, h, f in [(24, 16, 2), (17, 13, 2), (16, 16, 1), (19, 11, 1)]:
+        cw, ch = -(-w // f), -(-h // f)
+        planes = [rng.integers(0, 256, (h, w), dtype=np.uint8),
+                  rng.integers(0, 256, (ch, cw), dtype=np.uint8),
+                  rng.integers(0, 256, (ch, cw), dtype=np.uint8)]
+        b_int = C.encode_jpeg_color(
+            w, h, planes[0].tobytes(), "4:4:4" if f == 1 else "4:2:0",
+            planes[1].tobytes(), planes[2].tobytes())
+        b_non = bytearray(b_int[:b_int.index(b"\xff\xda")])  # headers
+        for cid, plane in enumerate(planes, 1):
+            ph, pw = plane.shape
+            nby, nbx = -(-ph // 8), -(-pw // 8)
+            padded = C._pad_plane(plane.tobytes(), pw, ph, nby * 8, nbx * 8)
+            q = np.array(C._JPEG_QTABLE if cid == 1 else C._JPEG_QTABLE_CHROMA,
+                         dtype=np.float64).reshape(8, 8)
+            wtr = C._BitWriter()
+            prev = 0
+            for by in range(nby):
+                for bx in range(nbx):
+                    prev = C._encode_block(
+                        wtr, padded[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8]
+                        - 128.0, q, dc_tab, ac_tab, prev)
+            wtr.flush()
+            tables = 0x00 if cid == 1 else 0x11
+            b_non += C._seg(0xDA, bytes([1, cid, tables, 0, 63, 0]))
+            b_non += wtr.out
+        b_non = bytes(b_non + b"\xff\xd9")
+        assert C.decode_jpeg(b_non) == C.decode_jpeg(b_int), (w, h, f)
 
     # truncation inside a later scan still fails loudly
     with pytest.raises(ValueError):
         C.decode_jpeg(b_non[:len(b_non) - 4])
 
 
-def test_bmp_embedded_jpeg_png():
-    """BI_JPEG (4) / BI_PNG (5) BMPs (r6): the printer-passthrough
-    forms wrap a whole JPEG/PNG stream after the header — decode hands
-    the embedded bytes to the native codecs."""
-    import struct as _st
-
-    import numpy as np
-
-    from rlis2osm_spark.functions import codecs as C
-
-    rng = np.random.default_rng(67)
-    img = (rng.integers(0, 128, (16, 16), dtype=np.uint8) * 2)
-    blocks = np.kron(rng.integers(0, 128, (2, 2), dtype=np.uint8) * 2,
-                     np.ones((8, 8), dtype=np.uint8))
-
-    def wrap(blob, comp, w, h):
-        hdr = (_st.pack("<IiiHHIIiiII", 40, w, h, 1, 0, comp,
-                        len(blob), 0, 0, 0, 0))
-        off = 14 + 40
-        return (b"BM" + _st.pack("<IHHI", off + len(blob), 0, 0, off)
-                + hdr + blob)
-
-    jb = C.encode_jpeg_gray(16, 16, blocks.tobytes())
-    assert C.decode_bmp(wrap(jb, 4, 16, 16)) == C.decode_jpeg(jb)
-    pb = C.encode_png(16, 16, img.tobytes())
-    assert C.decode_bmp(wrap(pb, 5, 16, 16)) == C.decode_png_ex(pb)
-
-    # unknown compression still refuses loudly
-    with pytest.raises(NotImplementedError, match="compression 7"):
-        C.decode_bmp(wrap(jb, 7, 16, 16))
-
-
-def test_wav_multichannel():
-    """>2-channel WAV (r6): PCM and float32 are sample-granular, so
-    6-channel (5.1) streams decode to the same interleaved ints the
-    format stores."""
-    import struct as _st
-
-    import numpy as np
-
-    from rlis2osm_spark.functions import codecs as C
-
-    def wav(afmt, channels, bits, body):
-        fmt = _st.pack("<HHIIHH", afmt, channels, 8000,
-                       8000 * channels * bits // 8,
-                       channels * bits // 8, bits)
-        riff = (b"WAVE" + b"fmt " + _st.pack("<I", len(fmt)) + fmt
-                + b"data" + _st.pack("<I", len(body)) + body)
-        return b"RIFF" + _st.pack("<I", len(riff)) + riff
-
-    rng = np.random.default_rng(73)
-    pcm = rng.integers(-30000, 30000, 6 * 10).astype("<i2")
-    rate, got = C.decode_wav(wav(1, 6, 16, pcm.tobytes()))
-    assert rate == 8000 and got == pcm.tolist()
-
-    f32 = rng.random(8 * 5).astype("<f4")
-    _, gotf = C.decode_wav(wav(3, 8, 32, f32.tobytes()))
-    assert gotf == f32.tolist()
-
-
 def test_encode_bmp_all_modes():
-    """encode_bmp (r6): every mode — 24-bit BGR, 8-bit palettized,
+    """encode_bmp: every mode — 24-bit BGR, 8-bit palettized,
     BI_RLE8 runs, BI_BITFIELDS 32-bit — roundtrips through decode_bmp
     to B=G=R replication of the gray input (the analytic-oracle
     contract: decoded RGB sum = 3x the gray sum)."""
@@ -1614,6 +1110,7 @@ def test_encode_bmp_all_modes():
     rng = np.random.default_rng(79)
     for w, h in [(7, 5), (12, 9), (4, 4)]:
         img = rng.integers(0, 256, (h, w), dtype=np.uint8)
+        img[::2] = img[::2, :1]  # constant rows: RLE8 runs longer than 1
         exp = np.repeat(img[:, :, None], 3, axis=2).tobytes()
         for mode in ("bgr24", "pal8", "rle8", "bf32"):
             got = C.decode_bmp(C.encode_bmp(w, h, img.tobytes(),
@@ -1621,3 +1118,226 @@ def test_encode_bmp_all_modes():
             assert got == (w, h, 3, exp), (w, h, mode)
     with pytest.raises(ValueError, match="mode"):
         C.encode_bmp(4, 4, bytes(16), mode="png")
+
+
+# ---------------------------------------------------------------------------
+# The modes the codecs do not decode, and the guard that m1's own payloads
+# reach every line they keep
+# ---------------------------------------------------------------------------
+
+def _png_1x1(depth, ctype, interlace, raw, *chunks):
+    """A 1x1 PNG with the given IHDR fields, extra chunks and scanline."""
+    ihdr = struct.pack(">IIBBBBB", 1, 1, depth, ctype, 0, 0, interlace)
+    return (PNG_SIG + _chunk(b"IHDR", ihdr) + b"".join(chunks)
+            + _chunk(b"IDAT", zlib.compress(raw)) + _chunk(b"IEND", b""))
+
+
+def _gif_with_gce(flags):
+    """A one-frame animated GIF whose Graphic Control Extension carries
+    ``flags`` (bit 0 transparency, bits 2-4 disposal)."""
+    from rlis2osm_spark.functions.codecs import encode_gif_anim
+
+    g = encode_gif_anim(2, 2, [dict(width=2, height=2, pixels=bytes(4))])
+    at = g.index(b"\x21\xf9\x04") + 3
+    return g[:at] + bytes([flags]) + g[at + 1:]
+
+
+def _gif_local_palette():
+    """A 2x2 GIF whose image carries a 2-entry local color table."""
+    from rlis2osm_spark.functions.codecs import encode_gif
+
+    g = encode_gif(2, 2, bytes(4))
+    at = 13 + 768 + 9  # the image descriptor's flags byte
+    return g[:at] + b"\x80" + bytes((10, 20, 30, 40, 50, 60)) + g[at + 1:]
+
+
+def _jpeg_interleaved_progressive_dc():
+    """An 8x8 3-component progressive JPEG whose one scan is a DC first
+    pass interleaving all three components (each DC difference 0)."""
+    from rlis2osm_spark.functions.codecs import (
+        _JPEG_DC_BITS, _JPEG_DC_VALS, _JPEG_QTABLE, _JPEG_ZIGZAG)
+
+    def seg(marker, body):
+        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+
+    return (b"\xff\xd8"
+            + seg(0xDB, bytes([0]) + bytes(_JPEG_QTABLE[z]
+                                           for z in _JPEG_ZIGZAG))
+            + seg(0xC2, struct.pack(">BHHB", 8, 8, 8, 3)
+                  + bytes([1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]))
+            + seg(0xC4, bytes([0]) + bytes(_JPEG_DC_BITS)
+                  + bytes(_JPEG_DC_VALS))
+            + seg(0xDA, bytes([3, 1, 0, 2, 0, 3, 0, 0, 0, 0]))
+            + b"\x03"  # three 2-bit size-0 codes, then 1-padding
+            + b"\xff\xd9")
+
+
+def _bmp_removed(bits, comp, rows, table=b""):
+    return _bmp_file(2, 1, bits, rows, table, comp=comp,
+                     clr_used=len(table) // 4)
+
+
+def _bmp_embedded(blob, comp):
+    """A BI_JPEG (4) / BI_PNG (5) BMP wrapping a whole image stream."""
+    info = struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 0, comp, len(blob),
+                       0, 0, 0, 0)
+    return (b"BM" + struct.pack("<IHHI", 54 + len(blob), 0, 0, 54) + info
+            + blob)
+
+
+def _wav_removed(afmt, channels, bits):
+    ba = channels * bits // 8
+    fmt = struct.pack("<HHIIHH", afmt, channels, 8000, 8000 * ba, ba, bits)
+    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", 4 * ba) + bytes(4 * ba))
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+_GRAY16 = b"".join(bytes([k * 16] * 3) + b"\x00" for k in range(16))
+
+REMOVED_MODES = {
+    "png_adam7": ("png", lambda: _png_1x1(8, 0, 1, b"\x00\x07")),
+    "png_4bit_gray": ("png", lambda: _png_1x1(4, 0, 0, b"\x00\x70")),
+    "png_palette": ("png", lambda: _png_1x1(
+        8, 3, 0, b"\x00\x00", _chunk(b"PLTE", b"\x10\x20\x30"))),
+    "png_rgb": ("png", lambda: _png_1x1(8, 2, 0, b"\x00\x01\x02\x03")),
+    "png_gray_alpha": ("png", lambda: _png_1x1(8, 4, 0, b"\x00\x01\x02")),
+    "png_rgba": ("png", lambda: _png_1x1(8, 6, 0, b"\x00\x01\x02\x03\x04")),
+    "gif_transparency": ("gif", lambda: _gif_with_gce(0x05)),
+    "gif_restore_background": ("gif", lambda: _gif_with_gce(0x08)),
+    "gif_restore_previous": ("gif", lambda: _gif_with_gce(0x0C)),
+    "gif_local_palette": ("gif", _gif_local_palette),
+    "jpeg_interleaved_progressive_dc": (
+        "jpeg", _jpeg_interleaved_progressive_dc),
+    "bmp_1bit": ("bmp", lambda: _bmp_removed(
+        1, 0, b"\x00" * 4, _GRAY16[:8])),
+    "bmp_4bit": ("bmp", lambda: _bmp_removed(4, 0, b"\x00" * 4, _GRAY16)),
+    "bmp_rle4": ("bmp", lambda: _bmp_removed(
+        4, 2, b"\x02\x00\x00\x01", _GRAY16)),
+    "bmp_bitfields16": ("bmp", lambda: _bmp_removed(
+        16, 3, b"\x00" * 4, struct.pack("<III", 0xF800, 0x07E0, 0x001F))),
+    "bmp_embedded_jpeg": ("bmp", lambda: _bmp_embedded(
+        encode_jpeg_gray(8, 8, bytes(64)), 4)),
+    "bmp_embedded_png": ("bmp", lambda: _bmp_embedded(
+        encode_png(1, 1, b"\x00"), 5)),
+    "wav_float32": ("wav", lambda: _wav_removed(3, 1, 32)),
+    "wav_pcm8": ("wav", lambda: _wav_removed(1, 1, 8)),
+    "wav_stereo": ("wav", lambda: _wav_removed(1, 2, 16)),
+}
+
+
+@pytest.mark.parametrize("mode", sorted(REMOVED_MODES))
+def test_removed_modes_raise(mode):
+    """Each mode m1 never writes is behind the NotImplementedError seam;
+    every input here is a valid file of its format."""
+    from rlis2osm_spark.functions import codecs as C
+
+    decode = {"png": C.decode_png_ex, "gif": C.decode_gif_frames,
+              "jpeg": C.decode_jpeg, "bmp": C.decode_bmp,
+              "wav": C.decode_wav}
+    fmt, build = REMOVED_MODES[mode]
+    with pytest.raises(NotImplementedError):
+        decode[fmt](build())
+
+
+# Functions in codecs.py whose lines m1's payloads may leave unreached, by
+# reason. The list may only shrink: a function m1 reaches fully must go.
+REACH_EXEMPT = {
+    # PNG filters 3 (Average) and 4 (Paeth): m1 writes filters 0-2, other
+    # encoders all five (test_png_decode_average_and_paeth_filters)
+    "_png_unfilter",
+    # compressed LZW (code-width growth, the KwKwK case) and truncated
+    # streams: m1's encoder is literal-coded, other GIF encoders compress
+    # (test_gif_decodes_real_compressed_stream)
+    "_lzw_decode_gif",
+    # RLE8 runs, absolute mode and deltas: m1's BMP rows never repeat a
+    # pixel (test_encode_bmp_all_modes, test_bmp_rle_decode)
+    "encode_bmp",
+    "_decode_bmp_rle8",
+    # AC coefficients: m1's JPEGs are DCT-exact constant blocks whose AC
+    # coefficients are all zero (test_jpeg_lossy_bound_on_smooth_image,
+    # tests/test_properties.py::test_progressive_equals_baseline_decode)
+    "_encode_block",
+    "encode_jpeg_progressive",
+    "_ac_first_pass",
+    "_ac_refine_pass",
+    # spec tolerances m1's encoders never need: 16-bit DQT entries, and
+    # fill bytes or standalone markers between segments
+    # (test_jpeg_16bit_quant_tables, test_jpeg_tolerates_fill_bytes)
+    "_parse_dqt_body",
+    "_decode_jpeg_planes",
+}
+
+
+def _codec_statements(path):
+    """(top-level function, first line, last line) of every statement in
+    a function body of ``path`` that compiles to code, except ``raise``
+    and docstrings; a compound statement spans its header only."""
+    import ast
+
+    out = []
+
+    def visit(owner, body):
+        for i, st in enumerate(body):
+            kids = [c for f in ("body", "orelse", "finalbody")
+                    for c in getattr(st, f, None) or []]
+            handlers = getattr(st, "handlers", None) or []
+            firsts = [c.lineno for c in kids + handlers]
+            doc = (i == 0 and isinstance(st, ast.Expr)
+                   and isinstance(st.value, ast.Constant)
+                   and isinstance(st.value.value, str))
+            if not (doc or isinstance(st, (ast.Raise, ast.Global,
+                                           ast.Nonlocal))):
+                end = min(firsts) - 1 if firsts else st.end_lineno
+                out.append((owner, st.lineno, max(st.lineno, end)))
+            visit(owner, kids + [c for h in handlers for c in h.body])
+
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    for top in tree.body:
+        if isinstance(top, ast.FunctionDef):
+            visit(top.name, top.body)
+        elif isinstance(top, ast.ClassDef):
+            for m in top.body:
+                if isinstance(m, ast.FunctionDef):
+                    visit(f"{top.name}.{m.name}", m.body)
+    return out
+
+
+def test_m1_payloads_reach_every_codec_line():
+    """Run m1's six encoders over doc ids 0-63 and decode each payload
+    through multimodal.py's own per-blob dispatch, under stdlib trace:
+    every statement of codecs.py must run, unless it raises, is a
+    docstring, or sits in a REACH_EXEMPT function. A mode m1 never writes
+    belongs behind the NotImplementedError seam, not in the codecs."""
+    import linecache
+    import trace
+
+    from rlis2osm_spark.functions import codecs
+    from rlis2osm_spark.operators import multimodal
+    from rlis2osm_spark.queries import content2
+
+    def m1_payloads():
+        for d in range(64):
+            multimodal._image_rows(content2._png_blob(d), False)
+            multimodal._audio_rows(content2._wav_blob(d))
+            if d % 4 == 0:  # m1's 1-in-4 doc sample (_m1_payload_frames)
+                for blob in (content2._gif_blob, content2._bmp_blob,
+                             content2._jpeg_blob):
+                    multimodal._image_rows(blob(d), False)
+                multimodal._video_rows(content2._avi_blob(d))
+
+    codecs._dct_matrix.cache_clear()  # its body runs once per process
+    tracer = trace.Trace(count=1, trace=0)
+    tracer.runfunc(m1_payloads)
+    path = codecs.__file__
+    hit = {line for f, line in tracer.results().counts if f == path}
+    unreached = [(owner, first) for owner, first, last
+                 in _codec_statements(path)
+                 if hit.isdisjoint(range(first, last + 1))]
+    missed = [f"codecs.py:{line} {owner}: "
+              f"{linecache.getline(path, line).strip()}"
+              for owner, line in unreached if owner not in REACH_EXEMPT]
+    assert not missed, "lines m1's payloads never run:\n" + "\n".join(missed)
+    stale = REACH_EXEMPT - {owner for owner, _ in unreached}
+    assert not stale, f"fully reached, drop from REACH_EXEMPT: {stale}"

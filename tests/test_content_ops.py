@@ -104,12 +104,9 @@ def test_video_frames_from_animated_gif(spark):
     patch = rng.integers(0, 256, 4, dtype=np.uint8)
     strip = rng.integers(0, 256, 2, dtype=np.uint8)
     blob = encode_gif_anim(6, 4, [
-        dict(left=0, top=0, width=6, height=4, pixels=base.tobytes(),
-             disposal=1),
-        dict(left=2, top=1, width=2, height=2, pixels=patch.tobytes(),
-             disposal=1),
-        dict(left=0, top=3, width=2, height=1, pixels=strip.tobytes(),
-             disposal=1),
+        dict(left=0, top=0, width=6, height=4, pixels=base.tobytes()),
+        dict(left=2, top=1, width=2, height=2, pixels=patch.tobytes()),
+        dict(left=0, top=3, width=2, height=1, pixels=strip.tobytes()),
     ])
     media = spark.createDataFrame([("g", blob)],
                                   "media_ref string, payload binary")
@@ -174,7 +171,7 @@ def test_multimodal_real_wav_decode(spark):
 
     samples = [((t * 37) % 900) - 450 for t in range(1500)]
     media = spark.createDataFrame(
-        [("a:0", encode_wav(samples, 16000))],
+        [("a:0", encode_wav(samples))],
         "media_ref string, payload binary")
     (row,) = multimodal.extract_audio_features(media).collect()
     assert row.n_samples == 1500
@@ -258,8 +255,8 @@ def test_audio_features_plumbing(spark):
     from rlis2osm_spark.functions.codecs import encode_wav
 
     samples = [((t % 64) - 32) * 100 for t in range(5120)]
-    short = encode_wav([1, -2], 16000)
-    rows = [("a:1", encode_wav(samples, 16000)), ("a:2", short),
+    short = encode_wav([1, -2])
+    rows = [("a:1", encode_wav(samples)), ("a:2", short),
             ("a:3", None)]
     media = spark.createDataFrame(rows, "media_ref string, payload binary")
     out = {r.media_ref: r

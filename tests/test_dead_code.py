@@ -53,14 +53,6 @@ TEST_ONLY_PARAMS = {
     "functions/xxh64.py:xxh64(seed)",
     # path a test redirects
     "driver_support.py:build_package_zip(zip_path)",
-    # encoder options a test uses to build a decoder input
-    "functions/codecs.py:encode_png(channels)",
-    "functions/codecs.py:encode_jpeg_progressive(subsampling)",
-    "functions/codecs.py:encode_jpeg_progressive(cb_pixels)",
-    "functions/codecs.py:encode_jpeg_progressive(cr_pixels)",
-    "functions/codecs.py:encode_jpeg_color(interleave)",
-    "functions/codecs.py:encode_wav(sample_rate)",
-    "functions/codecs.py:encode_wav_pcm24(channels)",
     # test-data size
     "datagen.py:ensure_dataset(n_streets)",
     "datagen.py:ensure_dataset(n_trails)",

@@ -169,12 +169,12 @@ def test_progressive_equals_baseline_decode(w, h, seed):
     import numpy as np
 
     from rlis2osm_spark.functions.codecs import (
-        decode_jpeg_gray, encode_jpeg_gray, encode_jpeg_progressive)
+        decode_jpeg, encode_jpeg_gray, encode_jpeg_progressive)
 
     img = np.random.default_rng(seed).integers(
         0, 256, (h, w), dtype=np.uint8).tobytes()
-    assert decode_jpeg_gray(encode_jpeg_progressive(w, h, img)) == \
-        decode_jpeg_gray(encode_jpeg_gray(w, h, img))
+    assert decode_jpeg(encode_jpeg_progressive(w, h, img)) == \
+        decode_jpeg(encode_jpeg_gray(w, h, img))
 
 
 @settings(max_examples=30, deadline=None, derandomize=True)
